@@ -1,11 +1,14 @@
-"""The four workloads.  Each one sets up its seeded input and an untimed
-warm pass, runs closed-loop legs through the program's public entry points
-only, checks every leg's output, and (in a traced run) times the public
-calls of each layer from outside and reads Spark's status store after them.
+"""The workloads.  Each one sets up its seeded input and an untimed warm
+pass, runs closed-loop legs through the program's public entry points only,
+checks every leg's output, and (in a traced run) times the public calls of
+each layer from outside and reads Spark's status store after them.
 
-A leg returns ``units`` (docs for the page workloads, power-iteration
-rounds for ``hostgraph``), ``attempted`` / ``failed`` operations, and the
-entries it contributes to the per-layer ledger.
+A leg returns ``docs_per_s`` and ``rounds_per_s`` over the wall time of its
+timed call, ``attempted`` / ``failed`` operations, and the entries it
+contributes to the per-layer ledger.  A page workload's leg is one round
+(one job run); a ``hostgraph`` run of its three calls takes ``4 * ROUNDS``
+power-iteration rounds over its hosts, each host a doc; ``curate_hostgraph`` takes its
+docs rate from curate and its rounds rate from hostgraph.
 """
 
 from __future__ import annotations
@@ -20,11 +23,16 @@ import pyarrow.dataset as pads
 
 from extractor_spark.engine.convert import HtmlExtractionOptions, html_to_markdown
 from extractor_spark.engine.extract_llm import MarkdownRuleExtractor, extract_with_llm
-from extractor_spark.engine.pdf import is_pdf
+from extractor_spark.engine.pdf import is_pdf, pdf_to_text
 from extractor_spark.engine.schema import normalize_schema
 from extractor_spark.engine.tidy import tidy_dom
 from extractor_spark.spark.curate import curate
-from extractor_spark.spark.pipeline import PipelineConfig, dedup_latest_per_url, run_pipeline
+from extractor_spark.spark.pipeline import (
+    PipelineConfig,
+    dedup_latest_per_url,
+    run_pipeline,
+    with_bucket,
+)
 from extractor_spark.spark.queries import release_query_caches
 from extractor_spark.spark.stages import convert_stage, extract_stage, markdown_to_text
 from extractor_spark.spark.webgraph import hits, pagerank, spam_mass_ranks
@@ -32,11 +40,14 @@ from extractor_spark.spark.webgraph import hits, pagerank, spam_mass_ranks
 from . import inputs
 from .ledger import percentile, tail_percentile
 
-WARM_PAGES = 128
+WARM_PAGES = 32
 CHECK_SAMPLE = 24
 ENGINE_SAMPLE = 1000
 N_HOSTS = 3000
-ROUNDS = 4
+ROUNDS = 2
+# the webgraph loops run this many times per leg: one run is short enough
+# for a burst of co-tenant load to move its rate by a fifth
+RUNS_PER_LEG = 2
 SUM_TOL = 1e-9
 
 
@@ -50,7 +61,6 @@ class Workload:
     ``finish_layers``."""
 
     name = ""
-    min_legs = 1
 
     def __init__(self, ctx):
         self.ctx = ctx
@@ -60,11 +70,6 @@ class Workload:
 
     def path(self, name: str) -> str:
         return os.path.join(self.dir, name)
-
-    def rates(self, leg: dict) -> dict:
-        """End-to-end rates of one leg.  A page workload's round is one
-        closed-loop leg."""
-        return {"docs_per_s": leg["units"] / leg["wall_s"], "rounds_per_s": 1 / leg["wall_s"]}
 
     def check_run(self) -> None:
         """Checks across legs; each leg checks its own output."""
@@ -90,7 +95,7 @@ class Workload:
 
 class PagesInput(Workload):
     with_pdfs = True
-    n_pages = 2000
+    n_pages = 1000
 
     def make_pages(self) -> None:
         def build():
@@ -124,14 +129,20 @@ def _convert_in_process(row: dict) -> tuple[str, str]:
     return markdown, markdown_to_text(markdown)
 
 
+def _converted_row(row: dict) -> dict:
+    """The (url, markdown, text) row stage C writes for a page."""
+    if is_pdf(row["html"]):
+        markdown = pdf_to_text(row["html"])
+        return {"url": row["url"], "markdown": markdown, "text": " ".join(markdown.split())}
+    markdown, text = _convert_in_process(row)
+    return {"url": row["url"], "markdown": markdown, "text": text}
+
+
 class Convert(PagesInput):
     """Convert-only pipeline with ``PipelineConfig`` defaults."""
 
     name = "convert"
     schema: dict | None = None
-    # on a shared 4-core box, ten seeds spread docs_per_s by 0.26 of the
-    # median with one leg per run and by 0.15 with two (co-tenant CPU load)
-    min_legs = 2
 
     def config(self, out: str, pages: str | None = None) -> PipelineConfig:
         return PipelineConfig(
@@ -157,7 +168,7 @@ class Convert(PagesInput):
         layer = {}
         if call.window:
             layer = self.pipeline_layer(call, summary, out)
-        return {"wall_s": call.seconds, "units": summary["docs"],
+        return {"docs_per_s": summary["docs"] / call.seconds, "rounds_per_s": 1 / call.seconds,
                 "attempted": summary["docs"], "failed": failed, "layer": layer}
 
     def check_output(self, out: str, failed: int) -> None:
@@ -264,9 +275,11 @@ class Structured(Convert):
 
 
 class Curate(PagesInput):
-    """``curate.curate`` with defaults over the convert workload's output."""
+    """``curate.curate`` with defaults over the converted output of a
+    corpus built as convert's, at half its size."""
 
     name = "curate"
+    n_pages = 500
 
     def setup(self) -> None:
         self.make_pages()
@@ -280,18 +293,8 @@ class Curate(PagesInput):
         """The convert output curate reads (url, markdown, text), converted
         in-process as stage C does and laid out as the pipeline writes it:
         one parquet file per ``bucket=`` partition.  The warm pass reads
-        the first few hundred docs of it."""
-        from extractor_spark.engine.pdf import pdf_to_text
-        from extractor_spark.spark.pipeline import with_bucket
-
-        rows = []
-        for url, r in sorted(self.newest.items()):
-            if is_pdf(r["html"]):
-                markdown = pdf_to_text(r["html"])
-                rows.append({"url": url, "markdown": markdown, "text": " ".join(markdown.split())})
-            else:
-                markdown, text = _convert_in_process(r)
-                rows.append({"url": url, "markdown": markdown, "text": text})
+        the first few dozen docs of it."""
+        rows = [_converted_row(self.newest[u]) for u in sorted(self.newest)]
         urls = self.spark.createDataFrame([(r["url"],) for r in rows], "url string")
         n_buckets = PipelineConfig("", "").n_buckets
         bucket = dict(with_bucket(urls, n_buckets).collect())
@@ -320,8 +323,8 @@ class Curate(PagesInput):
         layer = {}
         if call.window:
             layer = self.curate_layer(call, stats, stage_times)
-        return {"wall_s": call.seconds, "units": stats["input_docs"], "attempted": 1,
-                "failed": 0, "layer": layer}
+        return {"docs_per_s": stats["input_docs"] / call.seconds, "rounds_per_s": 1 / call.seconds,
+                "attempted": 1, "failed": 0, "layer": layer}
 
     def curate_layer(self, call, stats: dict, stage_times: dict) -> dict:
         w = call.window
@@ -358,16 +361,11 @@ def verify_ratio(executions: list[dict]) -> float:
 
 
 class Hostgraph(Workload):
-    """pagerank, hits and spam_mass_ranks at fixed round counts."""
+    """pagerank, hits and spam_mass_ranks at fixed round counts.  A leg
+    runs the three calls ``RUNS_PER_LEG`` times; its rates are the median
+    over those runs, and every run must reproduce the first."""
 
     name = "hostgraph"
-    VECTORS = 5  # pagerank, hub, authority, and spam_mass's two rank vectors
-
-    def rates(self, leg: dict) -> dict:
-        """Rounds per second, and host scores (one per host and vector)
-        per second as the docs rate."""
-        return {"docs_per_s": self.input_info["hosts"] * self.VECTORS / leg["wall_s"],
-                "rounds_per_s": leg["units"] / leg["wall_s"]}
 
     def setup(self) -> None:
         def build():
@@ -381,11 +379,11 @@ class Hostgraph(Workload):
         self.input_info = {"hosts": len(hosts), "edges": len(rows), "rounds_per_loop": ROUNDS,
                            "seeds": len(self.seeds), "fixtures": "absent"}
         self.first = None
-        self.timed_setup("warm_s", lambda: self.run_loops(self.ctx.untraced, rounds=1, warm=True))
+        # one round of each loop compiles the plans every round runs
+        self.timed_setup("warm_s", lambda: self.run_loops(self.ctx.untraced, rounds=1))
 
-    def run_loops(self, traced, rounds: int = ROUNDS, warm: bool = False) -> dict:
-        """Collect every rank vector of the three calls.  The warm pass runs
-        pagerank and hits only: spam_mass_ranks runs the same loop plans."""
+    def run_loops(self, traced, rounds: int = ROUNDS) -> dict:
+        """Collect every rank vector of the three calls."""
         edges = self.spark.read.parquet(self.path("edges"))
         out = {}
         timings = {}
@@ -396,7 +394,7 @@ class Hostgraph(Workload):
                                            spam_mass_ranks(edges, self.seeds, max_iter=rounds,
                                                            tol=0.0)))),
         )
-        for name, fn in calls[:2] if warm else calls:
+        for name, fn in calls:
             t0 = time.perf_counter()
             with traced.span(f"webgraph.{name}"):
                 frames = fn()
@@ -408,8 +406,21 @@ class Hostgraph(Workload):
         return out
 
     def leg(self, traced) -> dict:
-        with traced.call("webgraph.loops") as call:
-            out = self.run_loops(traced)
+        rounds = 4 * ROUNDS  # pagerank, hits, and spam_mass's two loops
+        seconds, layer = [], {}
+        for _ in range(RUNS_PER_LEG):
+            with traced.call("webgraph.loops") as call:
+                out = self.run_loops(traced)
+            self.check(out)
+            seconds.append(call.seconds)
+            if call.window and not layer:
+                layer = self.webgraph_layer(call.window, rounds)
+        s = statistics.median(seconds)
+        return {"docs_per_s": self.input_info["hosts"] / s, "rounds_per_s": rounds / s,
+                "attempted": RUNS_PER_LEG, "failed": 0, "layer": layer}
+
+    def check(self, out: dict) -> None:
+        """Every rank vector sums to 1, and the run reproduces the first."""
         for key, vec in out.items():
             for i in range(len(next(iter(vec.values())))):
                 total = sum(v[i] for v in vec.values())
@@ -417,27 +428,50 @@ class Hostgraph(Workload):
                     raise Failure(f"{key}[{i}] sums to {total!r}, not 1 within {SUM_TOL}")
         self.first = self.first or out
         if out != self.first:
-            raise Failure("rank vectors differ from the first leg's")
-        rounds = 4 * ROUNDS  # pagerank, hits, and spam_mass's two loops
-        layer = {}
-        if call.window:
-            w = call.window
-            layer = {
-                "webgraph.pagerank.s_per_round": self.timings["pagerank"] / ROUNDS,
-                "webgraph.hits.s_per_round": self.timings["hits"] / ROUNDS,
-                "webgraph.spam_mass.wall_s": self.timings["spam_mass"],
-                "webgraph.rounds": rounds,
-                "webgraph.jobs_per_round": w["jobs"] / rounds,
-                "webgraph.tasks_per_round": w["tasks"] / rounds,
-                "webgraph.driver_s": w["driver_s"],
-                "webgraph.gc_s": w["gc_s"],
-            }
-        return {"wall_s": call.seconds, "units": rounds, "attempted": 1, "failed": 0,
-                "layer": layer}
+            raise Failure("rank vectors differ from the first run's")
+
+    def webgraph_layer(self, w: dict, rounds: int) -> dict:
+        return {
+            "webgraph.pagerank.s_per_round": self.timings["pagerank"] / ROUNDS,
+            "webgraph.hits.s_per_round": self.timings["hits"] / ROUNDS,
+            "webgraph.spam_mass.wall_s": self.timings["spam_mass"],
+            "webgraph.rounds": rounds,
+            "webgraph.jobs_per_round": w["jobs"] / rounds,
+            "webgraph.tasks_per_round": w["tasks"] / rounds,
+            "webgraph.driver_s": w["driver_s"],
+            "webgraph.gc_s": w["gc_s"],
+        }
 
 
+class CurateHostgraph(Workload):
+    """``curate`` then ``hostgraph`` in each leg, in one session: the two
+    workloads where no engine or Arrow UDF runs.  Its ``docs_per_s`` is
+    curate's and its ``rounds_per_s`` hostgraph's."""
 
-WORKLOADS = {w.name: w for w in (Convert, Structured, Curate, Hostgraph)}
+    name = "curate_hostgraph"
+
+    def __init__(self, ctx):
+        super().__init__(ctx)
+        self.curate, self.hostgraph = Curate(ctx), Hostgraph(ctx)
+
+    def setup(self) -> None:
+        # hostgraph's warm pass, first, pays the session's cold start; curate's
+        # input build and warm pass then run in a warm JVM
+        for part in (self.hostgraph, self.curate):
+            part.setup()
+            for label, seconds in part.setup_times.items():
+                self.setup_times[label] = self.setup_times.get(label, 0.0) + seconds
+        self.input_info = {"curate": self.curate.input_info,
+                           "hostgraph": self.hostgraph.input_info}
+
+    def leg(self, traced) -> dict:
+        c, h = self.curate.leg(traced), self.hostgraph.leg(traced)
+        return {"docs_per_s": c["docs_per_s"], "rounds_per_s": h["rounds_per_s"],
+                "attempted": c["attempted"] + h["attempted"], "failed": c["failed"] + h["failed"],
+                "layer": {**c["layer"], **h["layer"]}}
+
+
+WORKLOADS = {w.name: w for w in (Convert, Structured, Curate, Hostgraph, CurateHostgraph)}
 
 
 # ---------------------------------------------------------------------------
