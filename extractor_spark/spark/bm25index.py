@@ -416,18 +416,16 @@ def bm25_search_index(
             [(q, t, term_meta[t][0]) for q, t in ess_legs],
             "query_id int, term string, df double",
         )
-        before = caches.persistent_ids(spark.sparkContext)
-        partial = (
+        # bounded: Σ essential df ≤ |legs| × hot_cap
+        partial, h = caches.local_checkpoint(
             _pruned_postings(spark, index_path, ess_vocab)
             .join(F.broadcast(legs1), "term")
             .groupBy("query_id", "doc_id")
             .agg(F.sum(_contrib(n_docs, avgdl)).alias("partial"))
-            .localCheckpoint()  # bounded: Σ essential df ≤ |legs| × hot_cap
         )
         # the returned frame is lazy over this checkpoint: consumers release
         # it via queries.release_query_caches() (the caches.py contract)
-        for h in caches.checkpoint_handles_since(spark.sparkContext, before):
-            caches.register(h)
+        caches.register(h)
         w = Window.partitionBy("query_id").orderBy(F.col("partial").desc())
         theta_rows = (
             partial.withColumn("rn", F.row_number().over(w))

@@ -19,7 +19,8 @@ from a corpus, Spark-first:
   ``F.aggregate`` left-fold over each symbol array (no Python in the
   loop).  The new state takes a LAZY localCheckpoint whose materializing
   action is the next round's argmax, previous-round blocks released
-  after the action — same flat-lineage protocol as webgraph.pagerank.
+  after the action — the flat-lineage protocol of
+  ``tuning.checkpoint_loop``, shared with webgraph.pagerank.
 - Words containing astral (non-BMP) code points are filtered on BOTH
   engine and twin sides: Java regex splits strings by UTF-16 code unit,
   Python by code point, so BMP-only is the exactly-shared domain (the
@@ -36,7 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .tuning import loop_partitions, scoped_loop_conf
+from . import caches
+from .tuning import checkpoint_loop, loop_partitions, scoped_loop_conf
 
 _BMP_ONLY = "^[\u0000-\uffff]+$"  # Java regex: code-point class, astral excluded
 _EOW = "</w>"
@@ -85,11 +87,7 @@ def learn_bpe(docs: DataFrame, n_merges: int = 24) -> list[tuple[int, str, str, 
 
     Returns [(rank, left, right, pair_count), ...] in merge order —
     driver-sized by construction (one row per merge)."""
-    from . import caches
-
     spark = docs.sparkSession
-    sc = spark.sparkContext
-
     vocab = (
         _tokens(docs)
         .filter(F.col("word").rlike(_BMP_ONLY))
@@ -97,14 +95,7 @@ def learn_bpe(docs: DataFrame, n_merges: int = 24) -> list[tuple[int, str, str, 
         .agg(F.count("*").alias("cnt"))
         .select("cnt", _char_syms(F.col("word")).alias("sym"))
     )
-    before = caches.persistent_ids(sc)
-    state = vocab.localCheckpoint(eager=False)
-    cur_handles = caches.checkpoint_handles_since(sc, before)
-    # two-generation handle ledger (pagerank protocol): a round's argmax
-    # MATERIALIZES the current checkpoint, which still READS the previous
-    # one — so the grandparent generation is the oldest releasable set,
-    # and peak symbol-table storage is exactly two rounds
-    grand_handles: list = []
+    state, handle = caches.local_checkpoint(vocab, eager=False)
 
     # r6: the merge loop's shuffle width follows the vocabulary size
     # (tuning.py) — the count below materializes the initial checkpoint,
@@ -116,18 +107,10 @@ def learn_bpe(docs: DataFrame, n_merges: int = 24) -> list[tuple[int, str, str, 
     # (measured: width 1 at a ~40k-word vocab serialized the explode and
     # cost ~1.5 s/query; ~3k rows/partition restores the parallelism
     # while still avoiding full-width 32-task rounds at tiny vocabs).
-    n_parts = loop_partitions(sc, state.count(), rows_per_partition=3_000)
+    n_parts = loop_partitions(
+        spark.sparkContext, state.count(), rows_per_partition=3_000
+    )
 
-    merges: list[tuple[int, str, str, int]] = []
-    with scoped_loop_conf(spark, n_parts):
-        merges = _learn_bpe_loop(
-            sc, state, cur_handles, grand_handles, n_merges, caches
-        )
-    return merges
-
-
-def _learn_bpe_loop(sc, state, cur_handles, grand_handles, n_merges, caches):
-    merges: list[tuple[int, str, str, int]] = []
     # loop-invariant Columns hoisted out of the rounds (r6): Columns are
     # immutable and reusable across DataFrames, and each F.* call is a py4j
     # round-trip — only the merge fold depends on the round's argmax
@@ -142,32 +125,30 @@ def _learn_bpe_loop(sc, state, cur_handles, grand_handles, n_merges, caches):
     c_r = F.col("p.r").alias("r")
     c_n = F.sum("cnt").alias("n")
     c_order = F.col("n").desc()
-    for rank in range(n_merges):
+    merges: list[tuple[int, str, str, int]] = []
+
+    def learn_next(state) -> bool:
+        """The round's ONE action: the argmax pair of ``state`` (it
+        materializes the state's checkpoint).  True = stop."""
         pairs = state.select("cnt", c_pairs).groupBy(c_l, c_r).agg(c_n)
-        # the ONE action of the round: materializes state's checkpoint
         best = pairs.orderBy(c_order, "l", "r").limit(1).collect()
-        for h in grand_handles:
-            h.unpersist()
-        grand_handles = []
         if not best:
-            break
-        left, right, n = best[0]["l"], best[0]["r"], int(best[0]["n"])
-        merges.append((rank, left, right, n))
-        if rank == n_merges - 1:
-            break  # last merge learned — no next state needed
-        new_state = state.select(
+            return True
+        merges.append(
+            (len(merges), best[0]["l"], best[0]["r"], int(best[0]["n"]))
+        )
+        return len(merges) == n_merges
+
+    def apply_last(state):
+        _, left, right, _ = merges[-1]
+        return state.select(
             "cnt", _merge_fold(F.col("sym"), left, right).alias("sym")
         )
-        before = caches.persistent_ids(sc)
-        state = new_state.localCheckpoint(eager=False)
-        grand_handles, cur_handles = cur_handles, caches.checkpoint_handles_since(
-            sc, before
-        )
 
-    for h in grand_handles:
-        h.unpersist()
-    for h in cur_handles:
-        h.unpersist()
+    with scoped_loop_conf(spark, n_parts):
+        if n_merges > 0 and not learn_next(state):
+            _, handle = checkpoint_loop(state, handle, apply_last, learn_next)
+    handle.unpersist()
     return merges
 
 

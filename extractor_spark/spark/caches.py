@@ -9,11 +9,14 @@ Each producer also retires its own predecessor on re-invocation, so the
 live set is bounded by the number of distinct cache-producing queries, not
 by invocation count.
 
-localCheckpoint needs special handling: ``DataFrame.unpersist()`` is a
-no-op for it (the storage belongs to the internal RDD, not the cache
-manager), so checkpointed producers register a JVM-RDD handle captured by
-diffing ``getPersistentRDDs`` around the checkpoint call (verified
-empirically on Spark 4.1: only ``jrdd.unpersist()`` releases the blocks).
+Every localCheckpoint in the package goes through :func:`local_checkpoint`.
+``DataFrame.unpersist()`` is a no-op for a checkpoint (its blocks belong
+to the internal RDD, not the cache manager; verified on Spark 4.1: only
+the RDD's own ``unpersist`` releases them), so the function returns the
+checkpointed frame together with a :class:`JvmRddHandle` on that RDD,
+read from the frame's own ``LogicalRDD`` plan node.  The handle belongs
+to the frame, so checkpoints taken concurrently on several driver threads
+never see each other's handles.
 
 OWNERSHIP
 ---------
@@ -29,23 +32,13 @@ made inside the with-block.  Pinned by tests/test_caches_scope.py.
 from __future__ import annotations
 
 import contextlib
-import threading
 
 LIVE: list = []
-
-# Serializes the snapshot → localCheckpoint → diff capture pattern
-# (persistent_ids / checkpoint_handles_since) for callers that run
-# checkpoint-producing loops CONCURRENTLY (webgraph.spam_mass_ranks runs
-# the pagerank and trustrank loops on two threads).  Without it, thread
-# A's id-diff can capture thread B's just-created checkpoint RDD and later
-# unpersist it out from under B — a lineage-truncated RDD cannot be
-# recomputed.  Uncontended in every single-threaded caller.
-CKPT_LOCK = threading.RLock()
 
 
 def register(handle) -> None:
     """``handle`` is anything with .unpersist(): a persisted DataFrame or a
-    JvmRddHandle from :func:`checkpoint_handles_since`."""
+    JvmRddHandle from :func:`local_checkpoint`."""
     LIVE.append(handle)
 
 
@@ -94,20 +87,15 @@ class JvmRddHandle:
         self._jrdd.unpersist(False)
 
 
-def persistent_ids(sc) -> set:
-    jmap = sc._jsc.getPersistentRDDs()
-    ids, it = set(), jmap.entrySet().iterator()
-    while it.hasNext():
-        ids.add(it.next().getKey())
-    return ids
-
-
-def checkpoint_handles_since(sc, before: set) -> list:
-    """JVM handles for persistent RDDs that appeared after ``before`` was
-    snapshotted — i.e. the blocks an eager localCheckpoint just stored."""
-    handles, it = [], sc._jsc.getPersistentRDDs().entrySet().iterator()
-    while it.hasNext():
-        e = it.next()
-        if e.getKey() not in before:
-            handles.append(JvmRddHandle(e.getValue()))
-    return handles
+def local_checkpoint(df, eager: bool = True):
+    """``df.localCheckpoint(eager)`` → ``(frame, handle)``, where ``handle``
+    releases exactly the blocks behind ``frame`` (the RDD its analyzed
+    ``LogicalRDD`` plan reads).  Lazy checkpoints are marked at call time,
+    so the handle is valid before the first action materializes them."""
+    out = df.localCheckpoint(eager=eager)
+    plan = out._jdf.queryExecution().analyzed()
+    if plan.nodeName() != "LogicalRDD":
+        raise RuntimeError(
+            f"localCheckpoint produced a {plan.nodeName()} plan, not a LogicalRDD"
+        )
+    return out, JvmRddHandle(plan.rdd())

@@ -121,12 +121,14 @@ def assign_packs(
     order_col: str,
     budget: int,
     n_parts: int = 16,
-) -> DataFrame:
+) -> tuple[DataFrame, caches.JvmRddHandle]:
     """Concat-then-chunk pack ids over `order_col` order via the two-level
     distributed prefix sum (per-partition cumsum + broadcast offsets —
     never a single-partition global window; same decomposition as the
     oracle-checked `sequence_packing` query in queries.py).  Adds
-    `n_tokens` and `pack_id` columns.
+    `n_tokens` and `pack_id` columns.  Returns ``(packed, handle)``: the
+    packed frame is lazy over a checkpoint whose blocks ``handle``
+    releases once the caller is done with it.
 
     A caller may pre-compute `n_tokens` (with this exact expression) and
     pass a frame WITHOUT the text payload: repartitionByRange samples its
@@ -139,10 +141,11 @@ def assign_packs(
         base = docs.withColumn(
             "n_tokens", F.size(F.split(F.trim("text"), r"\s+")).cast("bigint")
         )
-    parts = (
-        base.repartitionByRange(n_parts, order_col)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)  # the totals collect materializes it
+    parts, handle = caches.local_checkpoint(  # the totals collect materializes it
+        base.repartitionByRange(n_parts, order_col).withColumn(
+            "_pid", F.spark_partition_id()
+        ),
+        eager=False,
     )
     totals = parts.groupBy("_pid").agg(F.sum("n_tokens").alias("t")).collect()
     by_pid = {r["_pid"]: r["t"] for r in totals}
@@ -152,7 +155,7 @@ def assign_packs(
         acc += by_pid[pid]
     off_df = spark.createDataFrame(offsets or [(0, 0)], "_pid int, _offset bigint")
     w = Window.partitionBy("_pid").orderBy(order_col)
-    return (
+    packed = (
         parts.withColumn("_cs", F.sum("n_tokens").over(w))
         .join(F.broadcast(off_df), "_pid")
         .withColumn(
@@ -161,6 +164,7 @@ def assign_packs(
         )
         .drop("_pid", "_cs", "_offset")
     )
+    return packed, handle
 
 
 def curate(
@@ -223,7 +227,6 @@ def curate(
     )
     stats = {"input_docs": docs.count()}
     _mark("input")
-    sc = spark.sparkContext
     cache_mark = len(caches.LIVE)  # don't touch unrelated queries' caches
     ckpt_handles: list = []
 
@@ -259,12 +262,10 @@ def curate(
         .filter("_rk = 1")
         .select("url")
     )
-    docs = docs.join(keep, "url")
-    before = caches.persistent_ids(sc)
     # lazy: the stage count below is the materializing job (one pass, not
     # checkpoint + count); reused by pairs + components + filter
-    docs = docs.localCheckpoint(eager=False)
-    ckpt_handles += caches.checkpoint_handles_since(sc, before)
+    docs, h = caches.local_checkpoint(docs.join(keep, "url"), eager=False)
+    ckpt_handles.append(h)
     stats["after_exact_dedup"] = docs.count()
     _mark("exact_dedup")
 
@@ -273,25 +274,26 @@ def curate(
     # materialize the shingle sets and band table once each (both are
     # consumed 2-3 times downstream; without the checkpoint Spark would
     # recompute the 64-hash signature projection per consumer)
-    before = caches.persistent_ids(sc)
-    sh = spark.sql(_SHINGLE_SETS_TMPL.format(view="curate_docs")).localCheckpoint()
+    sh, h = caches.local_checkpoint(
+        spark.sql(_SHINGLE_SETS_TMPL.format(view="curate_docs"))
+    )
+    ckpt_handles.append(h)
     sh.createOrReplaceTempView("curate_sh")
     _mark("shingle_sets")
-    bands = spark.sql(_BANDS_SQL).localCheckpoint()
+    bands, h = caches.local_checkpoint(spark.sql(_BANDS_SQL))
+    ckpt_handles.append(h)
     bands.createOrReplaceTempView("curate_bands")
     _mark("bands")
-    ckpt_handles += caches.checkpoint_handles_since(sc, before)
     # materialize the verified pairs before the CC loop: the verify join is
     # the funnel's most expensive plan, and leaving it lazy re-plans it
     # inside the first label-propagation round's edges materialization —
     # measured 3-5x timing instability at 100k docs (AQE re-plans under a
     # different runtime-stats context); checkpointed it is a stable ~9 s
     # stage and the CC rounds join a small materialized edge table.
-    before = caches.persistent_ids(sc)
-    pairs = spark.sql(
-        _VERIFIED_PAIRS_TMPL.format(threshold=jaccard_threshold)
-    ).localCheckpoint()
-    ckpt_handles += caches.checkpoint_handles_since(sc, before)
+    pairs, h = caches.local_checkpoint(
+        spark.sql(_VERIFIED_PAIRS_TMPL.format(threshold=jaccard_threshold))
+    )
+    ckpt_handles.append(h)
     _mark("verified_pairs")
     labels = _components(docs, pairs, components)
     # r6 canonical pick: decide on LIGHT rows, attach once (guide §8).
@@ -313,12 +315,10 @@ def curate(
         .filter("_rk = 1")
         .select("url", *(["cluster_id"] if split else []))
     )
-    before = caches.persistent_ids(sc)
-    docs = docs.join(kept, "url").localCheckpoint(
-        eager=False
-    )  # consumed by two counts AND the export
-    # write; the stage count below is the materializing job
-    ckpt_handles += caches.checkpoint_handles_since(sc, before)
+    # consumed by two counts AND the export write; the stage count below
+    # is the materializing job
+    docs, h = caches.local_checkpoint(docs.join(kept, "url"), eager=False)
+    ckpt_handles.append(h)
     stats["after_neardup_dedup"] = docs.count()
     _mark("components_canonical")
     # labels' checkpoint (registered by min_label_components) has no
@@ -389,7 +389,6 @@ def curate(
     # surviving docs (url order), so the exported JSONL can be consumed as
     # concat-then-chunk sequences without another pass over the corpus
     if pack_budget:
-        sc_before = caches.persistent_ids(sc)
         # seeded global shuffle order for pack composition (deterministic:
         # same seed → same packs); url order otherwise
         order_col = "url"
@@ -403,10 +402,10 @@ def curate(
         # export write consume it, and the post-checkpoint window+join
         # portion of assign_packs would otherwise run twice (lazy: the
         # n_packs aggregate below is the materializing job)
-        docs = assign_packs(spark, docs, order_col, pack_budget).drop(
-            "_ord"
-        ).localCheckpoint(eager=False)
-        ckpt_handles += caches.checkpoint_handles_since(sc, sc_before)
+        packed, h = assign_packs(spark, docs, order_col, pack_budget)
+        ckpt_handles.append(h)
+        docs, h = caches.local_checkpoint(packed.drop("_ord"), eager=False)
+        ckpt_handles.append(h)
         stats["n_packs"] = docs.agg(F.countDistinct("pack_id")).first()[0]
         stats["pack_budget"] = pack_budget
 

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import caches
-from .tuning import loop_partitions, scoped_loop_conf
+from .tuning import checkpoint_loop, loop_partitions, scoped_loop_conf
 
 
 def min_label_components(nodes: DataFrame, pairs: DataFrame, key: str) -> DataFrame:
@@ -52,70 +52,49 @@ def min_label_components(nodes: DataFrame, pairs: DataFrame, key: str) -> DataFr
     # measured ~+0.7 s on the curate components stage — and at 2-4 rounds
     # the per-round Janino saving is small anyway (r6 session 2).
     with scoped_loop_conf(nodes.sparkSession, n_parts):
-        out = _min_label_loop(nodes, raw, key, sc, n_parts)
+        out = _min_label_loop(nodes, raw, key, n_parts)
     raw.unpersist()
     return out
 
 
-def _min_label_loop(nodes, raw, key, sc, n_parts) -> DataFrame:
+def _min_label_loop(nodes, raw, key, n_parts) -> DataFrame:
     # r6: eager localCheckpoint, not persist — the pair frame's LOGICAL
     # plan (band joins, verify chains) would otherwise be re-walked by
     # every round's analysis/optimization (the cache only short-circuits
-    # execution; see webgraph._pagerank_loop).  raw is persisted and
+    # execution; see webgraph._power_iteration).  raw is persisted and
     # already materialized by the caller's sizing count, so the
     # checkpoint job only pays the repartition.
-    before = caches.persistent_ids(sc)
-    edges = raw.repartition(n_parts, "src").localCheckpoint(eager=True)
-    edge_handles = caches.checkpoint_handles_since(sc, before)
-    before = caches.persistent_ids(sc)
-    labels = nodes.select(F.col(key), F.col(key).alias("label")).localCheckpoint(
-        eager=False
+    edges, edge_handle = caches.local_checkpoint(
+        raw.repartition(n_parts, "src"), eager=True
     )
-    prev_handles = caches.checkpoint_handles_since(sc, before)
+    labels, handle = caches.local_checkpoint(
+        nodes.select(F.col(key), F.col(key).alias("label")), eager=False
+    )
 
-    while True:
+    def step(labels):
+        labels = labels.drop("_changed")
         nbr = (
             edges.join(labels, edges.src == labels[key])
             .select(F.col("dst").alias("_nkey"), "label")
             .groupBy("_nkey")
             .agg(F.min("label").alias("nbr_label"))
         )
-        before = caches.persistent_ids(sc)
-        new_labels = (
-            labels.join(nbr, labels[key] == nbr._nkey, "left")
-            .select(
-                labels[key],
-                F.least(F.col("label"), F.coalesce("nbr_label", "label")).alias(
-                    "label"
-                ),
-                (F.col("nbr_label") < F.col("label")).alias("_changed"),
-            )
-        ).localCheckpoint(eager=False)  # truncate lineage each round.  The
-        # checkpoint is LAZY: the changed-count below is its materializing
-        # job (the filter feeds off every partition), so each round is ONE
-        # Spark job, not checkpoint + count.
-        cur_handles = caches.checkpoint_handles_since(sc, before)
-        n_changed = new_labels.filter(F.col("_changed")).count()
-        # count done → the checkpoint blocks exist and the PREVIOUS round's
-        # blocks have no dependents — release them now (order matters: the
-        # lazy checkpoint's computation reads the previous blocks, and a
-        # truncated-lineage RDD cannot be recomputed once unpersisted;
-        # DataFrame.unpersist is a no-op on checkpoints, only the JVM-RDD
-        # handle frees the storage), so peak label storage is 2 rounds, not
-        # the whole convergence history.
-        for h in prev_handles:
-            h.unpersist()
-        prev_handles = cur_handles
-        labels = new_labels.drop("_changed")
-        if n_changed == 0:
-            break
-    for h in edge_handles:
-        h.unpersist()
+        return labels.join(nbr, labels[key] == nbr._nkey, "left").select(
+            labels[key],
+            F.least(F.col("label"), F.coalesce("nbr_label", "label")).alias("label"),
+            (F.col("nbr_label") < F.col("label")).alias("_changed"),
+        )
+
+    # one job per round: the changed-count (it reads every partition) is
+    # the lazy checkpoint's materializing job
+    labels, handle = checkpoint_loop(
+        labels, handle, step, lambda new: new.filter(F.col("_changed")).count() == 0
+    )
+    edge_handle.unpersist()
     # the final checkpoint backs the (lazy) result — consumers release it
     # via queries.release_query_caches() after collecting
-    for h in prev_handles:
-        caches.register(h)
-    return labels.withColumnRenamed("label", "cluster_id")
+    caches.register(handle)
+    return labels.drop("_changed").withColumnRenamed("label", "cluster_id")
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -170,36 +149,27 @@ def star_components(nodes: DataFrame, pairs: DataFrame, key: str) -> DataFrame:
         ).first()
         return (row["n"], row["h"])
 
-    before = caches.persistent_ids(sc)
-    edges = (
+    edges, handle = caches.local_checkpoint(
         pairs.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .distinct()
-        .repartition(sc.defaultParallelism, "src")
-        .localCheckpoint(eager=False)
+        .repartition(sc.defaultParallelism, "src"),
+        eager=False,
     )
-    prev_handles = caches.checkpoint_handles_since(sc, before)
     sig = signature(edges)
+
+    def converged(new) -> bool:
+        # the signature aggregate is the round's one job
+        nonlocal sig
+        prev, sig = sig, signature(new)
+        return sig == prev
+
     # r6: the initial signature's count sizes the loop's shuffle width for
     # free (tuning.py) — star rounds only ever shrink the edge set.
-    n_parts = loop_partitions(sc, sig[0])
-    with scoped_loop_conf(spark, n_parts):
-        while True:
-            before = caches.persistent_ids(sc)
-            # lazy checkpoint: the signature aggregate is its materializing
-            # job, so each round is one Spark job; the previous round's
-            # blocks are released only AFTER it runs (its computation reads
-            # them, and a truncated-lineage RDD cannot be recomputed once
-            # unpersisted)
-            edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
-            cur_handles = caches.checkpoint_handles_since(sc, before)
-            new_sig = signature(edges)
-            for h in prev_handles:
-                h.unpersist()
-            prev_handles = cur_handles
-            if new_sig == sig:
-                break
-            sig = new_sig
+    with scoped_loop_conf(spark, loop_partitions(sc, sig[0])):
+        edges, handle = checkpoint_loop(
+            edges, handle, lambda e: _small_star(_large_star(e)), converged
+        )
     # fixpoint edges form stars child→(component min); centers and isolated
     # vertices label themselves.
     stars = edges.groupBy("src").agg(F.min("dst").alias("_cluster"))
@@ -207,6 +177,5 @@ def star_components(nodes: DataFrame, pairs: DataFrame, key: str) -> DataFrame:
     labels = n.join(stars, n[key] == stars.src, "left").select(
         n[key], F.coalesce(F.col("_cluster"), n[key]).alias("cluster_id")
     )
-    for h in prev_handles:
-        caches.register(h)
+    caches.register(handle)
     return labels

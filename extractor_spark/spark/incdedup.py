@@ -40,6 +40,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import caches
+
 BANDS_SUBDIR = "bands"
 SHINGLES_SUBDIR = "shingles"
 
@@ -182,7 +184,9 @@ def dedup_batch(
     runs after its own first-attempt write still sees exactly the
     strictly-earlier store and produces the identical verdicts.
 
-    Returns the materialized verdict frame."""
+    Returns ``(verdicts, handle)``: the materialized verdict frame and the
+    handle that releases its checkpoint blocks (``DataFrame.unpersist``
+    does not) once the caller has consumed it."""
     bands_dir = os.path.join(store_path, BANDS_SUBDIR)
     sh_dir = os.path.join(store_path, SHINGLES_SUBDIR)
     store_bands = _read_earlier(spark, bands_dir, batch_id)
@@ -199,9 +203,10 @@ def dedup_batch(
         # severs the lineage before the store mutates.  (With the
         # batch< pruning the recompute would now be benign, but the
         # snapshot guarantee is worth keeping explicit.)
-        out = _verdicts(
-            docs, batch_sh, batch_bands, store_sh, store_bands, threshold
-        ).localCheckpoint(eager=True)
+        out, handle = caches.local_checkpoint(
+            _verdicts(docs, batch_sh, batch_bands, store_sh, store_bands, threshold),
+            eager=True,
+        )
         if append:
             # The two store tables live in independent dirs — write them on
             # two driver threads (r6: saves ~0.15 s/batch of sequential job
@@ -240,7 +245,7 @@ def dedup_batch(
                 t.join()
             if errs:
                 raise errs[0]
-        return out
+        return out, handle
     finally:
         batch_sh.unpersist()
         batch_bands.unpersist()
@@ -264,17 +269,18 @@ def streaming_dedup(
     verdicts_dir = os.path.join(work_dir, "verdicts")
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        from . import caches
-
-        with caches.scope():
-            out = dedup_batch(
-                spark, store_dir, batch_df, threshold=threshold, batch_id=batch_id
-            )
+        out, ckpt = dedup_batch(
+            spark, store_dir, batch_df, threshold=threshold, batch_id=batch_id
+        )
+        try:
             # verdicts idempotent the same way: per-batch partition overwrite
             out.write.mode("overwrite").parquet(
                 os.path.join(verdicts_dir, f"batch={int(batch_id)}")
             )
-            out.unpersist()
+        finally:
+            # DataFrame.unpersist would leave the verdict checkpoint alive
+            # for the session: only its handle frees the blocks
+            ckpt.unpersist()
 
     stream = (
         spark.readStream.schema("url string, text string")

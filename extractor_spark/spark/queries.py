@@ -2059,12 +2059,9 @@ def _semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _views(spark, sf_dir)
     centroids = _ivf_centroids(spark)
-    sc = spark.sparkContext
-    before = caches.persistent_ids(sc)
-    cells = _ivf_assign_cells(spark, centroids).localCheckpoint()
+    cells, h = caches.local_checkpoint(_ivf_assign_cells(spark, centroids))
     cells.createOrReplaceTempView("ivf_cells")
-    for h in caches.checkpoint_handles_since(sc, before):
-        caches.register(h)
+    caches.register(h)
 
     pairs = _semdedup_pairs_frame(spark, _SEMDEDUP_THRESHOLD)
     labels = min_label_components(spark.table("embeddings"), pairs, "vec_id")
@@ -2127,8 +2124,7 @@ def _incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="incdedup_q_")
     try:
         sc = spark.sparkContext
-        before = caches.persistent_ids(sc)
-        outs = []
+        outs, batch_handles = [], []
         # r6: the probe/verify shuffles inside each batch are sized by the
         # batch, not the core count (tuning.py); verdicts are min/compare
         # exact, so width cannot change results.
@@ -2138,25 +2134,23 @@ def _incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         with scoped_loop_conf(spark, n_parts):
             for b in range(3):
                 batch = docs.filter(F.col("b") == b).select("url", "text")
-                v = dedup_batch(spark, work, batch, batch_id=b)
+                v, h = dedup_batch(spark, work, batch, batch_id=b)
                 outs.append(v.withColumn("batch_idx", F.lit(b)))
-        mid_handles = caches.checkpoint_handles_since(sc, before)
-        mid = caches.persistent_ids(sc)
+                batch_handles.append(h)
         res = outs[0].unionByName(outs[1]).unionByName(outs[2]).select(
             F.col("url").cast("long").alias("doc_id"),
             F.col("batch_idx").cast("int").alias("batch_idx"),
             "is_dup",
             F.col("dup_of").cast("long").alias("dup_of_doc"),
         )
-        out = res.localCheckpoint(eager=True)
+        out, out_handle = caches.local_checkpoint(res, eager=True)
         # the per-batch verdict checkpoints are dead once `out` is
         # materialized — release their JVM blocks NOW (DataFrame.unpersist
         # is a no-op for localCheckpoint storage, see caches module doc);
         # out's own blocks are registered for release_query_caches()
-        for h in mid_handles:
+        for h in batch_handles:
             h.unpersist()
-        for h in caches.checkpoint_handles_since(sc, mid):
-            caches.register(h)
+        caches.register(out_handle)
         return out.orderBy("doc_id")
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -2398,11 +2392,8 @@ def _sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # assign_packs (spark/curate.py) is the single implementation of the
     # two-level distributed prefix sum; its checkpoint blocks are
     # registered for release_query_caches since the result is lazy
-    sc = spark.sparkContext
-    before = caches.persistent_ids(sc)
-    packed = assign_packs(spark, docs, "doc_id", _PACK_BUDGET)
-    for h in caches.checkpoint_handles_since(sc, before):
-        caches.register(h)
+    packed, h = assign_packs(spark, docs, "doc_id", _PACK_BUDGET)
+    caches.register(h)
     return (
         packed.groupBy("pack_id")
         .agg(
@@ -3284,11 +3275,8 @@ def _hostgraph_spam_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .webgraph import extract_outlinks, host_graph, spam_mass_ranks
 
     pages = _webgraph_pages(spark)
-    sc = spark.sparkContext
-    before = caches.persistent_ids(sc)
-    edges = host_graph(extract_outlinks(pages)).localCheckpoint()
-    for h in caches.checkpoint_handles_since(sc, before):
-        caches.register(h)
+    edges, h = caches.local_checkpoint(host_graph(extract_outlinks(pages)))
+    caches.register(h)
     seeds = (
         edges.select(F.col("src_host").alias("host"))
         .unionAll(edges.select(F.col("dst_host").alias("host")))

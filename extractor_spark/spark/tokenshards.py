@@ -189,17 +189,16 @@ def pack_token_shards(
     else:
         order_cols = ["doc_id"]
     base = base.persist()
-    before = caches.persistent_ids(spark.sparkContext)
-    parts = (
-        base.repartitionByRange(n_parts, *order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)  # the totals collect materializes it
+    parts, h = caches.local_checkpoint(  # the totals collect materializes it
+        base.repartitionByRange(n_parts, *order_cols).withColumn(
+            "_pid", F.spark_partition_id()
+        ),
+        eager=False,
     )
     totals = parts.groupBy("_pid").agg(F.sum("n_tokens").alias("t")).collect()
     # the returned shards frame is lazy over the checkpointed encoding —
     # consumers release via queries.release_query_caches()
-    for h in caches.checkpoint_handles_since(spark.sparkContext, before):
-        caches.register(h)
+    caches.register(h)
     base.unpersist()  # the checkpoint is materialized; base has no consumers
     by_pid = {r["_pid"]: r["t"] for r in totals}
     offsets, acc = [], 0

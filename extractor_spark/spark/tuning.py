@@ -18,6 +18,11 @@ barrier costs more than any re-optimization can save on single-digit-
 partition exchanges, while at probe scale (e.g. 2M edges → full width)
 AQE and its skew handling stay on.
 
+``checkpoint_loop`` is the round protocol all of those loops run: a lazy
+checkpoint of the new state, one materializing action, release of the
+parent generation only after that action, and a stop on the caller's
+test or a round cap.
+
 Correctness note: partition-count changes can reorder floating-point
 additions inside aggregations (±ulps).  Integer/min/max loops (CC, BPE)
 are exactly order-independent; the double-summing graph loops are pinned
@@ -27,8 +32,11 @@ at the driver SFs (OPTIMIZATION_r06.md).
 
 from __future__ import annotations
 
+import itertools
 import math
 from contextlib import contextmanager
+
+from . import caches
 
 # Target state/edge rows per shuffle partition inside iterative loops.
 # ~50k host- or word-sized rows is well under a MB-scale partition; the
@@ -79,3 +87,34 @@ def scoped_loop_conf(spark, n_parts: int, codegen: bool = True):
         if no_cg:
             conf.set("spark.sql.codegen.wholeStage", old_wscg)
             conf.set("spark.sql.codegen.factoryMode", old_fact)
+
+
+def checkpoint_loop(state, handle, step, action, max_rounds: int | None = None):
+    """Run an iterative operator's rounds with flat lineage and bounded
+    checkpoint storage; returns the final generation's ``(frame, handle)``.
+
+    ``state``/``handle`` are the first generation, as returned by
+    ``caches.local_checkpoint``.  Each round:
+
+    1. ``step(state)`` builds the next generation, which takes a LAZY
+       localCheckpoint (no job of its own);
+    2. ``action(new)`` runs the round's one Spark job — it reads every
+       partition, so the checkpoint blocks it stores as a side effect are
+       complete — and returns True to stop;
+    3. only then is the parent generation released: the lazy checkpoint's
+       computation reads it, and a lineage-truncated RDD cannot be
+       recomputed once unpersisted.  Peak state storage is two rounds.
+
+    The loop ends when ``action`` returns True or after ``max_rounds``
+    rounds (None = until ``action`` stops it).  The caller owns the final
+    handle: it registers it (``caches.register``) when the frame backs a
+    lazy result, or releases it."""
+    rounds = itertools.count() if max_rounds is None else range(max_rounds)
+    for _ in rounds:
+        new, new_handle = caches.local_checkpoint(step(state), eager=False)
+        stop = action(new)
+        handle.unpersist()
+        state, handle = new, new_handle
+        if stop:
+            break
+    return state, handle

@@ -22,7 +22,7 @@ Design for 10^12 pages / ~10^8 hosts:
   iterate on, which is exactly why PageRank runs on the host graph first.
 - ``pagerank`` is the standard power iteration as DataFrame joins: each
   round is contributions = ranks ⋈ edges (pre-normalized out-weights,
-  partitioned once on src and persisted) → groupBy(dst).sum — one shuffle
+  partitioned once on src and checkpointed) → groupBy(dst).sum — one shuffle
   per round, state localCheckpoint'ed every round so the plan stays flat
   (lineage depth O(1), not O(iterations)).  Dangling mass (hosts with no
   outlinks) is computed with a broadcastable scalar aggregate and
@@ -38,7 +38,8 @@ from typing import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .tuning import loop_partitions, scoped_loop_conf
+from . import caches
+from .tuning import checkpoint_loop, loop_partitions, scoped_loop_conf
 
 
 # ---------------------------------------------------------------------------
@@ -286,8 +287,10 @@ def host_graph(outlinks: DataFrame, drop_self_loops: bool = True) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# PageRank (power iteration, one shuffle per round, flat lineage)
+# PageRank / TrustRank (power iteration, one shuffle per round, flat lineage)
 # ---------------------------------------------------------------------------
+
+_RANKS_SCHEMA = "host string, rank double"
 
 
 def pagerank(
@@ -306,160 +309,13 @@ def pagerank(
     touches every partition, so the checkpoint blocks it persists as a
     side effect are complete) — no per-round semi-join, no separate
     checkpoint job, no extra contrib materialization."""
-    spark = edges.sparkSession
-    edges, nodes, n, n_parts = _pagerank_prep(edges)
-    if n == 0:
-        edges.unpersist()
-        return spark.createDataFrame([], "host string, rank double")
-    base = (1.0 - damping) / n
-
-    with scoped_loop_conf(spark, n_parts, codegen=False):
-        return _pagerank_loop(
-            spark, edges, nodes, n, n_parts, base, damping, max_iter, tol
-        )
-
-
-def _pagerank_prep(edges: DataFrame):
-    """Pre-loop sizing shared by :func:`pagerank` and
-    :func:`spam_mass_ranks`: persists the edge frame, builds the node set,
-    counts it, and derives the loop's shuffle width.  ``n == 0`` means the
-    empty graph — the caller unpersists and returns the empty result."""
-    sc = edges.sparkSession.sparkContext
-
-    # edges is consumed three times before the loop (node set, dangling
-    # flags, transition weights); without a persist each consumer re-runs
-    # the caller's full upstream plan (for the host graph: the Python
-    # outlink extraction over every page)
     edges = edges.persist()
-
-    nodes = (
-        edges.select(F.col("src_host").alias("host"))
-        .unionAll(edges.select(F.col("dst_host").alias("host")))
-        .distinct()
-    )
-    n = nodes.count()
-    # r6: the loop's shuffle width follows the graph size, not the core
-    # count — 40 rounds of full-width stages over a host-sized frame are
-    # pure scheduling overhead at small scale (tuning.py).
-    n_parts = loop_partitions(sc, max(n, edges.count())) if n else 1
-    return edges, nodes, n, n_parts
-
-
-def _pagerank_loop(
-    spark, edges, nodes, n, n_parts, base, damping, max_iter, tol
-) -> DataFrame:
-    from . import caches
-
-    sc = spark.sparkContext
-    # Pre-normalize transition weights once: w = n_links / total_out(src).
-    out_totals = edges.groupBy("src_host").agg(F.sum("n_links").alias("out_total"))
-    trans = (
-        edges.join(out_totals, "src_host")
-        .select(
-            F.col("src_host").alias("host"),
-            "dst_host",
-            (F.col("n_links").cast("double") / F.col("out_total")).alias("w"),
+    try:
+        return _run_scoped(
+            edges.sparkSession, *_pagerank_setup(edges, damping, max_iter, tol)
         )
-        .repartition(n_parts, "host")
-    )
-    # r6: eager localCheckpoint, not persist — a bare persist leaves the
-    # full upstream LOGICAL plan (the Python outlink extraction) inside
-    # trans, and every round's analysis/optimization re-walks it: the
-    # cache short-circuits execution, not planning.  Truncating the
-    # lineage makes each round's plan LogicalRDD-sized (measured ~-1 s
-    # per 20-round loop at sf0.1, outputs bit-identical —
-    # scripts/probe_unroll_pagerank.py).  Capture sections hold
-    # caches.CKPT_LOCK so a concurrent loop (spam_mass_ranks) cannot be
-    # cross-captured by this loop's id diff.
-    with caches.CKPT_LOCK:
-        before_trans = caches.persistent_ids(sc)
-        trans = trans.localCheckpoint(eager=True)
-        trans_handles = caches.checkpoint_handles_since(sc, before_trans)
-
-    # Dangling = never appears as a source; flagged once, carried in state.
-    srcs = edges.select(F.col("src_host").alias("host")).distinct().withColumn(
-        "_has_out", F.lit(True)
-    )
-    ranks = (
-        nodes.join(srcs, "host", "left")
-        .select(
-            "host",
-            F.lit(1.0 / n).alias("rank"),
-            (~F.coalesce(F.col("_has_out"), F.lit(False))).alias("is_dangling"),
-        )
-    )
-    with caches.CKPT_LOCK:
-        before = caches.persistent_ids(sc)
-        ranks = ranks.localCheckpoint(eager=False)
-        prev_handles = caches.checkpoint_handles_since(sc, before)
-    dangling_mass = (
-        ranks.agg(
-            F.coalesce(F.sum(F.when(F.col("is_dangling"), F.col("rank"))), F.lit(0.0))
-        ).first()[0]
-    )
-
-    # Loop-invariant Column objects hoisted out of the rounds (r6): Columns
-    # are immutable and reusable across DataFrames, and every F.* call is a
-    # py4j round-trip — per-round expression building was a measurable slice
-    # of the ~150 ms/round driver floor.  Only the dangling-mass literal is
-    # rebuilt per round.
-    c_dst = F.col("dst_host").alias("host")
-    c_contrib_in = (F.col("rank") * F.col("w")).alias("c")
-    c_contrib = F.sum("c").alias("contrib")
-    c_old_rank = F.col("rank").alias("old_rank")
-    c_base = F.lit(base)
-    c_damping = F.lit(damping)
-    c_coalesce0 = F.coalesce("contrib", F.lit(0.0))
-    c_delta = F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("delta")
-    c_dangling = F.coalesce(
-        F.sum(F.when(F.col("is_dangling"), F.col("rank"))), F.lit(0.0)
-    ).alias("dangling")
-
-    for _ in range(max_iter):
-        contrib = (
-            ranks.join(trans, "host")
-            .select(c_dst, c_contrib_in)
-            .groupBy("host")
-            .agg(c_contrib)
-        )
-        new_ranks = (
-            ranks.select("host", c_old_rank, "is_dangling")
-            .join(contrib, "host", "left")
-            .select(
-                "host",
-                (
-                    c_base
-                    + c_damping * (c_coalesce0 + F.lit(dangling_mass / n))
-                ).alias("rank"),
-                "old_rank",
-                "is_dangling",
-            )
-        )
-        with caches.CKPT_LOCK:
-            before = caches.persistent_ids(sc)
-            new_ranks = new_ranks.localCheckpoint(eager=False)
-            cur_handles = caches.checkpoint_handles_since(sc, before)
-        # the aggregate below is the checkpoint's materializing job; once
-        # it returns, the previous round's blocks have no dependents —
-        # free them so peak rank storage is 2 rounds (same pattern as
-        # graph.min_label_components)
-        row = new_ranks.agg(c_delta, c_dangling).first()
-        delta, dangling_mass = row["delta"], row["dangling"]
-        ranks = new_ranks.select("host", "rank", "is_dangling")
-        for h in prev_handles:
-            h.unpersist()
-        prev_handles = cur_handles
-        if delta < tol:
-            break
-
-    for h in trans_handles:
-        h.unpersist()
-    edges.unpersist()
-    # the final checkpoint backs the (lazy) result — consumers release it
-    # via queries.release_query_caches() after collecting
-    for h in prev_handles:
-        caches.register(h)
-    return ranks.select("host", "rank")
+    finally:
+        edges.unpersist()
 
 
 def trustrank(
@@ -477,162 +333,24 @@ def trustrank(
     (pagerank − trustrank)/pagerank — both vectors sum to 1, and a host
     whose PageRank is NOT backed by trusted reachability gets mass ≈ 1.
 
-    Deliberately a separate function from :func:`pagerank` rather than a
-    teleport parameter: the uniform base term there is ``(1−d)/n`` while
-    the seeded one is ``(1−d)·s_i`` — algebraically equal for uniform s
-    but not bit-identical in floating point, and pagerank's numpy twin is
-    pinned at ±1e-12.  Same execution shape: state carries
-    (rank, is_dangling, s); ONE Spark job per round — a lazy
-    localCheckpoint whose materializing action is the combined
-    delta + dangling-mass aggregate; previous round's blocks released
-    AFTER the action; dangling mass redistributes to the SEED
+    Shares :func:`_power_iteration` with :func:`pagerank` but keeps its own
+    rank expression rather than a teleport parameter: the uniform base term
+    there is ``(1−d)/n`` while the seeded one is ``(1−d)·s_i`` —
+    algebraically equal for uniform s but not bit-identical in floating
+    point, and pagerank's numpy twin is pinned at ±1e-12.  State carries
+    (rank, is_dangling, s); dangling mass redistributes to the SEED
     distribution (the personalized-PageRank convention), preserving unit
     mass.  Seeds absent from the graph are ignored; t₀ = s (the
     Gyöngyi initialization).  Twin: numpy same-iterate ±1e-12
     (tests/test_webgraph.py).
     """
-    spark = edges.sparkSession
-    edges, nodes, seed_df, n_seeds, n_parts = _trustrank_prep(edges, seeds)
-    if n_seeds == 0:
-        edges.unpersist()
-        return spark.createDataFrame([], "host string, rank double")
-
-    with scoped_loop_conf(spark, n_parts, codegen=False):
-        return _trustrank_loop(
-            spark, edges, nodes, seed_df, n_seeds, n_parts, damping, max_iter, tol
-        )
-
-
-def _trustrank_prep(edges: DataFrame, seeds):
-    """Pre-loop sizing shared by :func:`trustrank` and
-    :func:`spam_mass_ranks` — mirrors :func:`_pagerank_prep`.
-    ``n_seeds == 0`` means no seed intersects the graph."""
-    spark = edges.sparkSession
-    sc = spark.sparkContext
-
     edges = edges.persist()
-    nodes = (
-        edges.select(F.col("src_host").alias("host"))
-        .unionAll(edges.select(F.col("dst_host").alias("host")))
-        .distinct()
-    )
-    # seed lists are human-curated and bounded (thousands of hosts even at
-    # web scale) — broadcastable by construction
-    if isinstance(seeds, DataFrame):
-        seed_df = seeds.select("host").distinct().withColumn("_seed", F.lit(True))
-    else:
-        seed_df = spark.createDataFrame(
-            [(h,) for h in sorted(set(seeds))], "host string"
-        ).withColumn("_seed", F.lit(True))
-    n_seeds = nodes.join(F.broadcast(seed_df), "host").count()
-    # r6: scale-adaptive loop width (see pagerank / tuning.py)
-    n_parts = loop_partitions(sc, edges.count()) if n_seeds else 1
-    return edges, nodes, seed_df, n_seeds, n_parts
-
-
-def _trustrank_loop(
-    spark, edges, nodes, seed_df, n_seeds, n_parts, damping, max_iter, tol
-) -> DataFrame:
-    from . import caches
-
-    sc = spark.sparkContext
-    out_totals = edges.groupBy("src_host").agg(F.sum("n_links").alias("out_total"))
-    trans = (
-        edges.join(out_totals, "src_host")
-        .select(
-            F.col("src_host").alias("host"),
-            "dst_host",
-            (F.col("n_links").cast("double") / F.col("out_total")).alias("w"),
+    try:
+        return _run_scoped(
+            edges.sparkSession, *_trustrank_setup(edges, seeds, damping, max_iter, tol)
         )
-        .repartition(n_parts, "host")
-    )
-    # r6: eager localCheckpoint for the same planning-cost reason as
-    # _pagerank_loop — a persist keeps the full upstream logical plan in
-    # every round's analysis.  CKPT_LOCK: see _pagerank_loop.
-    with caches.CKPT_LOCK:
-        before_trans = caches.persistent_ids(sc)
-        trans = trans.localCheckpoint(eager=True)
-        trans_handles = caches.checkpoint_handles_since(sc, before_trans)
-
-    srcs = edges.select(F.col("src_host").alias("host")).distinct().withColumn(
-        "_has_out", F.lit(True)
-    )
-    ranks = (
-        nodes.join(srcs, "host", "left")
-        .join(F.broadcast(seed_df), "host", "left")
-        .select(
-            "host",
-            F.when(F.coalesce("_seed", F.lit(False)), F.lit(1.0 / n_seeds))
-            .otherwise(F.lit(0.0))
-            .alias("s"),
-            (~F.coalesce(F.col("_has_out"), F.lit(False))).alias("is_dangling"),
-        )
-        .withColumn("rank", F.col("s"))
-    )
-    with caches.CKPT_LOCK:
-        before = caches.persistent_ids(sc)
-        ranks = ranks.localCheckpoint(eager=False)
-        prev_handles = caches.checkpoint_handles_since(sc, before)
-    dangling_mass = (
-        ranks.agg(
-            F.coalesce(F.sum(F.when(F.col("is_dangling"), F.col("rank"))), F.lit(0.0))
-        ).first()[0]
-    )
-
-    # loop-invariant Columns hoisted — see _pagerank_loop (r6)
-    c_dst = F.col("dst_host").alias("host")
-    c_contrib_in = (F.col("rank") * F.col("w")).alias("c")
-    c_contrib = F.sum("c").alias("contrib")
-    c_old_rank = F.col("rank").alias("old_rank")
-    c_teleport = F.lit(1.0 - damping) * F.col("s")
-    c_damping = F.lit(damping)
-    c_coalesce0 = F.coalesce("contrib", F.lit(0.0))
-    c_s = F.col("s")
-    c_delta = F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("delta")
-    c_dangling = F.coalesce(
-        F.sum(F.when(F.col("is_dangling"), F.col("rank"))), F.lit(0.0)
-    ).alias("dangling")
-
-    for _ in range(max_iter):
-        contrib = (
-            ranks.join(trans, "host")
-            .select(c_dst, c_contrib_in)
-            .groupBy("host")
-            .agg(c_contrib)
-        )
-        new_ranks = (
-            ranks.select("host", c_old_rank, "is_dangling", "s")
-            .join(contrib, "host", "left")
-            .select(
-                "host",
-                (
-                    c_teleport
-                    + c_damping * (c_coalesce0 + F.lit(dangling_mass) * c_s)
-                ).alias("rank"),
-                "old_rank",
-                "is_dangling",
-                "s",
-            )
-        )
-        with caches.CKPT_LOCK:
-            before = caches.persistent_ids(sc)
-            new_ranks = new_ranks.localCheckpoint(eager=False)
-            cur_handles = caches.checkpoint_handles_since(sc, before)
-        row = new_ranks.agg(c_delta, c_dangling).first()
-        delta, dangling_mass = row["delta"], row["dangling"]
-        ranks = new_ranks.select("host", "rank", "is_dangling", "s")
-        for h in prev_handles:
-            h.unpersist()
-        prev_handles = cur_handles
-        if delta < tol:
-            break
-
-    for h in trans_handles:
-        h.unpersist()
-    edges.unpersist()
-    for h in prev_handles:
-        caches.register(h)
-    return ranks.select("host", "rank")
+    finally:
+        edges.unpersist()
 
 
 def spam_mass_ranks(
@@ -653,76 +371,238 @@ def spam_mass_ranks(
     (r6, measured ~−2 s on the sf0.1 spam-mass query).
 
     Results are bit-identical to sequential ``pagerank()`` +
-    ``trustrank()``:
+    ``trustrank()`` (pinned by tests/test_webgraph.py):
 
     - the shared conf scope is entered ONCE with the width both loops
       derive independently; when the two widths differ (possible on very
-      node-heavy graphs) this falls back to the sequential path, so every
-      plan always compiles under exactly the conf it would have seen
-      sequentially;
-    - each loop's FP math touches only its own state frames;
-    - checkpoint handle capture (a global persistent-RDD id diff) is
-      serialized by ``caches.CKPT_LOCK`` so neither loop can capture — and
-      later release — the other's lineage-truncated checkpoint blocks.
+      node-heavy graphs) or either graph side is empty this falls back to
+      the sequential path, so every plan always compiles under exactly
+      the conf it would have seen sequentially;
+    - each loop's FP math touches only its own state frames, and each
+      checkpoint handle is read from its own frame's plan, so neither loop
+      can release the other's blocks;
+    - the edge frame is persisted once and released once, after both
+      loops have finished.
     """
     import threading
 
-    spark = edges.sparkSession
-    p_edges, p_nodes, n, p_parts = _pagerank_prep(edges)
-    if n == 0:
-        p_edges.unpersist()
-        return (
-            spark.createDataFrame([], "host string, rank double"),
-            trustrank(edges, seeds, damping, max_iter, tol),
-        )
-    base = (1.0 - damping) / n
-    t_edges, t_nodes, seed_df, n_seeds, t_parts = _trustrank_prep(edges, seeds)
-    if n_seeds == 0:
-        t_edges.unpersist()
-        with scoped_loop_conf(spark, p_parts, codegen=False):
-            pr = _pagerank_loop(
-                spark, p_edges, p_nodes, n, p_parts, base, damping, max_iter, tol
+    edges = edges.persist()
+    try:
+        p_parts, run_pr = _pagerank_setup(edges, damping, max_iter, tol)
+        t_parts, run_tr = _trustrank_setup(edges, seeds, damping, max_iter, tol)
+        if run_pr is None or run_tr is None or p_parts != t_parts:
+            return (
+                _run_scoped(edges.sparkSession, p_parts, run_pr),
+                _run_scoped(edges.sparkSession, t_parts, run_tr),
             )
-        return pr, spark.createDataFrame([], "host string, rank double")
 
-    def run_pr():
-        return _pagerank_loop(
-            spark, p_edges, p_nodes, n, p_parts, base, damping, max_iter, tol
+        results: dict = {}
+        errors: list = []
+
+        def runner(key, fn):
+            try:
+                results[key] = fn()
+            except BaseException as e:  # noqa: BLE001 — re-raised below
+                errors.append(e)
+
+        with scoped_loop_conf(edges.sparkSession, p_parts, codegen=False):
+            threads = [
+                threading.Thread(target=runner, args=("pr", run_pr), daemon=True),
+                threading.Thread(target=runner, args=("tr", run_tr), daemon=True),
+            ]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join()
+        if errors:
+            raise errors[0]
+        return results["pr"], results["tr"]
+    finally:
+        edges.unpersist()
+
+
+def _run_scoped(spark, n_parts: int, run) -> DataFrame:
+    """Run a ``_*_setup`` loop under its scoped conf; ``run is None`` is the
+    empty result (no node, or no seed in the graph)."""
+    if run is None:
+        return spark.createDataFrame([], _RANKS_SCHEMA)
+    with scoped_loop_conf(spark, n_parts, codegen=False):
+        return run()
+
+
+def _nodes(edges: DataFrame) -> DataFrame:
+    return (
+        edges.select(F.col("src_host").alias("host"))
+        .unionAll(edges.select(F.col("dst_host").alias("host")))
+        .distinct()
+    )
+
+
+def _pagerank_setup(edges: DataFrame, damping, max_iter, tol):
+    """Pre-loop sizing of :func:`pagerank` over the caller's PERSISTED edge
+    frame (it is consumed three times before the loop: node set, dangling
+    flags, transition weights; unpersisted, each consumer would re-run the
+    full upstream plan — for the host graph the Python outlink extraction).
+    Returns ``(n_parts, run)``; ``run`` executes the loop, None for the
+    empty graph."""
+    nodes = _nodes(edges)
+    n = nodes.count()
+    if n == 0:
+        return 1, None
+    # r6: the loop's shuffle width follows the graph size, not the core
+    # count — 40 rounds of full-width stages over a host-sized frame are
+    # pure scheduling overhead at small scale (tuning.py).
+    n_parts = loop_partitions(edges.sparkSession.sparkContext, max(n, edges.count()))
+    c_base = F.lit((1.0 - damping) / n)
+    c_damping = F.lit(damping)
+
+    def seed_ranks(flagged, is_dangling):
+        return flagged.select("host", F.lit(1.0 / n).alias("rank"), is_dangling)
+
+    def rank_of(c_in, mass):
+        return c_base + c_damping * (c_in + F.lit(mass / n))
+
+    return n_parts, lambda: _power_iteration(
+        edges, nodes, n_parts, seed_ranks, rank_of, (), max_iter, tol
+    )
+
+
+def _trustrank_setup(edges: DataFrame, seeds, damping, max_iter, tol):
+    """Pre-loop sizing of :func:`trustrank` — mirrors
+    :func:`_pagerank_setup`; ``run`` is None when no seed intersects the
+    graph."""
+    spark = edges.sparkSession
+    nodes = _nodes(edges)
+    # seed lists are human-curated and bounded (thousands of hosts even at
+    # web scale) — broadcastable by construction
+    if isinstance(seeds, DataFrame):
+        seed_df = seeds.select("host").distinct().withColumn("_seed", F.lit(True))
+    else:
+        seed_df = spark.createDataFrame(
+            [(h,) for h in sorted(set(seeds))], "host string"
+        ).withColumn("_seed", F.lit(True))
+    n_seeds = nodes.join(F.broadcast(seed_df), "host").count()
+    if n_seeds == 0:
+        return 1, None
+    # r6: scale-adaptive loop width (see _pagerank_setup / tuning.py)
+    n_parts = loop_partitions(spark.sparkContext, edges.count())
+    c_teleport = F.lit(1.0 - damping) * F.col("s")
+    c_damping = F.lit(damping)
+    c_s = F.col("s")
+
+    def seed_ranks(flagged, is_dangling):
+        return (
+            flagged.join(F.broadcast(seed_df), "host", "left")
+            .select(
+                "host",
+                F.when(F.coalesce("_seed", F.lit(False)), F.lit(1.0 / n_seeds))
+                .otherwise(F.lit(0.0))
+                .alias("s"),
+                is_dangling,
+            )
+            .withColumn("rank", F.col("s"))
         )
 
-    def run_tr():
-        return _trustrank_loop(
-            spark, t_edges, t_nodes, seed_df, n_seeds, t_parts, damping, max_iter, tol
+    def rank_of(c_in, mass):
+        return c_teleport + c_damping * (c_in + F.lit(mass) * c_s)
+
+    return n_parts, lambda: _power_iteration(
+        edges, nodes, n_parts, seed_ranks, rank_of, ("s",), max_iter, tol
+    )
+
+
+def _power_iteration(
+    edges, nodes, n_parts, seed_ranks, rank_of, carry, max_iter, tol
+) -> DataFrame:
+    """The power-iteration loop of :func:`pagerank` and :func:`trustrank`.
+
+    ``seed_ranks(flagged, is_dangling)`` builds the first (host, rank,
+    is_dangling, *carry) state from the node frame left-joined to the
+    source flags; ``rank_of(contrib, dangling_mass)`` is the variant's
+    rank Column; ``carry`` names the extra state columns it reads.  Each
+    round is one job (checkpoint_loop): the lazy state checkpoint is
+    materialized by the combined L1-delta + next-dangling-mass aggregate.
+    The final checkpoint backs the (lazy) result and is registered —
+    consumers release it via queries.release_query_caches()."""
+    # Pre-normalize transition weights once: w = n_links / total_out(src).
+    out_totals = edges.groupBy("src_host").agg(F.sum("n_links").alias("out_total"))
+    trans = (
+        edges.join(out_totals, "src_host")
+        .select(
+            F.col("src_host").alias("host"),
+            "dst_host",
+            (F.col("n_links").cast("double") / F.col("out_total")).alias("w"),
+        )
+        .repartition(n_parts, "host")
+    )
+    # r6: eager localCheckpoint, not persist — a bare persist leaves the
+    # full upstream LOGICAL plan (the Python outlink extraction) inside
+    # trans, and every round's analysis/optimization re-walks it: the
+    # cache short-circuits execution, not planning.  Truncating the
+    # lineage makes each round's plan LogicalRDD-sized (measured ~-1 s
+    # per 20-round loop at sf0.1, outputs bit-identical —
+    # OPTIMIZATION_r06.md).
+    trans, trans_handle = caches.local_checkpoint(trans, eager=True)
+
+    # Dangling = never appears as a source; flagged once, carried in state.
+    srcs = edges.select(F.col("src_host").alias("host")).distinct().withColumn(
+        "_has_out", F.lit(True)
+    )
+    ranks, handle = caches.local_checkpoint(
+        seed_ranks(
+            nodes.join(srcs, "host", "left"),
+            (~F.coalesce(F.col("_has_out"), F.lit(False))).alias("is_dangling"),
+        ),
+        eager=False,
+    )
+
+    # Loop-invariant Column objects hoisted out of the rounds (r6): Columns
+    # are immutable and reusable across DataFrames, and every F.* call is a
+    # py4j round-trip — per-round expression building was a measurable slice
+    # of the ~150 ms/round driver floor.  Only the dangling-mass literal is
+    # rebuilt per round.
+    state_cols = ("host", "rank", "is_dangling", *carry)
+    c_dst = F.col("dst_host").alias("host")
+    c_contrib_in = (F.col("rank") * F.col("w")).alias("c")
+    c_contrib = F.sum("c").alias("contrib")
+    c_old_rank = F.col("rank").alias("old_rank")
+    c_coalesce0 = F.coalesce("contrib", F.lit(0.0))
+    c_delta = F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("delta")
+    c_dangling = F.coalesce(
+        F.sum(F.when(F.col("is_dangling"), F.col("rank"))), F.lit(0.0)
+    ).alias("dangling")
+    mass = ranks.agg(c_dangling).first()[0]
+
+    def step(ranks):
+        ranks = ranks.select(*state_cols)
+        contrib = (
+            ranks.join(trans, "host")
+            .select(c_dst, c_contrib_in)
+            .groupBy("host")
+            .agg(c_contrib)
+        )
+        return (
+            ranks.select("host", c_old_rank, "is_dangling", *carry)
+            .join(contrib, "host", "left")
+            .select(
+                "host",
+                rank_of(c_coalesce0, mass).alias("rank"),
+                "old_rank",
+                "is_dangling",
+                *carry,
+            )
         )
 
-    if p_parts != t_parts:
-        with scoped_loop_conf(spark, p_parts, codegen=False):
-            pr = run_pr()
-        with scoped_loop_conf(spark, t_parts, codegen=False):
-            tr = run_tr()
-        return pr, tr
+    def converged(new_ranks) -> bool:
+        nonlocal mass
+        row = new_ranks.agg(c_delta, c_dangling).first()
+        mass = row["dangling"]
+        return row["delta"] < tol
 
-    results: dict = {}
-    errors: list = []
-
-    def runner(key, fn):
-        try:
-            results[key] = fn()
-        except BaseException as e:  # noqa: BLE001 — re-raised on the caller thread
-            errors.append(e)
-
-    with scoped_loop_conf(spark, p_parts, codegen=False):
-        threads = [
-            threading.Thread(target=runner, args=("pr", run_pr), daemon=True),
-            threading.Thread(target=runner, args=("tr", run_tr), daemon=True),
-        ]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-    if errors:
-        raise errors[0]
-    return results["pr"], results["tr"]
+    ranks, handle = checkpoint_loop(ranks, handle, step, converged, max_iter)
+    trans_handle.unpersist()
+    caches.register(handle)
+    return ranks.select("host", "rank")
 
 
 # ---------------------------------------------------------------------------
@@ -741,7 +621,7 @@ def hits(edges: DataFrame, max_iter: int = 20) -> DataFrame:
 
     Scale shape (same discipline as ``pagerank``):
 
-    - Edges are persisted TWICE, pre-partitioned on src_host and on
+    - Edges are checkpointed TWICE, pre-partitioned on src_host and on
       dst_host — each round's two joins then shuffle only the host-sized
       score frame, never the edge table.
     - Per-iteration normalization is deferred: each round consumes the
@@ -750,91 +630,70 @@ def hits(edges: DataFrame, max_iter: int = 20) -> DataFrame:
       constant, so the converged direction — the principal eigenvectors of
       WᵀW / WWᵀ — is unchanged; it only keeps magnitudes bounded).  The
       true L1 normalization happens once, on the final vectors.
-    - Two jobs per round, both flat-lineage: an eager localCheckpoint on
-      the authority frame (it feeds BOTH the hub join and the new state —
-      unpersisted it would recompute the round's first join twice inside
-      one job), then a lazy localCheckpoint on the new state whose
-      materializing action is the sums aggregate that the NEXT round's
-      scaling needs anyway.  Previous-generation blocks are released only
-      after that action (repo invariant: a lazy checkpoint reads its
-      parent; truncated lineage cannot recompute).
+    - One job per round (checkpoint_loop): a lazy localCheckpoint on the
+      new state whose materializing action is the sums aggregate that the
+      NEXT round's scaling needs anyway.  At real widths the round's
+      authority frame takes a lazy checkpoint too (it feeds BOTH the hub
+      join and the new state); it is released with the parent generation,
+      after the action.
     - Fixed ``max_iter`` rounds (the batch operating point, matching the
       registry's fixed-20-round pagerank): deterministic output and
       bounded driver time; a convergence delta would cost a second scan
       per round for a loop that runs ~20 rounds regardless.
     """
-    from . import caches
-
     spark = edges.sparkSession
-    sc = spark.sparkContext
-
     edges = edges.persist()
-    # unlike pagerank, the node frame is re-joined EVERY round (zero-fill of
-    # hosts missing from a round's sums) — an eager localCheckpoint both
-    # caches it AND truncates its logical plan (a bare persist would leave
-    # the full upstream lineage in every round's analysis, see
-    # _pagerank_loop)
-    before_nodes = caches.persistent_ids(sc)
-    nodes = (
-        edges.select(F.col("src_host").alias("host"))
-        .unionAll(edges.select(F.col("dst_host").alias("host")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes_handles = caches.checkpoint_handles_since(sc, before_nodes)
-    n = nodes.count()
-    if n == 0:
-        for h in nodes_handles:
-            h.unpersist()
+    try:
+        # unlike pagerank, the node frame is re-joined EVERY round (zero-fill
+        # of hosts missing from a round's sums) — an eager localCheckpoint
+        # both caches it AND truncates its logical plan (a bare persist
+        # would leave the full upstream lineage in every round's analysis,
+        # see _power_iteration)
+        nodes, nodes_handle = caches.local_checkpoint(_nodes(edges), eager=True)
+        n = nodes.count()
+        if n == 0:
+            nodes_handle.unpersist()
+            return spark.createDataFrame(
+                [], "host string, hub double, authority double"
+            )
+        # r6: scale-adaptive loop width (see pagerank / tuning.py)
+        n_parts = loop_partitions(spark.sparkContext, max(n, edges.count()))
+        with scoped_loop_conf(spark, n_parts, codegen=False):
+            out = _hits_loop(edges, nodes, n, n_parts, max_iter)
+        # the final state checkpoint (registered by the loop) backs the lazy
+        # result; the node frame does not — free it now
+        nodes_handle.unpersist()
+        return out
+    finally:
         edges.unpersist()
-        return spark.createDataFrame([], "host string, hub double, authority double")
-
-    # r6: scale-adaptive loop width (see pagerank / tuning.py)
-    n_parts = loop_partitions(sc, max(n, edges.count()))
-    with scoped_loop_conf(spark, n_parts, codegen=False):
-        out = _hits_loop(spark, edges, nodes, n, n_parts, max_iter)
-    # the final state checkpoint (registered by the loop) backs the lazy
-    # result; the node frame does not — free it now
-    for h in nodes_handles:
-        h.unpersist()
-    return out
 
 
-# probe override for the per-round a_raw materialization strategy (None =
-# size-derived; scripts/probe_hits_inline.py forces each arm)
-_HITS_INLINE_OVERRIDE: bool | None = None
-
-
-def _hits_loop(spark, edges, nodes, n, n_parts, max_iter) -> DataFrame:
-    from . import caches
-
-    sc = spark.sparkContext
+def _hits_loop(edges, nodes, n, n_parts, max_iter) -> DataFrame:
     # In the tiny regime the a_raw subtree is a one-to-few-task join+agg:
     # recomputing it for its second consumer inside the same job is cheaper
     # than the ~45 ms/round physical-plan compile the lazy checkpoint call
-    # costs (measured, probe_hits_inline.py).  At real widths the checkpoint
-    # stays — there the recompute is a full extra shuffle's worth of work.
-    # Both forms are bit-identical: the checkpoint only shares an RDD, it
-    # never changes the computed values.
-    inline_araw = (
-        _HITS_INLINE_OVERRIDE if _HITS_INLINE_OVERRIDE is not None else n_parts <= 4
-    )
+    # costs (measured r6 at sf0.1, OPTIMIZATION_r06.md).  At real widths
+    # the checkpoint stays — there the recompute is a full extra shuffle's
+    # worth of work.  Both forms are bit-identical: the checkpoint only
+    # shares an RDD, it never changes the computed values.
+    inline_araw = n_parts <= 4
     w = edges.select("src_host", "dst_host", F.col("n_links").cast("double").alias("w"))
     # r6: eager localCheckpoints (not persists) so each round's plans are
-    # LogicalRDD-sized — see _pagerank_loop
-    before_w = caches.persistent_ids(sc)
-    by_src = w.repartition(n_parts, "src_host").localCheckpoint(eager=True)
-    by_dst = w.repartition(n_parts, "dst_host").localCheckpoint(eager=True)
-    w_handles = caches.checkpoint_handles_since(sc, before_w)
+    # LogicalRDD-sized — see _power_iteration
+    by_src, src_handle = caches.local_checkpoint(
+        w.repartition(n_parts, "src_host"), eager=True
+    )
+    by_dst, dst_handle = caches.local_checkpoint(
+        w.repartition(n_parts, "dst_host"), eager=True
+    )
+    state, handle = caches.local_checkpoint(
+        nodes.select(
+            "host", F.lit(1.0 / n).alias("hub"), F.lit(1.0 / n).alias("authority")
+        ),
+        eager=False,
+    )
 
-    before = caches.persistent_ids(sc)
-    state = nodes.select(
-        "host", F.lit(1.0 / n).alias("hub"), F.lit(1.0 / n).alias("authority")
-    ).localCheckpoint(eager=False)
-    prev_handles = caches.checkpoint_handles_since(sc, before)
-    sh = state.agg(F.sum("hub")).first()[0]
-
-    # loop-invariant Columns hoisted — see _pagerank_loop (r6); only the
+    # loop-invariant Columns hoisted — see _power_iteration (r6); only the
     # 1/sh literal is rebuilt per round
     c_src = F.col("host").alias("src_host")
     c_dst = F.col("dst_host").alias("host")
@@ -846,8 +705,10 @@ def _hits_loop(spark, edges, nodes, n, n_parts, max_iter) -> DataFrame:
     c_hub_out = F.coalesce("h_raw", F.lit(0.0)).alias("hub")
     c_auth_out = F.coalesce("a_raw", F.lit(0.0)).alias("authority")
     c_sum_hub = F.sum("hub")
+    sh = state.agg(c_sum_hub).first()[0]
+    araw_handles: list = []
 
-    for _ in range(max_iter):
+    def step(state):
         # authority ← in-edge hubs (input hub scaled to unit L1 mass)
         a_raw = (
             state.select(c_src, "hub")
@@ -859,18 +720,13 @@ def _hits_loop(spark, edges, nodes, n, n_parts, max_iter) -> DataFrame:
             .groupBy("host")
             .agg(c_sum_a)
         )
-        araw_handles: list = []
         if not inline_araw:
             # LAZY checkpoint (r6): consumed by the hub join AND the new
             # state, but a checkpoint shares ONE RDD between them — the
             # state's materializing aggregate computes a_raw's stages once
-            # inside the same job (the recompute-twice hazard applies to
-            # un-checkpointed frames, which duplicate at the plan level).
-            # Eager here cost one extra job per round for nothing.
-            with caches.CKPT_LOCK:
-                before = caches.persistent_ids(sc)
-                a_raw = a_raw.localCheckpoint(eager=False)
-                araw_handles = caches.checkpoint_handles_since(sc, before)
+            # inside the same job.  Eager here cost one extra job per round.
+            a_raw, a_handle = caches.local_checkpoint(a_raw, eager=False)
+            araw_handles.append(a_handle)
         # hub ← out-edge authorities (unnormalized a_raw: a global constant,
         # absorbed by the final normalization)
         h_raw = (
@@ -880,28 +736,25 @@ def _hits_loop(spark, edges, nodes, n, n_parts, max_iter) -> DataFrame:
             .groupBy("host")
             .agg(c_sum_h)
         )
-        state = (
+        return (
             nodes.join(a_raw, "host", "left")
             .join(h_raw, "host", "left")
             .select("host", c_hub_out, c_auth_out)
         )
-        with caches.CKPT_LOCK:
-            before = caches.persistent_ids(sc)
-            state = state.localCheckpoint(eager=False)
-            cur_handles = caches.checkpoint_handles_since(sc, before)
-        sh = state.agg(c_sum_hub).first()[0]
-        for h in prev_handles:
-            h.unpersist()
-        for h in araw_handles:
-            h.unpersist()
-        prev_handles = cur_handles
 
+    def measure(state) -> bool:
+        nonlocal sh
+        sh = state.agg(c_sum_hub).first()[0]
+        # the round's a_raw blocks have no dependents once the state exists
+        while araw_handles:
+            araw_handles.pop().unpersist()
+        return False
+
+    state, handle = checkpoint_loop(state, handle, step, measure, max_iter)
     sa = state.agg(F.sum("authority")).first()[0]
-    for h in w_handles:
-        h.unpersist()
-    edges.unpersist()
-    for h in prev_handles:
-        caches.register(h)
+    src_handle.unpersist()
+    dst_handle.unpersist()
+    caches.register(handle)
     return state.select(
         "host",
         (F.col("hub") / F.lit(sh)).alias("hub"),

@@ -91,11 +91,11 @@ def main() -> None:
         for b in range(args.batches):
             batch = docs.filter(F.col("b") == b).select("url", "text")
             t0 = time.time()
-            v = dedup_batch(spark, work, batch, batch_id=b)
+            v, h = dedup_batch(spark, work, batch, batch_id=b)
             n_dups = v.filter("is_dup").count()
             batch_s.append(round(time.time() - t0, 2))
             batch_dups.append(n_dups)
-            v.unpersist()
+            h.unpersist()
         out["batch_s"] = batch_s
         out["batch_dups"] = batch_dups
     finally:

@@ -148,19 +148,36 @@ def test_tie_break_is_lexicographic(spark):
     assert got[0][1:3] == ("a", "b")
 
 
-def test_registry_query_deterministic_and_caches_released(spark):
-    from extractor_spark.spark import caches
-    from extractor_spark.spark.queries import QUERIES
+@pytest.mark.parametrize(
+    "name",
+    [
+        "bpe_learn_merges",
+        "hostgraph_pagerank",
+        "hostgraph_hits",
+        "hostgraph_spam_mass",
+        "dedup_clusters",
+        "dedup_clusters_star",
+    ],
+)
+def test_registry_query_deterministic_and_caches_released(spark, name):
+    """Every iterative loop (tuning.checkpoint_loop) must hand back or
+    release every checkpoint it created: after the query and
+    release_query_caches(), no persisted RDD survives that was not
+    there before."""
+    from extractor_spark.spark.queries import QUERIES, release_query_caches
 
-    fn, oracle = QUERIES["bpe_learn_merges"]
-    assert oracle is None
-    before = caches.persistent_ids(spark.sparkContext)
-    a = [tuple(r) for r in fn(spark, SF_DIR).collect()]
-    b = [tuple(r) for r in fn(spark, SF_DIR).collect()]
-    assert a == b and len(a) == 24
-    # the iteration loop must release every checkpoint it created
-    after = caches.persistent_ids(spark.sparkContext)
-    assert after <= before, "bpe loop leaked persisted blocks"
+    fn, _oracle = QUERIES[name]
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    a = sorted(tuple(r) for r in fn(spark, SF_DIR).collect())
+    release_query_caches()
+    b = sorted(tuple(r) for r in fn(spark, SF_DIR).collect())
+    release_query_caches()
+    assert a == b and a
+    if name == "bpe_learn_merges":
+        assert len(a) == 24
+    after = set(jsc.getPersistentRDDs().keySet())
+    assert after <= before, f"{name} leaked persisted blocks: {after - before}"
 
 
 def test_exhausts_gracefully_when_vocab_is_tiny(spark):

@@ -41,10 +41,10 @@ def _run_incremental(spark, docs, n_batches=3, threshold=0.8):
         rows = {}
         for b in range(n_batches):
             batch = docs.filter(F.col("b") == b).select("url", "text")
-            v = dedup_batch(spark, work, batch, threshold=threshold, batch_id=b)
+            v, h = dedup_batch(spark, work, batch, threshold=threshold, batch_id=b)
             for r in v.collect():
                 rows[r["url"]] = (r["is_dup"], r["dup_of"])
-            v.unpersist()
+            h.unpersist()
         return rows
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -146,7 +146,11 @@ def test_streaming_equals_batch_loop(spark, tmp_path):
             os.path.join(part_dir, src), os.path.join(stream_dir, f"batch_{b}.parquet")
         )
 
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
     out = streaming_dedup(spark, stream_dir, os.path.join(str(tmp_path), "work"))
+    # every microbatch's verdict checkpoint is released with its batch
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
     stream_rows = {r["url"]: (r["is_dup"], r["dup_of"]) for r in out.collect()}
     assert stream_rows == batch_rows
 
@@ -209,16 +213,20 @@ def test_batch_replay_is_idempotent(spark):
     )
     work = tempfile.mkdtemp(prefix="incdedup_replay_")
     try:
+        handles = []
         for b in range(2):
             batch = docs.filter(F.col("b") == b).select("url", "text")
-            v1 = dedup_batch(spark, work, batch, batch_id=b)
+            v1, h1 = dedup_batch(spark, work, batch, batch_id=b)
+            handles.append(h1)
         first = sorted(tuple(r) for r in v1.collect())
         bands_rows = spark.read.parquet(os.path.join(work, BANDS_SUBDIR)).count()
 
         # retry batch 1: store already holds its first attempt
         batch = docs.filter(F.col("b") == 1).select("url", "text")
-        v2 = dedup_batch(spark, work, batch, batch_id=1)
+        v2, h2 = dedup_batch(spark, work, batch, batch_id=1)
         assert sorted(tuple(r) for r in v2.collect()) == first
+        for h in handles + [h2]:
+            h.unpersist()
         # overwrite, not append: store row count unchanged
         assert (
             spark.read.parquet(os.path.join(work, BANDS_SUBDIR)).count()

@@ -238,12 +238,9 @@ def test_semdedup_pairs_arrow_matches_sql(spark):
     from extractor_spark.spark import caches
 
     _views(spark, "/root/testdata/sf0.01")
-    sc = spark.sparkContext
-    before = caches.persistent_ids(sc)
-    cells = _ivf_assign_cells(spark, _ivf_centroids(spark)).localCheckpoint()
+    cells, h = caches.local_checkpoint(_ivf_assign_cells(spark, _ivf_centroids(spark)))
     cells.createOrReplaceTempView("ivf_cells")
-    for h in caches.checkpoint_handles_since(sc, before):
-        caches.register(h)
+    caches.register(h)
     want = sorted(
         tuple(r)
         for r in spark.sql(

@@ -315,6 +315,19 @@ def test_hits_matches_numpy_twin(spark):
         assert abs(got_auth[h] - want_auth[h]) < 1e-9, h
 
 
+def test_hits_checkpointed_araw_path(spark, monkeypatch):
+    """Loop widths above 4 take the per-round a_raw checkpoint that the
+    tiny regime inlines: same twin agreement, and every a_raw checkpoint
+    is released with its round."""
+    from extractor_spark.spark import webgraph
+
+    monkeypatch.setattr(webgraph, "loop_partitions", lambda sc, n: 8)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    test_hits_matches_numpy_twin(spark)
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
+
+
 def test_hits_hand_graph(spark):
     # a→b, a→c, b→c: a is the pure hub (links both authorities); c the top
     # authority (cited by both); a gets zero authority, c zero hub.
@@ -507,3 +520,35 @@ def test_spam_mass_query_wrapper(spark):
     rows2 = q(spark, "/root/testdata/sf0.001").collect()
     release_query_caches()
     assert [tuple(r) for r in rows2] == [tuple(r) for r in rows]
+
+
+@pytest.mark.parametrize("seeds", ["quarter", "absent"])
+def test_spam_mass_ranks_equals_sequential_bit_for_bit(spark, seeds):
+    """The two-thread spam_mass_ranks path (seeds in the graph) and its
+    sequential fallback (no seed in the graph) return exactly the ranks of
+    separate pagerank() and trustrank() calls on the same edges."""
+    import pandas as pd
+
+    from extractor_spark.spark.webgraph import spam_mass_ranks, trustrank
+
+    edges = twin_host_edges()
+    hosts = sorted({h for e in edges for h in e})
+    seed_list = hosts[::4] if seeds == "quarter" else ["zz.test"]
+    edf = spark.createDataFrame(
+        pd.DataFrame(
+            [(s, d, w) for (s, d), w in edges.items()],
+            columns=["src_host", "dst_host", "n_links"],
+        )
+    )
+
+    def ranks(df):
+        return {r["host"]: r["rank"] for r in df.collect()}
+
+    want_pr = ranks(pagerank(edf, max_iter=25))
+    want_tr = ranks(trustrank(edf, seed_list, max_iter=25))
+    pr, tr = spam_mass_ranks(edf, seed_list, max_iter=25)
+    got_pr, got_tr = ranks(pr), ranks(tr)
+    release_query_caches()
+    assert got_pr == want_pr and len(got_pr) == len(hosts)
+    assert got_tr == want_tr
+    assert bool(got_tr) == (seeds == "quarter")
