@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry`` runs the flagship extract pipeline over a deterministic synthetic
-``pages`` table (reference fixtures embedded) and returns the output
+``pages`` table (reference fixtures embedded when present) and returns the output
 DataFrame.  ``queries``/``oracle_sql`` expose the operator inventory of
 SURVEY.md §2 over the driver-provided tables with DuckDB oracles
 (extractor_spark/spark/queries.py); probabilistic scale-path ops
@@ -40,8 +40,10 @@ BLOG_SCHEMA = {
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: synthesize pages (fixtures + boilerplate corpus) → dedup →
-    salt → convert (mapInPandas) → schema extraction → typed output."""
+    """Flagship: synthesize pages (unit literals, reference fixtures when
+    present, boilerplate corpus, PDFs) → bucket shuffle → convert with
+    in-stage latest-crawl dedup (mapInPandas) → schema extraction → typed
+    output."""
     from extractor_spark.spark.pipeline import PipelineConfig, run_pipeline
     from extractor_spark.spark.synth import write_pages
 
@@ -55,7 +57,6 @@ def entry(spark: SparkSession) -> DataFrame:
         output_path=out_path,
         schema=BLOG_SCHEMA,
         n_buckets=8,
-        n_salt=4,
         resume=False,
     )
     run_pipeline(spark, conf)

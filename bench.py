@@ -118,7 +118,7 @@ def main() -> None:
     from extractor_spark.spark.pipeline import PipelineConfig, run_pipeline
     from extractor_spark.spark.queries import QUERIES
     from extractor_spark.spark.session import get_spark
-    from extractor_spark.spark.synth import write_pages
+    from extractor_spark.spark.synth import FIXTURE_DIR, write_pages
 
     spark = get_spark("extractor-spark-bench", cpus=cpus)
 
@@ -140,7 +140,7 @@ def main() -> None:
     warmup(spark, pages_path)
 
     timings: dict[str, float] = {}
-    extras: dict = {}
+    extras: dict = {"fixtures": "present" if FIXTURE_DIR.is_dir() else "absent"}
 
     summary = None
 
@@ -152,7 +152,6 @@ def main() -> None:
                 pages_path=pages_path,
                 output_path=out_path,
                 n_buckets=64,
-                n_salt=16,
                 resume=False,
             ),
         )

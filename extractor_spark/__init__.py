@@ -1,7 +1,7 @@
 """extractor_spark — PySpark-native HTML→structured-data extraction engine.
 
 A brand-new engine with the capabilities of the reference TypeScript library
-``lightfeed/extractor`` (see /root/reference, surveyed in SURVEY.md), built
+``lightfeed/extractor`` (surveyed in SURVEY.md), built
 Spark-first: the per-document transform (HTML tidy → markdown → schema-guided
 extraction → sanitization) lives in pure-Python ``extractor_spark.engine`` and
 is applied over Arrow batches via vectorized ``mapInPandas`` stages in

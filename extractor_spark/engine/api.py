@@ -1,4 +1,4 @@
-"""Public per-document API (reference A1/A2, /root/reference/src/index.ts)."""
+"""Public per-document API (reference A1/A2, src/index.ts)."""
 
 from __future__ import annotations
 

@@ -1,5 +1,5 @@
 """HTML→markdown conversion driver (reference operator C1,
-/root/reference/src/converters.ts:75-236)."""
+reference src/converters.ts:75-236)."""
 
 from __future__ import annotations
 
@@ -34,7 +34,7 @@ from extractor_spark.engine.turndown_md import (
 @dataclass(frozen=True)
 class HtmlExtractionOptions:
     """Mirrors the reference's HTMLExtractionOptions
-    (/root/reference/src/types.ts:16-44); all default False."""
+    (reference src/types.ts:16-44); all default False."""
 
     extract_main_html: bool = False
     include_images: bool = False
@@ -93,5 +93,5 @@ def convert_html_to_markdown(
     options: HtmlExtractionOptions | None = None,
     source_url: str | None = None,
 ) -> str:
-    """Public standalone export (reference A2, /root/reference/src/index.ts:76-82)."""
+    """Public standalone export (reference A2, src/index.ts:76-82)."""
     return html_to_markdown(html, options, source_url)

@@ -1,5 +1,5 @@
 """Boilerplate-discard predicates (trafilatura-derived, as curated by the
-reference at /root/reference/src/converters.ts:348-425).
+reference at src/converters.ts:348-425).
 
 The reference evaluates two XPath lists with jsdom and removes every match.
 Here the same predicates are frozen into attribute-substring tests over our

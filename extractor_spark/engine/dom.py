@@ -6,7 +6,7 @@ merging, a tolerant HTML5-flavoured tree builder (implied html/head/body,
 auto-closing ``p``/``li``/``td``/... , void elements, raw-text script/style),
 and a parse5-style serializer (used to reproduce the reference's
 cheerio ``$("body").html()`` intermediate — see
-/root/reference/src/converters.ts:239-327).
+reference src/converters.ts:239-327).
 
 Design notes for scale: this module is the hot path of the extract pipeline —
 it runs once per document inside Arrow-batched ``mapInPandas`` workers.  It is

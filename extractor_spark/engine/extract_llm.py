@@ -1,5 +1,5 @@
 """Structured-extraction stage (reference operators E1–E4,
-/root/reference/src/extractors.ts).
+reference src/extractors.ts).
 
 The LLM client is pluggable: the sandbox (and CI) uses the deterministic
 offline ``MarkdownRuleExtractor``; a real endpoint plugs in behind the same

@@ -1,6 +1,6 @@
 """Tolerant JSON repair — stand-in for the ``jsonrepair`` dependency the
 reference uses on Gemini-style string outputs
-(/root/reference/src/extractors.ts:216-222).
+(reference src/extractors.ts:216-222).
 
 Handles the malformed-JSON patterns LLMs actually emit: markdown code fences,
 single/smart-quoted strings, unquoted object keys, trailing commas, missing

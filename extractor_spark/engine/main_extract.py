@@ -1,5 +1,5 @@
 """Main-content extraction — discard-rule pass over the tidied HTML
-(/root/reference/src/converters.ts:40-70)."""
+(reference src/converters.ts:40-70)."""
 
 from __future__ import annotations
 

@@ -3,7 +3,7 @@
 Why here: every production crawl pipeline filters its frontier (and often
 re-filters archived captures) against per-host robots.txt before fetch /
 reprocessing — the reference's acquisition layer delegates this to the
-browser context (/root/reference/src/dev/testBrowserExtraction.ts runs a
+browser context (reference src/dev/testBrowserExtraction.ts runs a
 live browser which honors robots), so a batch reimplementation needs the
 rule engine itself.  This module is the per-host unit; the Spark stage
 that applies it across a crawl lives in extractor_spark/spark/robots.py.

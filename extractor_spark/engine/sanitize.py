@@ -1,5 +1,5 @@
 """Schema-guided recovery of LLM output (reference operators S1–S3,
-/root/reference/src/utils/schemaUtils.ts:36-365).
+reference src/utils/schemaUtils.ts:36-365).
 
 ``safe_sanitized_parser`` recovers the maximal valid subset of a raw object:
 primitives parse-or-None, objects drop invalid optional properties and null

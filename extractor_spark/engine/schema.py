@@ -1,11 +1,11 @@
 """Extraction-schema dialect.
 
 The reference takes arbitrary per-call Zod schemas
-(/root/reference/src/types.ts:57).  The Spark engine's equivalent is a
+(reference src/types.ts:57).  The Spark engine's equivalent is a
 job-level JSON-Schema-style dict, normalized here into a canonical internal
 form that mirrors Zod's wrapper structure (optional/nullable are wrappers, not
 flags) because the sanitizer's recovery semantics
-(/root/reference/src/utils/schemaUtils.ts:189-365) are wrapper-driven.
+(reference src/utils/schemaUtils.ts:189-365) are wrapper-driven.
 
 Internal form (plain dicts):
     {"type": "string",  "checks": [{"kind": "url"|"email"|"datetime"|"min"|"max", ...}]}

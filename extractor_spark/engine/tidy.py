@@ -1,7 +1,7 @@
 """HTML tidy pass — element denylist + broken-attribute scrub.
 
 Re-expresses the reference's cheerio tidy stage
-(/root/reference/src/converters.ts:239-327): drop any attribute whose *name*
+(reference src/converters.ts:239-327): drop any attribute whose *name*
 contains a double quote (broken-markup guard), remove a fixed element
 denylist (keeping footer/form/fieldset/button/select/option/label, which the
 reference deliberately retains), optionally drop img/picture/figure, then
@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from extractor_spark.engine.dom import parse_document, serialize_inner
 
-# /root/reference/src/converters.ts:264-316 — exact list, commented-out
+# reference src/converters.ts:264-316 — exact list, commented-out
 # entries (footer, form, button, fieldset, label, option, select) excluded.
 MANUALLY_CLEANED_ELEMENTS = frozenset(
     (
@@ -61,13 +61,13 @@ def tidy_dom(html: str, include_images: bool = False):
 def tidy_html(html: str, include_images: bool = False) -> str:
     """Tidy raw HTML and return the body inner HTML
     (cheerio ``$("body").html()`` equivalent,
-    /root/reference/src/converters.ts:239-327)."""
+    reference src/converters.ts:239-327)."""
     return serialize_inner(tidy_dom(html, include_images).body)
 
 
 def clean_attribute(attribute: str | None) -> str:
     """Collapse newline runs in title/alt attribute text
-    (/root/reference/src/converters.ts:329-331)."""
+    (reference src/converters.ts:329-331)."""
     if not attribute:
         return ""
     import re
@@ -77,7 +77,7 @@ def clean_attribute(attribute: str | None) -> str:
 
 def clean_url(url_string: str) -> str:
     """Amazon-only tracking-parameter strip
-    (/root/reference/src/converters.ts:10-35): on amazon.com/.ca hosts,
+    (reference src/converters.ts:10-35): on amazon.com/.ca hosts,
     truncate at ``/ref=``; all other URLs pass through unchanged."""
     try:
         hostname = _hostname_of(url_string)

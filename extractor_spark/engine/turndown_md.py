@@ -5,14 +5,14 @@ default (commonmark, setext/inlined/indented) conversion pipeline — DOM
 whitespace collapse, rule dispatch with blank-node handling, flanking
 whitespace, block joining capped at one blank line, character escaping — plus
 the reference's seven custom rules added at
-/root/reference/src/converters.ts:85-216 (remove-irrelevant,
+reference src/converters.ts:85-216 (remove-irrelevant,
 remove-aria-hidden, truncate-svg, title-as-h1, improved-paragraph,
 improved-inline-link, images).  Custom rules take priority in
 reverse-addition order, exactly like turndown's ``addRule`` unshift.
 
 Byte-identical output against the reference's golden strings is the contract
 (tests/test_turndown_golden.py ports every literal expectation in
-/root/reference/tests/unit/converters.test.ts).
+reference tests/unit/converters.test.ts).
 """
 
 from __future__ import annotations

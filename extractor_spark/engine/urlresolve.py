@@ -1,7 +1,7 @@
 """Relative→absolute URL resolution with Node legacy ``url.resolve`` parity.
 
 The reference resolves link/image targets against the page URL with Node's
-legacy resolver (/root/reference/src/converters.ts:153,188).  RFC-3986
+legacy resolver (reference src/converters.ts:153,188).  RFC-3986
 ``urljoin`` disagrees with it on real crawl inputs — backslashes, host case,
 the legacy auto-escape charset, ``//`` duplicate path segments surviving the
 merge, hostname-part validation spilling into the path — so this module

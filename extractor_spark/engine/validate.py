@@ -1,7 +1,7 @@
 """Zod-equivalent strict parser for the internal schema dialect.
 
 Replicates the observable ``schema.parse`` behavior the reference's sanitizer
-leans on (zod 3.25, /root/reference/package.json:75): strict type checks with
+leans on (zod 3.25, reference package.json:75): strict type checks with
 no coercion, unknown object keys stripped, ``optional`` accepting undefined
 but not null, ``nullable`` accepting null but not undefined, and the stock
 string/number check implementations (url via WHATWG-style scheme parse, the

@@ -9,7 +9,7 @@ member, ``zlib`` with window 31 exposes ``unused_data`` so we can walk
 them all).
 
 The reference has no acquisition layer beyond fixture reads
-(/root/reference/tests/integration/extract.test.ts:26-29); this is the
+(reference tests/integration/extract.test.ts:26-29); this is the
 Spark-first source for the Iceberg-style ``pages`` table the engine
 actually runs on (SURVEY.md §1.3).
 """

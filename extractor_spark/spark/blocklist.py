@@ -5,7 +5,7 @@ CCNet, RefinedWeb, FineWeb and Dolma all drop pages whose host or URL
 matches a category blocklist (the canonical one is the Université
 Toulouse 1 "Blacklists UT-Capitole" distribution: per-category files of
 `domains` — which block the domain AND every subdomain — and `urls` —
-which block by URL prefix).  No analog in /root/reference (the reference
+which block by URL prefix).  No analog in the reference (the reference
 extracts single pages); semantics follow the public UT1 README and the
 FineWeb/Dolma usage of it.
 

@@ -3,7 +3,7 @@
 The index-and-serve layer a web corpus needs for exact-phrase retrieval
 (quote attribution, contamination auditing, "which training docs contain
 this sentence") — the operator class Lucene/Elasticsearch fill in serving
-stacks, expressed Spark-first.  No analog in /root/reference (it extracts
+stacks, expressed Spark-first.  No analog in the reference (it extracts
 single pages); semantics are the textbook positional-postings model
 (Manning/Raghavan/Schütze IR ch. 2: phrase queries via positional
 intersection).

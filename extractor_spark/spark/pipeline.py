@@ -1,30 +1,37 @@
 """End-to-end extract pipeline (reference A1 composed Spark-first, plus the
-scale engineering the north rule mandates: dedup-latest window, host
-salting, resumable per-bucket manifest with lineage + metrics).
+scale engineering the north rule mandates: latest-crawl-per-url dedup,
+explicit skew handling, resumable per-bucket manifest with lineage +
+metrics).
 
 Dataflow (SURVEY.md §3.1 Spark lifecycle):
 
-    scan pages (parquet/Iceberg)                    -- Catalyst pruning
-      → latest-crawl-per-url window dedup           -- shuffle on url
+    scan pages (parquet/Iceberg/WARC)               -- Catalyst pruning
       → bucket = pmod(xxhash64(url), n_buckets)     -- resume granularity
-      → anti-join vs manifest buckets               -- broadcast, ~free
-      → repartition(url_host, salt)                 -- defuses domain skew
-      → stage C (mapInPandas convert)               -- Arrow batches
+      → NOT IN manifest buckets                     -- literal filter at scan
+      → repartition(bucket) + sort(url, warc_ts ↓)  -- the one shuffle
+      → stage C (mapInPandas convert, keeping the
+        first row of each url run = latest crawl)   -- Arrow batches
       → optional broadcast context join on url
       → stage E (mapInPandas extract)
-      → write output partitioned by bucket
+      → write output partitioned by bucket          -- no further shuffle
       → append manifest rows (bucket, metrics, lineage)
 
-At 10^12-document scale every step stays shuffle-bounded: one shuffle for the
-dedup window, one for the skew repartition; the manifest join broadcasts
-(manifest ≪ data); output partitioning by bucket gives idempotent re-runs
-(dynamic partition overwrite replaces exactly the re-processed buckets).
+At 10^12-document scale every step stays shuffle-bounded: one full-data
+shuffle, on bucket.  Bucket = f(url), so every crawl of a url lands in one
+partition (dedup needs no second shuffle) and each task holds whole buckets
+(the bucket-partitioned write emits one file per bucket).  Skew is handled
+by construction: the bucket hashes the whole url, so one hot host's pages
+spread across all buckets instead of serializing on one partition.  Output
+partitioning by bucket gives idempotent re-runs (dynamic partition overwrite
+replaces exactly the re-processed buckets).
 
 Manifest contract (resume identity): one row per (bucket, run); rows record
 ``n_buckets`` — the bucket-assignment modulus — and resume FAILS LOUDLY on a
 mismatch (a silent mismatch would skip the wrong buckets).  Each wave appends
 only its own buckets' rows, aggregated from the wave's partition directories
 (partition-pruned read — previously-committed waves are never re-scanned).
+The ``dedup_mode`` column is always ``"fused"``; it stays so manifests from
+earlier versions, which also recorded it, resume unchanged.
 """
 
 from __future__ import annotations
@@ -58,21 +65,7 @@ class PipelineConfig:
     # Resume granularity; must stay FIXED across runs (bucket identity is
     # xxhash64(url) % n_buckets — changing it invalidates the manifest).
     n_buckets: int = 512
-    n_salt: int = 64
     repartition: int | None = None  # default: 4 × spark.sql.shuffle.partitions
-    # "fused" (default): ONE full-data shuffle — partition by bucket (bucket =
-    # f(url), so same-url rows co-locate), sort runs within partitions, dedup
-    # inside the convert stage, write bucket-aligned with no further shuffle.
-    # url-hash bucketing is inherently uniform, so host skew cannot
-    # materialize.  At petabyte scale the saved shuffles are the dominant
-    # network cost.
-    # "windowed": reference-shaped plan — window dedup shuffle, then salted
-    # url-host repartition ("hash" one-pass, or "range" for sorted host
-    # locality at the cost of a sampling pass), then a bucket shuffle for the
-    # write.  Use when host-grouped processing is required (per-host rate
-    # limits, politeness, sorted host output).
-    dedup_mode: str = "fused"
-    partition_strategy: str = "hash"
     # >1 = intra-run checkpointing: buckets split into this many commit
     # waves, manifest refreshed after each (crash loses ≤ one wave).
     waves: int = 1
@@ -91,8 +84,9 @@ class PipelineConfig:
 
 
 def dedup_latest_per_url(pages: DataFrame) -> DataFrame:
-    """Keep the newest crawl of each url (engineered window op,
-    SURVEY.md §2.5): row_number over (url ⟶ warc_ts desc)."""
+    """Keep the newest crawl of each url: row_number over (url ⟶ warc_ts
+    desc).  The reference semantics that ``run_pipeline``'s in-stage dedup
+    must match (its equivalence test's oracle)."""
     w = Window.partitionBy("url").orderBy(F.col("warc_ts").desc())
     return (
         pages.withColumn("_rn", F.row_number().over(w))
@@ -113,29 +107,6 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn(
         "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
     )
-
-
-def defuse_skew(
-    df: DataFrame, n_salt: int, partitions: int, strategy: str = "hash"
-) -> DataFrame:
-    """Spread hot hosts: repartition on (url_host, salt) so one domain's
-    pages land on n_salt partitions instead of one (BASELINE.json north
-    rule).  The convert/extract stages are maps, so this partitioning is
-    purely for work balance — correctness is unaffected.
-
-    Range partitioning (per the north rule) samples key weights, so the
-    zipf-heavy hosts are spread into weight-balanced partitions; the salt
-    splits a single hot host across up to n_salt ranges.  The partition
-    count is always explicit: HTML is cheap in bytes but expensive in CPU,
-    so AQE's size-based coalescing (which would happily fold a 70 MB
-    shuffle into one partition) must not shrink the Python stage's
-    parallelism — explicit counts are exempt from coalescing."""
-    df = df.withColumn("url_host", F.expr("parse_url(url, 'HOST')")).withColumn(
-        "salt", F.pmod(F.xxhash64("url"), F.lit(n_salt)).cast("int")
-    )
-    if strategy == "range":
-        return df.repartitionByRange(partitions, "url_host", "salt")
-    return df.repartition(partitions, "url_host", "salt")
 
 
 def completed_buckets(
@@ -219,8 +190,6 @@ def warmup(
         dedup_latest_per_url(sample).select("url", "warc_ts", "html", "lang")
     )
     if schema is not None:
-        from extractor_spark.spark.stages import extract_stage
-
         converted = extract_stage(converted, schema)
     converted.write.mode("overwrite").parquet(os.path.join(scratch, "out"))
 
@@ -358,25 +327,19 @@ def _run_wave(
     wave_buckets: list[int],
     run_id: str,
 ) -> None:
-    if conf.dedup_mode == "fused":
-        # one shuffle: bucket partitioning co-locates url runs AND aligns
-        # with the bucketed write (no further shuffle before the sink)
-        n_parts = min(n_parts, conf.n_buckets)
-        pages = pages.repartition(n_parts, "bucket").sortWithinPartitions(
-            "url", F.col("warc_ts").desc()
-        )
-        converted = convert_stage(
-            pages.select("url", "warc_ts", "html", "lang"),
-            conf.html_options,
-            dedup_sorted_runs=True,
-        )
-    else:
-        pages = dedup_latest_per_url(pages)
-        pages = defuse_skew(pages, conf.n_salt, n_parts, conf.partition_strategy)
-        converted = convert_stage(
-            pages.select("url", "warc_ts", "html", "lang"),
-            conf.html_options,
-        )
+    # one shuffle: bucket partitioning co-locates url runs AND aligns with
+    # the bucketed write (no further shuffle before the sink).  The count is
+    # explicit so AQE's size-based coalescing cannot shrink the CPU-bound
+    # Python stage's parallelism.
+    n_parts = min(n_parts, conf.n_buckets)
+    pages = pages.repartition(n_parts, "bucket").sortWithinPartitions(
+        "url", F.col("warc_ts").desc()
+    )
+    converted = convert_stage(
+        pages.select("url", "warc_ts", "html", "lang"),
+        conf.html_options,
+        dedup_sorted_runs=True,
+    )
 
     if conf.schema is not None:
         md = converted
@@ -400,11 +363,8 @@ def _run_wave(
     # Dynamic partition overwrite: re-running a bucket replaces exactly that
     # bucket's files — idempotent resume.
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    if conf.dedup_mode != "fused":
-        # group buckets so each directory gets one file, not one per task
-        output = output.repartition(conf.n_buckets, "bucket")
-    # fused mode: rows never moved since the bucket shuffle, so each task
-    # already holds whole buckets — partitionBy emits one file per bucket
+    # rows never moved since the bucket shuffle, so each task already holds
+    # whole buckets — partitionBy emits one file per bucket
     output.write.mode("overwrite").partitionBy("bucket").parquet(conf.output_path)
 
     # Manifest: one row per completed bucket with lineage + metrics,
@@ -447,7 +407,7 @@ def _run_wave(
         .withColumn("run_id", F.lit(run_id))
         # resume identity + provenance (completed_buckets checks n_buckets)
         .withColumn("n_buckets", F.lit(conf.n_buckets))
-        .withColumn("dedup_mode", F.lit(conf.dedup_mode))
+        .withColumn("dedup_mode", F.lit("fused"))
     )
     manifest_rows.write.mode("append").parquet(manifest_path)
 

@@ -1,7 +1,7 @@
 """Product quantization (PQ) + asymmetric-distance search — the IVF-PQ
 memory-scale ANN path (Jégou, Douze, Schmid, "Product Quantization for
 Nearest Neighbor Search", TPAMI 2011 — public method, no reference analog:
-/root/reference has no vector-search surface).
+the reference has no vector-search surface).
 
 At 100 TB the embedding table itself is the memory bottleneck: a 64-dim
 float64 vector is 512 bytes, its PQ code at m=8 subspaces × k=16 centroids

@@ -28,7 +28,7 @@ TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
 
-# (applicationId, path) -> (mtime_ns, DataFrame).  `spark.read.parquet`
+# (session, path) -> (mtime_ns, DataFrame).  `spark.read.parquet`
 # lists the path and reads footers eagerly — ~0.7 s for the 10 tables,
 # paid by EVERY query invocation before r6 (~60 s across a 90-query
 # bench suite).  The reader DataFrames are memoized per session+path;
@@ -37,16 +37,14 @@ TABLES = (
 # reader plans.
 _VIEW_DF_CACHE: dict = {}
 
-# (applicationId, view name) -> (path, mtime_ns) last registered by
-# _views.  Registration itself costs ~7 ms/view (py4j + plan analysis) —
-# ~70 ms per query invocation, ~6 s across the bench suite — so outside
-# pytest an unchanged (path, mtime) skips the createOrReplaceTempView.
-# UNDER PYTEST the skip is disabled and every call re-registers: tests
-# overwrite these view names with engineered frames and rely on the next
-# registry-query invocation resetting them (the reason the r6 main
-# session did not memoize registration).  PYTEST_CURRENT_TEST is set by
-# the pytest harness for the duration of each test.  No non-test
-# consumer (bench.py, __spark_entry__, jobs/*) overwrites these names.
+# (session, view name) -> (path, mtime_ns) last registered by _views.
+# Registration itself costs ~7 ms/view (py4j + plan analysis) — ~70 ms per
+# query invocation, ~6 s across the bench suite — so an unchanged
+# (path, mtime) skips the createOrReplaceTempView.  Both maps are keyed by
+# the JVM session: temp views belong to one session, and
+# ``spark.newSession()`` or a foreachBatch clone shares the application
+# id but not the views.  Code that overwrites one of these view names
+# with its own frame must clear this map before the next registry query.
 _VIEW_REG_STATE: dict = {}
 
 
@@ -54,21 +52,20 @@ def _views(spark: SparkSession, sf_dir: str) -> None:
     # Oracle comparisons assume UTC timestamp semantics (TESTDATA parquet is
     # UTC-naive; DuckDB reads it naively).  Session-settable at runtime.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    app = spark.sparkContext.applicationId
-    under_test = "PYTEST_CURRENT_TEST" in os.environ
+    session = spark._jsparkSession.sessionUUID()
     for name in TABLES:
         path = f"{sf_dir}/{name}.parquet"
         try:
             mtime = os.stat(path).st_mtime_ns
         except OSError:
             mtime = None
-        key = (app, path)
+        key = (session, path)
         ent = _VIEW_DF_CACHE.get(key)
         if ent is None or ent[0] != mtime:
             ent = (mtime, spark.read.parquet(path))
             _VIEW_DF_CACHE[key] = ent
-        rkey = (app, name)
-        if under_test or _VIEW_REG_STATE.get(rkey) != (path, mtime):
+        rkey = (session, name)
+        if _VIEW_REG_STATE.get(rkey) != (path, mtime):
             ent[1].createOrReplaceTempView(name)
             _VIEW_REG_STATE[rkey] = (path, mtime)
 

@@ -86,7 +86,6 @@ def markdown_to_text(markdown: str) -> str:
 def convert_stage(
     pages: DataFrame,
     options: HtmlExtractionOptions | None = None,
-    compute_text: bool = True,
     dedup_sorted_runs: bool = False,
 ) -> DataFrame:
     """Stage C: (url, warc_ts, html, lang, ...) → CONVERT_SCHEMA rows.
@@ -154,13 +153,11 @@ def convert_stage(
 
                         markdown = pdf_to_text(bytes(raw))
                         boiler = len(raw) - len(markdown)
-                        if compute_text:
-                            text = " ".join(markdown.split())
+                        text = " ".join(markdown.split())
                     else:
                         markdown = html_to_markdown(html, opts, url)
                         boiler = len(html) - len(markdown)
-                        if compute_text:
-                            text = markdown_to_text(markdown)
+                        text = markdown_to_text(markdown)
                 except Exception as exc:  # keep the row, record the failure
                     error = f"{type(exc).__name__}: {exc}"[:500]
                 out["markdown"].append(markdown)

@@ -4,20 +4,22 @@ The authoritative input shape (BASELINE.json input_hint):
     pages(url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, lang STRING)
 
 Rows come from three sources, all seeded (no wall-clock, no global RNG):
-  1. the reference's HTML fixtures verbatim (byte-identity anchors),
+  1. the reference's HTML fixtures verbatim (byte-identity anchors) — only
+     when ``FIXTURE_DIR`` exists; this module is the one reader of it,
   2. unit-literal micro-pages from converters.test.ts,
   3. templated boilerplate-heavy pages at arbitrary scale, generated
      *distributed* (spark.range → mapInPandas) so the same generator scales
      from the 60-row smoke table to bench corpora; host distribution is
-     zipf-skewed over ~50 hosts to exercise the salting path, and every
-     20th page appears twice with differing warc_ts to exercise the
-     dedup-latest window.
+     zipf-skewed over ~50 hosts (hot hosts for the bucket-spread path), and
+     every 20th page appears twice with differing warc_ts to exercise
+     latest-crawl-per-url dedup.
 """
 
 from __future__ import annotations
 
 import datetime
 import hashlib
+import warnings
 from pathlib import Path
 from typing import Iterator
 
@@ -36,7 +38,9 @@ PAGES_SCHEMA = T.StructType(
     ]
 )
 
-_FIXTURE_DIR = Path("/root/reference/tests/fixtures")
+# The reference's HTML fixtures.  Absent outside the reference checkout:
+# every reader goes through fixture_html(), which then returns nothing.
+FIXTURE_DIR = Path("/root/reference/tests/fixtures")
 
 FIXTURE_URLS = {
     "blog-post": "https://example.com/blog/async-await",
@@ -149,8 +153,8 @@ def adversarial_page_html(page_id: int) -> str:
     lists/blockquotes, body-level <title>, aria-hidden nodes, svg, broken
     quotes in attributes, uppercase/backslash/Amazon-/ref= link targets,
     data: images, entities, pre/code blocks.  Deterministic per page_id;
-    used for cross-mode byte-identity goldens (every page must convert with
-    no error and identical bytes in fused vs windowed pipelines)."""
+    used for byte-identity goldens (every page must convert with no error,
+    to identical bytes in the pipeline and in its window-dedup oracle)."""
     w = _words(page_id, "adv", 12)
     k = page_id % 7
     return f"""<!DOCTYPE html>
@@ -202,30 +206,33 @@ def _synth_row(page_id: int, variant: int = 0) -> dict:
     }
 
 
+def fixture_html() -> dict[str, str]:
+    """The reference HTML fixtures that exist under ``FIXTURE_DIR``, by
+    name (a subset of ``FIXTURE_URLS``; empty when the directory is absent)."""
+    paths = {name: FIXTURE_DIR / f"{name}.html" for name in sorted(FIXTURE_URLS)}
+    return {name: p.read_text() for name, p in paths.items() if p.is_file()}
+
+
 def fixture_rows() -> list[dict]:
-    rows = []
-    for i, (name, url) in enumerate(sorted(FIXTURE_URLS.items())):
-        html = (_FIXTURE_DIR / f"{name}.html").read_text()
-        rows.append(
-            {
-                "url": url,
-                "warc_ts": (_BASE_TS + datetime.timedelta(hours=i)).replace(tzinfo=None),
-                "html": html.encode("utf-8"),
-                "text": None,
-                "lang": "en",
-            }
-        )
-    for i, (url, html) in enumerate(sorted(UNIT_PAGES.items())):
-        rows.append(
-            {
-                "url": url,
-                "warc_ts": (_BASE_TS + datetime.timedelta(hours=24 + i)).replace(tzinfo=None),
-                "html": html.encode("utf-8"),
-                "text": None,
-                "lang": "en",
-            }
-        )
-    return rows
+    """The five ``UNIT_PAGES`` literals, plus the reference fixture pages
+    that exist (timestamps are fixed per name, present or not)."""
+    present = fixture_html()
+    pages = [
+        (url, present[name], hour)
+        for hour, (name, url) in enumerate(sorted(FIXTURE_URLS.items()))
+        if name in present
+    ]
+    pages += [(url, html, 24 + i) for i, (url, html) in enumerate(sorted(UNIT_PAGES.items()))]
+    return [
+        {
+            "url": url,
+            "warc_ts": (_BASE_TS + datetime.timedelta(hours=hour)).replace(tzinfo=None),
+            "html": html.encode("utf-8"),
+            "text": None,
+            "lang": "en",
+        }
+        for url, html, hour in pages
+    ]
 
 
 def pdf_rows(n: int = 8) -> list[dict]:
@@ -280,6 +287,12 @@ def build_pages_df(
     base = spark.range(0, n_pages, numPartitions=partitions or max(8, n_pages // 2000))
     df = base.mapInPandas(generate, schema=PAGES_SCHEMA)
     if include_fixtures:
+        if not FIXTURE_DIR.is_dir():
+            warnings.warn(
+                f"reference fixtures absent ({FIXTURE_DIR}): pages carry the "
+                "unit-literal pages only",
+                stacklevel=2,
+            )
         fixtures = spark.createDataFrame(pd.DataFrame(fixture_rows()), schema=PAGES_SCHEMA)
         df = df.unionByName(fixtures)
     if include_pdfs:

@@ -2,7 +2,7 @@
 
 The extraction tier's classic downstream consumer: every crawl pipeline
 (reference scope: lightfeed/extractor's per-page extraction,
-/root/reference/src/extractors/index.ts) feeds a link graph — outlink
+reference src/extractors/index.ts) feeds a link graph — outlink
 extraction per page, host-level aggregation, and a centrality measure
 (PageRank, Brin & Page 1998 — public algorithm) used for crawl
 prioritization and quality weighting of training corpora (e.g. the

@@ -48,11 +48,14 @@ def build_datasheet(spark, docs, top_k: int = 5) -> dict:
         _QUALITY_SPARK,
         _SOURCE_KL_SC_SQL,
         _SOURCE_KL_SPARK,
+        _VIEW_REG_STATE,
         pii_spans_df,
     )
 
     docs = docs.select("doc_id", "text", "lang", "source")
     docs.createOrReplaceTempView("documents")
+    # the next registry query must re-register its own documents view
+    _VIEW_REG_STATE.clear()
     sheet: dict = {}
 
     t = spark.sql(

@@ -51,7 +51,6 @@ def parse_args(argv):
                    help="resume identity (bucket = xxhash64(url) %% n_buckets); must match\n"
                         "across runs of the same output — the manifest records it and a\n"
                         "mismatched resume fails loudly")
-    p.add_argument("--n-salt", type=int, default=64)
     p.add_argument("--partitions", type=int, default=None)
     p.add_argument("--no-resume", action="store_true")
     p.add_argument("--waves", type=int, default=1,
@@ -98,7 +97,6 @@ def main(argv=None) -> int:
             clean_urls=args.clean_urls,
         ),
         n_buckets=args.n_buckets,
-        n_salt=args.n_salt,
         repartition=args.partitions,
         resume=not args.no_resume,
         waves=args.waves,

@@ -40,7 +40,7 @@ from extractor_spark.spark.session import get_spark
 spark = get_spark("waves-crash-child", cpus={cpus})
 run_pipeline(spark, PipelineConfig(
     pages_path={pages!r}, output_path={out!r},
-    n_buckets={n_buckets}, n_salt=16, waves=4, resume=True))
+    n_buckets={n_buckets}, waves=4, resume=True))
 print("CHILD_DONE", flush=True)
 """
 
@@ -77,7 +77,7 @@ def main() -> None:
     s_ref = run_pipeline(
         spark,
         PipelineConfig(pages_path=pages, output_path=out_ref,
-                       n_buckets=N_BUCKETS, n_salt=16, waves=1, resume=False),
+                       n_buckets=N_BUCKETS, waves=1, resume=False),
     )
     ref_rows, ref_digest = url_digest(spark, out_ref)
     report["single_wave"] = {
@@ -92,7 +92,7 @@ def main() -> None:
     s_w = run_pipeline(
         spark,
         PipelineConfig(pages_path=pages, output_path=out_w,
-                       n_buckets=N_BUCKETS, n_salt=16, waves=4, resume=False),
+                       n_buckets=N_BUCKETS, waves=4, resume=False),
     )
     w_rows, w_digest = url_digest(spark, out_w)
     report["waves4"] = {
@@ -132,7 +132,7 @@ def main() -> None:
     s_res = run_pipeline(
         spark,
         PipelineConfig(pages_path=pages, output_path=out_c,
-                       n_buckets=N_BUCKETS, n_salt=16, waves=4, resume=True),
+                       n_buckets=N_BUCKETS, waves=4, resume=True),
     )
     c_rows, c_digest = url_digest(spark, out_c)
     report["resume"] = {

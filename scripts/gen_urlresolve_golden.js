@@ -1,6 +1,6 @@
 // Generate the Node legacy url.resolve golden corpus for parity testing.
 // Node's url.resolve is the exact resolver the reference uses
-// (/root/reference/src/converters.ts:153,188 -> require('url').resolve).
+// (reference src/converters.ts:153,188 -> require('url').resolve).
 // Run: node scripts/gen_urlresolve_golden.js > tests/data/urlresolve_golden.json
 'use strict';
 const url = require('url');

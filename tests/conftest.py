@@ -1,5 +1,14 @@
 import pytest
 
+from extractor_spark.spark.synth import FIXTURE_DIR
+
+# Tests that read the reference HTML fixture files skip through this one
+# marker when the files are not there.
+needs_fixture_files = pytest.mark.skipif(
+    not FIXTURE_DIR.is_dir(),
+    reason=f"reference HTML fixtures absent: {FIXTURE_DIR}",
+)
+
 
 @pytest.fixture(scope="session")
 def spark():
@@ -17,3 +26,13 @@ def spark():
         "persisted RDDs leaked past release_query_caches()"
     )
     spark.stop()
+
+
+@pytest.fixture(autouse=True)
+def _fresh_view_registration():
+    """Tests overwrite the registry's view names (documents, events, ...)
+    with engineered frames; each test's first registry query registers the
+    parquet views again."""
+    from extractor_spark.spark.queries import _VIEW_REG_STATE
+
+    _VIEW_REG_STATE.clear()

@@ -5,8 +5,8 @@ pages (markdown-literal escapes, nested lists/blockquotes, body-level
 <title>, aria-hidden, svg, broken attrs, backslash/UPPER/amazon hrefs,
 data: images, smart quotes).  Digests are frozen from this engine after
 manual verification against converters.ts semantics; the same pages flow
-through build_pages_df (every 16th page), so the existing fused-vs-windowed
-pipeline test cross-checks both modes produce these bytes.
+through build_pages_df (every 16th page), so the pipeline-vs-window-dedup
+equivalence test cross-checks that the pipeline produces these bytes.
 
 Documented precedence nuance (matches turndown's addRule unshift order,
 converters.ts:88-216): <p aria-hidden="true"> is KEPT — improved-paragraph

@@ -1,5 +1,5 @@
 """Byte-identity port of every expectation in
-/root/reference/tests/unit/converters.test.ts (the reference's golden-string
+reference tests/unit/converters.test.ts (the reference's golden-string
 suite for the HTML→markdown operator chain C1–C16)."""
 
 from extractor_spark.engine.convert import (

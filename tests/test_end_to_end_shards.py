@@ -41,7 +41,6 @@ def test_pages_to_token_shards(spark, tmp_path):
             output_path=out,
             schema=None,
             n_buckets=8,
-            n_salt=4,
             resume=False,
         ),
     )

@@ -13,6 +13,9 @@ from extractor_spark.engine.extract_llm import (
     MarkdownRuleExtractor,
     ReplayClient,
 )
+from extractor_spark.spark.synth import fixture_html
+
+from .conftest import needs_fixture_files
 
 SIMPLE_SCHEMA = {
     "type": "object",
@@ -116,6 +119,7 @@ def test_escaped_url_roundtrip():  # extract.test.ts:317-372
     )
 
 
+@needs_fixture_files
 def test_rule_extractor_blog_fixture_end_to_end():
     """Deterministic offline extraction over the real blog fixture: the
     rule-based client recovers title/tags/links from the converted
@@ -134,9 +138,8 @@ def test_rule_extractor_blog_fixture_end_to_end():
             },
         },
     }
-    html = open("/root/reference/tests/fixtures/blog-post.html").read()
     result = extract(
-        html,
+        fixture_html()["blog-post"],
         "html",
         schema,
         MarkdownRuleExtractor(),

@@ -1,4 +1,4 @@
-"""Port of /root/reference/tests/unit/extractors.test.ts — prompt template,
+"""Port of reference tests/unit/extractors.test.ts — prompt template,
 truncation arithmetic, usage mapping, extract_with_llm happy paths and
 fallbacks (the reference mocks withStructuredOutput; we use ReplayClient)."""
 

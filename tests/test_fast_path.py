@@ -3,14 +3,12 @@ byte-identical markdown to the serialize→reparse pipeline, across the
 reference fixtures, the unit literals, a synthetic corpus, and torture
 cases designed to stress text-node merging / escaping / entities."""
 
-from pathlib import Path
-
 import pytest
 
 from extractor_spark.engine.convert import HtmlExtractionOptions as Opts, html_to_markdown
-from extractor_spark.spark.synth import UNIT_PAGES, synth_page_html
+from extractor_spark.spark.synth import FIXTURE_URLS, UNIT_PAGES, fixture_html, synth_page_html
 
-FIXTURE_DIR = Path("/root/reference/tests/fixtures")
+from .conftest import needs_fixture_files
 
 TORTURE = [
     # removal of script leaves adjacent text nodes: merged "-bar" must not
@@ -64,12 +62,12 @@ def test_torture_cases(case_id):
     assert fast == slow, f"case {case_id}: {html!r}"
 
 
-@pytest.mark.parametrize("name", ["blog-post", "product-list", "article-with-images"])
+@needs_fixture_files
+@pytest.mark.parametrize("name", sorted(FIXTURE_URLS))
 @pytest.mark.parametrize("include_images", [False, True])
 def test_fixtures(name, include_images):
-    html = (FIXTURE_DIR / f"{name}.html").read_text()
     slow, fast = both(
-        html, Opts(include_images=include_images), "https://example.com/x"
+        fixture_html()[name], Opts(include_images=include_images), "https://example.com/x"
     )
     assert fast == slow
 

@@ -1,7 +1,7 @@
 """Fixture-corpus conversion goldens.
 
 The reference's golden-corpus harness
-(/root/reference/tests/integration/html-to-markdown.test.ts) compares three
+(reference tests/integration/html-to-markdown.test.ts) compares three
 conversion variants (basic / extractMainHtml / includeImages) byte-exactly
 against checked-in ground truth; its corpus submodule is empty in this
 sandbox, so the digests below are frozen from this engine's output over the
@@ -10,23 +10,19 @@ verification against the semantics of converters.ts.  They are the per-url
 byte-identity anchors for the Spark pipeline tests (BASELINE.md).
 
 Semantic assertions mirror the ground truth embedded in
-/root/reference/tests/integration/extract.test.ts (absolute URLs, product
+reference tests/integration/extract.test.ts (absolute URLs, product
 fields, image URLs)."""
 
 import hashlib
-from pathlib import Path
 
 import pytest
 
 from extractor_spark.engine.convert import HtmlExtractionOptions as Opts, html_to_markdown
+from extractor_spark.spark.synth import FIXTURE_URLS, fixture_html
 
-FIXTURE_DIR = Path("/root/reference/tests/fixtures")
+from .conftest import needs_fixture_files
 
-FIXTURES = {
-    "blog-post": "https://example.com/blog/async-await",
-    "product-list": "https://example.com/products",
-    "article-with-images": "https://example.com/blog/async-await-images",
-}
+pytestmark = needs_fixture_files
 
 VARIANTS = {
     "basic": None,
@@ -48,8 +44,7 @@ DIGESTS = {
 
 
 def convert(name: str, variant: str) -> str:
-    html = (FIXTURE_DIR / f"{name}.html").read_text()
-    return html_to_markdown(html, VARIANTS[variant], FIXTURES[name])
+    return html_to_markdown(fixture_html()[name], VARIANTS[variant], FIXTURE_URLS[name])
 
 
 @pytest.mark.parametrize("name,variant", sorted(DIGESTS))

@@ -1,4 +1,4 @@
-"""Port of /root/reference/tests/unit/schemaUtils.test.ts (1,238 lines) —
+"""Port of reference tests/unit/schemaUtils.test.ts (1,238 lines) —
 the behavior contract for safe_sanitized_parser / transform_schema_for_llm /
 fix_url_escape_sequences over the internal schema dialect."""
 

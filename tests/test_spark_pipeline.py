@@ -15,10 +15,25 @@ from extractor_spark.spark.pipeline import (
     run_pipeline,
     summarize_metrics,
 )
-from extractor_spark.spark.stages import convert_stage, extract_stage
+from extractor_spark.spark.stages import CONVERT_SCHEMA, convert_stage, extract_stage
 from extractor_spark.spark.synth import FIXTURE_URLS, build_pages_df
 
+from .conftest import needs_fixture_files
+
 pytestmark = pytest.mark.spark
+
+BLOG_LINKS_SCHEMA = {
+    "type": "object",
+    "required": ["title"],
+    "properties": {
+        "title": {"type": "string"},
+        "links": {
+            "type": "array",
+            "items": {"type": "string", "format": "uri"},
+            "optional": True,
+        },
+    },
+}
 
 
 @pytest.fixture(scope="module")
@@ -62,9 +77,7 @@ def test_convert_stage_matches_engine_bytes(spark, pages_path):
 
 def test_pipeline_run_and_resume(spark, pages_path, tmp_path):
     out_dir = str(tmp_path / "out")
-    conf = PipelineConfig(
-        pages_path=pages_path, output_path=out_dir, n_buckets=8, n_salt=4
-    )
+    conf = PipelineConfig(pages_path=pages_path, output_path=out_dir, n_buckets=8)
     summary = run_pipeline(spark, conf)
     assert summary["docs"] > 0
     assert summary["convert_failures"] == 0
@@ -73,13 +86,6 @@ def test_pipeline_run_and_resume(spark, pages_path, tmp_path):
     output = spark.read.parquet(out_dir)
     # dedup-latest: urls unique
     assert output.count() == output.select("url").distinct().count()
-    # fixtures present with markdown
-    fixture_rows = output.filter(
-        F.col("url").isin(list(FIXTURE_URLS.values()))
-    ).collect()
-    assert len(fixture_rows) == 3
-    for r in fixture_rows:
-        assert r["markdown"]
 
     manifest = spark.read.parquet(summary["manifest_path"])
     n_done = manifest.count()
@@ -94,34 +100,17 @@ def test_pipeline_run_and_resume(spark, pages_path, tmp_path):
 
 
 def test_pipeline_with_extraction(spark, pages_path, tmp_path):
-    schema = {
-        "type": "object",
-        "required": ["title"],
-        "properties": {
-            "title": {"type": "string"},
-            "links": {
-                "type": "array",
-                "items": {"type": "string", "format": "uri"},
-                "optional": True,
-            },
-        },
-    }
     out_dir = str(tmp_path / "out_extract")
     conf = PipelineConfig(
         pages_path=pages_path,
         output_path=out_dir,
-        schema=schema,
+        schema=BLOG_LINKS_SCHEMA,
         n_buckets=4,
-        n_salt=2,
     )
     summary = run_pipeline(spark, conf)
     assert summary["docs"] > 0
     output = spark.read.parquet(out_dir)
     assert "data" in output.columns
-    blog = output.filter(F.col("url") == FIXTURE_URLS["blog-post"]).collect()[0]
-    assert blog["data"]["title"] == "Understanding Async/Await in JavaScript"
-    links = blog["data"]["links"]
-    assert "https://example.com/blog/javascript-tutorials" in links
     # typed struct column is queryable JVM-side
     n = output.filter(F.col("data.title").isNotNull()).count()
     assert n > 0
@@ -141,6 +130,30 @@ def test_pipeline_with_extraction(spark, pages_path, tmp_path):
         "https://fixtures.test/unit/link",
     }
     assert summary["schema_validation_failures"] == len(failures)
+
+
+@needs_fixture_files
+def test_pipeline_fixture_pages(spark, pages_path, tmp_path):
+    """The reference fixture pages come through the pipeline converted,
+    and the blog post yields its title and links."""
+    out_dir = str(tmp_path / "out_fixtures")
+    run_pipeline(
+        spark,
+        PipelineConfig(
+            pages_path=pages_path, output_path=out_dir, schema=BLOG_LINKS_SCHEMA,
+            n_buckets=4, resume=False,
+        ),
+    )
+    output = spark.read.parquet(out_dir)
+    fixture_rows = output.filter(
+        F.col("url").isin(list(FIXTURE_URLS.values()))
+    ).collect()
+    assert len(fixture_rows) == 3
+    for r in fixture_rows:
+        assert r["markdown"]
+    blog = next(r for r in fixture_rows if r["url"] == FIXTURE_URLS["blog-post"])
+    assert blog["data"]["title"] == "Understanding Async/Await in JavaScript"
+    assert "https://example.com/blog/javascript-tutorials" in blog["data"]["links"]
 
 
 def test_extract_stage_with_context_join(spark):
@@ -167,35 +180,25 @@ def test_extract_stage_with_context_join(spark):
     assert out["data_json"] is not None
 
 
-def test_fused_equals_windowed(spark, pages_path, tmp_path):
-    """The single-shuffle fused dedup+convert produces exactly the same rows
-    as the reference-shaped window plan."""
-    out_a = str(tmp_path / "fused")
-    out_b = str(tmp_path / "windowed")
+def test_pipeline_equals_window_dedup_oracle(spark, pages_path, tmp_path):
+    """The single-shuffle in-stage dedup+convert produces exactly the rows
+    of the reference semantics: convert_stage over a latest-crawl-per-url
+    window dedup."""
+    out = str(tmp_path / "out")
     run_pipeline(
         spark,
-        PipelineConfig(
-            pages_path=pages_path, output_path=out_a, n_buckets=8,
-            dedup_mode="fused", resume=False,
-        ),
+        PipelineConfig(pages_path=pages_path, output_path=out, n_buckets=8, resume=False),
     )
-    run_pipeline(
-        spark,
-        PipelineConfig(
-            pages_path=pages_path, output_path=out_b, n_buckets=8,
-            dedup_mode="windowed", resume=False,
-        ),
-    )
-    a = {
-        (r["url"], r["markdown"], r["warc_ts"])
-        for r in spark.read.parquet(out_a).select("url", "markdown", "warc_ts").collect()
+    cols = [f.name for f in CONVERT_SCHEMA.fields]
+    got = {tuple(r) for r in spark.read.parquet(out).select(*cols).collect()}
+    want = {
+        tuple(r)
+        for r in convert_stage(dedup_latest_per_url(spark.read.parquet(pages_path)))
+        .select(*cols)
+        .collect()
     }
-    b = {
-        (r["url"], r["markdown"], r["warc_ts"])
-        for r in spark.read.parquet(out_b).select("url", "markdown", "warc_ts").collect()
-    }
-    assert a == b
-    assert len(a) > 0
+    assert got == want
+    assert len(got) > 0
 
 
 def test_waves_checkpointing(spark, pages_path, tmp_path):
@@ -300,6 +303,13 @@ def test_manifest_identity_and_per_run_totals(spark, pages_path, tmp_path):
     assert {r["n_buckets"] for r in rows} == {9}
     assert {r["run_id"] for r in rows} == {summary["run_id"]}
     assert {r["dedup_mode"] for r in rows} == {"fused"}
+    # the manifest's column set is its on-disk contract: earlier manifests
+    # (which carry the same columns) must keep resuming
+    assert set(manifest.columns) == {
+        "bucket", "docs_parsed", "html_bytes", "boilerplate_bytes_removed",
+        "convert_failures", "schema_validation_failures", "input_path",
+        "code_version", "run_ts", "run_id", "n_buckets", "dedup_mode",
+    }
 
     # the wave read-back prunes to the wave's bucket partitions: the filter
     # lands in PartitionFilters, not a post-scan Filter over all data
@@ -376,14 +386,15 @@ def test_crash_between_write_and_manifest_is_idempotent(spark, pages_path, tmp_p
     assert victim in {r["bucket"] for r in m_after.select("bucket").collect()}
 
 
-def test_defuse_skew_spreads_hot_host(spark):
-    """A zipf-dominant host must not serialize on one partition: salting
-    spreads its pages across many partitions (the north-rule skew defense)."""
+def test_pipeline_spreads_hot_host_across_buckets(spark, tmp_path):
+    """A dominant host must not serialize on one partition: the bucket
+    hashes the whole url, so one host's pages spread across the bucket
+    partitions by construction (the north-rule skew defense)."""
+    import datetime
+
     import pandas as pd
 
-    from extractor_spark.spark.pipeline import defuse_skew
     from extractor_spark.spark.synth import PAGES_SCHEMA
-    import datetime
 
     ts = datetime.datetime(2024, 1, 1)
     rows = [
@@ -395,12 +406,22 @@ def test_defuse_skew_spreads_hot_host(spark):
          "text": None, "lang": None}
         for i in range(40)
     ]
-    df = spark.createDataFrame(pd.DataFrame(rows), schema=PAGES_SCHEMA)
-    spread = defuse_skew(df, n_salt=16, partitions=16)
-    per_part = spread.filter("url_host = 'hot.example.org'").rdd.glom().map(len).collect()
-    used = sum(1 for n in per_part if n > 0)
-    assert used >= 8, f"hot host landed on only {used} partitions: {per_part}"
-    assert max(per_part) < 400, "hot host serialized on a single partition"
+    pages_path = str(tmp_path / "hot.parquet")
+    spark.createDataFrame(pd.DataFrame(rows), schema=PAGES_SCHEMA).write.parquet(pages_path)
+    out = str(tmp_path / "out")
+    run_pipeline(
+        spark,
+        PipelineConfig(pages_path=pages_path, output_path=out, n_buckets=16, resume=False),
+    )
+    per_bucket = {
+        r["bucket"]: r["count"]
+        for r in spark.read.parquet(out)
+        .filter(F.col("url").startswith("https://hot.example.org/"))
+        .groupBy("bucket").count().collect()
+    }
+    assert sum(per_bucket.values()) == 400
+    assert len(per_bucket) >= 8, f"hot host landed in only {len(per_bucket)} buckets"
+    assert max(per_bucket.values()) <= 400 // 4, per_bucket
 
 
 def test_resume_without_manifest_over_stale_output_fails_loudly(

@@ -313,7 +313,7 @@ def test_stream_structured_extraction(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from extractor_spark.spark.streaming import stream_convert_pages
-    from extractor_spark.spark.synth import FIXTURE_URLS, build_pages_df
+    from extractor_spark.spark.synth import build_pages_df
 
     pages_dir = str(tmp_path / "pages")
     build_pages_df(spark, 6).write.parquet(pages_dir)
@@ -328,8 +328,8 @@ def test_stream_structured_extraction(spark, tmp_path):
     q.awaitTermination(120)
     out = spark.read.parquet(str(tmp_path / "out"))
     assert "data" in out.columns
-    blog = out.filter(F.col("url") == FIXTURE_URLS["blog-post"]).collect()
-    assert blog and blog[0]["data"]["title"] == "Understanding Async/Await in JavaScript"
+    h1 = out.filter(F.col("url") == "https://fixtures.test/unit/simple-h1-p").collect()
+    assert h1 and h1[0]["data"]["title"] == "Hello World"
 
 
 def test_jsonl_sink(spark, tmp_path):

@@ -3,15 +3,14 @@ DOM serialization on every input where HTMLParser does not raise, across
 fixtures, synth corpus, torture cases, and hypothesis-generated tag soup."""
 
 import string
-from pathlib import Path
 
 import pytest
 from hypothesis import given, settings, strategies as st
 
 from extractor_spark.engine.dom import parse_document, serialize_inner
-from extractor_spark.spark.synth import UNIT_PAGES, synth_page_html
+from extractor_spark.spark.synth import FIXTURE_URLS, UNIT_PAGES, fixture_html, synth_page_html
 
-FIXTURE_DIR = Path("/root/reference/tests/fixtures")
+from .conftest import needs_fixture_files
 
 
 def both_serializations(html):
@@ -29,9 +28,10 @@ def assert_equiv(html):
         assert fast == slow, f"divergence on {html!r}"
 
 
-@pytest.mark.parametrize("name", ["blog-post", "product-list", "article-with-images"])
+@needs_fixture_files
+@pytest.mark.parametrize("name", sorted(FIXTURE_URLS))
 def test_fixture_equiv(name):
-    assert_equiv((FIXTURE_DIR / f"{name}.html").read_text())
+    assert_equiv(fixture_html()[name])
 
 
 def test_unit_pages_equiv():

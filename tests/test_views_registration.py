@@ -1,63 +1,60 @@
-"""Pins the _views registration-skip semantics (r6 session 2).
+"""Pins the _views registration-skip semantics.
 
 Registration (createOrReplaceTempView) costs ~7 ms/view — ~70 ms per
-query invocation — so OUTSIDE pytest _views skips re-registering a view
-whose (path, mtime) it already registered in this session.  UNDER pytest
-every call re-registers, because tests overwrite these view names with
-engineered frames and rely on the next registry-query call resetting
-them.  Both behaviors are pinned here.
+query invocation — so _views skips re-registering a view whose
+(path, mtime) it already registered in the same session.  A new sf_dir
+registers again, and so does a different session: temp views belong to
+one session, and ``newSession()`` shares the application id.
 """
 
 from __future__ import annotations
 
-import os
 from unittest import mock
+
+import pytest
+
+from extractor_spark.spark import queries
+from extractor_spark.spark.queries import _views
 
 SF = "/root/testdata/sf0.001"
 
 
-def test_pytest_mode_always_resets_overwritten_views(spark):
-    from extractor_spark.spark.queries import _views
+@pytest.fixture
+def registrations(spark):
+    """Names passed to createOrReplaceTempView while the fixture is live."""
+    calls: list[str] = []
+    frame_type = type(spark.range(1))
+    orig = frame_type.createOrReplaceTempView
 
-    _views(spark, SF)
-    real_count = spark.table("documents").count()
-    spark.createDataFrame(
-        [(999999, "planted override")], "doc_id long, text string"
-    ).createOrReplaceTempView("documents")
-    assert spark.table("documents").count() == 1
-    # under pytest (PYTEST_CURRENT_TEST is set) the next _views call must
-    # reset the override back to the parquet table
-    _views(spark, SF)
-    assert spark.table("documents").count() == real_count
+    def counting(self, name):
+        calls.append(name)
+        return orig(self, name)
+
+    with mock.patch.object(frame_type, "createOrReplaceTempView", counting):
+        yield calls
 
 
-def test_non_pytest_mode_skips_unchanged_registration(spark):
-    from extractor_spark.spark import queries
-    from extractor_spark.spark.queries import _views
-
-    # simulate the bench/driver environment: no PYTEST_CURRENT_TEST
-    env = {k: v for k, v in os.environ.items() if k != "PYTEST_CURRENT_TEST"}
-    with mock.patch.dict(os.environ, env, clear=True):
-        queries._VIEW_REG_STATE.clear()
-        _views(spark, SF)  # first call registers everything
-        calls = []
-        orig = type(spark.table("documents")).createOrReplaceTempView
-
-        def counting(self, name):
-            calls.append(name)
-            return orig(self, name)
-
-        with mock.patch.object(
-            type(spark.table("documents")), "createOrReplaceTempView", counting
-        ):
-            _views(spark, SF)  # unchanged (path, mtime) -> no registration
-            assert calls == []
-            # a different sf_dir must re-register (path changed)
-            _views(spark, "/root/testdata/sf0.01")
-            assert len(calls) == len(queries.TABLES)
+def test_unchanged_path_and_mtime_skips_registration(spark, registrations):
+    _views(spark, SF)  # first call registers everything
+    assert registrations == queries.TABLES
+    _views(spark, SF)  # unchanged (path, mtime) -> no registration
+    assert registrations == queries.TABLES
     # the skipped call left the views fully usable
-    with mock.patch.dict(os.environ, env, clear=True):
-        _views(spark, "/root/testdata/sf0.01")
-        assert spark.table("documents").count() > 0
-    # restore sf0.001 views for any later test in this session
+    assert spark.table("documents").count() > 0
+
+
+def test_new_sf_dir_reregisters(spark, registrations):
     _views(spark, SF)
+    before = spark.table("lineitem").count()
+    _views(spark, "/root/testdata/sf0.01")
+    assert registrations == queries.TABLES * 2
+    assert spark.table("lineitem").count() > before
+
+
+def test_new_session_gets_own_views(spark, registrations):
+    _views(spark, SF)
+    other = spark.newSession()
+    assert other.sparkContext.applicationId == spark.sparkContext.applicationId
+    _views(other, SF)  # same app, same (path, mtime): still registers
+    assert registrations == queries.TABLES * 2
+    assert other.table("documents").count() == spark.table("documents").count()
