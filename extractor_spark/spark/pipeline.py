@@ -8,11 +8,12 @@ Dataflow (SURVEY.md §3.1 Spark lifecycle):
     scan pages (parquet/Iceberg/WARC)               -- Catalyst pruning
       → bucket = pmod(xxhash64(url), n_buckets)     -- resume granularity
       → NOT IN manifest buckets                     -- literal filter at scan
+      → optional broadcast context join on url      -- before the sort, so
+                                                       dedup sees every row
       → repartition(bucket) + sort(url, warc_ts ↓)  -- the one shuffle
-      → stage C (mapInPandas convert, keeping the
-        first row of each url run = latest crawl)   -- Arrow batches
-      → optional broadcast context join on url
-      → stage E (mapInPandas extract)
+      → one mapInPandas: stage C (keeping the first
+        row of each url run = latest crawl), then
+        stage E when a schema is given              -- Arrow batches
       → write output partitioned by bucket          -- no further shuffle
       → append manifest rows (bucket, metrics, lineage)
 
@@ -47,7 +48,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from extractor_spark.engine.convert import HtmlExtractionOptions
-from extractor_spark.spark.stages import convert_stage, extract_stage, with_typed_data
+from extractor_spark.spark.stages import (
+    convert_extract_stage,
+    convert_stage,
+    with_typed_data,
+)
 
 CODE_VERSION = "extractor-spark-0.1"
 
@@ -65,7 +70,9 @@ class PipelineConfig:
     # Resume granularity; must stay FIXED across runs (bucket identity is
     # xxhash64(url) % n_buckets — changing it invalidates the manifest).
     n_buckets: int = 512
-    repartition: int | None = None  # default: 4 × spark.sql.shuffle.partitions
+    # Python-stage width; default spark.sql.shuffle.partitions (one task
+    # per shuffle partition), capped at n_buckets either way
+    repartition: int | None = None
     # >1 = intra-run checkpointing: buckets split into this many commit
     # waves, manifest refreshed after each (crash loses ≤ one wave).
     waves: int = 1
@@ -186,12 +193,12 @@ def warmup(
 
     scratch = tempfile.mkdtemp(prefix="extractor_warmup_")
     sample = spark.read.parquet(pages_path).limit(n_rows)
-    converted = convert_stage(
-        dedup_latest_per_url(sample).select("url", "warc_ts", "html", "lang")
-    )
-    if schema is not None:
-        converted = extract_stage(converted, schema)
-    converted.write.mode("overwrite").parquet(os.path.join(scratch, "out"))
+    pages = dedup_latest_per_url(sample).select("url", "warc_ts", "html", "lang")
+    if schema is None:
+        out = convert_stage(pages)
+    else:
+        out = convert_extract_stage(pages, schema)
+    out.write.mode("overwrite").parquet(os.path.join(scratch, "out"))
 
 
 def _read_pages(spark: SparkSession, conf: PipelineConfig) -> DataFrame:
@@ -256,9 +263,13 @@ def run_pipeline(spark: SparkSession, conf: PipelineConfig) -> dict:
         _delete_path(spark, manifest_path)
         _delete_path(spark, conf.output_path)
 
-    # Default compute parallelism: 4 task waves per core slot for balance
-    # under per-document cost variance (page sizes are long-tailed).
-    n_parts = conf.repartition or 4 * int(
+    # Default compute parallelism: one task per shuffle partition
+    # (get_spark: max(cores, 8)).  Each Python task costs 0.13–0.29 s before
+    # its first row (stages.py docstring; an identity mapInPandas on
+    # local[4] takes 0.4 s at 4 tasks and 4.1–4.5 s at 64), so several task
+    # waves per core slot spend more on task start-up than they win back in
+    # balance over long-tailed page sizes.
+    n_parts = conf.repartition or int(
         spark.conf.get("spark.sql.shuffle.partitions", "32")
     )
 
@@ -288,26 +299,27 @@ def run_pipeline(spark: SparkSession, conf: PipelineConfig) -> dict:
         manifest = spark.read.parquet(manifest_path)
     except Exception:  # nothing ever written (fully-empty input)
         manifest = None
-    zero = {"docs": 0, "bytes": 0, "convert_failures": 0, "schema_failures": 0}
+    totals = {"docs": 0, "bytes": 0, "convert_failures": 0, "schema_failures": 0,
+              "cumulative_docs": 0}
     if manifest is not None:
-        agg = [
-            F.coalesce(F.sum("docs_parsed"), F.lit(0)).alias("docs"),
-            F.coalesce(F.sum("html_bytes"), F.lit(0)).alias("bytes"),
-            F.coalesce(F.sum("convert_failures"), F.lit(0)).alias("convert_failures"),
-            F.coalesce(F.sum("schema_validation_failures"), F.lit(0)).alias(
-                "schema_failures"
-            ),
-        ]
-        totals = manifest.filter(F.col("run_id") == run_id).agg(*agg).collect()[0]
-        cumulative = manifest.agg(*agg).collect()[0]
-    else:
-        totals = cumulative = zero
+        this_run = F.col("run_id") == run_id
+
+        def run_sum(col: str):
+            return F.coalesce(F.sum(F.when(this_run, F.col(col))), F.lit(0))
+
+        totals = manifest.agg(
+            run_sum("docs_parsed").alias("docs"),
+            run_sum("html_bytes").alias("bytes"),
+            run_sum("convert_failures").alias("convert_failures"),
+            run_sum("schema_validation_failures").alias("schema_failures"),
+            F.coalesce(F.sum("docs_parsed"), F.lit(0)).alias("cumulative_docs"),
+        ).collect()[0]
     return {
         "docs": totals["docs"],
         "html_bytes": totals["bytes"],
         "convert_failures": totals["convert_failures"],
         "schema_validation_failures": totals["schema_failures"],
-        "cumulative_docs": cumulative["docs"],
+        "cumulative_docs": totals["cumulative_docs"],
         "skipped_buckets": skipped_buckets,
         "wall_seconds": wall,
         "wave_seconds": wave_seconds,
@@ -332,40 +344,49 @@ def _run_wave(
     # explicit so AQE's size-based coalescing cannot shrink the CPU-bound
     # Python stage's parallelism.
     n_parts = min(n_parts, conf.n_buckets)
-    pages = pages.repartition(n_parts, "bucket").sortWithinPartitions(
-        "url", F.col("warc_ts").desc()
-    )
-    converted = convert_stage(
-        pages.select("url", "warc_ts", "html", "lang"),
-        conf.html_options,
-        dedup_sorted_runs=True,
+    columns = ["url", "warc_ts", "html", "lang"]
+    context_column = None
+    if conf.schema is not None and conf.context_path:
+        # joined BEFORE the sort: a sort directly under a join is dropped by
+        # the optimizer (join output order is undefined), which would break
+        # the sorted-run dedup
+        context = spark.read.parquet(conf.context_path)
+        pages = pages.join(F.broadcast(context), "url", "left")
+        context_column = "context_json"
+        columns.append(context_column)
+    pages = (
+        pages.repartition(n_parts, "bucket")
+        .sortWithinPartitions("url", F.col("warc_ts").desc())
+        .select(*columns)
     )
 
     if conf.schema is not None:
-        md = converted
-        if conf.context_path:
-            context = spark.read.parquet(conf.context_path)
-            md = md.join(F.broadcast(context), "url", "left")
-        # extract_stage passes all convert columns through — no self-join.
-        output = extract_stage(
-            md,
+        output = convert_extract_stage(
+            pages,
             conf.schema,
+            conf.html_options,
+            dedup_sorted_runs=True,
             custom_prompt=conf.custom_prompt,
             max_input_tokens=conf.max_input_tokens,
-            context_column="context_json" if conf.context_path else None,
+            context_column=context_column,
         )
         output = with_typed_data(output, conf.schema).drop("data_json")
     else:
-        output = converted
+        output = convert_stage(pages, conf.html_options, dedup_sorted_runs=True)
 
     output = with_bucket(output, conf.n_buckets)
 
-    # Dynamic partition overwrite: re-running a bucket replaces exactly that
-    # bucket's files — idempotent resume.
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    # rows never moved since the bucket shuffle, so each task already holds
-    # whole buckets — partitionBy emits one file per bucket
-    output.write.mode("overwrite").partitionBy("bucket").parquet(conf.output_path)
+    # Dynamic partition overwrite, set on this write only (the session conf
+    # stays the caller's): re-running a bucket replaces exactly that
+    # bucket's files — idempotent resume.  Rows never moved since the bucket
+    # shuffle, so each task already holds whole buckets — partitionBy emits
+    # one file per bucket.
+    (
+        output.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket")
+        .parquet(conf.output_path)
+    )
 
     # Manifest: one row per completed bucket with lineage + metrics,
     # aggregated from THIS wave's bucket partitions only.  The filter is on

@@ -47,6 +47,11 @@ def get_spark(
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(cpus))
+        # listing a table with many partition dirs (the pipeline output has
+        # one per bucket) runs as a Spark job with one task per dir by
+        # default; one task per core slot reads back 432 bucket dirs in
+        # 0.2 s instead of 1.7–2.0 s (local[4])
+        .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

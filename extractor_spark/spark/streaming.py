@@ -17,7 +17,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from extractor_spark.spark.stages import convert_stage
+from extractor_spark.spark.stages import (
+    convert_extract_stage,
+    convert_stage,
+    with_typed_data,
+)
 from extractor_spark.spark.synth import PAGES_SCHEMA
 
 EVENTS_SCHEMA = (
@@ -346,12 +350,12 @@ def stream_convert_pages(
         # DataFrame.isEmpty: no RDD conversion, one cheap limit-1 job
         if batch_df.isEmpty():
             return
-        out = convert_stage(batch_df.select("url", "warc_ts", "html", "lang"))
-        if schema is not None:
-            from extractor_spark.spark.stages import extract_stage, with_typed_data
-
+        pages = batch_df.select("url", "warc_ts", "html", "lang")
+        if schema is None:
+            out = convert_stage(pages)
+        else:
             out = with_typed_data(
-                extract_stage(out, schema, custom_prompt=custom_prompt), schema
+                convert_extract_stage(pages, schema, custom_prompt=custom_prompt), schema
             ).drop("data_json")
         out.write.mode("append").parquet(output_dir)
 

@@ -51,7 +51,10 @@ def parse_args(argv):
                    help="resume identity (bucket = xxhash64(url) %% n_buckets); must match\n"
                         "across runs of the same output — the manifest records it and a\n"
                         "mismatched resume fails loudly")
-    p.add_argument("--partitions", type=int, default=None)
+    p.add_argument("--partitions", type=int, default=None,
+                   help="width of the convert/extract stage (default: "
+                        "spark.sql.shuffle.partitions, one task per shuffle "
+                        "partition; capped at --n-buckets)")
     p.add_argument("--no-resume", action="store_true")
     p.add_argument("--waves", type=int, default=1,
                    help="intra-run checkpoint waves (crash loses at most one wave)")

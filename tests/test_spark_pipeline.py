@@ -14,8 +14,15 @@ from extractor_spark.spark.pipeline import (
     dedup_latest_per_url,
     run_pipeline,
     summarize_metrics,
+    with_bucket,
 )
-from extractor_spark.spark.stages import CONVERT_SCHEMA, convert_stage, extract_stage
+from extractor_spark.spark.stages import (
+    CONVERT_SCHEMA,
+    convert_extract_stage,
+    convert_stage,
+    extract_stage,
+    with_typed_data,
+)
 from extractor_spark.spark.synth import FIXTURE_URLS, build_pages_df
 
 from .conftest import needs_fixture_files
@@ -178,6 +185,148 @@ def test_extract_stage_with_context_join(spark):
     assert "context_json" not in out.asDict()
     # context flows into the prompt; the offline extractor works from content
     assert out["data_json"] is not None
+
+
+def _rows_by_url(df):
+    return sorted((r.asDict(recursive=True) for r in df.collect()), key=lambda r: r["url"])
+
+
+def test_fused_stage_equals_chained_stages(spark, tmp_path):
+    """convert_extract_stage is extract_stage(convert_stage(x)) in one
+    Python node, on every output column: unit pages (4 of them fail the
+    schema), PDFs, and a page whose conversion fails, which extraction
+    reports as "no markdown"."""
+    import datetime
+
+    import pandas as pd
+
+    from extractor_spark.spark.synth import PAGES_SCHEMA, fixture_rows, pdf_rows
+
+    failing = {
+        "url": "https://fail.test/deep-inline",
+        "warc_ts": datetime.datetime(2024, 1, 1),
+        # nests past the converter's recursion headroom: RecursionError
+        "html": ("<span>" * 20000 + "x").encode(),
+        "text": None,
+        "lang": None,
+    }
+    rows = fixture_rows() + pdf_rows(3) + [failing]
+    pages = spark.createDataFrame(pd.DataFrame(rows), schema=PAGES_SCHEMA).select(
+        "url", "warc_ts", "html", "lang"
+    )
+    fused = convert_extract_stage(pages, BLOG_LINKS_SCHEMA)
+    chained = extract_stage(convert_stage(pages), BLOG_LINKS_SCHEMA)
+    assert fused.schema == chained.schema
+    got, want = _rows_by_url(fused), _rows_by_url(chained)
+    assert got == want
+    by_url = {r["url"]: r for r in got}
+    assert len(by_url) == len(rows)
+    failed = by_url[failing["url"]]
+    assert failed["markdown"] is None
+    assert failed["convert_error"].startswith("RecursionError")
+    assert failed["extract_error"].startswith("no markdown")
+    assert all(by_url[r["url"]]["convert_error"] is None for r in rows[:-1])
+    assert all(r["markdown"].startswith("Synthetic report") for r in got if "/pdf/" in r["url"])
+    assert any(r["extract_error"] is None for r in got)
+
+
+def test_pipeline_context_path_equals_chained_stages(spark, tmp_path):
+    """run_pipeline(context_path=...) writes what the public stages give
+    when chained by hand — window dedup, convert_stage, a broadcast left
+    join of the context table, extract_stage — on every output column, and
+    the context column is not written."""
+    pages_path = str(tmp_path / "pages.parquet")
+    build_pages_df(spark, 120, dup_every=3).write.parquet(pages_path)
+    pages = spark.read.parquet(pages_path)
+    context_path = str(tmp_path / "context.parquet")
+    (
+        pages.select("url").distinct()
+        .filter(F.xxhash64("url") % 2 == 0)
+        .withColumn("context_json", F.to_json(F.struct(F.col("url").alias("title"))))
+        .write.parquet(context_path)
+    )
+    out = str(tmp_path / "out")
+    run_pipeline(
+        spark,
+        PipelineConfig(
+            pages_path=pages_path, output_path=out, schema=BLOG_LINKS_SCHEMA,
+            context_path=context_path, n_buckets=8, resume=False,
+        ),
+    )
+    written = spark.read.parquet(out)
+    assert "context_json" not in written.columns
+
+    converted = convert_stage(
+        dedup_latest_per_url(pages).select("url", "warc_ts", "html", "lang")
+    )
+    joined = converted.join(F.broadcast(spark.read.parquet(context_path)), "url", "left")
+    chained = with_typed_data(
+        extract_stage(joined, BLOG_LINKS_SCHEMA, context_column="context_json"),
+        BLOG_LINKS_SCHEMA,
+    ).drop("data_json")
+    chained = with_bucket(chained, 8)
+    assert sorted(written.columns) == sorted(chained.columns)
+    got = _rows_by_url(written.select(*chained.columns))
+    assert got == _rows_by_url(chained)
+    assert len(got) == pages.select("url").distinct().count()
+
+
+def test_structured_pipeline_runs_one_python_node(spark, pages_path, tmp_path):
+    """With a schema, the pipeline's write runs stages C and E in one
+    MapInPandas node: each Python task pays its fixed start-up cost once."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def seq(s):  # a Scala Seq, element by element
+        return [s.apply(i) for i in range(s.size())]
+
+    def executions():
+        bus.waitUntilEmpty()
+        return seq(store.executionsList())
+
+    before = max((e.executionId() for e in executions()), default=-1)
+    run_pipeline(
+        spark,
+        PipelineConfig(
+            pages_path=pages_path, output_path=str(tmp_path / "out"),
+            schema=BLOG_LINKS_SCHEMA, n_buckets=8, resume=False,
+        ),
+    )
+    python_nodes = [
+        [n.name() for n in seq(store.planGraph(e.executionId()).allNodes())].count("MapInPandas")
+        for e in executions()
+        if e.executionId() > before
+    ]
+    assert [n for n in python_nodes if n] == [1], python_nodes
+
+
+def test_run_pipeline_leaves_session_conf_unchanged(spark, pages_path, tmp_path):
+    """Dynamic partition overwrite is set on the pipeline's own write, not
+    on the caller's session (a later overwrite in the session stays
+    static); resume identity holds with it."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "static")
+    out_dir = str(tmp_path / "out")
+    conf = PipelineConfig(pages_path=pages_path, output_path=out_dir, n_buckets=6)
+    summary = run_pipeline(spark, conf)
+    assert spark.conf.get(key) == "static"
+    first = {tuple(r) for r in spark.read.parquet(out_dir).collect()}
+
+    # resume: a crash lost one bucket's manifest row; the re-run rewrites
+    # exactly that bucket, in place
+    manifest = spark.read.parquet(summary["manifest_path"])
+    victim = manifest.select("bucket").first()["bucket"]
+    m2 = str(tmp_path / "m2")
+    manifest.filter(F.col("bucket") != victim).write.parquet(m2)
+    summary2 = run_pipeline(
+        spark,
+        PipelineConfig(
+            pages_path=pages_path, output_path=out_dir, manifest_path=m2, n_buckets=6
+        ),
+    )
+    assert spark.conf.get(key) == "static"
+    assert summary2["skipped_buckets"] == manifest.count() - 1
+    assert {tuple(r) for r in spark.read.parquet(out_dir).collect()} == first
 
 
 def test_pipeline_equals_window_dedup_oracle(spark, pages_path, tmp_path):
