@@ -9,7 +9,6 @@ offline ``MarkdownRuleExtractor``; a real endpoint plugs in behind the same
 from __future__ import annotations
 
 import json
-import os
 import re
 from dataclasses import dataclass, field
 
@@ -261,37 +260,24 @@ class ExtractionError(RuntimeError):
     pass
 
 
-# (schema object) -> (normalized form, LLM-facing form); identity-keyed with
-# a strong ref to the key object so a freed dict's id can never alias a live
-# entry.  Bounded: extraction jobs use a handful of schemas per process.
-# Contract: the schema dict is IMMUTABLE after first use — in-place mutation
-# under the same identity would serve stale forms.  Set
-# EXTRACTOR_SCHEMA_MEMO_CHECK=1 to verify the contract per call (ADVICE r3):
-# a repr() fingerprint catches any mutation, at a few µs/call — off in
-# production so the memo stays free.
-_SCHEMA_FORMS_CACHE: dict[int, tuple] = {}
-_MEMO_CHECK = os.environ.get("EXTRACTOR_SCHEMA_MEMO_CHECK") == "1"
+# repr(schema) -> (normalized form, LLM-facing form).  Keyed on the
+# schema's content, so a dict mutated in place gets fresh forms and an
+# unmutated re-use (a pipeline task passes the same config dict for every
+# row) returns the memoized objects; repr of the normalized blog schema is
+# a few µs.  Bounded: extraction jobs use a handful of schemas per process.
+_SCHEMA_FORMS_CACHE: dict[str, tuple] = {}
 
 
 def _schema_forms(schema: dict) -> tuple:
-    hit = _SCHEMA_FORMS_CACHE.get(id(schema))
-    if hit is not None and hit[0] is schema:
-        if _MEMO_CHECK and hash(repr(schema)) != hit[3]:
-            raise AssertionError(
-                "schema dict mutated in place after first use; the memoized "
-                "normalized/LLM forms are stale (pass a fresh dict instead)"
-            )
-        return hit[1], hit[2]
+    key = repr(schema)
+    hit = _SCHEMA_FORMS_CACHE.get(key)
+    if hit is not None:
+        return hit
     normalized = normalize_schema(schema)  # idempotent on the internal form
     llm_schema = transform_schema_for_llm(normalized)
     if len(_SCHEMA_FORMS_CACHE) >= 16:
         _SCHEMA_FORMS_CACHE.clear()
-    _SCHEMA_FORMS_CACHE[id(schema)] = (
-        schema,
-        normalized,
-        llm_schema,
-        hash(repr(schema)) if _MEMO_CHECK else None,
-    )
+    _SCHEMA_FORMS_CACHE[key] = (normalized, llm_schema)
     return normalized, llm_schema
 
 
@@ -308,11 +294,9 @@ def extract_with_llm(
     fallbacks (tool-call args, repaired JSON string) → URL unescape →
     sanitize against the original schema.
 
-    The normalized/LLM-facing schema forms are memoized per schema *object*
+    The normalized/LLM-facing schema forms are memoized per schema content
     (a pipeline task passes the same config dict for every row, so the
-    pure-schema recursions run once per task instead of once per row).
-    Treat the schema dict as immutable after first use — in-place mutation
-    with the same object identity would serve the stale forms."""
+    pure-schema recursions run once per task instead of once per row)."""
     schema, llm_schema = _schema_forms(schema)
     truncated = (
         truncate_content(

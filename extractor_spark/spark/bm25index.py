@@ -180,28 +180,26 @@ def compact_bm25_index(spark: SparkSession, path: str, n_partitions: int = 32) -
     count) and TIGHTENS the MaxScore envelope back to a single fold (the
     folded corner (max tf_max, min dl_min) across batches is looser than
     the one-batch corner).  Postings are NOT re-tokenized — this is a pure
-    rewrite of the stored rows.  Writes to a sibling temp dir and swaps
-    (the frontier store-swap convention: the local stand-in for an atomic
-    metastore pointer flip)."""
-    import shutil
+    rewrite of the stored rows.  Written beside the index and swapped in
+    by the crash-safe ``sources.swap_store`` (the local stand-in for an
+    atomic metastore pointer flip)."""
+    from .sources import swap_store
 
-    tmp = path + "__compacting"
-    shutil.rmtree(tmp, ignore_errors=True)
-    postings = spark.read.parquet(path).select(
-        "term", "doc_id", "tf", "dl", "bucket"
-    ).withColumn("batch", F.lit(0))
-    (
-        postings.repartition(n_partitions, "bucket")
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("bucket", "batch")
-        .parquet(tmp)
-    )
-    written = spark.read.parquet(tmp)
-    _write_side_tables(written, tmp, 0, "static")
-    shutil.rmtree(path)
-    shutil.move(tmp, path)
+    def write_next(old: DataFrame, nxt: str) -> None:
+        postings = old.select("term", "doc_id", "tf", "dl", "bucket").withColumn(
+            "batch", F.lit(0)
+        )
+        (
+            postings.repartition(n_partitions, "bucket")
+            .sortWithinPartitions("term", "doc_id")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "static")
+            .partitionBy("bucket", "batch")
+            .parquet(nxt)
+        )
+        _write_side_tables(spark.read.parquet(nxt), nxt, 0, "static")
+
+    swap_store(spark, path, write_next)
 
 
 def streaming_index_docs(
@@ -210,8 +208,8 @@ def streaming_index_docs(
     index_path: str,
     ckpt_dir: str,
 ) -> None:
-    """foreachBatch availableNow drain over a stream of (doc_id, text)
-    files: each microbatch appends its postings + side-table contributions
+    """Stream drain (``sources.drain_files``) over (doc_id, text) files:
+    each microbatch appends its postings + side-table contributions
     under ``batch=<microbatch id>`` via :func:`append_bm25_index` — the
     same idempotent partition-overwrite write, so Structured Streaming's
     replayed microbatches (post-crash) land on identical content.
@@ -221,24 +219,14 @@ def streaming_index_docs(
     checkpoint's microbatch 0 must not overwrite batch-0 partitions it
     did not produce)."""
     from .phraseindex import stream_batch_offset
+    from .sources import drain_files
 
     off = stream_batch_offset(index_path, ckpt_dir)
 
     def handle(batch_df, batch_id: int) -> None:
         append_bm25_index(batch_df, index_path, batch_id=int(batch_id) + off)
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_stream_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_files(spark, docs_stream_dir, "doc_id long, text string", ckpt_dir, handle)
 
 
 def _contrib(n_docs: float, avgdl: float):

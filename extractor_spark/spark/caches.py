@@ -50,17 +50,6 @@ def retire_all() -> None:
             pass
 
 
-def retire_since(mark: int) -> None:
-    """Retire only entries registered after ``mark`` (= len(LIVE) snapshot).
-    For composite jobs (curate) that consume a cache-producing sub-query
-    internally without touching caches owned by unrelated pending queries."""
-    while len(LIVE) > mark:
-        try:
-            LIVE.pop().unpersist()
-        except Exception:
-            pass
-
-
 @contextlib.contextmanager
 def scope():
     """Scoped ownership: retires (on exit, including on error) only the
@@ -73,7 +62,11 @@ def scope():
     try:
         yield
     finally:
-        retire_since(mark)
+        while len(LIVE) > mark:
+            try:
+                LIVE.pop().unpersist()
+            except Exception:
+                pass
 
 
 class JvmRddHandle:

@@ -227,196 +227,199 @@ def curate(
     )
     stats = {"input_docs": docs.count()}
     _mark("input")
-    cache_mark = len(caches.LIVE)  # don't touch unrelated queries' caches
     ckpt_handles: list = []
+    try:
+        # Caches registered by stages 0-2 (the blocklist projection, the
+        # components' label checkpoint) have no dependents once the
+        # near-dup docs are materialized; the scope releases them there
+        # and leaves unrelated queries' caches alone.
+        with caches.scope():
+            # 0. URL blocklist (UT1 rules): drop matched pages before any hashing
+            if blocklist_domains or blocklist_urls:
+                from .blocklist import apply_blocklist, load_ut1_domains, load_ut1_urls
 
-    # 0. URL blocklist (UT1 rules): drop matched pages before any hashing
-    if blocklist_domains or blocklist_urls:
-        from .blocklist import apply_blocklist, load_ut1_domains, load_ut1_urls
+                dom = (
+                    load_ut1_domains(spark, blocklist_domains)
+                    if blocklist_domains
+                    else spark.createDataFrame([], "domain string, category string")
+                )
+                pre = (
+                    load_ut1_urls(spark, blocklist_urls)
+                    if blocklist_urls
+                    else spark.createDataFrame(
+                        [], "rule_host string, path_prefix string, category string"
+                    )
+                )
+                docs = apply_blocklist(docs, dom, pre)
+                stats["after_blocklist"] = docs.count()
+                _mark("blocklist")
 
-        dom = (
-            load_ut1_domains(spark, blocklist_domains)
-            if blocklist_domains
-            else spark.createDataFrame([], "domain string, category string")
-        )
-        pre = (
-            load_ut1_urls(spark, blocklist_urls)
-            if blocklist_urls
-            else spark.createDataFrame(
-                [], "rule_host string, path_prefix string, category string"
+            # 1. exact dedup (keep min url per fingerprint).  r6: decide on LIGHT
+            # (url, md5) rows and attach once — same winner set as the payload
+            # window (identical window spec), one url-keyed join instead of
+            # shuffling text+markdown through the fingerprint window (AQE
+            # broadcasts the winner set at bench scale).
+            w = Window.partitionBy("_fp").orderBy("url")
+            keep = (
+                docs.select("url", F.md5("text").alias("_fp"))
+                .withColumn("_rk", F.row_number().over(w))
+                .filter("_rk = 1")
+                .select("url")
             )
-        )
-        docs = apply_blocklist(docs, dom, pre)
-        stats["after_blocklist"] = docs.count()
-        _mark("blocklist")
+            # lazy: the stage count below is the materializing job (one pass, not
+            # checkpoint + count); reused by pairs + components + filter
+            docs, h = caches.local_checkpoint(docs.join(keep, "url"), eager=False)
+            ckpt_handles.append(h)
+            stats["after_exact_dedup"] = docs.count()
+            _mark("exact_dedup")
 
-    # 1. exact dedup (keep min url per fingerprint).  r6: decide on LIGHT
-    # (url, md5) rows and attach once — same winner set as the payload
-    # window (identical window spec), one url-keyed join instead of
-    # shuffling text+markdown through the fingerprint window (AQE
-    # broadcasts the winner set at bench scale).
-    w = Window.partitionBy("_fp").orderBy("url")
-    keep = (
-        docs.select("url", F.md5("text").alias("_fp"))
-        .withColumn("_rk", F.row_number().over(w))
-        .filter("_rk = 1")
-        .select("url")
-    )
-    # lazy: the stage count below is the materializing job (one pass, not
-    # checkpoint + count); reused by pairs + components + filter
-    docs, h = caches.local_checkpoint(docs.join(keep, "url"), eager=False)
-    ckpt_handles.append(h)
-    stats["after_exact_dedup"] = docs.count()
-    _mark("exact_dedup")
-
-    # 2. near-dup clusters → canonical per cluster (longest text, then url)
-    docs.createOrReplaceTempView("curate_docs")
-    # materialize the shingle sets and band table once each (both are
-    # consumed 2-3 times downstream; without the checkpoint Spark would
-    # recompute the 64-hash signature projection per consumer)
-    sh, h = caches.local_checkpoint(
-        spark.sql(_SHINGLE_SETS_TMPL.format(view="curate_docs"))
-    )
-    ckpt_handles.append(h)
-    sh.createOrReplaceTempView("curate_sh")
-    _mark("shingle_sets")
-    bands, h = caches.local_checkpoint(spark.sql(_BANDS_SQL))
-    ckpt_handles.append(h)
-    bands.createOrReplaceTempView("curate_bands")
-    _mark("bands")
-    # materialize the verified pairs before the CC loop: the verify join is
-    # the funnel's most expensive plan, and leaving it lazy re-plans it
-    # inside the first label-propagation round's edges materialization —
-    # measured 3-5x timing instability at 100k docs (AQE re-plans under a
-    # different runtime-stats context); checkpointed it is a stable ~9 s
-    # stage and the CC rounds join a small materialized edge table.
-    pairs, h = caches.local_checkpoint(
-        spark.sql(_VERIFIED_PAIRS_TMPL.format(threshold=jaccard_threshold))
-    )
-    ckpt_handles.append(h)
-    _mark("verified_pairs")
-    labels = _components(docs, pairs, components)
-    # r6 canonical pick: decide on LIGHT rows, attach once (guide §8).
-    # The old form joined the full (url, markdown, text) payload to the
-    # labels and ran the cluster window over it — two payload shuffles for
-    # a decision that only needs (url, cluster_id, length(text)).  Here the
-    # window runs over the light frame; the surviving (url[, cluster_id])
-    # set joins back to the payload once (AQE broadcasts it at bench scale;
-    # at corpus scale it degrades to the same single url-keyed shuffle the
-    # old join already paid).  Winner set is identical: same window, same
-    # ordering keys.
-    wc = Window.partitionBy("cluster_id").orderBy(
-        F.col("_n").desc(), F.col("url").asc()
-    )
-    kept = (
-        docs.select("url", F.length("text").alias("_n"))
-        .join(labels, "url")
-        .withColumn("_rk", F.row_number().over(wc))
-        .filter("_rk = 1")
-        .select("url", *(["cluster_id"] if split else []))
-    )
-    # consumed by two counts AND the export write; the stage count below
-    # is the materializing job
-    docs, h = caches.local_checkpoint(docs.join(kept, "url"), eager=False)
-    ckpt_handles.append(h)
-    stats["after_neardup_dedup"] = docs.count()
-    _mark("components_canonical")
-    # labels' checkpoint (registered by min_label_components) has no
-    # dependents once docs is materialized — release it now
-    caches.retire_since(cache_mark)
-
-    # 3. quality filter: token floor + duplicate-line ceiling
-    toks = F.size(F.split(F.trim("text"), r"\s+"))
-    lines = F.filter(F.split("text", "\n"), lambda l: F.length(F.trim(l)) > 0)
-    dup_permille = F.when(
-        F.size(lines) > 0,
-        F.round(
-            1000.0
-            * (F.size(lines) - F.size(F.array_distinct(lines)))
-            / F.size(lines)
-        ),
-    ).otherwise(F.lit(0))
-    docs = docs.filter(
-        (toks >= min_tokens) & (dup_permille <= max_dup_permille)
-    )
-    stats["after_quality_filter"] = docs.count()
-    _mark("quality_filter")
-
-    # 3a. optional benchmark decontamination: drop any doc sharing an
-    # 8-token word-gram with a benchmark line (GPT-3 appendix-C whole-doc
-    # variant, xxhash64'd grams).  Benchmark grams are a bounded table
-    # (benchmark suites are MBs) — broadcast; the corpus gram stream flows
-    # through the join un-materialized and the anti-join is one shuffle
-    # on url.
-    if decon_benchmarks:
-        gram_hashes = (
-            "transform(sequence(0, size(_w) - 8), "
-            "i -> xxhash64(concat_ws(' ', slice(_w, i + 1, 8))))"
-        )
-        bm_grams = (
-            spark.read.text(decon_benchmarks)
-            .select(F.split(F.trim("value"), r"\s+").alias("_w"))
-            .where(F.size("_w") >= 8)
-            .select(F.explode(F.expr(gram_hashes)).alias("gh"))
-            .distinct()
-        )
-        doc_grams = (
-            docs.select("url", F.split(F.trim("text"), r"\s+").alias("_w"))
-            .where(F.size("_w") >= 8)
-            .select("url", F.explode(F.expr(gram_hashes)).alias("gh"))
-        )
-        contaminated = (
-            doc_grams.join(F.broadcast(bm_grams), "gh").select("url").distinct()
-        )
-        docs = docs.join(contaminated, "url", "left_anti")
-        stats["after_decontamination"] = docs.count()
-
-    # 3b. optional leakage-safe split: train/valid/test keyed on the
-    # near-dup cluster id stage 2 already computed — a pure JVM hash
-    # expression, zero extra shuffles, closed over dup clusters by
-    # construction.
-    if split:
-        from .queries import leakage_split_expr
-
-        _, split_col = leakage_split_expr("cluster_id")
-        docs = docs.withColumn("split", split_col).drop("cluster_id")
-        stats["split_counts"] = {
-            r["split"]: r["n"]
-            for r in docs.groupBy("split").agg(F.count("*").alias("n")).collect()
-        }
-
-    # 3c. optional sequence packing: training-ready pack ids over the
-    # surviving docs (url order), so the exported JSONL can be consumed as
-    # concat-then-chunk sequences without another pass over the corpus
-    if pack_budget:
-        # seeded global shuffle order for pack composition (deterministic:
-        # same seed → same packs); url order otherwise
-        order_col = "url"
-        if shuffle_seed is not None:
-            docs = docs.withColumn(
-                "_ord", F.xxhash64(F.col("url"), F.lit(int(shuffle_seed)))
+            # 2. near-dup clusters → canonical per cluster (longest text, then url)
+            docs.createOrReplaceTempView("curate_docs")
+            # materialize the shingle sets and band table once each (both are
+            # consumed 2-3 times downstream; without the checkpoint Spark would
+            # recompute the 64-hash signature projection per consumer)
+            sh, h = caches.local_checkpoint(
+                spark.sql(_SHINGLE_SETS_TMPL.format(view="curate_docs"))
             )
-            order_col = "_ord"
-            stats["shuffle_seed"] = int(shuffle_seed)
-        # checkpoint the packed result too: both the n_packs count and the
-        # export write consume it, and the post-checkpoint window+join
-        # portion of assign_packs would otherwise run twice (lazy: the
-        # n_packs aggregate below is the materializing job)
-        packed, h = assign_packs(spark, docs, order_col, pack_budget)
-        ckpt_handles.append(h)
-        docs, h = caches.local_checkpoint(packed.drop("_ord"), eager=False)
-        ckpt_handles.append(h)
-        stats["n_packs"] = docs.agg(F.countDistinct("pack_id")).first()[0]
-        stats["pack_budget"] = pack_budget
+            ckpt_handles.append(h)
+            sh.createOrReplaceTempView("curate_sh")
+            _mark("shingle_sets")
+            bands, h = caches.local_checkpoint(spark.sql(_BANDS_SQL))
+            ckpt_handles.append(h)
+            bands.createOrReplaceTempView("curate_bands")
+            _mark("bands")
+            # materialize the verified pairs before the CC loop: the verify join is
+            # the funnel's most expensive plan, and leaving it lazy re-plans it
+            # inside the first label-propagation round's edges materialization —
+            # measured 3-5x timing instability at 100k docs (AQE re-plans under a
+            # different runtime-stats context); checkpointed it is a stable ~9 s
+            # stage and the CC rounds join a small materialized edge table.
+            pairs, h = caches.local_checkpoint(
+                spark.sql(_VERIFIED_PAIRS_TMPL.format(threshold=jaccard_threshold))
+            )
+            ckpt_handles.append(h)
+            _mark("verified_pairs")
+            labels = _components(docs, pairs, components)
+            # r6 canonical pick: decide on LIGHT rows, attach once (guide §8).
+            # The old form joined the full (url, markdown, text) payload to the
+            # labels and ran the cluster window over it — two payload shuffles for
+            # a decision that only needs (url, cluster_id, length(text)).  Here the
+            # window runs over the light frame; the surviving (url[, cluster_id])
+            # set joins back to the payload once (AQE broadcasts it at bench scale;
+            # at corpus scale it degrades to the same single url-keyed shuffle the
+            # old join already paid).  Winner set is identical: same window, same
+            # ordering keys.
+            wc = Window.partitionBy("cluster_id").orderBy(
+                F.col("_n").desc(), F.col("url").asc()
+            )
+            kept = (
+                docs.select("url", F.length("text").alias("_n"))
+                .join(labels, "url")
+                .withColumn("_rk", F.row_number().over(wc))
+                .filter("_rk = 1")
+                .select("url", *(["cluster_id"] if split else []))
+            )
+            # consumed by two counts AND the export write; the stage count below
+            # is the materializing job
+            docs, h = caches.local_checkpoint(docs.join(kept, "url"), eager=False)
+            ckpt_handles.append(h)
+            stats["after_neardup_dedup"] = docs.count()
+            _mark("components_canonical")
 
-    # 4. export
-    from extractor_spark.spark.sources import write_output
+        # 3. quality filter: token floor + duplicate-line ceiling
+        toks = F.size(F.split(F.trim("text"), r"\s+"))
+        lines = F.filter(F.split("text", "\n"), lambda l: F.length(F.trim(l)) > 0)
+        dup_permille = F.when(
+            F.size(lines) > 0,
+            F.round(
+                1000.0
+                * (F.size(lines) - F.size(F.array_distinct(lines)))
+                / F.size(lines)
+            ),
+        ).otherwise(F.lit(0))
+        docs = docs.filter(
+            (toks >= min_tokens) & (dup_permille <= max_dup_permille)
+        )
+        stats["after_quality_filter"] = docs.count()
+        _mark("quality_filter")
 
-    write_output(docs, output_path, fmt="jsonl", partition_col=None)
-    _mark("export")
-    stats["output_path"] = output_path
-    # the export was the last consumer — release this run's checkpoints
-    # (curate owns them end-to-end, unlike lazy-returning queries)
-    for h in ckpt_handles:
-        h.unpersist()
-    return stats
+        # 3a. optional benchmark decontamination: drop any doc sharing an
+        # 8-token word-gram with a benchmark line (GPT-3 appendix-C whole-doc
+        # variant, xxhash64'd grams).  Benchmark grams are a bounded table
+        # (benchmark suites are MBs) — broadcast; the corpus gram stream flows
+        # through the join un-materialized and the anti-join is one shuffle
+        # on url.
+        if decon_benchmarks:
+            gram_hashes = (
+                "transform(sequence(0, size(_w) - 8), "
+                "i -> xxhash64(concat_ws(' ', slice(_w, i + 1, 8))))"
+            )
+            bm_grams = (
+                spark.read.text(decon_benchmarks)
+                .select(F.split(F.trim("value"), r"\s+").alias("_w"))
+                .where(F.size("_w") >= 8)
+                .select(F.explode(F.expr(gram_hashes)).alias("gh"))
+                .distinct()
+            )
+            doc_grams = (
+                docs.select("url", F.split(F.trim("text"), r"\s+").alias("_w"))
+                .where(F.size("_w") >= 8)
+                .select("url", F.explode(F.expr(gram_hashes)).alias("gh"))
+            )
+            contaminated = (
+                doc_grams.join(F.broadcast(bm_grams), "gh").select("url").distinct()
+            )
+            docs = docs.join(contaminated, "url", "left_anti")
+            stats["after_decontamination"] = docs.count()
+
+        # 3b. optional leakage-safe split: train/valid/test keyed on the
+        # near-dup cluster id stage 2 already computed — a pure JVM hash
+        # expression, zero extra shuffles, closed over dup clusters by
+        # construction.
+        if split:
+            from .queries import leakage_split_expr
+
+            _, split_col = leakage_split_expr("cluster_id")
+            docs = docs.withColumn("split", split_col).drop("cluster_id")
+            stats["split_counts"] = {
+                r["split"]: r["n"]
+                for r in docs.groupBy("split").agg(F.count("*").alias("n")).collect()
+            }
+
+        # 3c. optional sequence packing: training-ready pack ids over the
+        # surviving docs (url order), so the exported JSONL can be consumed as
+        # concat-then-chunk sequences without another pass over the corpus
+        if pack_budget:
+            # seeded global shuffle order for pack composition (deterministic:
+            # same seed → same packs); url order otherwise
+            order_col = "url"
+            if shuffle_seed is not None:
+                docs = docs.withColumn(
+                    "_ord", F.xxhash64(F.col("url"), F.lit(int(shuffle_seed)))
+                )
+                order_col = "_ord"
+                stats["shuffle_seed"] = int(shuffle_seed)
+            # checkpoint the packed result too: both the n_packs count and the
+            # export write consume it, and the post-checkpoint window+join
+            # portion of assign_packs would otherwise run twice (lazy: the
+            # n_packs aggregate below is the materializing job)
+            packed, h = assign_packs(spark, docs, order_col, pack_budget)
+            ckpt_handles.append(h)
+            docs, h = caches.local_checkpoint(packed.drop("_ord"), eager=False)
+            ckpt_handles.append(h)
+            stats["n_packs"] = docs.agg(F.countDistinct("pack_id")).first()[0]
+            stats["pack_budget"] = pack_budget
+
+        # 4. export
+        from extractor_spark.spark.sources import write_output
+
+        write_output(docs, output_path, fmt="jsonl", partition_col=None)
+        _mark("export")
+        stats["output_path"] = output_path
+        return stats
+    finally:
+        # curate owns its checkpoints end-to-end, unlike lazy-returning
+        # queries: released after the export (their last consumer) or on
+        # the error that stopped the funnel
+        for h in ckpt_handles:
+            h.unpersist()

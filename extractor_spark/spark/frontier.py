@@ -1,5 +1,5 @@
-"""Crawl-frontier construction: sitemap discovery → already-crawled
-anti-join → robots exclusion, Spark-first.
+"""Crawl-frontier construction: sitemap or feed discovery →
+already-crawled anti-join → robots exclusion, Spark-first.
 
 The standing shape of every recrawl planner: per host, the sitemap says
 what exists, the crawl archive says what we have, robots.txt says what
@@ -15,15 +15,23 @@ we may fetch.  At 10^12 documents each piece keeps its scale shape:
 - Robots exclusion reuses spark/robots.py (host join + per-body-compiled
   Arrow decision pass).
 
-Gates (tests/test_sitemap_frontier.py): engine parser vs an independent
-xml.etree twin on well-formed docs; frontier composition vs a pure-Python
-set-algebra twin over the same synth inputs; count sanity (frontier ⊆
-sitemap locs, no crawled url survives, every surviving url robots-allowed).
+Sitemaps (what exists) and RSS/Atom feeds (what is NEW, engine/feeds.py)
+run through one discovery body, ``_discover``, one keep-best-per-url
+merge, ``_merge``, and one streaming body, ``_stream``, parametrized by a
+``_Source`` record.  The streaming body drains its stream through
+``sources.drain_files`` and replaces its store through the crash-safe
+``sources.swap_store``.
+
+Gates (tests/test_sitemap_frontier.py, tests/test_feed_frontier.py):
+engine parsers vs independent xml.etree twins on well-formed docs;
+frontier composition vs a pure-Python set-algebra twin over the same
+synth inputs; count sanity (frontier ⊆ entry locs, no crawled url
+survives, every surviving url robots-allowed); streaming store ≡ batch.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator, NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -59,6 +67,180 @@ def parse_sitemaps(sitemaps: DataFrame) -> DataFrame:
     return sitemaps.select("host", "xml").mapInPandas(run, schema=_ENTRY_SCHEMA)
 
 
+_FEED_ENTRY_SCHEMA = T.StructType(
+    [
+        T.StructField("host", T.StringType()),
+        T.StructField("kind", T.StringType()),
+        T.StructField("loc", T.StringType()),
+        T.StructField("published_s", T.LongType()),
+        T.StructField("title", T.StringType()),
+    ]
+)
+
+
+def parse_feeds(feeds: DataFrame) -> DataFrame:
+    """(host, xml) → exploded (host, kind, loc, published_s, title) via one
+    Arrow ``mapInPandas`` pass (engine/feeds.py per payload — tolerant,
+    per-entry degradation, a non-feed payload yields zero rows)."""
+
+    def run(batches):
+        from ..engine.feeds import parse_feed
+
+        for pdf in batches:
+            rows = []
+            for host, xml in zip(pdf["host"], pdf["xml"]):
+                for e in parse_feed(xml or ""):
+                    rows.append((host, e.kind, e.loc, e.published_s, e.title))
+            yield pd.DataFrame(
+                rows, columns=["host", "kind", "loc", "published_s", "title"]
+            )
+
+    return feeds.select("host", "xml").mapInPandas(run, schema=_FEED_ENTRY_SCHEMA)
+
+
+# ---------------------------------------------------------------------------
+# One discovery body for both sources.  A source is data: how its (host,
+# xml) bodies become entry rows with a ``loc``, the freshness order that
+# keeps one row per url (the loc dedupe and the store merge alike), the
+# entry columns kept in the output, and the work_dir name of its streaming
+# store.  The order reads only output columns: the output's host and rule
+# are url-derived (robots verdicts), so rows tying on the full order are
+# output-identical, and the store merge reproduces the batch dedupe's
+# choice from output rows alone.
+# ---------------------------------------------------------------------------
+
+
+class _Source(NamedTuple):
+    entries: Callable[[DataFrame], DataFrame]
+    order: tuple  # ((column, ascending), ...), nulls last
+    cols: tuple
+    name: str
+
+
+def _order(source: _Source) -> list:
+    return [
+        F.col(c).asc_nulls_last() if asc else F.col(c).desc_nulls_last()
+        for c, asc in source.order
+    ]
+
+
+def _best_per(df: DataFrame, key: str, source: _Source) -> DataFrame:
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(key).orderBy(*_order(source))
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
+def _discover(
+    source: _Source,
+    bodies: DataFrame,
+    crawled_pages: DataFrame,
+    robots: DataFrame,
+    agent: str,
+) -> DataFrame:
+    """dedupe per loc → anti-join against the crawl → persist and register
+    → robots verdicts → attribute join, sorted freshest-first then url."""
+    from . import caches
+    from .robots import robots_filter
+
+    # A loc may legally appear many times — repeated entries in one body,
+    # or the same URL cross-submitted by several hosts (ADVICE r4, medium).
+    # Without the dedupe the verdicts join below fans out n×n (duplicate
+    # frontier rows → duplicate fetches).  One shuffle on loc — the same
+    # key the anti-join and verdict join use.
+    entries = _best_per(source.entries(bodies), "loc", source)
+    # fresh feeds BOTH the robots verdicts and the final attribute join —
+    # persist it (entry-sized, not the crawl) or the Arrow parse pass and
+    # the anti-join run once per consumer (plan-audited: 2x "MapInPandas
+    # run" without the persist).  Registered for release_query_caches like
+    # every other cache-producing lazy result.
+    fresh = entries.join(
+        crawled_pages.select(F.col("url").alias("loc")).distinct(),
+        ["loc"],
+        "left_anti",
+    ).persist()
+    caches.register(fresh)
+    verdicts = robots_filter(fresh.select(F.col("loc").alias("url")), robots, agent)
+    return (
+        fresh.join(verdicts.filter("allowed"), fresh["loc"] == verdicts["url"])
+        .select(verdicts["url"], verdicts["host"], *source.cols, "rule")
+        .orderBy(_order(source)[0], "url")
+    )
+
+
+def _merge(source: _Source, store: DataFrame | None, increment: DataFrame) -> DataFrame:
+    """Upsert an increment into the accumulated store: one row per url,
+    the best under the source's freshness order.  The reduction is an
+    associative lexicographic argmax, so incremental merging converges to
+    exactly the batch result regardless of how entries are split across
+    microbatches.  At production scale this is a Delta/Iceberg MERGE INTO
+    keyed on url; here it is union + window-dedupe."""
+    return _best_per(
+        increment if store is None else store.unionByName(increment), "url", source
+    )
+
+
+def _stream(
+    source: _Source,
+    spark,
+    stream_dir: str,
+    crawled_pages: DataFrame,
+    robots: DataFrame,
+    work_dir: str,
+    agent: str,
+) -> DataFrame:
+    """Each microbatch of (host, xml) files (``sources.drain_files``) runs
+    ``_discover`` and is merged into ``work_dir/<name>_store`` through the
+    crash-safe ``sources.swap_store``.  Returns the final store, sorted as
+    the batch result."""
+    import os
+
+    from . import caches
+    from .sources import drain_files, swap_store
+
+    store_dir = os.path.join(work_dir, f"{source.name}_store")
+
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
+        with caches.scope():
+            inc = _discover(source, batch_df, crawled_pages, robots, agent)
+
+            def write_next(old: DataFrame | None, nxt: str) -> None:
+                _merge(source, old, inc).write.mode("overwrite").parquet(nxt)
+
+            swap_store(spark, store_dir, write_next, batch_id)
+
+    drain_files(
+        spark,
+        stream_dir,
+        "host string, xml string",
+        os.path.join(work_dir, f"{source.name}_ckpt"),
+        handle,
+    )
+    return spark.read.parquet(store_dir).orderBy(_order(source)[0], "url")
+
+
+# Sitemap freshness: priority, then lastmod (ISO strings sort lexically).
+_SITEMAP = _Source(
+    lambda bodies: parse_sitemaps(bodies).filter(F.col("kind") == "url"),
+    (("priority_milli", False), ("lastmod", False)),
+    ("lastmod", "priority_milli"),
+    "frontier",
+)
+# Feed freshness: the numeric published_s (engine/feeds.py normalizes RFC
+# 822 and RFC 3339 dates to epoch seconds — unlike sitemap lastmod strings,
+# feed dates do not sort lexically), then title.
+_FEED = _Source(
+    parse_feeds,
+    (("published_s", False), ("title", True)),
+    ("published_s", "title"),
+    "feed",
+)
+
+
 def build_frontier(
     sitemaps: DataFrame,
     crawled_pages: DataFrame,
@@ -69,75 +251,14 @@ def build_frontier(
 
     Returns (url, host, lastmod, priority_milli, rule) sorted by
     (priority desc, url) — the classic fetch-order key."""
-    from pyspark.sql import Window
-
-    from . import caches
-    from .robots import robots_filter
-
-    entries = parse_sitemaps(sitemaps).filter(F.col("kind") == "url")
-    # A loc may legally appear many times — repeated entries in one
-    # sitemap, or the same URL cross-submitted in several hosts' sitemaps
-    # (ADVICE r4, medium).  Without dedup the verdicts join below fans out
-    # n×n (duplicate frontier rows → duplicate fetches).  Keep one
-    # best-attributed row per loc: highest priority, freshest lastmod,
-    # lowest host as the deterministic tiebreak.  One shuffle on loc —
-    # the same key the anti-join and verdict join use.
-    dedup_w = Window.partitionBy("loc").orderBy(
-        F.col("priority_milli").desc_nulls_last(),
-        F.col("lastmod").desc_nulls_last(),
-        F.col("host"),
-    )
-    entries = (
-        entries.withColumn("_rn", F.row_number().over(dedup_w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    # fresh feeds BOTH the robots verdicts and the final attribute join —
-    # persist it (entry-sized: sitemap rows, not the crawl) or the Arrow
-    # parse pass and the anti-join run once per consumer (plan-audited:
-    # 2x "MapInPandas run" without the persist).  Registered for
-    # release_query_caches like every other cache-producing lazy result.
-    fresh = entries.join(
-        crawled_pages.select(F.col("url").alias("loc")).distinct(),
-        ["loc"],
-        "left_anti",
-    ).persist()
-    caches.register(fresh)
-    verdicts = robots_filter(fresh.select(F.col("loc").alias("url")), robots, agent)
-    return (
-        fresh.join(verdicts.filter("allowed"), fresh["loc"] == verdicts["url"])
-        .select(
-            verdicts["url"],
-            verdicts["host"],
-            "lastmod",
-            "priority_milli",
-            "rule",
-        )
-        .orderBy(F.col("priority_milli").desc_nulls_last(), "url")
-    )
+    return _discover(_SITEMAP, sitemaps, crawled_pages, robots, agent)
 
 
 def merge_frontier_store(store: DataFrame | None, increment: DataFrame) -> DataFrame:
-    """Upsert an increment into the accumulated frontier: one row per url,
-    keeping the best-attributed entry (priority desc nulls last, lastmod
-    desc nulls last).  The reduction is an associative lexicographic
-    argmax, so incremental merging converges to exactly the batch
-    ``build_frontier`` result regardless of how entries are split across
-    microbatches (rows tying on the full key are identical: host and rule
-    are url-derived).  At production scale this merge is a Delta/Iceberg
-    MERGE INTO keyed on url; here it is union + window-dedupe."""
-    from pyspark.sql import Window
-
-    unioned = increment if store is None else store.unionByName(increment)
-    w = Window.partitionBy("url").orderBy(
-        F.col("priority_milli").desc_nulls_last(),
-        F.col("lastmod").desc_nulls_last(),
-    )
-    return (
-        unioned.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    """Upsert a frontier increment: one row per url, keeping the
+    best-attributed entry (priority desc nulls last, lastmod desc nulls
+    last) — converges to the batch ``build_frontier`` result."""
+    return _merge(_SITEMAP, store, increment)
 
 
 def streaming_frontier(
@@ -150,49 +271,49 @@ def streaming_frontier(
 ) -> DataFrame:
     """Incremental frontier over a STREAM of sitemap bodies (VERDICT r4
     #8): new (host, xml) files land in ``sitemaps_stream_dir``; each
-    microbatch runs the same parse → dedupe → anti-join → robots
-    composition as ``build_frontier`` and is upserted into a persistent
-    frontier store via ``merge_frontier_store``.  availableNow drain;
-    returns the final store DataFrame.
-
-    The store swap is read-old → write-new-dir → atomic rename (the local
-    stand-in for a transactional table MERGE; the checkpoint +
-    deterministic merge make replays idempotent)."""
-    import os
-    import shutil
-
-    from . import caches
-
-    store_dir = os.path.join(work_dir, "frontier_store")
-    ckpt_dir = os.path.join(work_dir, "frontier_ckpt")
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        with caches.scope():
-            inc = build_frontier(batch_df, crawled_pages, robots, agent=agent)
-            store = (
-                spark.read.parquet(store_dir) if os.path.isdir(store_dir) else None
-            )
-            merged = merge_frontier_store(store, inc)
-            tmp_dir = f"{store_dir}.next{batch_id}"
-            merged.write.mode("overwrite").parquet(tmp_dir)
-            if os.path.isdir(store_dir):
-                shutil.rmtree(store_dir)
-            os.rename(tmp_dir, store_dir)
-
-    stream = (
-        spark.readStream.schema("host string, xml string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(sitemaps_stream_dir)
+    microbatch runs ``build_frontier``'s composition and is upserted into
+    ``work_dir/frontier_store`` via ``merge_frontier_store``.  Returns the
+    final store, in fetch order."""
+    return _stream(
+        _SITEMAP, spark, sitemaps_stream_dir, crawled_pages, robots, work_dir, agent
     )
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(store_dir).orderBy(
-        F.col("priority_milli").desc_nulls_last(), "url"
+
+
+def build_feed_frontier(
+    feeds: DataFrame,
+    crawled_pages: DataFrame,
+    robots: DataFrame,
+    agent: str = "extractor-spark",
+) -> DataFrame:
+    """URLs announced by a feed, not yet crawled, robots-allowed — the
+    incremental-discovery sibling of ``build_frontier`` (cross-posted and
+    repeated entries are legal and common in feeds — syndication mirrors).
+    Returns (url, host, published_s, title, rule) sorted freshest-first."""
+    return _discover(_FEED, feeds, crawled_pages, robots, agent)
+
+
+def merge_feed_store(store: DataFrame | None, increment: DataFrame) -> DataFrame:
+    """Upsert a feed-frontier increment: one row per url, keeping the
+    freshest-attributed entry (published_s desc nulls last, title asc
+    nulls last) — converges to the batch ``build_feed_frontier`` result."""
+    return _merge(_FEED, store, increment)
+
+
+def streaming_feed_frontier(
+    spark,
+    feeds_stream_dir: str,
+    crawled_pages: DataFrame,
+    robots: DataFrame,
+    work_dir: str,
+    agent: str = "extractor-spark",
+) -> DataFrame:
+    """Incremental feed-driven discovery over a STREAM of feed bodies —
+    the natural deployment shape (feeds announce what is NEW, so they
+    arrive continuously): each microbatch runs ``build_feed_frontier``'s
+    composition and is upserted into ``work_dir/feed_store`` via
+    ``merge_feed_store``.  Returns the final store, freshest-first."""
+    return _stream(
+        _FEED, spark, feeds_stream_dir, crawled_pages, robots, work_dir, agent
     )
 
 
@@ -316,102 +437,6 @@ def synth_sitemaps_df(
     return spark.createDataFrame(pd.DataFrame(rows, columns=["host", "xml"]))
 
 
-# ---------------------------------------------------------------------------
-# Feed discovery (RSS/Atom — engine/feeds.py): the "what is NEW" half of
-# the discovery stack, composed exactly like the sitemap frontier.
-# ---------------------------------------------------------------------------
-
-_FEED_ENTRY_SCHEMA = T.StructType(
-    [
-        T.StructField("host", T.StringType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("loc", T.StringType()),
-        T.StructField("published_s", T.LongType()),
-        T.StructField("title", T.StringType()),
-    ]
-)
-
-
-def parse_feeds(feeds: DataFrame) -> DataFrame:
-    """(host, xml) → exploded (host, kind, loc, published_s, title) via one
-    Arrow ``mapInPandas`` pass (engine/feeds.py per payload — tolerant,
-    per-entry degradation, a non-feed payload yields zero rows)."""
-
-    def run(batches):
-        from ..engine.feeds import parse_feed
-
-        for pdf in batches:
-            rows = []
-            for host, xml in zip(pdf["host"], pdf["xml"]):
-                for e in parse_feed(xml or ""):
-                    rows.append((host, e.kind, e.loc, e.published_s, e.title))
-            yield pd.DataFrame(
-                rows, columns=["host", "kind", "loc", "published_s", "title"]
-            )
-
-    return feeds.select("host", "xml").mapInPandas(run, schema=_FEED_ENTRY_SCHEMA)
-
-
-def build_feed_frontier(
-    feeds: DataFrame,
-    crawled_pages: DataFrame,
-    robots: DataFrame,
-    agent: str = "extractor-spark",
-) -> DataFrame:
-    """URLs announced by a feed, not yet crawled, robots-allowed — the
-    incremental-discovery sibling of ``build_frontier``.  Freshness is the
-    numeric ``published_s`` (engine/feeds.py normalizes RFC 822 and
-    RFC 3339 dates to epoch seconds — unlike sitemap ISO ``lastmod``
-    strings, feed dates do not sort lexically).
-
-    Same scale shape as the sitemap path: one Arrow parse pass, one
-    loc-shuffle for the dedupe (cross-posted and repeated entries are
-    legal and common in feeds — syndication mirrors), co-keyed anti-join
-    against the crawl, robots verdicts on the deduped survivors only.
-    Returns (url, host, published_s, title, rule) sorted freshest-first."""
-    from pyspark.sql import Window
-
-    from . import caches
-    from .robots import robots_filter
-
-    entries = parse_feeds(feeds)
-    # Tiebreak uses only columns that SURVIVE into the output (published_s,
-    # title): the output's host and rule are url-derived, so rows tying on
-    # (published_s, title) are output-identical, and the streaming store
-    # merge (merge_feed_store) can reproduce this choice exactly from
-    # output rows alone — the same argument streaming_frontier relies on.
-    dedup_w = Window.partitionBy("loc").orderBy(
-        F.col("published_s").desc_nulls_last(),
-        F.col("title").asc_nulls_last(),
-    )
-    entries = (
-        entries.withColumn("_rn", F.row_number().over(dedup_w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    # fresh feeds both the robots verdicts and the final attribute join —
-    # persist (feed-entry-sized) or the Arrow parse + anti-join would run
-    # once per consumer (same plan-audit finding as build_frontier).
-    fresh = entries.join(
-        crawled_pages.select(F.col("url").alias("loc")).distinct(),
-        ["loc"],
-        "left_anti",
-    ).persist()
-    caches.register(fresh)
-    verdicts = robots_filter(fresh.select(F.col("loc").alias("url")), robots, agent)
-    return (
-        fresh.join(verdicts.filter("allowed"), fresh["loc"] == verdicts["url"])
-        .select(
-            verdicts["url"],
-            verdicts["host"],
-            "published_s",
-            "title",
-            "rule",
-        )
-        .orderBy(F.col("published_s").desc_nulls_last(), "url")
-    )
-
-
 def synth_feeds_df(
     spark,
     hosts: list[str],
@@ -490,80 +515,3 @@ def synth_feeds_df(
             )
         rows.append((host, body))
     return spark.createDataFrame(pd.DataFrame(rows, columns=["host", "xml"]))
-
-
-def merge_feed_store(store: DataFrame | None, increment: DataFrame) -> DataFrame:
-    """Upsert a feed-frontier increment: one row per url, keeping the
-    freshest-attributed entry (published_s desc nulls last, title asc
-    nulls last — the same total order build_feed_frontier's dedupe uses,
-    over columns present in the OUTPUT, so incremental merging converges
-    to exactly the batch result regardless of microbatch splits; rows
-    tying on the full key are output-identical because host and rule are
-    url-derived)."""
-    from pyspark.sql import Window
-
-    unioned = increment if store is None else store.unionByName(increment)
-    w = Window.partitionBy("url").orderBy(
-        F.col("published_s").desc_nulls_last(),
-        F.col("title").asc_nulls_last(),
-    )
-    return (
-        unioned.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def streaming_feed_frontier(
-    spark,
-    feeds_stream_dir: str,
-    crawled_pages: DataFrame,
-    robots: DataFrame,
-    work_dir: str,
-    agent: str = "extractor-spark",
-) -> DataFrame:
-    """Incremental feed-driven discovery over a STREAM of feed bodies —
-    the natural deployment shape (feeds announce what is NEW, so they
-    arrive continuously): new (host, xml) files land in
-    ``feeds_stream_dir``; each microbatch runs the same parse → dedupe →
-    anti-join → robots composition as ``build_feed_frontier`` and is
-    upserted into a persistent store via ``merge_feed_store``.
-    availableNow drain; returns the final store, freshest-first.  Same
-    read-old → write-new → atomic-rename store swap as
-    ``streaming_frontier`` (the local stand-in for MERGE INTO)."""
-    import os
-    import shutil
-
-    from . import caches
-
-    store_dir = os.path.join(work_dir, "feed_store")
-    ckpt_dir = os.path.join(work_dir, "feed_ckpt")
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        with caches.scope():
-            inc = build_feed_frontier(batch_df, crawled_pages, robots, agent=agent)
-            store = (
-                spark.read.parquet(store_dir) if os.path.isdir(store_dir) else None
-            )
-            merged = merge_feed_store(store, inc)
-            tmp_dir = f"{store_dir}.next{batch_id}"
-            merged.write.mode("overwrite").parquet(tmp_dir)
-            if os.path.isdir(store_dir):
-                shutil.rmtree(store_dir)
-            os.rename(tmp_dir, store_dir)
-
-    stream = (
-        spark.readStream.schema("host string, xml string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feeds_stream_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(store_dir).orderBy(
-        F.col("published_s").desc_nulls_last(), "url"
-    )

@@ -27,7 +27,7 @@ The correctness gate (tests/test_incremental_dedup.py) replays the same
 batches through a from-scratch reference that rebuilds the accumulated
 corpus per step with the identical SQL — so the persisted-store path is
 pinned to introduce no loss or corruption — plus a planted near-copy test
-and a streaming (foreachBatch availableNow) ≡ batch-loop equality.
+and a streaming (``sources.drain_files``) ≡ batch-loop equality.
 
 No reference analog (lightfeed/extractor has no dedup); parameters and
 star/verify conventions follow `curate.py`.
@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import caches
+from .sources import drain_files, swap_store
 
 BANDS_SUBDIR = "bands"
 SHINGLES_SUBDIR = "shingles"
@@ -257,7 +258,7 @@ def streaming_dedup(
     work_dir: str,
     threshold: float = 0.8,
 ) -> DataFrame:
-    """foreachBatch availableNow drain over a stream of (url, text) files:
+    """Stream drain (``sources.drain_files``) over (url, text) files:
     each microbatch runs ``dedup_batch`` against the growing store and
     appends its verdicts to ``work_dir/verdicts``.  Returns the union of
     all verdicts.  Equality vs the batch loop is pinned in
@@ -282,18 +283,7 @@ def streaming_dedup(
             # for the session: only its handle frees the blocks
             ckpt.unpersist()
 
-    stream = (
-        spark.readStream.schema("url string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_stream_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_files(spark, docs_stream_dir, "url string, text string", ckpt_dir, handle)
     return spark.read.parquet(verdicts_dir)
 
 
@@ -307,16 +297,14 @@ def streaming_source_counts(
     monitoring at ingest time).  Counts are ASSOCIATIVE, so merging each
     microbatch's partial counts into the store by summation converges to
     exactly the batch aggregation regardless of chunking — the same
-    argument as merge_frontier_store's argmax (frontier.py), with sum in
-    place of argmax.  Store swap is write-next → atomic rename, as there.
+    argument as the frontier store merge's argmax (frontier.py), with sum
+    in place of argmax.  The store is replaced by ``sources.swap_store``,
+    whose batch stamp keeps a replayed microbatch from being summed twice.
 
     Returns the final (source, w, c) store; feeding it to the
     source_drift_kl SQL gives bit-identical KL to the batch query
     (pinned in tests/test_incremental_dedup.py)."""
-    import shutil
-
     store_dir = os.path.join(work_dir, "srccnt_store")
-    ckpt_dir = os.path.join(work_dir, "srccnt_ckpt")
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         inc = (
@@ -326,31 +314,22 @@ def streaming_source_counts(
             .groupBy("source", "w")
             .agg(F.count("*").cast("bigint").alias("c"))
         )
-        if os.path.isdir(store_dir):
-            merged = (
-                spark.read.parquet(store_dir)
-                .unionByName(inc)
+
+        def write_next(old: DataFrame | None, nxt: str) -> None:
+            merged = inc if old is None else (
+                old.unionByName(inc)
                 .groupBy("source", "w")
                 .agg(F.sum("c").cast("bigint").alias("c"))
             )
-        else:
-            merged = inc
-        tmp_dir = f"{store_dir}.next{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp_dir)
-        if os.path.isdir(store_dir):
-            shutil.rmtree(store_dir)
-        os.rename(tmp_dir, store_dir)
+            merged.write.mode("overwrite").parquet(nxt)
 
-    stream = (
-        spark.readStream.schema("source string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_stream_dir)
+        swap_store(spark, store_dir, write_next, batch_id)
+
+    drain_files(
+        spark,
+        docs_stream_dir,
+        "source string, text string",
+        os.path.join(work_dir, "srccnt_ckpt"),
+        handle,
     )
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return spark.read.parquet(store_dir)

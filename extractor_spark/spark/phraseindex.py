@@ -125,33 +125,33 @@ def compact_phrase_index(
 ) -> None:
     """Rewrite every batch into a single batch 0 (pure row rewrite, no
     re-tokenize): restores term-sorted row groups per bucket after many
-    small streaming appends.  Temp-dir + swap (the store-swap convention)."""
-    import shutil
+    small streaming appends.  Written beside the index and swapped in by
+    the crash-safe ``sources.swap_store``."""
+    from .sources import swap_store
 
-    tmp = path + "__compacting"
-    shutil.rmtree(tmp, ignore_errors=True)
-    postings = spark.read.parquet(path).select(
-        "term", "doc_id", "pos", "bucket"
-    ).withColumn("batch", F.lit(0))
-    (
-        postings.repartition(n_partitions, "bucket")
-        .sortWithinPartitions("term", "doc_id", "pos")
-        .write.mode("overwrite")
-        .partitionBy("bucket", "batch")
-        .parquet(tmp)
-    )
-    (
-        spark.read.parquet(tmp)
-        .groupBy("term")
-        .agg(F.count("*").alias("df"))
-        .withColumn("batch", F.lit(0))
-        .repartition(8)
-        .write.mode("overwrite")
-        .partitionBy("batch")
-        .parquet(tmp + "/_df")
-    )
-    shutil.rmtree(path)
-    shutil.move(tmp, path)
+    def write_next(old: DataFrame, nxt: str) -> None:
+        postings = old.select("term", "doc_id", "pos", "bucket").withColumn(
+            "batch", F.lit(0)
+        )
+        (
+            postings.repartition(n_partitions, "bucket")
+            .sortWithinPartitions("term", "doc_id", "pos")
+            .write.mode("overwrite")
+            .partitionBy("bucket", "batch")
+            .parquet(nxt)
+        )
+        (
+            spark.read.parquet(nxt)
+            .groupBy("term")
+            .agg(F.count("*").alias("df"))
+            .withColumn("batch", F.lit(0))
+            .repartition(8)
+            .write.mode("overwrite")
+            .partitionBy("batch")
+            .parquet(nxt + "/_df")
+        )
+
+    swap_store(spark, path, write_next)
 
 
 def stream_batch_offset(index_path: str, ckpt_dir: str) -> int:
@@ -196,29 +196,20 @@ def streaming_phrase_index(
     index_path: str,
     ckpt_dir: str,
 ) -> None:
-    """foreachBatch availableNow drain over a (doc_id, text) file stream —
+    """Stream drain (``sources.drain_files``) over (doc_id, text) files —
     each microbatch appends under its batch-id partitions, so replayed
     microbatches land on identical content (streaming ≡ batch pinned in
     tests/test_phrase_append.py).  Batch ids are offset past any batches
     an earlier build/append/compact already owns
     (:func:`stream_batch_offset`)."""
+    from .sources import drain_files
+
     off = stream_batch_offset(index_path, ckpt_dir)
 
     def handle(batch_df, batch_id: int) -> None:
         append_phrase_index(batch_df, index_path, batch_id=int(batch_id) + off)
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_stream_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_files(spark, docs_stream_dir, "doc_id long, text string", ckpt_dir, handle)
 
 
 def _phrase_legs(phrases: list[str]) -> list[tuple]:

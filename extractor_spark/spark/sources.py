@@ -6,9 +6,19 @@ default is a parquet layout with the identical logical schema.  When the
 cluster image carries ``iceberg-spark-runtime`` (plus catalog conf), pass
 ``fmt="iceberg"`` — the read/write paths below are the documented one-line
 switch (SURVEY.md §1.3).
+
+The incremental surfaces (frontier stores, near-dup store, source-count
+store, the two search indexes) share two protocols defined here:
+:func:`drain_files`, the one-file-per-microbatch availableNow stream
+drain, and :func:`swap_store`, the crash-safe read-old → write-new → swap
+that stands in for a transactional table MERGE / metastore pointer flip.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -134,3 +144,78 @@ def write_output(
     if partition_col and partition_col in df.columns:
         writer = writer.partitionBy(partition_col)
     writer.parquet(location)
+
+
+def drain_files(
+    spark: SparkSession,
+    stream_dir: str,
+    schema: str,
+    ckpt_dir: str,
+    handle: Callable[[DataFrame, int], None],
+) -> None:
+    """Run ``handle(batch_df, batch_id)`` over the parquet files in
+    ``stream_dir`` as an availableNow ``foreachBatch`` drain and block
+    until it ends.  One file per microbatch: the streaming ≡ batch gates
+    replay the same chunking on the batch side, so the chunking is part of
+    the contract.  A microbatch that raises is replayed under the same
+    ``batch_id`` by the next drain over the same ``ckpt_dir``."""
+    q = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stream_dir)
+        .writeStream.foreachBatch(handle)
+        .option("checkpointLocation", ckpt_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
+# Parquet readers skip "_"-prefixed files, so the stamp rides inside the store.
+_STAMP = "_swap_batch"
+
+
+def swap_store(
+    spark: SparkSession,
+    store_dir: str,
+    write_next: Callable[[DataFrame | None, str], None],
+    batch_id: int | None = None,
+) -> None:
+    """Replace the parquet store at ``store_dir`` with
+    ``write_next(old, next_dir)``'s output, where ``old`` is the current
+    store (None before the first swap) and ``next_dir`` a sibling to write.
+
+    The store path never stays empty without a restorable copy: the old
+    store is renamed aside, the new one renamed in, and the aside copy
+    deleted last.  A swap that died between the two renames left only the
+    aside copy, which is renamed back before ``old`` is read; one that died
+    after them left both, and the aside copy is dropped.  With a
+    ``batch_id`` (a microbatch id) the new store carries it as a stamp, and
+    a replay of that microbatch after its swap completed changes nothing,
+    so non-idempotent merges (sums) stay exact under at-least-once replay.
+    The stamp ties the store to the checkpoint whose ids it records: keep
+    or discard the two together."""
+    aside = store_dir + ".aside"
+    nxt = store_dir + ".next"
+    stamp = os.path.join(store_dir, _STAMP)
+    if os.path.isdir(aside):
+        if os.path.isdir(store_dir):
+            shutil.rmtree(aside)
+        else:
+            os.rename(aside, store_dir)
+    if batch_id is not None and os.path.exists(stamp):
+        with open(stamp) as f:
+            if int(f.read()) == batch_id:
+                return
+    old = spark.read.parquet(store_dir) if os.path.isdir(store_dir) else None
+    if os.path.isdir(nxt):
+        shutil.rmtree(nxt)
+    write_next(old, nxt)
+    if batch_id is not None:
+        with open(os.path.join(nxt, _STAMP), "w") as f:
+            f.write(str(int(batch_id)))
+    if old is not None:
+        os.rename(store_dir, aside)
+    os.rename(nxt, store_dir)
+    if old is not None:
+        shutil.rmtree(aside)

@@ -1,8 +1,8 @@
 """Ownership semantics of the cache registry (round-3 verdict item 7).
 
-caches.LIVE is a single-threaded session-global; composite jobs must use
-caches.scope() (or the retire_since mark primitive, as curate does) so
-they never retire a pending query's checkpoint.  No Spark needed — the
+caches.LIVE is a single-threaded session-global; composite jobs (curate,
+the streaming frontier handlers) must use caches.scope() so they never
+retire a pending query's checkpoint.  No Spark needed — the
 registry only requires handles with .unpersist().
 """
 

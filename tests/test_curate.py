@@ -49,6 +49,29 @@ def test_curate_funnel(spark, tmp_path):
     assert kept == {"https://c.test/a-long", "https://c.test/unique"}
 
 
+def test_curate_releases_checkpoints_on_error(spark, tmp_path, monkeypatch):
+    """A funnel that fails after its dedup stages (here: the export)
+    releases every checkpoint it took and every cache its stages
+    registered, instead of leaking them for the life of the session."""
+    from extractor_spark.spark import caches, sources
+    from extractor_spark.spark.curate import curate
+
+    inp = str(tmp_path / "extract_out")
+    spark.createDataFrame(pd.DataFrame(_docs())).write.parquet(inp)
+
+    def failing_write(*args, **kwargs):
+        raise RuntimeError("export failed")
+
+    monkeypatch.setattr(sources, "write_output", failing_write)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    live = len(caches.LIVE)
+    with pytest.raises(RuntimeError, match="export failed"):
+        curate(spark, inp, str(tmp_path / "curated"), min_tokens=10, pack_budget=64)
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
+    assert len(caches.LIVE) == live
+
+
 def test_curate_cli(spark, tmp_path):
     import jobs.curate as cli
 

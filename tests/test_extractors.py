@@ -192,24 +192,26 @@ class TestGenerateExtractionPrompt:  # :192-256
         assert json.dumps(ctx, indent=2, ensure_ascii=False) in prompt
 
 
-def test_schema_memo_mutation_detected_when_check_enabled(monkeypatch):
-    """ADVICE r3: the per-object schema memo serves stale forms if the
-    caller mutates the dict in place.  The opt-in fingerprint check
-    (EXTRACTOR_SCHEMA_MEMO_CHECK=1) must catch that; unmutated re-use
-    stays a silent cache hit."""
+def test_schema_memo_keyed_on_content():
+    """The schema-forms memo is keyed on the schema's content: a dict
+    mutated in place after first use yields the mutated forms (an
+    identity-keyed memo served the stale ones), and unmutated re-use
+    returns the memoized objects."""
     from extractor_spark.engine import extract_llm as mod
+    from extractor_spark.engine.sanitize import transform_schema_for_llm
+    from extractor_spark.engine.schema import normalize_schema
 
-    monkeypatch.setattr(mod, "_MEMO_CHECK", True)
     mod._SCHEMA_FORMS_CACHE.clear()
-    schema = {"type": "object", "properties": {"a": {"type": "string"}}}
-    n1, l1 = mod._schema_forms(schema)
-    n2, l2 = mod._schema_forms(schema)  # clean hit
-    assert n1 is n2 and l1 is l2
-    schema["properties"]["b"] = {"type": "number"}  # in-place mutation
     try:
-        mod._schema_forms(schema)
-        raise SystemExit("mutation not detected")
-    except AssertionError as e:
-        assert "mutated in place" in str(e)
+        schema = {"type": "object", "properties": {"a": {"type": "string"}}}
+        n1, l1 = mod._schema_forms(schema)
+        n2, l2 = mod._schema_forms(schema)  # clean hit
+        assert n1 is n2 and l1 is l2
+        schema["properties"]["b"] = {"type": "number"}  # in-place mutation
+        n3, l3 = mod._schema_forms(schema)
+        assert n3 == normalize_schema(schema) and n3 != n1
+        assert l3 == transform_schema_for_llm(normalize_schema(schema))
+        n4, l4 = mod._schema_forms(schema)
+        assert n4 is n3 and l4 is l3
     finally:
         mod._SCHEMA_FORMS_CACHE.clear()

@@ -8,6 +8,9 @@
    is flagged with the right attribution; a fresh doc is not.
 3. Streaming (foreachBatch availableNow) ≡ the batch loop on the same
    chunking.
+4. The streamed source-count store equals the batch aggregation, also
+   when the store swap fails at any of its filesystem steps and the
+   drain is run again on the same work_dir.
 """
 
 import os
@@ -155,13 +158,9 @@ def test_streaming_equals_batch_loop(spark, tmp_path):
     assert stream_rows == batch_rows
 
 
-def test_streaming_source_counts_match_batch_and_kl(spark, tmp_path):
-    """Counts are associative: the streamed (source, w, c) store equals the
-    one-shot batch aggregation exactly, and feeding the store to the KL
-    SQL reproduces the batch source_drift_kl rows bit-for-bit."""
-    from extractor_spark.spark.incdedup import streaming_source_counts
-    from extractor_spark.spark.queries import _SOURCE_KL_SC_SQL, _SOURCE_KL_SPARK, _views
-
+def _source_count_stream(spark, tmp_path) -> str:
+    """The sf documents as three (source, text) parquet files, one per
+    microbatch."""
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").selectExpr(
         "source", "text", "pmod(doc_id, 3) AS b"
     )
@@ -176,11 +175,27 @@ def test_streaming_source_counts_match_batch_and_kl(spark, tmp_path):
         shutil.copy(
             os.path.join(part_dir, src), os.path.join(stream_dir, f"chunk_{b}.parquet")
         )
+    return stream_dir
 
-    store = streaming_source_counts(spark, stream_dir, os.path.join(str(tmp_path), "w"))
+
+def _batch_source_counts(spark):
+    from extractor_spark.spark.queries import _SOURCE_KL_SC_SQL, _views
 
     _views(spark, SF_DIR)
-    batch_counts = spark.sql(_SOURCE_KL_SC_SQL)
+    return spark.sql(_SOURCE_KL_SC_SQL)
+
+
+def test_streaming_source_counts_match_batch_and_kl(spark, tmp_path):
+    """Counts are associative: the streamed (source, w, c) store equals the
+    one-shot batch aggregation exactly, and feeding the store to the KL
+    SQL reproduces the batch source_drift_kl rows bit-for-bit."""
+    from extractor_spark.spark.incdedup import streaming_source_counts
+    from extractor_spark.spark.queries import _SOURCE_KL_SPARK
+
+    stream_dir = _source_count_stream(spark, tmp_path)
+    store = streaming_source_counts(spark, stream_dir, os.path.join(str(tmp_path), "w"))
+
+    batch_counts = _batch_source_counts(spark)
     got = {(r["source"], r["w"]): r["c"] for r in store.collect()}
     want = {(r["source"], r["w"]): r["c"] for r in batch_counts.collect()}
     assert got == want
@@ -191,6 +206,53 @@ def test_streaming_source_counts_match_batch_and_kl(spark, tmp_path):
     store.createOrReplaceTempView("source_kl_sc")
     stream_kl = {tuple(r) for r in spark.sql(_SOURCE_KL_SPARK).collect()}
     assert stream_kl == batch_kl
+
+
+# Ordinal of the failing call among the os.rename/shutil.rmtree calls on
+# the store's paths, counted from the start of the drain: batch 0 renames
+# its new store in; batch 1 renames the old store aside, renames the new
+# one in, then deletes the aside copy.
+_SWAP_STEPS = {
+    "first_store_in": 0,
+    "old_store_aside": 1,
+    "next_store_in": 2,
+    "drop_aside": 3,
+}
+
+
+@pytest.mark.parametrize("step", list(_SWAP_STEPS))
+def test_streaming_source_counts_survive_swap_crash(spark, tmp_path, monkeypatch, step):
+    """A store swap that raises at one filesystem step fails its
+    microbatch; draining again on the same work_dir replays that
+    microbatch and must end with exactly the batch aggregation — no
+    batch lost (a deleted store with the new one not yet renamed in) and
+    none summed twice (a replay after the new store went in)."""
+    from extractor_spark.spark.incdedup import streaming_source_counts
+
+    stream_dir = _source_count_stream(spark, tmp_path)
+    work = os.path.join(str(tmp_path), "w")
+    store_dir = os.path.join(work, "srccnt_store")
+    calls: list = []
+
+    def failing_once(real):
+        def call(path, *args, **kwargs):
+            if str(path).startswith(store_dir):
+                calls.append(path)
+                if len(calls) - 1 == _SWAP_STEPS[step]:
+                    raise OSError(f"injected failure at {step}")
+            return real(path, *args, **kwargs)
+
+        return call
+
+    monkeypatch.setattr(os, "rename", failing_once(os.rename))
+    monkeypatch.setattr(shutil, "rmtree", failing_once(shutil.rmtree))
+    with pytest.raises(Exception, match="injected failure"):
+        streaming_source_counts(spark, stream_dir, work)
+    store = streaming_source_counts(spark, stream_dir, work)
+
+    got = {(r["source"], r["w"]): r["c"] for r in store.collect()}
+    want = {(r["source"], r["w"]): r["c"] for r in _batch_source_counts(spark).collect()}
+    assert got == want
 
 
 def test_batch_replay_is_idempotent(spark):

@@ -1,13 +1,13 @@
-"""The checked-in spark-submit artifact must match the source tree.
+"""The spark-submit ``--py-files`` zip is built on demand from the tree.
 
-ADVICE r3: dist/extractor_spark.zip drifted from HEAD (missing the
-hot_keys registration and warmup(schema=)), so a spark-submit using the
-committed artifact silently ran older code.  This gate diffs every zip
-member against the tree byte-for-byte and lists missing/extra members;
-on failure the fix is one command: sh scripts/make_pyfiles_zip.sh.
+``dist/`` is not tracked: ``scripts/make_pyfiles_zip.sh`` builds
+``dist/extractor_spark.zip`` before a submit.  This gate runs the script
+and checks that the zip holds exactly the tree's ``extractor_spark/**/*.py``,
+byte for byte.
 """
 
 import pathlib
+import subprocess
 import zipfile
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
@@ -15,7 +15,11 @@ ZIP = REPO / "dist" / "extractor_spark.zip"
 
 
 def test_pyfiles_zip_matches_source_tree():
-    assert ZIP.exists(), "dist/extractor_spark.zip missing — run scripts/make_pyfiles_zip.sh"
+    subprocess.run(
+        ["sh", str(REPO / "scripts" / "make_pyfiles_zip.sh")],
+        check=True,
+        capture_output=True,
+    )
     src = {
         p.relative_to(REPO).as_posix(): p.read_bytes()
         for p in (REPO / "extractor_spark").rglob("*.py")
@@ -26,6 +30,5 @@ def test_pyfiles_zip_matches_source_tree():
     extra = sorted(set(members) - set(src))
     stale = sorted(n for n in set(src) & set(members) if src[n] != members[n])
     assert not (missing or extra or stale), (
-        f"py-files zip out of date (run scripts/make_pyfiles_zip.sh): "
         f"missing={missing} extra={extra} stale={stale}"
     )
