@@ -121,6 +121,8 @@ def assign_packs(
     order_col: str,
     budget: int,
     n_parts: int = 16,
+    *,
+    n_tokens_given: bool = False,
 ) -> tuple[DataFrame, caches.JvmRddHandle]:
     """Concat-then-chunk pack ids over `order_col` order via the two-level
     distributed prefix sum (per-partition cumsum + broadcast offsets —
@@ -130,12 +132,13 @@ def assign_packs(
     packed frame is lazy over a checkpoint whose blocks ``handle``
     releases once the caller is done with it.
 
-    A caller may pre-compute `n_tokens` (with this exact expression) and
-    pass a frame WITHOUT the text payload: repartitionByRange samples its
-    input with a separate job and the checkpoint stores every column, so
-    a narrow frame skips a full text pass + text-sized block storage
-    (r6 — the sequence_packing query passes (doc_id, n_tokens) only)."""
-    if "n_tokens" in docs.columns:
+    With ``n_tokens_given`` the caller has pre-computed `n_tokens` (with
+    this exact expression) and may pass a frame WITHOUT the text payload:
+    repartitionByRange samples its input with a separate job and the
+    checkpoint stores every column, so a narrow frame skips a full text
+    pass + text-sized block storage (r6 — the sequence_packing query
+    passes (doc_id, n_tokens) only)."""
+    if n_tokens_given:
         base = docs
     else:
         base = docs.withColumn(

@@ -10,35 +10,43 @@ Dataflow (SURVEY.md §3.1 Spark lifecycle):
       → NOT IN manifest buckets                     -- literal filter at scan
       → optional broadcast context join on url      -- before the sort, so
                                                        dedup sees every row
-      → repartition(bucket) + sort(url, warc_ts ↓)  -- the one shuffle
+      → repartition(bucket)
+        + sort(bucket, url, warc_ts ↓)              -- the one shuffle
       → one mapInPandas: stage C (keeping the first
         row of each url run = latest crawl), then
         stage E when a schema is given              -- Arrow batches
-      → write output partitioned by bucket          -- no further shuffle
-      → append manifest rows (bucket, metrics, lineage)
+      → write one file per task, bucket a column    -- no further shuffle
+      → append manifest rows (bucket, metrics, lineage, file)
 
 At 10^12-document scale every step stays shuffle-bounded: one full-data
 shuffle, on bucket.  Bucket = f(url), so every crawl of a url lands in one
-partition (dedup needs no second shuffle) and each task holds whole buckets
-(the bucket-partitioned write emits one file per bucket).  Skew is handled
-by construction: the bucket hashes the whole url, so one hot host's pages
-spread across all buckets instead of serializing on one partition.  Output
-partitioning by bucket gives idempotent re-runs (dynamic partition overwrite
-replaces exactly the re-processed buckets).
+partition (dedup needs no second shuffle) and each task holds whole buckets,
+so each bucket sits in exactly one output file.  Skew is handled by
+construction: the bucket hashes the whole url, so one hot host's pages
+spread across all buckets instead of serializing on one partition.  The
+output is flat — never ``partitionBy("bucket")``: the bucket is the resume
+unit, not the file unit, and rows are written in bucket order so row-group
+min/max on ``bucket`` still prunes a one-bucket read.
 
-Manifest contract (resume identity): one row per (bucket, run); rows record
-``n_buckets`` — the bucket-assignment modulus — and resume FAILS LOUDLY on a
-mismatch (a silent mismatch would skip the wrong buckets).  Each wave appends
-only its own buckets' rows, aggregated from the wave's partition directories
-(partition-pruned read — previously-committed waves are never re-scanned).
-The ``dedup_mode`` column is always ``"fused"``; it stays so manifests from
-earlier versions, which also recorded it, resume unchanged.
+Manifest contract (resume identity + commit log, SURVEY's Iceberg-style
+table): one row per (bucket, run) naming the file that holds the bucket;
+rows record ``n_buckets`` — the bucket-assignment modulus — and resume FAILS
+LOUDLY on a mismatch (a silent mismatch would skip the wrong buckets).  Each
+wave stages its files under ``<output>/_staging/``, aggregates its rows from
+those files only (committed waves are never re-scanned), renames the files
+into the output and appends its rows as one manifest file — the wave commits
+all of its buckets or none.  A resume deletes staged leftovers and any
+output file no manifest row names (a wave that crashed before its append),
+and refuses output in the earlier ``bucket=N`` layout or a manifest without
+the ``file`` column.  All file operations go through the Hadoop FileSystem
+API (local, HDFS, S3A).  The ``dedup_mode`` column is always ``"fused"``; it
+stays so manifests from earlier versions, which also recorded it, keep their
+column set.
 """
 
 from __future__ import annotations
 
 import datetime
-import json
 import os
 import time
 import uuid
@@ -67,8 +75,10 @@ class PipelineConfig:
     manifest_path: str | None = None  # default: <output>/_manifest
     schema: dict | None = None  # extraction schema; None = convert-only
     html_options: HtmlExtractionOptions = field(default_factory=HtmlExtractionOptions)
-    # Resume granularity; must stay FIXED across runs (bucket identity is
-    # xxhash64(url) % n_buckets — changing it invalidates the manifest).
+    # Resume granularity, not file granularity (each output file holds the
+    # whole buckets of one task); must stay FIXED across runs (bucket
+    # identity is xxhash64(url) % n_buckets — changing it invalidates the
+    # manifest).
     n_buckets: int = 512
     # Python-stage width; default spark.sql.shuffle.partitions (one task
     # per shuffle partition), capped at n_buckets either way
@@ -116,21 +126,25 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
-def completed_buckets(
-    spark: SparkSession, manifest_path: str, expected_n_buckets: int | None = None
-) -> list[int] | None:
-    """Bucket ids already committed, materialized eagerly — later waves
-    append to the manifest files, so resume must not keep a lazy file
-    dependency on them.
+def _committed_rows(
+    spark: SparkSession, manifest_path: str, expected_n_buckets: int
+) -> list | None:
+    """The committed manifest rows (bucket, n_buckets, file, docs_parsed),
+    materialized eagerly — later waves append to the manifest, so resume
+    must not keep a lazy file dependency on it.  ``None`` when no manifest
+    directory exists; ``[]`` when it exists but no wave committed yet.
+    One row per committed bucket, so the collect is bounded by n_buckets.
 
-    ``expected_n_buckets``: bucket identity is xxhash64(url) % n_buckets, so
-    resuming a manifest written under a different modulus would silently
-    skip the WRONG buckets (missing/duplicate rows).  Manifest rows record
-    their n_buckets; any mismatch raises."""
-    try:
-        manifest = spark.read.parquet(manifest_path)
-    except Exception:
-        return None  # no manifest yet — nothing committed
+    Bucket identity is xxhash64(url) % n_buckets, so resuming a manifest
+    written under a different modulus would silently skip the WRONG buckets
+    (missing/duplicate rows).  Manifest rows record their n_buckets; any
+    mismatch raises."""
+    entries = _data_entries(spark, manifest_path)
+    if entries is None:
+        return None
+    if not entries:
+        return []
+    manifest = spark.read.parquet(manifest_path)
     if "n_buckets" not in manifest.columns:
         # a manifest written before the resume-identity contract: refuse to
         # guess the modulus (silently reprocessing + appending mixed-schema
@@ -140,41 +154,84 @@ def completed_buckets(
             "(no n_buckets column); start a fresh output/manifest or migrate "
             "the manifest by adding the n_buckets/run_id/dedup_mode columns."
         )
-    rows = manifest.select("bucket", "n_buckets").distinct().collect()
-    if expected_n_buckets is not None:
-        seen = {r["n_buckets"] for r in rows}
-        bad = seen - {expected_n_buckets}
-        if bad:
-            raise ValueError(
-                f"manifest at {manifest_path} was written with n_buckets={sorted(bad)} "
-                f"but this run uses n_buckets={expected_n_buckets}; bucket identity is "
-                "xxhash64(url) % n_buckets, so resuming would skip the wrong buckets. "
-                "Re-run with the original n_buckets or start a fresh output/manifest."
-            )
-    return sorted({r["bucket"] for r in rows})
+    if "file" not in manifest.columns:
+        raise ValueError(
+            f"manifest at {manifest_path} has no file column: it was written "
+            "for the bucket=N directory layout, which this version neither "
+            "reads nor repairs. Re-run with resume=False to rebuild the output."
+        )
+    rows = manifest.select("bucket", "n_buckets", "file", "docs_parsed").collect()
+    bad = {r["n_buckets"] for r in rows} - {expected_n_buckets}
+    if bad:
+        raise ValueError(
+            f"manifest at {manifest_path} was written with n_buckets={sorted(bad)} "
+            f"but this run uses n_buckets={expected_n_buckets}; bucket identity is "
+            "xxhash64(url) % n_buckets, so resuming would skip the wrong buckets. "
+            "Re-run with the original n_buckets or start a fresh output/manifest."
+        )
+    return rows
+
+
+def _fs_path(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path`` — local in the sandbox,
+    HDFS/S3A on a cluster."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
 def _delete_path(spark: SparkSession, path: str) -> None:
-    """FS-agnostic recursive delete via the Hadoop FileSystem API (works on
-    local paths in the sandbox and on HDFS/S3A on a cluster)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _fs_path(spark, path)
     fs.delete(hpath, True)
 
 
-def _has_bucket_partitions(spark: SparkSession, path: str) -> bool:
-    """True when ``path`` already holds bucket=N partition dirs — output
-    from some prior run."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+def _data_entries(spark: SparkSession, path: str) -> list[str] | None:
+    """Names of the entries under ``path`` that a reader sees (not ``_`` or
+    ``.`` prefixed, as Spark's file index skips those); None when ``path``
+    does not exist."""
+    fs, hpath = _fs_path(spark, path)
     if not fs.exists(hpath):
-        return False
-    for st in fs.listStatus(hpath):
-        if st.getPath().getName().startswith("bucket="):
-            return True
-    return False
+        return None
+    names = [st.getPath().getName() for st in fs.listStatus(hpath)]
+    return [n for n in names if not n.startswith(("_", "."))]
+
+
+def _repair_output(spark: SparkSession, conf: PipelineConfig, manifest_path: str) -> list:
+    """Resume start: check the output's layout and drop what no committed
+    wave owns.  Returns the committed manifest rows.
+
+    A wave that crashed before its manifest append leaves ``_staging``
+    leftovers, and — if it crashed after its rename — root data files no
+    manifest row names.  Both are deleted, so the wave reruns cleanly."""
+    entries = _data_entries(spark, conf.output_path) or []
+    if any(n.startswith("bucket=") for n in entries):
+        raise ValueError(
+            f"{conf.output_path} holds bucket=N directories, the output layout "
+            "of an earlier version that this version neither reads nor repairs. "
+            "Re-run with resume=False to rebuild the output."
+        )
+    rows = _committed_rows(spark, manifest_path, conf.n_buckets)
+    if rows is None:
+        if entries:
+            # resume identity contract (mirrors the n_buckets mismatch
+            # check): output holds data files but the manifest is missing —
+            # deleted, or written by a run that predates it.  Treating this
+            # as fresh would leave files of unknown provenance in the output
+            # and the cumulative totals.  The operator decides.
+            raise ValueError(
+                f"resume=True but no manifest at {manifest_path} while "
+                f"{conf.output_path} already contains data files; "
+                "refusing to guess their provenance. Delete the stale "
+                "output (or run with resume=False, which clears it) or "
+                "restore the manifest."
+            )
+        return []
+    _delete_path(spark, os.path.join(conf.output_path, "_staging"))
+    _delete_path(spark, os.path.join(manifest_path, "_staging"))
+    named = {r["file"] for r in rows}
+    for name in entries:
+        if name not in named:
+            _delete_path(spark, os.path.join(conf.output_path, name))
+    return rows
 
 
 def warmup(
@@ -215,7 +272,7 @@ def run_pipeline(spark: SparkSession, conf: PipelineConfig) -> dict:
     """Execute (or resume) the pipeline; returns a run summary dict.
 
     ``conf.waves > 1`` splits the remaining buckets into that many commit
-    waves — each wave writes its output and refreshes the manifest before
+    waves — each wave writes its output and appends its manifest rows before
     the next starts, so a mid-run failure loses at most one wave (the next
     launch resumes from the manifest).  The tradeoff is one input scan per
     wave; at petabyte scale pick waves so a wave is hours, not minutes.
@@ -229,37 +286,17 @@ def run_pipeline(spark: SparkSession, conf: PipelineConfig) -> dict:
         pages_raw = with_canonical_urls(pages_raw)
     pages_all = with_bucket(pages_raw, conf.n_buckets)
 
-    skipped_buckets = 0
-    done: list[int] = []
+    prior: list = []
     if conf.resume:
-        done_or_none = completed_buckets(spark, manifest_path, conf.n_buckets)
-        if done_or_none is None and _has_bucket_partitions(spark, conf.output_path):
-            # resume identity contract (mirrors the n_buckets mismatch
-            # check): output holds bucket partitions but the manifest is
-            # missing — deleted, or written by a run that predates it.
-            # Treating this as fresh WITHOUT deleting would let leftover
-            # partitions from a different n_buckets (ids >= the current
-            # modulus are never overwritten) silently pollute the output
-            # and the cumulative totals.  The operator decides.
-            raise ValueError(
-                f"resume=True but no manifest at {manifest_path} while "
-                f"{conf.output_path} already contains bucket partitions; "
-                "refusing to guess their provenance. Delete the stale "
-                "output (or run with resume=False, which clears it) or "
-                "restore the manifest."
-            )
-        done = done_or_none or []
-        if done:
-            skipped_buckets = len(done)
+        prior = _repair_output(spark, conf, manifest_path)
+        if prior:
             # bucket list is tiny — a literal NOT IN filter (no shuffle,
             # evaluated at the scan)
-            pages_all = pages_all.filter(~F.col("bucket").isin(done))
+            pages_all = pages_all.filter(~F.col("bucket").isin([r["bucket"] for r in prior]))
     else:
         # fresh run: drop stale state so totals/resume never mix runs — the
-        # manifest AND the output (leftover bucket partitions from a prior
-        # larger run would otherwise be re-read by the wave aggregation and
-        # stamped with THIS run's run_id, corrupting per-run totals and
-        # future resumes)
+        # manifest AND the output (files of a prior run are named by no
+        # manifest row of this one)
         _delete_path(spark, manifest_path)
         _delete_path(spark, conf.output_path)
 
@@ -273,57 +310,36 @@ def run_pipeline(spark: SparkSession, conf: PipelineConfig) -> dict:
         spark.conf.get("spark.sql.shuffle.partitions", "32")
     )
 
-    done_set = set(done)
     waves = max(1, conf.waves)
     wave_seconds: list[float] = []
+    committed: list = []  # this run's manifest rows, one per bucket
     for wave in range(waves):
         pages = (
             pages_all
             if waves == 1
             else pages_all.filter(F.pmod(F.col("bucket"), F.lit(waves)) == wave)
         )
-        wave_buckets = [
-            b
-            for b in range(conf.n_buckets)
-            if b % waves == wave and b not in done_set
-        ]
         t_wave = time.time()
-        _run_wave(spark, conf, pages, n_parts, manifest_path, wave_buckets, run_id)
+        committed += _run_wave(spark, conf, pages, n_parts, manifest_path, run_id, wave)
         wave_seconds.append(round(time.time() - t_wave, 3))
 
     wall = time.time() - started
-    # totals from the written manifest (tiny) — not a recompute of the agg.
-    # Per-run figures come from THIS run's manifest rows only (a resumed run
-    # must not claim previously-committed docs in its throughput).
-    try:
-        manifest = spark.read.parquet(manifest_path)
-    except Exception:  # nothing ever written (fully-empty input)
-        manifest = None
-    totals = {"docs": 0, "bytes": 0, "convert_failures": 0, "schema_failures": 0,
-              "cumulative_docs": 0}
-    if manifest is not None:
-        this_run = F.col("run_id") == run_id
-
-        def run_sum(col: str):
-            return F.coalesce(F.sum(F.when(this_run, F.col(col))), F.lit(0))
-
-        totals = manifest.agg(
-            run_sum("docs_parsed").alias("docs"),
-            run_sum("html_bytes").alias("bytes"),
-            run_sum("convert_failures").alias("convert_failures"),
-            run_sum("schema_validation_failures").alias("schema_failures"),
-            F.coalesce(F.sum("docs_parsed"), F.lit(0)).alias("cumulative_docs"),
-        ).collect()[0]
+    # totals from the manifest rows this run committed and read at its
+    # start — no re-read of the manifest.  Per-run figures cover THIS run's
+    # rows only (a resumed run must not claim previously-committed docs in
+    # its throughput).
+    docs = sum(r["docs_parsed"] for r in committed)
     return {
-        "docs": totals["docs"],
-        "html_bytes": totals["bytes"],
-        "convert_failures": totals["convert_failures"],
-        "schema_validation_failures": totals["schema_failures"],
-        "cumulative_docs": totals["cumulative_docs"],
-        "skipped_buckets": skipped_buckets,
+        "docs": docs,
+        "html_bytes": sum(r["html_bytes"] for r in committed),
+        "convert_failures": sum(r["convert_failures"] for r in committed),
+        "schema_validation_failures": sum(r["schema_validation_failures"] for r in committed),
+        "cumulative_docs": docs + sum(r["docs_parsed"] for r in prior),
+        "skipped_buckets": len(prior),
+        "output_files": len({r["file"] for r in committed}),
         "wall_seconds": wall,
         "wave_seconds": wave_seconds,
-        "docs_per_sec": (totals["docs"] or 0) / wall if wall > 0 else None,
+        "docs_per_sec": docs / wall if wall > 0 else None,
         "run_id": run_id,
         "output_path": conf.output_path,
         "manifest_path": manifest_path,
@@ -336,13 +352,27 @@ def _run_wave(
     pages: DataFrame,
     n_parts: int,
     manifest_path: str,
-    wave_buckets: list[int],
     run_id: str,
-) -> None:
-    # one shuffle: bucket partitioning co-locates url runs AND aligns with
-    # the bucketed write (no further shuffle before the sink).  The count is
-    # explicit so AQE's size-based coalescing cannot shrink the CPU-bound
-    # Python stage's parallelism.
+    wave: int,
+) -> list:
+    """Process one wave and commit it; returns its manifest rows.
+
+    Commit protocol — the manifest is the wave's commit log:
+      1. write the wave into ``<output>/_staging/<wave_id>/`` (readers skip
+         ``_``-prefixed paths), one file per task;
+      2. aggregate the per-bucket metrics from those staged files only, into
+         one file under ``<manifest>/_staging/<wave_id>/`` (a JVM write: no
+         Python task builds the rows);
+      3. rename the files the metrics name into ``<output>/``;
+      4. append the wave's rows by renaming that one file into the manifest.
+    A crash before 4 leaves files no manifest row names; the next resume
+    deletes them and reruns the wave (``_repair_output``).  Step 2 creates
+    the manifest directory before any file reaches the output, so a resume
+    tells a crash before the first append (repair) from a deleted manifest
+    (refuse)."""
+    # one shuffle: bucket partitioning co-locates url runs, and each task
+    # holds whole buckets.  The count is explicit so AQE's size-based
+    # coalescing cannot shrink the CPU-bound Python stage's parallelism.
     n_parts = min(n_parts, conf.n_buckets)
     columns = ["url", "warc_ts", "html", "lang"]
     context_column = None
@@ -354,9 +384,12 @@ def _run_wave(
         pages = pages.join(F.broadcast(context), "url", "left")
         context_column = "context_json"
         columns.append(context_column)
+    # bucket leads the sort: the url determines the bucket, so url runs stay
+    # contiguous for the sorted-run dedup, and rows reach the writer in
+    # bucket order — row-group min/max on bucket prunes a one-bucket read
     pages = (
         pages.repartition(n_parts, "bucket")
-        .sortWithinPartitions("url", F.col("warc_ts").desc())
+        .sortWithinPartitions("bucket", "url", F.col("warc_ts").desc())
         .select(*columns)
     )
 
@@ -373,34 +406,33 @@ def _run_wave(
         output = with_typed_data(output, conf.schema).drop("data_json")
     else:
         output = convert_stage(pages, conf.html_options, dedup_sorted_runs=True)
-
     output = with_bucket(output, conf.n_buckets)
 
-    # Dynamic partition overwrite, set on this write only (the session conf
-    # stays the caller's): re-running a bucket replaces exactly that
-    # bucket's files — idempotent resume.  Rows never moved since the bucket
-    # shuffle, so each task already holds whole buckets — partitionBy emits
-    # one file per bucket.
-    (
-        output.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(conf.output_path)
-    )
+    wave_id = f"{run_id}-{wave}"
+    staged = os.path.join(conf.output_path, "_staging", wave_id)
+    staged_manifest = os.path.join(manifest_path, "_staging", wave_id)
+    # maxRecordsPerFile=0 whatever the session says: a bucket split across
+    # two files would leave one of them unnamed by the manifest
+    output.write.mode("overwrite").option("maxRecordsPerFile", 0).parquet(staged)
+    metrics = _bucket_metrics(spark, conf, output.schema, staged, run_id)
+    metrics.coalesce(1).write.mode("overwrite").parquet(staged_manifest)
+    # ≤ n_buckets small rows: the collect is bounded by construction
+    rows = spark.read.schema(metrics.schema).parquet(staged_manifest).collect()
+    if rows:
+        _commit_files(spark, staged, conf.output_path, {r["file"] for r in rows})
+        _append_manifest(spark, staged_manifest, manifest_path)
+    _delete_path(spark, os.path.join(conf.output_path, "_staging"))
+    _delete_path(spark, os.path.join(manifest_path, "_staging"))
+    return rows
 
-    # Manifest: one row per completed bucket with lineage + metrics,
-    # aggregated from THIS wave's bucket partitions only.  The filter is on
-    # the partition column, so Catalyst prunes every previously-committed
-    # bucket directory — a W-wave run reads each output byte once, not W
-    # times.  Rows are APPENDED; a crash between the output write and this
-    # append just reprocesses the wave (idempotent via dynamic overwrite).
-    try:
-        written = spark.read.parquet(conf.output_path)
-    except Exception:
-        # fully-filtered wave into a not-yet-existing output dir: nothing
-        # was written, so there is nothing to commit
-        return
-    written = written.filter(F.col("bucket").isin(wave_buckets))
+
+def _bucket_metrics(
+    spark: SparkSession, conf: PipelineConfig, schema, staged: str, run_id: str
+) -> DataFrame:
+    """One manifest row per bucket with lineage + metrics, read from the
+    wave's staged files only (never the committed output), each row naming
+    the one file that holds its bucket."""
+    written = spark.read.schema(schema).parquet(staged)
     agg_cols = [
         F.count("*").alias("docs_parsed"),
         F.sum("html_bytes").alias("html_bytes"),
@@ -419,18 +451,43 @@ def _run_wave(
         agg_cols.append(F.lit(0).alias("schema_validation_failures"))
 
     run_ts = datetime.datetime.now(datetime.timezone.utc).isoformat()
-    manifest_rows = (
+    return (
         written.groupBy("bucket")
-        .agg(*agg_cols)
-        .withColumn("input_path", F.lit(conf.pages_path))
-        .withColumn("code_version", F.lit(CODE_VERSION))
-        .withColumn("run_ts", F.lit(run_ts))
-        .withColumn("run_id", F.lit(run_id))
-        # resume identity + provenance (completed_buckets checks n_buckets)
-        .withColumn("n_buckets", F.lit(conf.n_buckets))
-        .withColumn("dedup_mode", F.lit("fused"))
+        .agg(*agg_cols, F.min("_metadata.file_name").alias("file"))
+        .select(
+            "bucket", "docs_parsed", "html_bytes", "boilerplate_bytes_removed",
+            "convert_failures", "schema_validation_failures",
+            F.lit(conf.pages_path).alias("input_path"),
+            F.lit(CODE_VERSION).alias("code_version"),
+            F.lit(run_ts).alias("run_ts"),
+            F.lit(run_id).alias("run_id"),
+            # resume identity + provenance (_committed_rows checks n_buckets)
+            F.lit(conf.n_buckets).alias("n_buckets"),
+            F.lit("fused").alias("dedup_mode"),
+            "file",
+        )
     )
-    manifest_rows.write.mode("append").parquet(manifest_path)
+
+
+def _rename(spark: SparkSession, src_dir: str, dst_dir: str, name: str) -> None:
+    """Move ``src_dir/name`` to ``dst_dir/name`` (Hadoop FS rename)."""
+    fs, _ = _fs_path(spark, dst_dir)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    if not fs.rename(Path(os.path.join(src_dir, name)), Path(os.path.join(dst_dir, name))):
+        raise OSError(f"could not rename {name} from {src_dir} into {dst_dir}")
+
+
+def _commit_files(spark: SparkSession, staged: str, output_path: str, files: set[str]) -> None:
+    """Rename the wave's named files into the output root."""
+    for name in sorted(files):
+        _rename(spark, staged, output_path, name)
+
+
+def _append_manifest(spark: SparkSession, staged_manifest: str, manifest_path: str) -> None:
+    """Append the wave's rows — staged as ONE manifest file — with one
+    rename: the wave commits all of its buckets or none."""
+    for name in _data_entries(spark, staged_manifest):
+        _rename(spark, staged_manifest, manifest_path, name)
 
 
 def summarize_metrics(spark: SparkSession, output_path: str) -> DataFrame:

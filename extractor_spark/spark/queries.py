@@ -2389,7 +2389,7 @@ def _sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # assign_packs (spark/curate.py) is the single implementation of the
     # two-level distributed prefix sum; its checkpoint blocks are
     # registered for release_query_caches since the result is lazy
-    packed, h = assign_packs(spark, docs, "doc_id", _PACK_BUDGET)
+    packed, h = assign_packs(spark, docs, "doc_id", _PACK_BUDGET, n_tokens_given=True)
     caches.register(h)
     return (
         packed.groupBy("pack_id")

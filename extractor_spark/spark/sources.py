@@ -120,10 +120,10 @@ def write_output(
 ) -> None:
     """Write the output table partitioned by ``partition_col``.
 
-    Iceberg: ``createOrReplace``/``append`` via the DataFrameWriterV2 API
-    (atomic snapshot commits subsume the parquet path's dynamic partition
-    overwrite).  Parquet: dynamic-overwrite handled by the caller's session
-    conf (pipeline.run_pipeline sets it).
+    Iceberg: ``createOrReplace`` via the DataFrameWriterV2 API (an atomic
+    snapshot commit).  Parquet and jsonl: a static overwrite — the write
+    replaces the whole location, including partitions the new frame does
+    not hold.
     """
     if fmt == "iceberg":
         writer = df.writeTo(location)

@@ -11,8 +11,13 @@ Examples:
     spark-submit --py-files extractor_spark.zip jobs/extract_pipeline.py \
         --from-submit --pages s3://bucket/pages --output s3://bucket/out
 
-Resume is the default: a re-launch anti-joins the output manifest and only
-processes incomplete buckets.
+Output layout: flat parquet, one file per convert/extract task, with
+``bucket`` as a data column; ``<output>/_manifest`` is the commit log, one
+row per bucket naming the file that holds it.  Resume is the default: a
+re-launch skips the buckets the manifest names, deletes files no manifest
+row names (a wave that crashed before committing) and processes the rest.
+An output in the earlier ``bucket=N`` directory layout is refused; rerun it
+with --no-resume.
 """
 
 from __future__ import annotations
@@ -50,12 +55,14 @@ def parse_args(argv):
     p.add_argument("--n-buckets", type=int, default=512,
                    help="resume identity (bucket = xxhash64(url) %% n_buckets); must match\n"
                         "across runs of the same output — the manifest records it and a\n"
-                        "mismatched resume fails loudly")
+                        "mismatched resume fails loudly.  Buckets are resume units, not\n"
+                        "files: each task writes one file holding its whole buckets")
     p.add_argument("--partitions", type=int, default=None,
                    help="width of the convert/extract stage (default: "
                         "spark.sql.shuffle.partitions, one task per shuffle "
                         "partition; capped at --n-buckets)")
-    p.add_argument("--no-resume", action="store_true")
+    p.add_argument("--no-resume", action="store_true",
+                   help="clear the output and the manifest and start fresh")
     p.add_argument("--waves", type=int, default=1,
                    help="intra-run checkpoint waves (crash loses at most one wave)")
     p.add_argument("--warmup", action="store_true",

@@ -301,32 +301,33 @@ def test_structured_pipeline_runs_one_python_node(spark, pages_path, tmp_path):
 
 
 def test_run_pipeline_leaves_session_conf_unchanged(spark, pages_path, tmp_path):
-    """Dynamic partition overwrite is set on the pipeline's own write, not
-    on the caller's session (a later overwrite in the session stays
-    static); resume identity holds with it."""
+    """The pipeline's write options are set on its own writes, not on the
+    caller's session: a later overwrite in the session stays static, and a
+    session file-size cap does not split a bucket across files."""
     key = "spark.sql.sources.partitionOverwriteMode"
+    cap = "spark.sql.files.maxRecordsPerFile"
     spark.conf.set(key, "static")
-    out_dir = str(tmp_path / "out")
-    conf = PipelineConfig(pages_path=pages_path, output_path=out_dir, n_buckets=6)
-    summary = run_pipeline(spark, conf)
-    assert spark.conf.get(key) == "static"
-    first = {tuple(r) for r in spark.read.parquet(out_dir).collect()}
-
-    # resume: a crash lost one bucket's manifest row; the re-run rewrites
-    # exactly that bucket, in place
-    manifest = spark.read.parquet(summary["manifest_path"])
-    victim = manifest.select("bucket").first()["bucket"]
-    m2 = str(tmp_path / "m2")
-    manifest.filter(F.col("bucket") != victim).write.parquet(m2)
-    summary2 = run_pipeline(
-        spark,
-        PipelineConfig(
-            pages_path=pages_path, output_path=out_dir, manifest_path=m2, n_buckets=6
-        ),
+    spark.conf.set(cap, "2")
+    try:
+        out_dir = str(tmp_path / "out")
+        conf = PipelineConfig(pages_path=pages_path, output_path=out_dir, n_buckets=6)
+        summary = run_pipeline(spark, conf)
+        assert spark.conf.get(key) == "static"
+        assert spark.conf.get(cap) == "2"
+    finally:
+        spark.conf.unset(cap)
+    # one file per task, every bucket in the one file its manifest row names
+    assert 0 < summary["output_files"] <= 6
+    assert spark.read.parquet(out_dir).count() == summary["docs"]
+    manifest = spark.read.parquet(summary["manifest_path"]).collect()
+    named = {r["bucket"]: r["file"] for r in manifest}
+    held = (
+        spark.read.parquet(out_dir)
+        .groupBy("bucket")
+        .agg(F.collect_set(F.col("_metadata.file_name")).alias("files"))
+        .collect()
     )
-    assert spark.conf.get(key) == "static"
-    assert summary2["skipped_buckets"] == manifest.count() - 1
-    assert {tuple(r) for r in spark.read.parquet(out_dir).collect()} == first
+    assert {r["bucket"]: r["files"] for r in held} == {b: [f] for b, f in named.items()}
 
 
 def test_pipeline_equals_window_dedup_oracle(spark, pages_path, tmp_path):
@@ -434,11 +435,24 @@ def test_metrics_rollup(spark, pages_path, tmp_path):
     assert rows[0]["docs"] >= rows[-1]["docs"]  # ordered by docs desc
 
 
-def test_manifest_identity_and_per_run_totals(spark, pages_path, tmp_path):
+def test_manifest_identity_and_per_run_totals(spark, pages_path, tmp_path, monkeypatch):
     """Round-2 manifest contract: rows record n_buckets (resume identity),
     each wave appends exactly its own buckets (no rescan/rewrite of prior
     waves), a mismatched-n_buckets resume fails loudly, and per-run totals
     exclude previously-committed buckets."""
+    import os
+
+    from extractor_spark.spark import pipeline
+
+    metric_reads = []
+    real_metrics = pipeline._bucket_metrics
+
+    def recording_metrics(*args):
+        frame = real_metrics(*args)
+        metric_reads.append(frame.inputFiles())
+        return frame
+
+    monkeypatch.setattr(pipeline, "_bucket_metrics", recording_metrics)
     out_dir = str(tmp_path / "out")
     conf = PipelineConfig(pages_path=pages_path, output_path=out_dir, n_buckets=9, waves=3)
     summary = run_pipeline(spark, conf)
@@ -457,17 +471,18 @@ def test_manifest_identity_and_per_run_totals(spark, pages_path, tmp_path):
     assert set(manifest.columns) == {
         "bucket", "docs_parsed", "html_bytes", "boilerplate_bytes_removed",
         "convert_failures", "schema_validation_failures", "input_path",
-        "code_version", "run_ts", "run_id", "n_buckets", "dedup_mode",
+        "code_version", "run_ts", "run_id", "n_buckets", "dedup_mode", "file",
     }
 
-    # the wave read-back prunes to the wave's bucket partitions: the filter
-    # lands in PartitionFilters, not a post-scan Filter over all data
-    plan = (
-        spark.read.parquet(out_dir)
-        .filter(F.col("bucket").isin([0, 3, 6]))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "PartitionFilters: [bucket" in plan
+    # each wave's metric read lists only that wave's staged files — never a
+    # previously-committed wave's — and they hold every file its rows name
+    assert len(metric_reads) == 3
+    for wave, files in enumerate(metric_reads):
+        staged = f"/_staging/{summary['run_id']}-{wave}/"
+        assert files and all(staged in f for f in files), files
+        named = {r["file"] for r in rows if r["bucket"] % 3 == wave}
+        assert named <= {os.path.basename(f) for f in files}
+    assert summary["output_files"] == len({r["file"] for r in rows})
 
     # resuming with a different n_buckets must fail loudly, not skip wrong buckets
     bad = PipelineConfig(pages_path=pages_path, output_path=out_dir, n_buckets=16)
@@ -503,36 +518,59 @@ def test_pipeline_empty_input_does_not_crash(spark, tmp_path):
     assert summary["convert_failures"] == 0
 
 
-def test_crash_between_write_and_manifest_is_idempotent(spark, pages_path, tmp_path):
-    """A crash AFTER a bucket's output lands but BEFORE its manifest row is
-    appended must be repaired by resume without duplicating rows (dynamic
-    partition overwrite rewrites exactly the re-processed buckets)."""
-    out_dir = str(tmp_path / "out")
-    conf = PipelineConfig(pages_path=pages_path, output_path=out_dir, n_buckets=6)
-    summary = run_pipeline(spark, conf)
-    total = spark.read.parquet(out_dir).count()
-    urls = {r["url"] for r in spark.read.parquet(out_dir).select("url").collect()}
+@pytest.mark.parametrize(
+    "step,after",
+    [("_commit_files", False), ("_commit_files", True), ("_append_manifest", True)],
+    ids=["staged_write", "rename", "manifest_append"],
+)
+def test_wave_commit_survives_crash(spark, pages_path, tmp_path, monkeypatch, step, after):
+    """A crash at any step of a wave's commit (after its staged write, after
+    its rename into the output, after its manifest append) is repaired by
+    resuming on the same output: rows, manifest buckets and cumulative docs
+    equal an uncrashed run's, and no url appears twice."""
+    import os
 
-    # simulate the crash: drop one bucket's manifest rows (its output stays)
-    manifest = spark.read.parquet(summary["manifest_path"])
-    victim = manifest.select("bucket").first()["bucket"]
-    trimmed = manifest.filter(F.col("bucket") != victim).collect()
-    m2 = str(tmp_path / "m2")
-    spark.createDataFrame(trimmed, schema=manifest.schema).write.parquet(m2)
+    from extractor_spark.spark import pipeline
 
-    conf2 = PipelineConfig(
-        pages_path=pages_path, output_path=out_dir, manifest_path=m2, n_buckets=6
+    ref_out = str(tmp_path / "ref")
+    ref = run_pipeline(
+        spark,
+        PipelineConfig(pages_path=pages_path, output_path=ref_out, n_buckets=9, waves=3, resume=False),
     )
-    summary2 = run_pipeline(spark, conf2)
-    # only the victim bucket was reprocessed; output identical, no dupes
-    assert summary2["skipped_buckets"] == len({r["bucket"] for r in trimmed})
-    after = spark.read.parquet(out_dir)
-    assert after.count() == total
-    assert {r["url"] for r in after.select("url").collect()} == urls
-    assert after.groupBy("url").count().filter("count > 1").count() == 0
-    # the repaired manifest covers the victim bucket again
-    m_after = spark.read.parquet(m2)
-    assert victim in {r["bucket"] for r in m_after.select("bucket").collect()}
+
+    real = getattr(pipeline, step)
+    calls = []
+
+    def crash_in_second_wave(*args):
+        calls.append(step)
+        if len(calls) < 2 or after:
+            real(*args)
+        if len(calls) == 2:
+            raise RuntimeError(f"injected crash at {step}")
+
+    monkeypatch.setattr(pipeline, step, crash_in_second_wave)
+    out = str(tmp_path / "out")
+    conf = PipelineConfig(pages_path=pages_path, output_path=out, n_buckets=9, waves=3)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_pipeline(spark, conf)
+    monkeypatch.setattr(pipeline, step, real)
+    committed = spark.read.parquet(f"{out}/_manifest").count()
+
+    resumed = run_pipeline(spark, conf)
+    assert resumed["skipped_buckets"] == committed > 0
+    assert resumed["cumulative_docs"] == ref["cumulative_docs"] == ref["docs"]
+    got = spark.read.parquet(out)
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, spark.read.parquet(ref_out).collect())
+    )
+    assert got.groupBy("url").count().filter("count > 1").count() == 0
+    manifest = spark.read.parquet(f"{out}/_manifest").collect()
+    ref_manifest = spark.read.parquet(f"{ref_out}/_manifest").collect()
+    assert sorted(r["bucket"] for r in manifest) == sorted(r["bucket"] for r in ref_manifest)
+    # nothing left that no committed wave owns
+    assert not os.path.exists(f"{out}/_staging")
+    data = {n for n in os.listdir(out) if not n.startswith(("_", "."))}
+    assert data == {r["file"] for r in manifest}
 
 
 def test_pipeline_spreads_hot_host_across_buckets(spark, tmp_path):
@@ -576,10 +614,10 @@ def test_pipeline_spreads_hot_host_across_buckets(spark, tmp_path):
 def test_resume_without_manifest_over_stale_output_fails_loudly(
     spark, pages_path, tmp_path
 ):
-    """ADVICE r2: resume=True against an output dir holding bucket
-    partitions but NO manifest (deleted / never written) must raise, not
-    silently treat the run as fresh — leftover partitions from a prior run
-    with a different n_buckets would pollute the output and totals."""
+    """ADVICE r2: resume=True against an output dir holding data files but
+    NO manifest (deleted / never written) must raise, not silently treat
+    the run as fresh — leftover files from a prior run with a different
+    n_buckets would pollute the output and totals."""
     import shutil
 
     out = str(tmp_path / "out")
@@ -606,6 +644,35 @@ def test_resume_without_manifest_over_stale_output_fails_loudly(
         ),
     )
     assert summary["docs"] > 0
+
+
+def test_resume_over_bucket_directory_layout_fails_loudly(spark, pages_path, tmp_path):
+    """An output in the earlier bucket=N directory layout is neither read
+    nor repaired by a resume: it raises and names resume=False."""
+    out = str(tmp_path / "out")
+    spark.read.parquet(pages_path).select("url").transform(lambda d: with_bucket(d, 8)) \
+        .write.partitionBy("bucket").parquet(out)
+    conf = PipelineConfig(pages_path=pages_path, output_path=out, n_buckets=8)
+    with pytest.raises(ValueError, match=r"bucket=N directories.*resume=False"):
+        run_pipeline(spark, conf)
+
+    conf.resume = False
+    summary = run_pipeline(spark, conf)
+    assert spark.read.parquet(out).count() == summary["docs"] > 0
+
+
+def test_resume_with_manifest_without_file_column_fails_loudly(spark, pages_path, tmp_path):
+    """A manifest whose rows name no file (written for the bucket=N layout)
+    cannot drive the commit-log repair: resume raises and names resume=False."""
+    out = str(tmp_path / "out")
+    summary = run_pipeline(
+        spark, PipelineConfig(pages_path=pages_path, output_path=out, n_buckets=8, resume=False)
+    )
+    old = str(tmp_path / "old_manifest")
+    spark.read.parquet(summary["manifest_path"]).drop("file").write.parquet(old)
+    conf = PipelineConfig(pages_path=pages_path, output_path=out, manifest_path=old, n_buckets=8)
+    with pytest.raises(ValueError, match=r"old_manifest has no file column.*resume=False"):
+        run_pipeline(spark, conf)
 
 
 def test_pdf_payloads_route_through_layout_extractor(spark, tmp_path):
