@@ -57,6 +57,12 @@ def scoped_loop_conf(spark, n_parts: int, codegen: bool = True):
     """Scope ``spark.sql.shuffle.partitions`` (and, in the tiny regime,
     AQE) to an iterative loop; always restores the previous values.
 
+    The scope mutates SESSION-GLOBAL conf: every plan compiled on any
+    driver thread while it is open sees it.  Loops that run concurrently
+    on threads must therefore share ONE scope, entered before the threads
+    start — webgraph.spam_mass_ranks, the only such caller, runs both of
+    its loops on one setup with one width.
+
     ``codegen=False`` (graph loops only) additionally disables whole-stage
     and expression codegen IN THE TINY REGIME: every round's plan embeds
     fresh literals (the previous round's scalar), so Janino compiles new

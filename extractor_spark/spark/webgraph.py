@@ -29,11 +29,16 @@ Design for 10^12 pages / ~10^8 hosts:
   redistributed uniformly, so ranks sum to 1 every round.  Weighted
   transition: a host linking 10× to one neighbor sends 10× the mass
   (link-multiplicity PageRank; the unweighted variant is n_links=1).
+- pagerank, trustrank, spam_mass_ranks and hits share one setup per edge
+  frame (``_graph``).  A PageRank/TrustRank round runs two Spark jobs, a
+  HITS round three: the aggregate materializing the state checkpoint and
+  a one-task broadcast build per edge join of the round plan.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from contextlib import contextmanager
+from typing import Iterator, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -287,10 +292,77 @@ def host_graph(outlinks: DataFrame, drop_self_loops: bool = True) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# PageRank / TrustRank (power iteration, one shuffle per round, flat lineage)
+# graph setup shared by the power-iteration operators
 # ---------------------------------------------------------------------------
 
 _RANKS_SCHEMA = "host string, rank double"
+
+
+class _Graph(NamedTuple):
+    """One edge frame's pre-loop setup, built by :func:`_graph`."""
+
+    edges: DataFrame
+    nodes: DataFrame
+    n: int
+    n_seeds: int
+    n_parts: int
+
+
+@contextmanager
+def _graph(edges: DataFrame, seeds=None):
+    """The setup pagerank, trustrank, spam_mass_ranks and HITS share, built
+    once per edge frame; yields a :class:`_Graph`, released on exit.
+
+    - ``edges`` is persisted: unpersisted, each consumer (node table,
+      transition frame, HITS' edge layouts) would re-run the full upstream
+      plan — for the host graph the Python outlink extraction.
+    - ``nodes`` is one eagerly checkpointed table (host, out_total, n_out,
+      seed) over sources and destinations: null ``out_total`` marks a
+      dangling host, null ``seed`` a non-seed (seeds absent from the graph
+      are ignored).  A checkpoint, not a persist: HITS re-joins it every
+      round, and a persist keeps the upstream logical plan in each
+      round's analysis.
+    - One aggregate over the table gives ``n``, the edge count and
+      ``n_seeds``; the loop width follows the graph size (tuning.py).
+    """
+    spark = edges.sparkSession
+    edges = edges.persist()
+    try:
+        src = F.col("src_host").alias("host")
+        nodes = (
+            edges.select(src, "n_links", F.lit(1).alias("out_edge"))
+            .unionAll(edges.select("dst_host", F.lit(None), F.lit(None)))
+            .groupBy("host")
+            .agg(
+                F.sum("n_links").alias("out_total"),
+                F.count("out_edge").alias("n_out"),
+            )
+        )
+        if isinstance(seeds, DataFrame):
+            # curated seed sets are bounded (thousands of hosts even at web
+            # scale) — broadcastable by construction
+            flags = seeds.select("host").distinct().withColumn("seed", F.lit(True))
+            nodes = nodes.join(F.broadcast(flags), "host", "left")
+        else:
+            # a driver-side list is a plain IN test: no frame, no join
+            is_seed = F.col("host").isin(sorted(set(seeds or ())))
+            nodes = nodes.withColumn("seed", F.when(is_seed, F.lit(True)))
+        nodes, handle = caches.local_checkpoint(nodes, eager=True)
+        try:
+            n, n_edges, n_seeds = nodes.agg(
+                F.count(F.lit(1)), F.sum("n_out"), F.count("seed")
+            ).first()
+            n_parts = loop_partitions(spark.sparkContext, max(n, n_edges or 0))
+            yield _Graph(edges, nodes, n, n_seeds, n_parts)
+        finally:
+            handle.unpersist()
+    finally:
+        edges.unpersist()
+
+
+# ---------------------------------------------------------------------------
+# PageRank / TrustRank (power iteration, one shuffle per round, flat lineage)
+# ---------------------------------------------------------------------------
 
 
 def pagerank(
@@ -302,20 +374,14 @@ def pagerank(
     """Weighted PageRank over (src_host, dst_host, n_links) edges.
 
     Returns (host, rank) over the union of sources and destinations; ranks
-    sum to 1.  The rank state carries an ``is_dangling`` flag and each
-    round is exactly ONE action: a LAZY localCheckpoint on the new state
-    whose materializing job is the combined aggregate computing both the
-    L1 convergence delta and the NEXT round's dangling mass (the aggregate
-    touches every partition, so the checkpoint blocks it persists as a
-    side effect are complete) — no per-round semi-join, no separate
-    checkpoint job, no extra contrib materialization."""
-    edges = edges.persist()
-    try:
-        return _run_scoped(
-            edges.sparkSession, *_pagerank_setup(edges, damping, max_iter, tol)
-        )
-    finally:
-        edges.unpersist()
+    sum to 1.  The rank state carries an ``is_dangling`` flag; each round
+    takes a LAZY localCheckpoint on the new state whose materializing job
+    is the combined aggregate computing both the L1 convergence delta and
+    the NEXT round's dangling mass (the aggregate touches every partition,
+    so the checkpoint blocks it persists as a side effect are complete) —
+    no per-round semi-join, no separate checkpoint job.  A round is two
+    jobs: that aggregate and the round plan's one-task broadcast build."""
+    return _rank_loops(edges, None, (_pagerank_rule,), damping, max_iter, tol)[0]
 
 
 def trustrank(
@@ -344,13 +410,7 @@ def trustrank(
     Gyöngyi initialization).  Twin: numpy same-iterate ±1e-12
     (tests/test_webgraph.py).
     """
-    edges = edges.persist()
-    try:
-        return _run_scoped(
-            edges.sparkSession, *_trustrank_setup(edges, seeds, damping, max_iter, tol)
-        )
-    finally:
-        edges.unpersist()
+    return _rank_loops(edges, seeds, (_trustrank_rule,), damping, max_iter, tol)[0]
 
 
 def spam_mass_ranks(
@@ -364,197 +424,138 @@ def spam_mass_ranks(
     power-iteration loops running CONCURRENTLY on two driver threads —
     returns ``(pagerank_df, trustrank_df)``.
 
-    The loops are data-independent (they only share the immutable edge
-    frame), and each round is ~45 ms of driver plan compile + one short
-    job, so interleaving them overlaps one loop's driver work with the
-    other's executor work: wall ≈ the slower loop instead of the sum
-    (r6, measured ~−2 s on the sf0.1 spam-mass query).
+    The loops are data-independent (they only share the immutable setup),
+    and each round is ~45 ms of driver plan compile plus short jobs, so
+    interleaving them overlaps one loop's driver work with the other's
+    executor work: wall ≈ the slower loop instead of the sum (r6,
+    measured ~−2 s on the sf0.1 spam-mass query).
 
     Results are bit-identical to sequential ``pagerank()`` +
-    ``trustrank()`` (pinned by tests/test_webgraph.py):
-
-    - the shared conf scope is entered ONCE with the width both loops
-      derive independently; when the two widths differ (possible on very
-      node-heavy graphs) or either graph side is empty this falls back to
-      the sequential path, so every plan always compiles under exactly
-      the conf it would have seen sequentially;
-    - each loop's FP math touches only its own state frames, and each
-      checkpoint handle is read from its own frame's plan, so neither loop
-      can release the other's blocks;
-    - the edge frame is persisted once and released once, after both
-      loops have finished.
+    ``trustrank()`` (pinned by tests/test_webgraph.py): both loops run on
+    the one setup (:func:`_graph`), so there is one width and one conf
+    scope, entered before the threads start; each loop's FP math touches
+    only its own state frames, and each checkpoint handle is read from its
+    own frame's plan, so neither loop can release the other's blocks.
     """
-    import threading
-
-    edges = edges.persist()
-    try:
-        p_parts, run_pr = _pagerank_setup(edges, damping, max_iter, tol)
-        t_parts, run_tr = _trustrank_setup(edges, seeds, damping, max_iter, tol)
-        if run_pr is None or run_tr is None or p_parts != t_parts:
-            return (
-                _run_scoped(edges.sparkSession, p_parts, run_pr),
-                _run_scoped(edges.sparkSession, t_parts, run_tr),
-            )
-
-        results: dict = {}
-        errors: list = []
-
-        def runner(key, fn):
-            try:
-                results[key] = fn()
-            except BaseException as e:  # noqa: BLE001 — re-raised below
-                errors.append(e)
-
-        with scoped_loop_conf(edges.sparkSession, p_parts, codegen=False):
-            threads = [
-                threading.Thread(target=runner, args=("pr", run_pr), daemon=True),
-                threading.Thread(target=runner, args=("tr", run_tr), daemon=True),
-            ]
-            for t in threads:
-                t.start()
-            for t in threads:
-                t.join()
-        if errors:
-            raise errors[0]
-        return results["pr"], results["tr"]
-    finally:
-        edges.unpersist()
+    rules = (_pagerank_rule, _trustrank_rule)
+    return tuple(_rank_loops(edges, seeds, rules, damping, max_iter, tol))
 
 
-def _run_scoped(spark, n_parts: int, run) -> DataFrame:
-    """Run a ``_*_setup`` loop under its scoped conf; ``run is None`` is the
-    empty result (no node, or no seed in the graph)."""
-    if run is None:
-        return spark.createDataFrame([], _RANKS_SCHEMA)
-    with scoped_loop_conf(spark, n_parts, codegen=False):
-        return run()
-
-
-def _nodes(edges: DataFrame) -> DataFrame:
-    return (
-        edges.select(F.col("src_host").alias("host"))
-        .unionAll(edges.select(F.col("dst_host").alias("host")))
-        .distinct()
-    )
-
-
-def _pagerank_setup(edges: DataFrame, damping, max_iter, tol):
-    """Pre-loop sizing of :func:`pagerank` over the caller's PERSISTED edge
-    frame (it is consumed three times before the loop: node set, dangling
-    flags, transition weights; unpersisted, each consumer would re-run the
-    full upstream plan — for the host graph the Python outlink extraction).
-    Returns ``(n_parts, run)``; ``run`` executes the loop, None for the
-    empty graph."""
-    nodes = _nodes(edges)
-    n = nodes.count()
-    if n == 0:
-        return 1, None
-    # r6: the loop's shuffle width follows the graph size, not the core
-    # count — 40 rounds of full-width stages over a host-sized frame are
-    # pure scheduling overhead at small scale (tuning.py).
-    n_parts = loop_partitions(edges.sparkSession.sparkContext, max(n, edges.count()))
+def _pagerank_rule(g: _Graph, damping):
+    """PageRank's first state and rank Column over ``g``; None for the empty
+    graph."""
+    if g.n == 0:
+        return None
+    n = g.n
     c_base = F.lit((1.0 - damping) / n)
     c_damping = F.lit(damping)
-
-    def seed_ranks(flagged, is_dangling):
-        return flagged.select("host", F.lit(1.0 / n).alias("rank"), is_dangling)
 
     def rank_of(c_in, mass):
         return c_base + c_damping * (c_in + F.lit(mass / n))
 
-    return n_parts, lambda: _power_iteration(
-        edges, nodes, n_parts, seed_ranks, rank_of, (), max_iter, tol
-    )
+    is_dangling = F.isnull("out_total").alias("is_dangling")
+    first = g.nodes.select("host", F.lit(1.0 / n).alias("rank"), is_dangling)
+    return first, rank_of, ()
 
 
-def _trustrank_setup(edges: DataFrame, seeds, damping, max_iter, tol):
-    """Pre-loop sizing of :func:`trustrank` — mirrors
-    :func:`_pagerank_setup`; ``run`` is None when no seed intersects the
-    graph."""
-    spark = edges.sparkSession
-    nodes = _nodes(edges)
-    # seed lists are human-curated and bounded (thousands of hosts even at
-    # web scale) — broadcastable by construction
-    if isinstance(seeds, DataFrame):
-        seed_df = seeds.select("host").distinct().withColumn("_seed", F.lit(True))
-    else:
-        seed_df = spark.createDataFrame(
-            [(h,) for h in sorted(set(seeds))], "host string"
-        ).withColumn("_seed", F.lit(True))
-    n_seeds = nodes.join(F.broadcast(seed_df), "host").count()
-    if n_seeds == 0:
-        return 1, None
-    # r6: scale-adaptive loop width (see _pagerank_setup / tuning.py)
-    n_parts = loop_partitions(spark.sparkContext, edges.count())
+def _trustrank_rule(g: _Graph, damping):
+    """TrustRank's first state and rank Column over ``g``; None when no seed
+    is in the graph."""
+    if g.n_seeds == 0:
+        return None
     c_teleport = F.lit(1.0 - damping) * F.col("s")
     c_damping = F.lit(damping)
     c_s = F.col("s")
 
-    def seed_ranks(flagged, is_dangling):
-        return (
-            flagged.join(F.broadcast(seed_df), "host", "left")
-            .select(
-                "host",
-                F.when(F.coalesce("_seed", F.lit(False)), F.lit(1.0 / n_seeds))
-                .otherwise(F.lit(0.0))
-                .alias("s"),
-                is_dangling,
-            )
-            .withColumn("rank", F.col("s"))
-        )
-
     def rank_of(c_in, mass):
         return c_teleport + c_damping * (c_in + F.lit(mass) * c_s)
 
-    return n_parts, lambda: _power_iteration(
-        edges, nodes, n_parts, seed_ranks, rank_of, ("s",), max_iter, tol
-    )
+    first = g.nodes.select(
+        "host",
+        F.when(F.col("seed").isNotNull(), F.lit(1.0 / g.n_seeds))
+        .otherwise(F.lit(0.0))
+        .alias("s"),
+        F.isnull("out_total").alias("is_dangling"),
+    ).withColumn("rank", F.col("s"))
+    return first, rank_of, ("s",)
 
 
-def _power_iteration(
-    edges, nodes, n_parts, seed_ranks, rank_of, carry, max_iter, tol
-) -> DataFrame:
-    """The power-iteration loop of :func:`pagerank` and :func:`trustrank`.
+def _rank_loops(edges, seeds, rules, damping, max_iter, tol) -> list[DataFrame]:
+    """One (host, rank) frame per rule, every loop over ONE :func:`_graph`
+    setup and ONE transition frame, under one conf scope; a second loop
+    runs concurrently on its own driver thread.  A rule with no loop to
+    run (empty graph, or no seed in the graph) yields the empty frame."""
+    import threading
 
-    ``seed_ranks(flagged, is_dangling)`` builds the first (host, rank,
-    is_dangling, *carry) state from the node frame left-joined to the
-    source flags; ``rank_of(contrib, dangling_mass)`` is the variant's
-    rank Column; ``carry`` names the extra state columns it reads.  Each
-    round is one job (checkpoint_loop): the lazy state checkpoint is
-    materialized by the combined L1-delta + next-dangling-mass aggregate.
-    The final checkpoint backs the (lazy) result and is registered —
-    consumers release it via queries.release_query_caches()."""
-    # Pre-normalize transition weights once: w = n_links / total_out(src).
-    out_totals = edges.groupBy("src_host").agg(F.sum("n_links").alias("out_total"))
+    spark = edges.sparkSession
+    with _graph(edges, seeds) as g:
+        loops = [rule(g, damping) for rule in rules]
+        out = [spark.createDataFrame([], _RANKS_SCHEMA) for _ in rules]
+        live = [i for i, loop in enumerate(loops) if loop is not None]
+        if not live:
+            return out
+        errors: list = []
+
+        def runner(i):
+            try:
+                out[i] = _power_iteration(trans, *loops[i], max_iter, tol)
+            except BaseException as e:  # noqa: BLE001 — re-raised below
+                errors.append(e)
+
+        with scoped_loop_conf(spark, g.n_parts, codegen=False):
+            trans, trans_handle = _transitions(g)
+            threads = [
+                threading.Thread(target=runner, args=(i,), daemon=True)
+                for i in live[1:]
+            ]
+            try:
+                for t in threads:
+                    t.start()
+                runner(live[0])
+                for t in threads:
+                    t.join()
+            finally:
+                trans_handle.unpersist()
+        if errors:
+            raise errors[0]
+        return out
+
+
+def _transitions(g: _Graph):
+    """Transition weights w = n_links / out_total(src), partitioned once on
+    src and eagerly checkpointed → ``(trans, handle)``.
+
+    The out totals come from an aggregate over the cached edges, not from
+    the node table: a checkpoint carries no distinct-key information, so
+    the planner would size edges ⋈ nodes as a product and plan every
+    round as a sort-merge join instead of broadcasting trans."""
+    out = g.edges.groupBy("src_host").agg(F.sum("n_links").alias("out_total"))
     trans = (
-        edges.join(out_totals, "src_host")
+        g.edges.join(out, "src_host")
         .select(
             F.col("src_host").alias("host"),
             "dst_host",
             (F.col("n_links").cast("double") / F.col("out_total")).alias("w"),
         )
-        .repartition(n_parts, "host")
+        .repartition(g.n_parts, "host")
     )
-    # r6: eager localCheckpoint, not persist — a bare persist leaves the
-    # full upstream LOGICAL plan (the Python outlink extraction) inside
-    # trans, and every round's analysis/optimization re-walks it: the
-    # cache short-circuits execution, not planning.  Truncating the
-    # lineage makes each round's plan LogicalRDD-sized (measured ~-1 s
-    # per 20-round loop at sf0.1, outputs bit-identical —
-    # OPTIMIZATION_r06.md).
-    trans, trans_handle = caches.local_checkpoint(trans, eager=True)
+    # r6: a checkpoint, not a persist, keeps each round's plan
+    # LogicalRDD-sized (~-1 s per 20-round loop at sf0.1, OPTIMIZATION_r06.md)
+    return caches.local_checkpoint(trans, eager=True)
 
-    # Dangling = never appears as a source; flagged once, carried in state.
-    srcs = edges.select(F.col("src_host").alias("host")).distinct().withColumn(
-        "_has_out", F.lit(True)
-    )
-    ranks, handle = caches.local_checkpoint(
-        seed_ranks(
-            nodes.join(srcs, "host", "left"),
-            (~F.coalesce(F.col("_has_out"), F.lit(False))).alias("is_dangling"),
-        ),
-        eager=False,
-    )
+
+def _power_iteration(trans, first, rank_of, carry, max_iter, tol) -> DataFrame:
+    """The power-iteration loop of :func:`pagerank` and :func:`trustrank`.
+
+    ``first`` is the first (host, rank, is_dangling, *carry) state;
+    ``rank_of(contrib, dangling_mass)`` is the variant's rank Column;
+    ``carry`` names the extra state columns it reads.  Each round
+    (checkpoint_loop) takes a lazy state checkpoint materialized by the
+    combined L1-delta + next-dangling-mass aggregate; with the one-task
+    broadcast build of the round plan's join that is two jobs per round.
+    The final checkpoint backs the (lazy) result and is registered —
+    consumers release it via queries.release_query_caches()."""
+    ranks, handle = caches.local_checkpoint(first, eager=False)
 
     # Loop-invariant Column objects hoisted out of the rounds (r6): Columns
     # are immutable and reusable across DataFrames, and every F.* call is a
@@ -571,6 +572,7 @@ def _power_iteration(
     c_dangling = F.coalesce(
         F.sum(F.when(F.col("is_dangling"), F.col("rank"))), F.lit(0.0)
     ).alias("dangling")
+    # also the first state checkpoint's materializing job
     mass = ranks.agg(c_dangling).first()[0]
 
     def step(ranks):
@@ -600,7 +602,6 @@ def _power_iteration(
         return row["delta"] < tol
 
     ranks, handle = checkpoint_loop(ranks, handle, step, converged, max_iter)
-    trans_handle.unpersist()
     caches.register(handle)
     return ranks.select("host", "rank")
 
@@ -630,9 +631,10 @@ def hits(edges: DataFrame, max_iter: int = 20) -> DataFrame:
       constant, so the converged direction — the principal eigenvectors of
       WᵀW / WWᵀ — is unchanged; it only keeps magnitudes bounded).  The
       true L1 normalization happens once, on the final vectors.
-    - One job per round (checkpoint_loop): a lazy localCheckpoint on the
-      new state whose materializing action is the sums aggregate that the
-      NEXT round's scaling needs anyway.  At real widths the round's
+    - Three jobs per round (checkpoint_loop): a lazy localCheckpoint on
+      the new state whose materializing action is the sums aggregate that
+      the NEXT round's scaling needs anyway, plus a one-task broadcast
+      build for each of the two edge joins.  At real widths the round's
       authority frame takes a lazy checkpoint too (it feeds BOTH the hub
       join and the new state); it is released with the parent generation,
       after the action.
@@ -642,30 +644,15 @@ def hits(edges: DataFrame, max_iter: int = 20) -> DataFrame:
       per round for a loop that runs ~20 rounds regardless.
     """
     spark = edges.sparkSession
-    edges = edges.persist()
-    try:
-        # unlike pagerank, the node frame is re-joined EVERY round (zero-fill
-        # of hosts missing from a round's sums) — an eager localCheckpoint
-        # both caches it AND truncates its logical plan (a bare persist
-        # would leave the full upstream lineage in every round's analysis,
-        # see _power_iteration)
-        nodes, nodes_handle = caches.local_checkpoint(_nodes(edges), eager=True)
-        n = nodes.count()
-        if n == 0:
-            nodes_handle.unpersist()
+    with _graph(edges) as g:
+        if g.n == 0:
             return spark.createDataFrame(
                 [], "host string, hub double, authority double"
             )
-        # r6: scale-adaptive loop width (see pagerank / tuning.py)
-        n_parts = loop_partitions(spark.sparkContext, max(n, edges.count()))
-        with scoped_loop_conf(spark, n_parts, codegen=False):
-            out = _hits_loop(edges, nodes, n, n_parts, max_iter)
         # the final state checkpoint (registered by the loop) backs the lazy
-        # result; the node frame does not — free it now
-        nodes_handle.unpersist()
-        return out
-    finally:
-        edges.unpersist()
+        # result; the node table does not, and is released on exit
+        with scoped_loop_conf(spark, g.n_parts, codegen=False):
+            return _hits_loop(g.edges, g.nodes.select("host"), g.n, g.n_parts, max_iter)
 
 
 def _hits_loop(edges, nodes, n, n_parts, max_iter) -> DataFrame:

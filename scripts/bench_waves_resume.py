@@ -11,8 +11,9 @@ at the 100k-doc bench corpus:
      final output matches the reference exactly (doc count + url digest),
      with skipped_buckets proving the committed wave was NOT recomputed.
 
-Writes BENCH/waves_resume_r4.json.  Usage:
-  python scripts/bench_waves_resume.py [--pages 100000] [--cpus 32]
+Prints the report as JSON; writes it to a file only when ``--out`` names
+one (the recorded 100k-doc run is BENCH/waves_resume_r4.json).  Usage:
+  python scripts/bench_waves_resume.py [--pages 100000] [--cpus 32] [--out FILE]
 """
 
 from __future__ import annotations
@@ -57,6 +58,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--pages", type=int, default=100_000)
     ap.add_argument("--cpus", type=int, default=32)
+    ap.add_argument("--out", help="also write the JSON report to this path")
     args = ap.parse_args()
 
     from extractor_spark.spark.pipeline import PipelineConfig, run_pipeline, warmup
@@ -149,9 +151,9 @@ def main() -> None:
     assert report["resume"]["matches_single_wave"], (
         "resumed output diverges from single-run reference")
 
-    dst = os.path.join(REPO, "BENCH", "waves_resume_r4.json")
-    with open(dst, "w") as f:
-        json.dump(report, f, indent=2)
+    if args.out:
+        with open(args.out, "w") as f:
+            json.dump(report, f, indent=2)
     print(json.dumps(report))
     spark.stop()
 

@@ -552,3 +552,52 @@ def test_spam_mass_ranks_equals_sequential_bit_for_bit(spark, seeds):
     assert got_pr == want_pr and len(got_pr) == len(hosts)
     assert got_tr == want_tr
     assert bool(got_tr) == (seeds == "quarter")
+
+
+def _job_ids(spark) -> set:
+    """Ids of every job the status store knows, after the listener bus has
+    delivered all pending events."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(None))
+
+
+def test_graph_operator_job_counts(spark):
+    """Spark jobs before round 1 (a ``max_iter=0`` call) and per round
+    (rounds 2 and 3: on a graph this small round 1 also broadcasts its
+    contributions), counted as new job ids in the status store — a job
+    group would miss spam_mass_ranks' loops, which run on other threads.
+    A PageRank/TrustRank round is two jobs and a HITS round three: the
+    state checkpoint's materializing aggregate plus one broadcast build
+    per edge join.  spam_mass_ranks shares one setup between its loops,
+    so before round 1 it runs at most one job more than pagerank: the
+    second loop's first dangling-mass aggregate."""
+    import pandas as pd
+
+    from extractor_spark.spark.webgraph import spam_mass_ranks
+
+    edges = twin_host_edges()
+    seeds = sorted({h for e in edges for h in e})[::4]
+    edf = spark.createDataFrame(
+        pd.DataFrame(
+            [(s, d, w) for (s, d), w in edges.items()],
+            columns=["src_host", "dst_host", "n_links"],
+        )
+    )
+    calls = {
+        "pagerank": lambda k: pagerank(edf, max_iter=k, tol=0.0),
+        "hits": lambda k: hits(edf, max_iter=k),
+        "spam_mass_ranks": lambda k: spam_mass_ranks(edf, seeds, max_iter=k, tol=0.0),
+    }
+    pre, per_round = {}, {}
+    for name, call in calls.items():
+        jobs = {}
+        for rounds in (0, 1, 3):
+            before = _job_ids(spark)
+            call(rounds)
+            jobs[rounds] = len(_job_ids(spark) - before)
+            release_query_caches()
+        per_round[name] = (jobs[3] - jobs[1]) / 2
+        pre[name] = jobs[0]
+    assert per_round == {"pagerank": 2, "hits": 3, "spam_mass_ranks": 4}, per_round
+    assert pre["spam_mass_ranks"] <= pre["pagerank"] + 1, pre
