@@ -301,10 +301,11 @@ def run_pipeline(spark: SparkSession, conf: PipelineConfig) -> dict:
         _delete_path(spark, conf.output_path)
 
     # Default compute parallelism: one task per shuffle partition
-    # (get_spark: max(cores, 8)).  Each Python task costs 0.13–0.29 s before
-    # its first row (stages.py docstring; an identity mapInPandas on
-    # local[4] takes 0.4 s at 4 tasks and 4.1–4.5 s at 64), so several task
-    # waves per core slot spend more on task start-up than they win back in
+    # (get_spark: max(cores, 8)).  Each Python task costs ~0.07 s before its
+    # first row under the lean worker daemon, ~0.28 s under Spark's stock
+    # one (stages.py docstring; an identity mapInPandas on local[4] takes
+    # 0.26–0.29 s at 8 tasks and 1.28–1.36 s at 64), so several task waves
+    # per core slot spend more on task start-up than they win back in
     # balance over long-tailed page sizes.
     n_parts = conf.repartition or int(
         spark.conf.get("spark.sql.shuffle.partitions", "32")

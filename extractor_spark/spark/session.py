@@ -17,6 +17,9 @@ from pyspark.sql import SparkSession
 # holds a bounded number of documents (SURVEY.md §4.2).
 DEFAULT_ARROW_BATCH_ROWS = 256
 
+# the directory that holds the extractor_spark package
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
 
 def _default_driver_memory() -> str:
     try:
@@ -59,6 +62,16 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
         .config("spark.ui.enabled", "false")
+        # Python workers import pyspark from outside Spark's zips when an
+        # equal one is there, so a task's importlib.invalidate_caches() stops
+        # re-reading 12k zip entries (lean_daemon.py)
+        .config("spark.python.daemon.module", "extractor_spark.spark.lean_daemon")
+        # workers inherit PYTHONPATH, not this process's sys.path: put the
+        # package (and the daemon) on it whatever the driver's cwd
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.pathsep.join(p for p in (PACKAGE_ROOT, os.environ.get("PYTHONPATH")) if p),
+        )
         # local mode: the driver JVM hosts every executor thread plus all
         # cached/checkpointed blocks; a fixed 8g caused GCLocker-retry task
         # aborts at the tail of long benches on the 128 GiB box (32 threads

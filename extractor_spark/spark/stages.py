@@ -11,12 +11,15 @@ per-document work calls the engine package, which is also unit-tested without
 Spark — the cluster stage is just transport.
 
 Every Python task pays a fixed cost before its first row, even on a reused
-worker: pyspark's ``worker_util.setup_spark_files`` calls
-``importlib.invalidate_caches()`` per task, and under CPython 3.11 that
-re-reads the zip central directories of ``pyspark.zip`` and the Spark core
-jar on the worker's ``sys.path`` — 0.13–0.29 s per task on a 4-core box,
-5–6× the Python compute of a 1,000-page structured run.  So the pipeline
-runs one Python node per task (the fused stage) over few, wide tasks.
+worker.  Under Spark's stock daemon most of it is pyspark's per-task
+``importlib.invalidate_caches()``, which under CPython 3.11 re-reads the zip
+directories of ``pyspark.zip``, the py4j zip and the Spark core jar:
+0.12–0.24 s per task on a 4-core box, 5–6× the Python compute of a
+1,000-page structured run.  ``get_spark`` runs workers under
+``lean_daemon``, which takes those archives out of the import machinery
+(the invalidate then takes ~0.1 ms); scheduling and start-up still cost
+~0.07 s per task.  So the pipeline runs one Python node per task (the fused
+stage) over few, wide tasks.
 """
 
 from __future__ import annotations

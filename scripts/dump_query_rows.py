@@ -15,11 +15,6 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-# Python workers import the package too, and they inherit the environment,
-# not this process's sys.path
-os.environ["PYTHONPATH"] = os.pathsep.join(
-    p for p in (REPO, os.environ.get("PYTHONPATH")) if p
-)
 
 
 def main() -> None:
