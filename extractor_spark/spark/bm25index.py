@@ -15,16 +15,12 @@ tests/test_bm25_index.py pins serve ≡ fused-SQL equality on the registry's
 own query set, the partition-pruned scan, and OR-semantics for absent
 terms.
 
-Layout under ``path`` (batch-partitioned for incremental maintenance —
-see :func:`append_bm25_index`):
+Layout under ``path`` (the ``termindex`` store, batch-partitioned for
+incremental maintenance — see :func:`append_bm25_index`):
   bucket=<0..255>/batch=<id>/  (term, doc_id, tf, dl) term-sorted row groups
   _df/batch=<id>/              per-term (df, tf_max, dl_min) contributions
   _stats/batch=<id>/           1 row (n_docs, sum_dl)
-Underscore prefixes keep the side tables invisible to parquet reads of
-``path`` itself (the phraseindex convention).  Serving folds the
-vocabulary-sized side tables across batches; appends cost one pass over
-the new batch only, and re-running a batch id overwrites its partitions
-(retry-idempotent, the incdedup convention).
+Serving folds the vocabulary-sized side tables across batches.
 
 MaxScore-style pruned serving (Turtle & Flood 1995's upper-bound idea,
 restructured as an exact TWO-PASS distributed plan rather than a
@@ -70,7 +66,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import caches
-from .phraseindex import N_TERM_BUCKETS, tokenize_expr
+from .termindex import compact, pruned_scan, stream_appends, tokenize_expr, write_batch
 
 K1 = 1.2
 B = 0.75
@@ -85,121 +81,69 @@ _HOT_DF_FRAC = 1.0 / 16.0
 # broadcast-safety cap on the total surviving candidate set
 _MAX_CANDIDATES = 500_000
 
-
-def build_bm25_index(docs: DataFrame, path: str, n_partitions: int = 32) -> None:
-    """Full (re)build: one batch-0 append over a fresh index root."""
-    append_bm25_index(docs, path, batch_id=0, n_partitions=n_partitions,
-                      full_rebuild=True)
+_SORT = ("term", "doc_id")
 
 
-def append_bm25_index(
-    docs: DataFrame,
-    path: str,
-    batch_id: int,
-    n_partitions: int = 32,
-    full_rebuild: bool = False,
-) -> None:
-    """Incremental index maintenance (the incdedup convention: one batch =
-    one partition, re-running a batch OVERWRITES it, so a failed/retried
-    append is idempotent).  Batches must carry disjoint doc sets — a doc
-    belongs to exactly one batch, re-appending the same batch_id replaces
-    its contribution.
-
-    Cost is ONE tokenize pass over the NEW batch only: postings land under
-    ``bucket=<hash>/batch=<id>/``, and the two side tables store PER-BATCH
-    contributions (``_df/batch=<id>``: per-term (df, tf_max, dl_min);
-    ``_stats/batch=<id>``: (n_docs, sum_dl)) that serving folds together —
-    no global recomputation on append.  MaxScore upper bounds are derived
-    at serve time from the folded envelope: BM25's saturation factor is
-    monotone increasing in tf and decreasing in dl, so
-    idf(Σdf) · sat(max tf_max, min dl_min, global avgdl) dominates every
-    actual posting contribution — a valid (slightly loose) bound, which is
-    all the pruning proof needs."""
-    postings = (
+def _postings(docs: DataFrame) -> DataFrame:
+    """(term, doc_id, tf, dl) rows: one tokenize pass."""
+    return (
         docs.select("doc_id", tokenize_expr().alias("t"))
         .select("doc_id", F.size("t").alias("dl"), F.explode("t").alias("term"))
         .groupBy("term", "doc_id")
         .agg(F.count("*").cast("long").alias("tf"), F.max("dl").alias("dl"))
-        .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS)))
-        .withColumn("batch", F.lit(int(batch_id)))
     )
-    mode = "overwrite"
-    # dynamic partition overwrite replaces ONLY this batch's partitions;
-    # a full rebuild wipes the whole root (static overwrite)
-    ow = "static" if full_rebuild else "dynamic"
-    (
-        postings.repartition(n_partitions, "bucket")
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode(mode)
-        .option("partitionOverwriteMode", ow)
-        .partitionBy("bucket", "batch")
-        .parquet(path)
-    )
-    spark = docs.sparkSession
-    # derive the side tables FROM the written batch (partition-pruned,
-    # column-pruned scans), not a second corpus pass; every doc contributes
-    # ≥1 posting (split of any text is non-empty) so Σtf = Σdl
-    written = spark.read.parquet(path).where(F.col("batch") == int(batch_id))
-    _write_side_tables(written, path, batch_id, ow)
 
 
-def _write_side_tables(postings: DataFrame, path: str, batch_id: int, ow: str) -> None:
-    (
-        postings.agg(
-            F.countDistinct("doc_id").cast("double").alias("n_docs"),
-            F.sum("tf").cast("double").alias("sum_dl"),
-        )
-        .withColumn("batch", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", ow)
-        .partitionBy("batch")
-        .parquet(path + "/_stats")
-    )
+def _side_tables(written: DataFrame) -> dict[str, DataFrame]:
+    # every doc contributes ≥1 posting (split of any text is non-empty), so
+    # Σtf = Σdl; an empty batch stores sum_dl 0, not NULL, so the serve-time
+    # fold stays a plain sum
     tf = F.col("tf").cast("double")
-    (
-        postings.groupBy("term")
-        .agg(
+    return {
+        "_stats": written.agg(
+            F.countDistinct("doc_id").cast("double").alias("n_docs"),
+            F.coalesce(F.sum("tf"), F.lit(0)).cast("double").alias("sum_dl"),
+        ),
+        "_df": written.groupBy("term").agg(
             F.count("*").cast("double").alias("df"),
             F.max(tf).alias("tf_max"),
             F.min(F.col("dl").cast("double")).alias("dl_min"),
-        )
-        .withColumn("batch", F.lit(int(batch_id)))
-        .repartition(8)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", ow)
-        .partitionBy("batch")
-        .parquet(path + "/_df")
-    )
+        ),
+    }
+
+
+def build_bm25_index(docs: DataFrame, path: str, n_partitions: int = 32) -> None:
+    """Full (re)build: batch 0 over a fresh index root."""
+    write_batch(_postings(docs), path, 0, _SORT, _side_tables, n_partitions,
+                full_rebuild=True)
+
+
+def append_bm25_index(
+    docs: DataFrame, path: str, batch_id: int, n_partitions: int = 32
+) -> None:
+    """Incremental index maintenance (the ``termindex`` batch convention:
+    re-running a batch id OVERWRITES it, so a failed/retried append is
+    idempotent; batches carry disjoint doc sets).
+
+    Cost is ONE tokenize pass over the NEW batch only: the side tables
+    store PER-BATCH contributions (``_df``: per-term (df, tf_max, dl_min);
+    ``_stats``: (n_docs, sum_dl)) that serving folds together — no global
+    recomputation on append.  MaxScore upper bounds are derived at serve
+    time from the folded envelope: BM25's saturation factor is monotone
+    increasing in tf and decreasing in dl, so
+    idf(Σdf) · sat(max tf_max, min dl_min, global avgdl) dominates every
+    actual posting contribution — a valid (slightly loose) bound, which is
+    all the pruning proof needs."""
+    write_batch(_postings(docs), path, batch_id, _SORT, _side_tables, n_partitions)
 
 
 def compact_bm25_index(spark: SparkSession, path: str, n_partitions: int = 32) -> None:
-    """Rewrite every batch into a single batch 0.  After many streaming
-    appends the index holds k small files per bucket and k side-table rows
-    per term; compaction restores the build-once layout (term-sorted row
-    groups per bucket — row-group pruning quality degrades with fragment
-    count) and TIGHTENS the MaxScore envelope back to a single fold (the
-    folded corner (max tf_max, min dl_min) across batches is looser than
-    the one-batch corner).  Postings are NOT re-tokenized — this is a pure
-    rewrite of the stored rows.  Written beside the index and swapped in
-    by the crash-safe ``sources.swap_store`` (the local stand-in for an
-    atomic metastore pointer flip)."""
-    from .sources import swap_store
-
-    def write_next(old: DataFrame, nxt: str) -> None:
-        postings = old.select("term", "doc_id", "tf", "dl", "bucket").withColumn(
-            "batch", F.lit(0)
-        )
-        (
-            postings.repartition(n_partitions, "bucket")
-            .sortWithinPartitions("term", "doc_id")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .partitionBy("bucket", "batch")
-            .parquet(nxt)
-        )
-        _write_side_tables(spark.read.parquet(nxt), nxt, 0, "static")
-
-    swap_store(spark, path, write_next)
+    """Rewrite every batch into a single batch 0 (``termindex.compact``).
+    Besides restoring term-sorted row groups per bucket, this TIGHTENS the
+    MaxScore envelope back to a single fold (the folded corner
+    (max tf_max, min dl_min) across batches is looser than the one-batch
+    corner)."""
+    compact(spark, path, _SORT, _side_tables, n_partitions)
 
 
 def streaming_index_docs(
@@ -208,25 +152,10 @@ def streaming_index_docs(
     index_path: str,
     ckpt_dir: str,
 ) -> None:
-    """Stream drain (``sources.drain_files``) over (doc_id, text) files:
-    each microbatch appends its postings + side-table contributions
-    under ``batch=<microbatch id>`` via :func:`append_bm25_index` — the
-    same idempotent partition-overwrite write, so Structured Streaming's
-    replayed microbatches (post-crash) land on identical content.
-    streaming ≡ batch equality pinned in tests/test_bm25_append.py.
-    Batch ids are offset past any batches an earlier build/append/compact
-    already owns (:func:`phraseindex.stream_batch_offset` — a fresh
-    checkpoint's microbatch 0 must not overwrite batch-0 partitions it
-    did not produce)."""
-    from .phraseindex import stream_batch_offset
-    from .sources import drain_files
-
-    off = stream_batch_offset(index_path, ckpt_dir)
-
-    def handle(batch_df, batch_id: int) -> None:
-        append_bm25_index(batch_df, index_path, batch_id=int(batch_id) + off)
-
-    drain_files(spark, docs_stream_dir, "doc_id long, text string", ckpt_dir, handle)
+    """One :func:`append_bm25_index` per (doc_id, text) file of the stream
+    (``termindex.stream_appends``); streaming ≡ batch is pinned in
+    tests/test_bm25_append.py."""
+    stream_appends(spark, docs_stream_dir, index_path, ckpt_dir, append_bm25_index)
 
 
 def _contrib(n_docs: float, avgdl: float):
@@ -235,21 +164,6 @@ def _contrib(n_docs: float, avgdl: float):
     tf = F.col("tf").cast("double")
     return idf * tf * (K1 + 1.0) / (
         tf + K1 * (1.0 - B + B * F.col("dl").cast("double") / F.lit(avgdl))
-    )
-
-
-def _pruned_postings(spark: SparkSession, index_path: str, vocab: list[str]):
-    """Postings scan partition-pruned to the vocabulary's term-hash buckets."""
-    buckets = sorted(
-        {
-            r["b"]
-            for r in spark.createDataFrame([(w,) for w in vocab], "term string")
-            .select(F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS)).alias("b"))
-            .collect()
-        }
-    )
-    return spark.read.parquet(index_path).where(
-        F.col("bucket").isin(buckets) & F.col("term").isin(vocab)
     )
 
 
@@ -271,7 +185,7 @@ def _serve_full(
         [(qid, t, term_meta[t][0]) for qid, t in leg_rows],
         "query_id int, term string, df double",
     )
-    post = _pruned_postings(spark, index_path, vocab)
+    post = pruned_scan(spark, index_path, vocab)
     scored = (
         post.join(F.broadcast(legs), "term")
         .groupBy("query_id", "doc_id")
@@ -327,24 +241,12 @@ def bm25_search_index(
         avgdl = float(sum(r["avgdl"] * r["n_docs"] for r in srows)) / n_docs
     df_tbl = spark.read.parquet(index_path + "/_df")
     has_ub = "tf_max" in df_tbl.columns
+    aggs = [F.sum("df").alias("df")]
     if has_ub:
-        meta_rows = (
-            df_tbl.where(F.col("term").isin(vocab))
-            .groupBy("term")
-            .agg(
-                F.sum("df").alias("df"),
-                F.max("tf_max").alias("tf_max"),
-                F.min("dl_min").alias("dl_min"),
-            )
-            .collect()
-        )
-    else:
-        meta_rows = (
-            df_tbl.where(F.col("term").isin(vocab))
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"))
-            .collect()
-        )
+        aggs += [F.max("tf_max").alias("tf_max"), F.min("dl_min").alias("dl_min")]
+    meta_rows = (
+        df_tbl.where(F.col("term").isin(vocab)).groupBy("term").agg(*aggs).collect()
+    )
 
     def _ub(df: float, tf_max: float, dl_min: float) -> float:
         # valid MaxScore bound: sat is monotone ↑ in tf, ↓ in dl, so the
@@ -406,7 +308,7 @@ def bm25_search_index(
         )
         # bounded: Σ essential df ≤ |legs| × hot_cap
         partial, h = caches.local_checkpoint(
-            _pruned_postings(spark, index_path, ess_vocab)
+            pruned_scan(spark, index_path, ess_vocab)
             .join(F.broadcast(legs1), "term")
             .groupBy("query_id", "doc_id")
             .agg(F.sum(_contrib(n_docs, avgdl)).alias("partial"))
@@ -456,7 +358,7 @@ def bm25_search_index(
                     )
                     hot_vocab = sorted({t for _, t in hot_safe})
                     hot_sum = (
-                        _pruned_postings(spark, index_path, hot_vocab)
+                        pruned_scan(spark, index_path, hot_vocab)
                         .join(F.broadcast(legs2), "term")
                         # the MaxScore payoff: stopword postings are cut to
                         # the candidate set MAP-SIDE, before any shuffle

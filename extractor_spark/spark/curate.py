@@ -46,6 +46,8 @@ WHERE size(w) >= 3
 # 64 MinHash values per doc as a pure array expression over the hashed
 # shingle set — 64 × |hs| JVM-side hash evals in one projection, NO
 # 64-way posexplode and NO (url, seed) shuffle — then 16 bands of 4.
+# ``{sh_view}`` names the shingle-set view; the incremental dedup test
+# runs this template as its from-scratch reference.
 _BANDS_SQL = """
 SELECT url, b.pos AS band_idx,
        xxhash64(sig[b.pos * 4], sig[b.pos * 4 + 1], sig[b.pos * 4 + 2], sig[b.pos * 4 + 3]) AS band_hash
@@ -53,7 +55,7 @@ FROM (
   SELECT url,
          transform(sequence(0, 63),
                    seed -> array_min(transform(hs, h -> xxhash64(h, seed)))) AS sig
-  FROM curate_sh
+  FROM {sh_view}
 )
 LATERAL VIEW posexplode(sequence(0, 15)) b AS pos, val
 """
@@ -287,7 +289,9 @@ def curate(
             ckpt_handles.append(h)
             sh.createOrReplaceTempView("curate_sh")
             _mark("shingle_sets")
-            bands, h = caches.local_checkpoint(spark.sql(_BANDS_SQL))
+            bands, h = caches.local_checkpoint(
+                spark.sql(_BANDS_SQL.format(sh_view="curate_sh"))
+            )
             ckpt_handles.append(h)
             bands.createOrReplaceTempView("curate_bands")
             _mark("bands")

@@ -46,24 +46,6 @@ from .sources import drain_files, swap_store
 BANDS_SUBDIR = "bands"
 SHINGLES_SUBDIR = "shingles"
 
-# Same signature construction as the curate funnel: 64 MinHash values as a
-# pure array expression (no 64-way explode), 16 bands of 4.  The SQL form
-# is kept for the from-scratch reference in tests/test_incremental_dedup.py
-# (batch_shingles_and_bands builds the identical expressions with the
-# DataFrame API — see its docstring for why views are unusable here).
-_BATCH_BANDS_SQL = """
-SELECT url, b.pos AS band_idx,
-       xxhash64(sig[b.pos * 4], sig[b.pos * 4 + 1], sig[b.pos * 4 + 2], sig[b.pos * 4 + 3]) AS band_hash
-FROM (
-  SELECT url,
-         transform(sequence(0, 63),
-                   seed -> array_min(transform(hs, h -> xxhash64(h, seed)))) AS sig
-  FROM {sh_view}
-)
-LATERAL VIEW posexplode(sequence(0, 15)) b AS pos, val
-"""
-
-
 def batch_shingles_and_bands(
     spark: SparkSession, docs: DataFrame
 ) -> tuple[DataFrame, DataFrame]:

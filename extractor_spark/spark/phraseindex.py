@@ -12,13 +12,14 @@ Two pieces:
 
 - ``build_phrase_index(docs, path)``: ONE tokenize pass explodes
   (term, doc_id, pos) rows — the positional postings in flat columnar
-  form — repartitioned BY TERM and sorted within partitions, then written
-  to parquet.  Term-clustered row groups mean a later ``term IN (...)``
-  predicate prunes on row-group min/max stats, so serving never rescans
-  the corpus; at 100 TB this is the standard "index once, serve many"
-  amortization, and the per-term row layout has no giant-postings-row
-  skew problem (a stopword's postings are millions of SMALL rows spread
-  over splittable row groups, never one unsplittable array cell).
+  form — written in the ``termindex`` layout (term-hash bucket dirs,
+  term-sorted within each).  Term-clustered row groups mean a later
+  ``term IN (...)`` predicate prunes on row-group min/max stats, so
+  serving never rescans the corpus; at 100 TB this is the standard
+  "index once, serve many" amortization, and the per-term row layout has
+  no giant-postings-row skew problem (a stopword's postings are millions
+  of SMALL rows spread over splittable row groups, never one unsplittable
+  array cell).
 - ``phrase_search(spark, path, phrases)``: arbitrary-k exact-phrase
   lookup in ONE index scan + ONE shuffle, phrase length notwithstanding.
   Each phrase is decomposed into (term, offset) legs; the index is
@@ -43,151 +44,44 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .termindex import compact, pruned_scan, stream_appends, tokenize_expr, write_batch
 
-def tokenize_expr(col: str = "text"):
-    """The corpus tokenize used across the text operators (whitespace on
-    lowered, trimmed text) — index and query sides must split identically."""
-    return F.split(F.trim(F.lower(F.col(col))), r"\s+")
+_SORT = ("term", "doc_id", "pos")
 
 
-N_TERM_BUCKETS = 256
+def _postings(docs: DataFrame) -> DataFrame:
+    """(term, doc_id, pos) rows, ``pos`` 1-based: one tokenize pass."""
+    return docs.select(
+        "doc_id", F.posexplode(tokenize_expr()).alias("pos0", "term")
+    ).select("term", "doc_id", (F.col("pos0") + 1).alias("pos"))
+
+
+def _side_tables(written: DataFrame) -> dict[str, DataFrame]:
+    # per-batch postings count per term, which phrase_search folds to drive
+    # intersection from the rarest leg
+    return {"_df": written.groupBy("term").agg(F.count("*").alias("df"))}
 
 
 def build_phrase_index(docs: DataFrame, path: str, n_partitions: int = 32) -> None:
-    """Full (re)build: one batch-0 append over a fresh index root.
-
-    Layout: ``bucket=pmod(xxhash64(term), 256)/batch=<id>/`` directories of
-    (term, doc_id, pos) rows, ``pos`` 1-based.  The bucket directories are
-    what make serving cheap: a k-term phrase touches ≤k of 256 partitions
-    (PartitionFilters prune the rest at planning time — the same serving
-    layout as the IVF index), and within a bucket rows are term-sorted so
-    row-group min/max stats prune further.  Measured at 500k docs / 28.4M
-    postings: the pruned vocabulary scan reads 3.8M rows in 0.6 s where
-    the flat term-sorted layout re-scanned everything (32 files ≈ one row
-    group each — nothing skipped).
-    """
-    append_phrase_index(docs, path, batch_id=0, n_partitions=n_partitions,
-                        full_rebuild=True)
+    """Full (re)build: batch 0 over a fresh ``termindex`` root."""
+    write_batch(_postings(docs), path, 0, _SORT, _side_tables, n_partitions,
+                full_rebuild=True)
 
 
 def append_phrase_index(
-    docs: DataFrame,
-    path: str,
-    batch_id: int,
-    n_partitions: int = 32,
-    full_rebuild: bool = False,
+    docs: DataFrame, path: str, batch_id: int, n_partitions: int = 32
 ) -> None:
-    """Incremental maintenance, the bm25index/incdedup convention: one
-    tokenize pass over the NEW batch only; postings land under
-    ``bucket=…/batch=<id>/`` and the per-batch (term, df) contribution
-    under ``_df/batch=<id>/`` — serving folds the vocabulary-sized side
-    table.  Batches must carry disjoint doc sets; re-running a batch id
-    overwrites its partitions (retry-idempotent dynamic overwrite)."""
-    idx = docs.select(
-        "doc_id", F.posexplode(tokenize_expr()).alias("pos0", "term")
-    ).select(
-        "term",
-        "doc_id",
-        (F.col("pos0") + 1).alias("pos"),
-        F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS)).alias("bucket"),
-        F.lit(int(batch_id)).alias("batch"),
-    )
-    ow = "static" if full_rebuild else "dynamic"
-    (
-        idx.repartition(n_partitions, "bucket")
-        .sortWithinPartitions("term", "doc_id", "pos")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", ow)
-        .partitionBy("bucket", "batch")
-        .parquet(path)
-    )
-    # per-batch document-frequency contribution (vocab-sized), used by
-    # phrase_search to drive intersection from the rarest leg.  Computed
-    # from the WRITTEN batch (partition-pruned, term-column-only scan —
-    # cheaper than re-running the explode).  The underscore prefix makes
-    # the subdir invisible to parquet reads of `path` itself.
-    (
-        docs.sparkSession.read.parquet(path)
-        .where(F.col("batch") == int(batch_id))
-        .groupBy("term")
-        .agg(F.count("*").alias("df"))
-        .withColumn("batch", F.lit(int(batch_id)))
-        .repartition(8)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", ow)
-        .partitionBy("batch")
-        .parquet(path + "/_df")
-    )
+    """Incremental maintenance: one tokenize pass over the NEW batch only;
+    postings and the batch's ``_df`` contribution land under
+    ``batch=<id>``, and re-running a batch id overwrites it."""
+    write_batch(_postings(docs), path, batch_id, _SORT, _side_tables, n_partitions)
 
 
 def compact_phrase_index(
     spark: SparkSession, path: str, n_partitions: int = 32
 ) -> None:
-    """Rewrite every batch into a single batch 0 (pure row rewrite, no
-    re-tokenize): restores term-sorted row groups per bucket after many
-    small streaming appends.  Written beside the index and swapped in by
-    the crash-safe ``sources.swap_store``."""
-    from .sources import swap_store
-
-    def write_next(old: DataFrame, nxt: str) -> None:
-        postings = old.select("term", "doc_id", "pos", "bucket").withColumn(
-            "batch", F.lit(0)
-        )
-        (
-            postings.repartition(n_partitions, "bucket")
-            .sortWithinPartitions("term", "doc_id", "pos")
-            .write.mode("overwrite")
-            .partitionBy("bucket", "batch")
-            .parquet(nxt)
-        )
-        (
-            spark.read.parquet(nxt)
-            .groupBy("term")
-            .agg(F.count("*").alias("df"))
-            .withColumn("batch", F.lit(0))
-            .repartition(8)
-            .write.mode("overwrite")
-            .partitionBy("batch")
-            .parquet(nxt + "/_df")
-        )
-
-    swap_store(spark, path, write_next)
-
-
-def stream_batch_offset(index_path: str, ckpt_dir: str) -> int:
-    """Stable offset added to Structured Streaming microbatch ids before
-    they become index batch ids.
-
-    Microbatch ids are scoped to the CHECKPOINT and start at 0, while
-    ``batch=`` partitions are owned by whoever wrote them — a stream
-    started with a fresh checkpoint against an index that already holds
-    batch 0 (from a build, prior appends, or a compaction, which folds
-    everything into batch 0) would silently overwrite those partitions
-    via the idempotent dynamic-partition-overwrite convention.  The
-    offset is read ONCE from the index's max existing batch id and pinned
-    in a sidecar file next to the checkpoint dir, so restarts of the SAME
-    stream reuse it (replayed microbatches still land on their own
-    partitions — replay idempotency is unchanged) while a fresh
-    checkpoint always starts past every batch it did not produce.
-    """
-    import glob
-    import os
-
-    marker = ckpt_dir.rstrip("/") + ".index_batch_offset"
-    if os.path.exists(marker):
-        with open(marker) as f:
-            return int(f.read().strip())
-    mx = -1
-    for d in glob.glob(os.path.join(index_path, "bucket=*", "batch=*")):
-        try:
-            mx = max(mx, int(os.path.basename(d).split("=", 1)[1]))
-        except ValueError:
-            pass
-    off = mx + 1
-    os.makedirs(os.path.dirname(marker) or ".", exist_ok=True)
-    with open(marker, "w") as f:
-        f.write(str(off))
-    return off
+    """Rewrite every batch into a single batch 0 (``termindex.compact``)."""
+    compact(spark, path, _SORT, _side_tables, n_partitions)
 
 
 def streaming_phrase_index(
@@ -196,20 +90,10 @@ def streaming_phrase_index(
     index_path: str,
     ckpt_dir: str,
 ) -> None:
-    """Stream drain (``sources.drain_files``) over (doc_id, text) files —
-    each microbatch appends under its batch-id partitions, so replayed
-    microbatches land on identical content (streaming ≡ batch pinned in
-    tests/test_phrase_append.py).  Batch ids are offset past any batches
-    an earlier build/append/compact already owns
-    (:func:`stream_batch_offset`)."""
-    from .sources import drain_files
-
-    off = stream_batch_offset(index_path, ckpt_dir)
-
-    def handle(batch_df, batch_id: int) -> None:
-        append_phrase_index(batch_df, index_path, batch_id=int(batch_id) + off)
-
-    drain_files(spark, docs_stream_dir, "doc_id long, text string", ckpt_dir, handle)
+    """One :func:`append_phrase_index` per (doc_id, text) file of the stream
+    (``termindex.stream_appends``); streaming ≡ batch is pinned in
+    tests/test_phrase_append.py."""
+    stream_appends(spark, docs_stream_dir, index_path, ckpt_dir, append_phrase_index)
 
 
 def _phrase_legs(phrases: list[str]) -> list[tuple]:
@@ -222,24 +106,6 @@ def _phrase_legs(phrases: list[str]) -> list[tuple]:
         for j, w in enumerate(toks):
             rows.append((pid, w, j, len(toks)))
     return rows
-
-
-def _pruned_index(spark: SparkSession, index_path: str, vocab: list[str]) -> DataFrame:
-    """Index rows for a query vocabulary: partition-pruned to ≤|vocab| of
-    the 256 bucket dirs (bucket ids via the same JVM xxhash64 the build
-    used — one driver-local job over |vocab| rows), then term-pruned via
-    row-group stats."""
-    buckets = sorted(
-        {
-            r["b"]
-            for r in spark.createDataFrame([(w,) for w in vocab], "term string")
-            .select(F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS)).alias("b"))
-            .collect()
-        }
-    )
-    return spark.read.parquet(index_path).where(
-        F.col("bucket").isin(buckets) & F.col("term").isin(vocab)
-    )
 
 
 def phrase_search(
@@ -293,7 +159,7 @@ def phrase_search(
             rarest[pid] = (c, term, off, k)
     cand_total = sum(c for c, _, _, _ in rarest.values())
 
-    idx = _pruned_index(spark, index_path, vocab)
+    idx = pruned_scan(spark, index_path, vocab)
 
     if cand_total > max_candidate_rows:
         legs = spark.createDataFrame(

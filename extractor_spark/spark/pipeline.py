@@ -246,16 +246,21 @@ def warmup(
     them into the timed region).  Pass ``schema`` to also warm the
     extraction stage's codegen/worker path (the structured pipeline's
     first leg otherwise pays it inside the timed region)."""
+    import shutil
     import tempfile
 
-    scratch = tempfile.mkdtemp(prefix="extractor_warmup_")
     sample = spark.read.parquet(pages_path).limit(n_rows)
     pages = dedup_latest_per_url(sample).select("url", "warc_ts", "html", "lang")
     if schema is None:
         out = convert_stage(pages)
     else:
         out = convert_extract_stage(pages, schema)
-    out.write.mode("overwrite").parquet(os.path.join(scratch, "out"))
+    scratch = tempfile.mkdtemp(prefix="extractor_warmup_")
+    try:
+        # the write is the point: it runs the same write path as a real run
+        out.write.mode("overwrite").parquet(os.path.join(scratch, "out"))
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
 
 
 def _read_pages(spark: SparkSession, conf: PipelineConfig) -> DataFrame:

@@ -8,7 +8,8 @@ cluster image carries ``iceberg-spark-runtime`` (plus catalog conf), pass
 switch (SURVEY.md §1.3).
 
 The incremental surfaces (frontier stores, near-dup store, source-count
-store, the two search indexes) share two protocols defined here:
+store, and the two search indexes through ``termindex``, which owns their
+shared postings layout) share two protocols defined here:
 :func:`drain_files`, the one-file-per-microbatch availableNow stream
 drain, and :func:`swap_store`, the crash-safe read-old → write-new → swap
 that stands in for a transactional table MERGE / metastore pointer flip.

@@ -212,53 +212,6 @@ def test_compaction_preserves_serving_and_merges_batches(spark, docs, tmp_path):
     assert after == before
 
 
-def test_streaming_fresh_checkpoint_offsets_past_existing_batches(
-    spark, docs, tmp_path
-):
-    """Microbatch ids are checkpoint-scoped and restart at 0 — a stream
-    started with a FRESH checkpoint against an index that already holds
-    batch 0 must append PAST it (stream_batch_offset), never silently
-    overwrite it via the idempotent partition-overwrite convention."""
-    import glob
-    import os
-    import shutil
-
-    from extractor_spark.spark.bm25index import streaming_index_docs
-
-    idx = str(tmp_path / "idx")
-    build_bm25_index(docs.where("doc_id % 3 = 0"), idx)  # owns batch 0
-    stream_dir = str(tmp_path / "stream_in")
-    os.makedirs(stream_dir)
-    for i in (1, 2):
-        part = str(tmp_path / f"p{i}")
-        docs.where(f"doc_id % 3 = {i}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(part)
-        shutil.copy(
-            glob.glob(part + "/*.parquet")[0],
-            os.path.join(stream_dir, f"docs_{i}.parquet"),
-        )
-    streaming_index_docs(
-        spark, stream_dir, idx, ckpt_dir=str(tmp_path / "fresh_ckpt")
-    )
-    batches = sorted(
-        r["batch"]
-        for r in spark.read.parquet(idx + "/_stats").select("batch").collect()
-    )
-    assert batches == [0, 1, 2]  # batch 0 untouched, stream landed past it
-    # served results over the merged index ≡ a from-scratch build
-    scratch = str(tmp_path / "scratch")
-    build_bm25_index(docs, scratch)
-    queries = _queries_for(spark, docs)
-    got = _rows(bm25_search_index(spark, idx, queries, topk=10))
-    release_query_caches()
-    want = _rows(bm25_search_index(spark, scratch, queries, topk=10))
-    release_query_caches()
-    assert got.keys() == want.keys() and got
-    for k in want:
-        assert abs(got[k] - want[k]) < 1e-9, k
-
-
 def test_legacy_side_tables_fall_back_to_full_scoring(spark, docs, tmp_path):
     """A pre-batch-format index (df-only _df, n_docs/avgdl _stats) cannot
     prune — the serve path must reach the no-envelope fallback (not crash

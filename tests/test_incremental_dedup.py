@@ -54,8 +54,7 @@ def _run_incremental(spark, docs, n_batches=3, threshold=0.8):
 
 
 def test_incremental_matches_from_scratch_reference(spark):
-    from extractor_spark.spark.curate import _SHINGLE_SETS_TMPL
-    from extractor_spark.spark.incdedup import _BATCH_BANDS_SQL
+    from extractor_spark.spark.curate import _BANDS_SQL, _SHINGLE_SETS_TMPL
 
     docs = _corpus(spark)
     got = _run_incremental(spark, docs)
@@ -67,7 +66,7 @@ def test_incremental_matches_from_scratch_reference(spark):
     spark.sql(_SHINGLE_SETS_TMPL.format(view="ref_docs")).createOrReplaceTempView(
         "ref_sh"
     )
-    spark.sql(_BATCH_BANDS_SQL.format(sh_view="ref_sh")).createOrReplaceTempView(
+    spark.sql(_BANDS_SQL.format(sh_view="ref_sh")).createOrReplaceTempView(
         "ref_bands"
     )
     expected_matches = {

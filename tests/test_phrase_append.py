@@ -104,35 +104,3 @@ def test_batched_append_streaming_and_compaction(spark, docs, tmp_path):
     ] == [0]
     assert _rows(spark, sidx, phrases) == want
 
-
-def test_streaming_fresh_checkpoint_offsets_past_existing_batches(
-    spark, docs, tmp_path
-):
-    """Same hazard as the BM25 index: a fresh-checkpoint stream's
-    microbatch 0 must not overwrite an existing batch-0 partition — the
-    offset sidecar starts it past every batch it did not produce."""
-    phrases = _phrases(spark, docs)
-    idx = str(tmp_path / "idx")
-    build_phrase_index(docs.where("doc_id % 3 = 0"), idx)  # owns batch 0
-    stream_dir = str(tmp_path / "stream_in2")
-    os.makedirs(stream_dir)
-    for i in (1, 2):
-        part = str(tmp_path / f"p{i}")
-        docs.where(f"doc_id % 3 = {i}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(part)
-        shutil.copy(
-            glob.glob(part + "/*.parquet")[0],
-            os.path.join(stream_dir, f"docs_{i}.parquet"),
-        )
-    streaming_phrase_index(spark, stream_dir, idx, str(tmp_path / "fresh_ckpt"))
-    assert sorted(
-        r["batch"]
-        for r in spark.read.parquet(idx + "/_df")
-        .select("batch")
-        .distinct()
-        .collect()
-    ) == [0, 1, 2]
-    scratch = str(tmp_path / "scratch")
-    build_phrase_index(docs, scratch)
-    assert _rows(spark, idx, phrases) == _rows(spark, scratch, phrases)

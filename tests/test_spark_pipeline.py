@@ -106,6 +106,16 @@ def test_pipeline_run_and_resume(spark, pages_path, tmp_path):
     assert spark.read.parquet(out_dir).count() == summary["docs"]
 
 
+def test_warmup_leaves_no_scratch_dir(spark, pages_path, tmp_path, monkeypatch):
+    import tempfile
+
+    from extractor_spark.spark.pipeline import warmup
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    warmup(spark, pages_path, n_rows=16)
+    assert not list(tmp_path.glob("extractor_warmup_*"))
+
+
 def test_pipeline_with_extraction(spark, pages_path, tmp_path):
     out_dir = str(tmp_path / "out_extract")
     conf = PipelineConfig(
