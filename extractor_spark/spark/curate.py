@@ -21,87 +21,97 @@ Returns per-stage counts so the curation funnel is auditable.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import caches
 
-# Per-doc hashed-shingle SETS as one array row (no (url, shingle) explode
-# anywhere).  Shingles are 64-bit xxhash64'd up front: Jaccard over hashed
-# shingles equals Jaccard over strings up to hash collisions (~|S|²/2⁶⁴ per
-# doc pair — negligible), and the set rides through every later stage as a
-# ~1.6 KB array instead of ~200 string rows.  This is what makes the verify
-# stage scale: the old exploded-form verify built a |cand| × |shingles/doc|
-# row intermediate (≈10⁹ rows / ~100 GB shuffle at 100k docs) and OOM'd the
-# box; the array form shuffles |cand| pair rows + one 2-column array table.
-_SHINGLE_SETS_TMPL = """
-SELECT url,
-       array_distinct(transform(
-         sequence(0, size(w) - 3),
-         i -> xxhash64(concat_ws(' ', w[i], w[i+1], w[i+2])))) AS hs
-FROM (SELECT url, split(trim(text), '\\\\s+') AS w FROM {view})
-WHERE size(w) >= 3
-"""
+# The array form of MinHash-LSH near-dup detection, shared by curate and
+# the incremental dedup (incdedup.py); the exploded form, which wins at
+# query scale, is queries.py's _MINHASH_CANDIDATES.  Built from DataFrame
+# expressions, never temp views: curate leaves no view behind over the
+# checkpoints it releases, and inside a foreachBatch handler the batch
+# frame belongs to the microbatch's CLONED session, where a view on it is
+# invisible to the outer session's sql() (which then silently resolves a
+# stale same-named view from an earlier batch).
 
-# 64 MinHash values per doc as a pure array expression over the hashed
-# shingle set — 64 × |hs| JVM-side hash evals in one projection, NO
-# 64-way posexplode and NO (url, seed) shuffle — then 16 bands of 4.
-# ``{sh_view}`` names the shingle-set view; the incremental dedup test
-# runs this template as its from-scratch reference.
-_BANDS_SQL = """
-SELECT url, b.pos AS band_idx,
-       xxhash64(sig[b.pos * 4], sig[b.pos * 4 + 1], sig[b.pos * 4 + 2], sig[b.pos * 4 + 3]) AS band_hash
-FROM (
-  SELECT url,
-         transform(sequence(0, 63),
-                   seed -> array_min(transform(hs, h -> xxhash64(h, seed)))) AS sig
-  FROM {sh_view}
-)
-LATERAL VIEW posexplode(sequence(0, 15)) b AS pos, val
-"""
 
-# Banded candidates as a STAR per bucket (each member links to the bucket's
-# min url), then exact-Jaccard verify on those pairs only via
-# array_intersect over the per-doc hash sets.
-#
-# Star-per-bucket is what keeps candidate volume LINEAR in bucket size: an
-# all-pairs bucket join is quadratic per bucket, and on template-heavy web
-# corpora one hot band bucket (measured: 2,319 docs in the 100k-page bench
-# corpus) concentrates C(2319,2) ≈ 2.7M pairs × two 1.6 KB hash arrays into
-# a single join task — an unsplittable straggler AQE's skew join cannot
-# help with (the skew only exists in the join OUTPUT).  For clustering,
-# star connectivity is equivalent UP TO the verify: x—y inside one bucket
-# are connected iff both (hub,x) and (hub,y) survive the Jaccard gate,
-# rather than iff (x,y) does.  For true near-dup families (the thing hot
-# buckets are made of) hub edges verify; borderline pairs may fragment
-# across clusters — the price of linear candidate volume, and the standard
-# production trade (16 independent bands give 16 independent hubs, so a
-# genuine cluster needs all 16 star edges to fail before it splits).
-#
-# r6: the hub is attached with ONE window pass (min(url) OVER the band
-# bucket) instead of a groupBy + join-back — identical hubs, one shuffle
-# of the band table instead of two full passes (measured 5.1 -> 3.7 s on
-# the hubs+cand portion at 100k docs).
-_VERIFIED_PAIRS_TMPL = """
-WITH cand AS (
-  SELECT DISTINCT hub AS u1, url AS u2
-  FROM (
-    SELECT url, min(url) OVER (PARTITION BY band_idx, band_hash) AS hub
-    FROM curate_bands
-  )
-  WHERE url <> hub
-)
-SELECT u1, u2
-FROM (
-  SELECT c.u1, c.u2,
-         CAST(size(array_intersect(s1.hs, s2.hs)) AS DOUBLE) AS n_common,
-         CAST(size(s1.hs) + size(s2.hs) AS DOUBLE) AS n_total
-  FROM cand c
-  JOIN curate_sh s1 ON s1.url = c.u1
-  JOIN curate_sh s2 ON s2.url = c.u2
-)
-WHERE n_common / (n_total - n_common) >= {threshold}
-"""
+def shingle_sets(docs: DataFrame) -> DataFrame:
+    """(url, hs): each doc's xxhash64'd 3-word shingle SET as one array row,
+    never a (url, shingle) explode.  Jaccard over hashed shingles equals
+    Jaccard over strings up to collisions (~|S|²/2⁶⁴ per pair), and a set
+    is a ~1.6 KB array instead of ~200 string rows: the exploded-form
+    verify built a |cand| × |shingles/doc| intermediate (≈10⁹ rows at 100k
+    docs) and OOM'd the box.  Docs under 3 tokens have no set."""
+    return (
+        docs.select("url", F.split(F.trim("text"), r"\s+").alias("w"))
+        .where(F.size("w") >= 3)
+        .selectExpr(
+            "url",
+            "array_distinct(transform(sequence(0, size(w) - 3),"
+            " i -> xxhash64(concat_ws(' ', w[i], w[i+1], w[i+2])))) AS hs",
+        )
+    )
+
+
+def minhash_bands(sh: DataFrame) -> DataFrame:
+    """(url, band_idx, band_hash): a 64-seed MinHash signature as one array
+    expression (no 64-way explode, no (url, seed) shuffle), 16 bands of 4."""
+    return (
+        sh.selectExpr(
+            "url",
+            "transform(sequence(0, 63),"
+            " seed -> array_min(transform(hs, h -> xxhash64(h, seed)))) AS sig",
+        )
+        .selectExpr("url", "sig", "explode(sequence(0, 15)) AS band_idx")
+        .selectExpr(
+            "url",
+            "band_idx",
+            "xxhash64(sig[band_idx * 4], sig[band_idx * 4 + 1],"
+            " sig[band_idx * 4 + 2], sig[band_idx * 4 + 3]) AS band_hash",
+        )
+    )
+
+
+def jaccard_at_least(hs_a: Column | str, hs_b: Column | str, threshold: float) -> Column:
+    """Exact Jaccard of two shingle sets ≥ ``threshold``."""
+    n_common = F.size(F.array_intersect(hs_a, hs_b)).cast("double")
+    n_total = (F.size(hs_a) + F.size(hs_b)).cast("double")
+    return n_common / (n_total - n_common) >= threshold
+
+
+def _verified_pairs(sh: DataFrame, bands: DataFrame, threshold: float) -> DataFrame:
+    """Banded candidates as a STAR per bucket (each member links to the
+    bucket's min url), exact-Jaccard verified: (u1, u2).
+
+    Star-per-bucket keeps candidate volume LINEAR in bucket size: an
+    all-pairs bucket join is quadratic per bucket, and on template-heavy
+    web corpora one hot band bucket (measured: 2,319 docs in the 100k-page
+    bench corpus) concentrates C(2319,2) ≈ 2.7M pairs × two 1.6 KB hash
+    arrays into one unsplittable join task (the skew only exists in the
+    join OUTPUT, so AQE's skew join cannot help).  For clustering, x—y in
+    one bucket connect iff both (hub,x) and (hub,y) verify, rather than
+    iff (x,y) does.  True near-dup families (what hot buckets are made of)
+    verify through their hubs; borderline pairs may fragment across
+    clusters, the standard production trade (a genuine cluster needs all
+    16 bands' star edges to fail before it splits).
+
+    The hub is attached with ONE window pass (min(url) OVER the bucket),
+    not a groupBy + join-back (r6: 5.1 -> 3.7 s at 100k docs), and the
+    candidate DISTINCT stays BEFORE the verify (deferring it: 3.7 -> 11.7 s)."""
+    hub = F.min("url").over(Window.partitionBy("band_idx", "band_hash"))
+    cand = (
+        bands.select("url", hub.alias("hub"))
+        .where(F.col("url") != F.col("hub"))
+        .select(F.col("hub").alias("u1"), F.col("url").alias("u2"))
+        .distinct()
+    )
+    return (
+        cand.join(sh.alias("s1"), F.col("s1.url") == F.col("u1"))
+        .join(sh.alias("s2"), F.col("s2.url") == F.col("u2"))
+        .where(jaccard_at_least("s1.hs", "s2.hs", threshold))
+        .select("u1", "u2")
+    )
 
 
 def _components(docs: DataFrame, pairs: DataFrame, algorithm: str) -> DataFrame:
@@ -279,21 +289,14 @@ def curate(
             _mark("exact_dedup")
 
             # 2. near-dup clusters → canonical per cluster (longest text, then url)
-            docs.createOrReplaceTempView("curate_docs")
             # materialize the shingle sets and band table once each (both are
             # consumed 2-3 times downstream; without the checkpoint Spark would
             # recompute the 64-hash signature projection per consumer)
-            sh, h = caches.local_checkpoint(
-                spark.sql(_SHINGLE_SETS_TMPL.format(view="curate_docs"))
-            )
+            sh, h = caches.local_checkpoint(shingle_sets(docs))
             ckpt_handles.append(h)
-            sh.createOrReplaceTempView("curate_sh")
             _mark("shingle_sets")
-            bands, h = caches.local_checkpoint(
-                spark.sql(_BANDS_SQL.format(sh_view="curate_sh"))
-            )
+            bands, h = caches.local_checkpoint(minhash_bands(sh))
             ckpt_handles.append(h)
-            bands.createOrReplaceTempView("curate_bands")
             _mark("bands")
             # materialize the verified pairs before the CC loop: the verify join is
             # the funnel's most expensive plan, and leaving it lazy re-plans it
@@ -301,9 +304,7 @@ def curate(
             # measured 3-5x timing instability at 100k docs (AQE re-plans under a
             # different runtime-stats context); checkpointed it is a stable ~9 s
             # stage and the CC rounds join a small materialized edge table.
-            pairs, h = caches.local_checkpoint(
-                spark.sql(_VERIFIED_PAIRS_TMPL.format(threshold=jaccard_threshold))
-            )
+            pairs, h = caches.local_checkpoint(_verified_pairs(sh, bands, jaccard_threshold))
             ckpt_handles.append(h)
             _mark("verified_pairs")
             labels = _components(docs, pairs, components)

@@ -2,12 +2,12 @@
 the per-crawl-batch shape of corpus deduplication.
 
 A 100 TB corpus is not re-deduplicated on every crawl: each new batch of
-pages probes a PERSISTED LSH band index (16 bands × 4 of a 64-perm MinHash
-signature, the same parameters as the curate funnel, `curate.py:36-76`),
-verifies the banded candidates with exact Jaccard over the stored hashed
-shingle sets, and is then appended to the index.  Cost per batch is
-O(batch + collisions) — independent of corpus size except through the
-band-join fan-out, which banding keeps near-linear.
+pages probes a PERSISTED LSH band index (curate.py's array form:
+``shingle_sets`` and ``minhash_bands``, 16 bands × 4 of a 64-perm
+signature), verifies the banded candidates with ``jaccard_at_least`` over
+the stored hashed shingle sets, and is then appended to the index.  Cost
+per batch is O(batch + collisions) — independent of corpus size except
+through the band-join fan-out, which banding keeps near-linear.
 
 Semantics (deliberately simple and chunking-honest): a batch doc is a
 near-dup iff a verified match exists in STRICTLY EARLIER batches; every
@@ -24,13 +24,13 @@ scale both are transactional tables BUCKETED on the join keys
 shuffle-free on the store side; here they are plain appended parquet.
 
 The correctness gate (tests/test_incremental_dedup.py) replays the same
-batches through a from-scratch reference that rebuilds the accumulated
-corpus per step with the identical SQL — so the persisted-store path is
-pinned to introduce no loss or corruption — plus a planted near-copy test
-and a streaming (``sources.drain_files``) ≡ batch-loop equality.
+batches against a from-scratch reference that bands the WHOLE corpus at
+once with the same functions and keeps only strictly-earlier-batch matches —
+so the persisted-store path is pinned to introduce no loss or corruption —
+plus a planted near-copy test and a streaming (``sources.drain_files``) ≡
+batch-loop equality.
 
-No reference analog (lightfeed/extractor has no dedup); parameters and
-star/verify conventions follow `curate.py`.
+No reference analog (lightfeed/extractor has no dedup).
 """
 
 from __future__ import annotations
@@ -41,54 +41,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import caches
+from .curate import jaccard_at_least, minhash_bands, shingle_sets
 from .sources import drain_files, swap_store
 
 BANDS_SUBDIR = "bands"
 SHINGLES_SUBDIR = "shingles"
-
-def batch_shingles_and_bands(
-    spark: SparkSession, docs: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """(shingles, bands) for a batch of (url, text) docs.  Docs under 3
-    tokens yield no shingles and therefore no bands: they can never match
-    and are skipped by the index entirely.
-
-    Built with DataFrame expressions, NOT temp views: inside a
-    foreachBatch handler the batch frame belongs to the microbatch's
-    CLONED session, so a view registered on it is invisible to the outer
-    session's sql() — which then silently resolves a stale same-named view
-    from an earlier batch run (the bug the streaming equality test
-    caught).  The expressions are verbatim from curate.py's templates, and
-    the from-scratch reference test still runs those templates, pinning
-    the two forms equal."""
-    sh = (
-        docs.selectExpr("url", "split(trim(text), '\\\\s+') AS w")
-        .filter("size(w) >= 3")
-        .selectExpr(
-            "url",
-            "array_distinct(transform(sequence(0, size(w) - 3),"
-            " i -> xxhash64(concat_ws(' ', w[i], w[i+1], w[i+2])))) AS hs",
-        )
-    )
-    bands = (
-        sh.selectExpr(
-            "url",
-            "transform(sequence(0, 63),"
-            " seed -> array_min(transform(hs, h -> xxhash64(h, seed)))) AS sig",
-        )
-        .select(
-            F.col("url"),
-            F.col("sig"),
-            F.posexplode(F.expr("sequence(0, 15)")).alias("band_idx", "_v"),
-        )
-        .selectExpr(
-            "url",
-            "band_idx",
-            "xxhash64(sig[band_idx * 4], sig[band_idx * 4 + 1],"
-            " sig[band_idx * 4 + 2], sig[band_idx * 4 + 3]) AS band_hash",
-        )
-    )
-    return sh, bands
 
 
 def _verdicts(
@@ -116,12 +73,10 @@ def _verdicts(
         .select(F.col("b.url").alias("b_url"), F.col("s.url").alias("s_url"))
         .distinct()
     )
-    n_common = F.size(F.array_intersect(F.col("bs.hs"), F.col("ss.hs"))).cast("double")
-    n_total = (F.size(F.col("bs.hs")) + F.size(F.col("ss.hs"))).cast("double")
     matches = (
         cand.join(batch_sh.alias("bs"), F.col("b_url") == F.col("bs.url"))
         .join(store_sh.alias("ss"), F.col("s_url") == F.col("ss.url"))
-        .filter(n_common / (n_total - n_common) >= threshold)
+        .filter(jaccard_at_least("bs.hs", "ss.hs", threshold))
         .groupBy("b_url")
         .agg(F.min("s_url").alias("dup_of"))
     )
@@ -175,9 +130,8 @@ def dedup_batch(
     store_bands = _read_earlier(spark, bands_dir, batch_id)
     store_sh = _read_earlier(spark, sh_dir, batch_id)
 
-    batch_sh, batch_bands = batch_shingles_and_bands(spark, docs)
-    batch_sh = batch_sh.persist()
-    batch_bands = batch_bands.persist()
+    batch_sh = shingle_sets(docs).persist()
+    batch_bands = minhash_bands(batch_sh).persist()
     try:
         # localCheckpoint, NOT persist: writing to a path RECACHES every
         # cached plan that reads it (InsertIntoHadoopFsRelation calls

@@ -1339,8 +1339,11 @@ WHERE rn <= 3
 # fold runs over a *materialized* array (Catalyst would otherwise inline the
 # shingle-construction expression into all 64 permutation lambdas).  The
 # explode→partial-agg shape is the standard distributed MinHash: map-side
-# combine keeps the shuffle proportional to distinct (doc, shingle).
-_MINHASH_CANDIDATES = """
+# combine keeps the shuffle proportional to distinct (doc, shingle).  This
+# is the exploded form of MinHash-LSH; the array form, which wins at curate
+# scale, is curate.py's shingle_sets / minhash_bands.  The band CTEs are
+# shared by the LSH candidates and meta-blocking's weighted block edges.
+_MINHASH_BANDS_CTE = """
 WITH toks AS (
   SELECT doc_id, split(trim(text), '\\\\s+') AS w FROM documents
 ),
@@ -1369,6 +1372,9 @@ bands AS (
   FROM sigs
   LATERAL VIEW posexplode(sequence(0, 15)) b AS pos, val
 )
+"""
+
+_MINHASH_CANDIDATES = _MINHASH_BANDS_CTE + """\
 SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
 FROM bands a JOIN bands b
   ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
@@ -2830,34 +2836,7 @@ ORDER BY t.doc_id
 # then Weighted Node Pruning: an edge survives if its weight reaches the
 # mean edge weight of EITHER endpoint (redistribution variant).  Prunes the
 # low-evidence tail of the candidate set before the expensive verify join.
-_META_EDGES_SQL = """
-WITH toks AS (
-  SELECT doc_id, split(trim(text), '\\\\s+') AS w FROM documents
-),
-sh AS (
-  SELECT DISTINCT doc_id, sh.shingle
-  FROM toks
-  LATERAL VIEW explode(
-    transform(sequence(0, size(w) - 3), i -> concat_ws(' ', w[i], w[i+1], w[i+2]))
-  ) sh AS shingle
-  WHERE size(w) >= 3
-),
-seeded AS (
-  SELECT doc_id, s.seed, min(xxhash64(shingle, s.seed)) AS mh
-  FROM sh LATERAL VIEW posexplode(sequence(0, 63)) s AS seed, sval
-  GROUP BY doc_id, s.seed
-),
-sigs AS (
-  SELECT doc_id,
-         transform(array_sort(collect_list(struct(seed, mh))), x -> x.mh) AS sig
-  FROM seeded GROUP BY doc_id
-),
-bands AS (
-  SELECT doc_id, b.pos AS band_idx,
-         xxhash64(sig[b.pos * 4], sig[b.pos * 4 + 1], sig[b.pos * 4 + 2], sig[b.pos * 4 + 3]) AS band_hash
-  FROM sigs
-  LATERAL VIEW posexplode(sequence(0, 15)) b AS pos, val
-)
+_META_EDGES_SQL = _MINHASH_BANDS_CTE + """\
 SELECT a.doc_id AS d1, b.doc_id AS d2, CAST(count(*) AS BIGINT) AS weight
 FROM bands a JOIN bands b
   ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
@@ -3315,6 +3294,24 @@ def _anchor_text_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _crawled_hosts(spark: SparkSession):
+    """The synth crawl's pages, its sorted hosts, and per host the first 8
+    crawled urls in url order — the known urls the frontier queries embed
+    into their synth discovery inputs."""
+    from pyspark.sql import functions as F
+
+    pages = _webgraph_pages(spark)
+    hp = pages.select(
+        F.lower(F.parse_url("url", F.lit("HOST"))).alias("host"), "url"
+    ).collect()
+    known: dict = {}
+    for h, u in sorted((r["host"], r["url"]) for r in hp):
+        urls = known.setdefault(h, [])
+        if len(urls) < 8:
+            urls.append(u)
+    return pages, sorted(known), known
+
+
 def _sitemap_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Crawl-frontier construction over the synth crawl: tolerant sitemap
     parsing (engine/sitemap.py — sitemaps.org spec, the discovery half of
@@ -3324,24 +3321,10 @@ def _sitemap_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     sitemaps so the anti-join provably removes rows.  Rows-only; gates in
     tests/test_sitemap_frontier.py (xml.etree parser twin, set-algebra
     frontier twin, tolerance cases)."""
-    from pyspark.sql import functions as F
-
     from .frontier import build_frontier, synth_sitemaps_df
     from .robots import synth_robots_df
 
-    pages = _webgraph_pages(spark)
-    hp = [
-        (r["host"], r["url"])
-        for r in pages.select(
-            F.lower(F.parse_url("url", F.lit("HOST"))).alias("host"), "url"
-        ).collect()
-    ]
-    hosts = sorted({h for h, _ in hp})
-    known: dict = {}
-    for h, u in sorted(hp):
-        known.setdefault(h, [])
-        if len(known[h]) < 8:
-            known[h].append(u)
+    pages, hosts, known = _crawled_hosts(spark)
     sitemaps = synth_sitemaps_df(spark, hosts, known=known)
     robots = synth_robots_df(spark, hosts)
     return build_frontier(sitemaps, pages, robots, agent="extractor-spark")
@@ -3358,24 +3341,10 @@ def _feed_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedded into the synth feeds so the anti-join provably removes rows.
     Rows-only; gates in tests/test_feed_frontier.py (xml.etree parser
     twin, set-algebra frontier twin, tolerance + date cases)."""
-    from pyspark.sql import functions as F
-
     from .frontier import build_feed_frontier, synth_feeds_df
     from .robots import synth_robots_df
 
-    pages = _webgraph_pages(spark)
-    hp = [
-        (r["host"], r["url"])
-        for r in pages.select(
-            F.lower(F.parse_url("url", F.lit("HOST"))).alias("host"), "url"
-        ).collect()
-    ]
-    hosts = sorted({h for h, _ in hp})
-    known: dict = {}
-    for h, u in sorted(hp):
-        known.setdefault(h, [])
-        if len(known[h]) < 8:
-            known[h].append(u)
+    pages, hosts, known = _crawled_hosts(spark)
     feeds = synth_feeds_df(spark, hosts, known=known)
     robots = synth_robots_df(spark, hosts)
     return build_feed_frontier(feeds, pages, robots, agent="extractor-spark")

@@ -223,116 +223,6 @@ def stream_user_sessions(
     )
 
 
-def tws_available() -> bool:
-    """transformWithStateInPandas needs protobuf for its state-server
-    protocol; this container ships pyspark without it.  Gate, don't crash
-    (verified live: the Python runner dies with
-    ``ImportError: google.protobuf`` otherwise)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def stream_user_sessions_tws(
-    spark: SparkSession,
-    events_dir: str,
-    emit_open_tails: bool = True,
-    watermark: str = "30 minutes",
-    max_files_per_trigger: int | None = None,
-):
-    """The same 30-minute-gap sessionization on Spark 4's
-    ``transformWithStateInPandas`` (StatefulProcessor + ValueState +
-    event-time TIMERS) — the successor API to applyInPandasWithState.
-    Idle sessions are finalized by a registered timer when the watermark
-    passes end + gap; semantics match ``stream_user_sessions``.
-
-    Requires protobuf on cluster Python images (``tws_available()``);
-    the parity test is skip-gated in this sandbox and the
-    applyInPandasWithState implementation above is the tested default."""
-    if not tws_available():
-        raise NotImplementedError(
-            "transformWithStateInPandas requires the protobuf package on the "
-            "cluster Python image; use stream_user_sessions (applyInPandasWithState) here"
-        )
-    import pandas as pd
-
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    gap_us = SESSION_GAP_US
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._session = handle.getValueState(
-                "session", "start_us long, end_us long, n long"
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            (user_id,) = key
-            if self._session.exists():
-                start_us, end_us, n = self._session.get()
-                # the close timer moves as the session extends
-                self._handle.deleteTimer(end_us // 1000 + gap_us // 1000)
-            else:
-                start_us = end_us = None
-                n = 0
-
-            out = []
-            for pdf in rows:
-                for t in sorted(int(v) for v in pdf["ts_us"]):
-                    if start_us is None:
-                        start_us, end_us, n = t, t, 1
-                    elif t - end_us > gap_us:
-                        out.append((user_id, start_us, end_us, n, True))
-                        start_us, end_us, n = t, t, 1
-                    else:
-                        end_us = max(end_us, t)
-                        n += 1
-
-            if start_us is not None:
-                self._session.update((start_us, end_us, n))
-                self._handle.registerTimer(end_us // 1000 + gap_us // 1000)
-                if emit_open_tails:
-                    out.append((user_id, start_us, end_us, n, False))
-            yield pd.DataFrame(out, columns=_SESSION_COLS)
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            (user_id,) = key
-            if self._session.exists():
-                start_us, end_us, n = self._session.get()
-                self._session.clear()
-                yield pd.DataFrame(
-                    [(user_id, start_us, end_us, n, True)], columns=_SESSION_COLS
-                )
-            else:
-                yield pd.DataFrame([], columns=_SESSION_COLS)
-
-        def close(self) -> None:
-            pass
-
-    reader = spark.readStream.schema(EVENTS_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    events = (
-        reader.parquet(events_dir)
-        .select(
-            F.col("ts").cast("timestamp").alias("ts"),
-            "user_id",
-            F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        )
-        .withWatermark("ts", watermark)
-    )
-    return events.groupBy("user_id").transformWithStateInPandas(
-        SessionProcessor(),
-        outputStructType=SESSION_OUTPUT_SCHEMA,
-        outputMode="Append",
-        timeMode="EventTime",
-    )
-
-
 def stream_convert_pages(
     spark: SparkSession,
     pages_dir: str,

@@ -67,7 +67,9 @@ def write_batch(
         postings.withColumn("bucket", _bucket())
         .withColumn("batch", batch)
         .repartition(n_partitions, "bucket")
-        .sortWithinPartitions(*sort_cols)
+        # led by the partition columns: the writer sorts by them unless the
+        # input already is, and its sort would not keep the term order
+        .sortWithinPartitions("bucket", "batch", *sort_cols)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", ow)
         .partitionBy("bucket", "batch")

@@ -37,7 +37,13 @@ def test_curate_funnel(spark, tmp_path):
     spark.createDataFrame(pd.DataFrame(_docs())).write.parquet(inp)
     out = str(tmp_path / "curated")
 
+    def tables():
+        return sorted(t.name for t in spark.catalog.listTables())
+
+    before = tables()
     stats = curate(spark, inp, out, min_tokens=10, max_dup_permille=300)
+    # no temp view left behind over the checkpoints curate has released
+    assert tables() == before
     assert stats["input_docs"] == 7
     assert stats["after_exact_dedup"] == 6          # a-copy gone
     assert stats["after_neardup_dedup"] == 4        # {a, a-near, a-long} -> a-long

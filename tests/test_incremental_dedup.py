@@ -2,8 +2,10 @@
 
 1. From-scratch reference equality — the persisted-store replay is pinned
    against an independent one-shot computation that builds bands for the
-   WHOLE corpus at once and takes only strictly-earlier-batch verified
-   matches (no store, no incremental code, just the SQL templates).
+   WHOLE corpus at once with the shared functions (curate.py's
+   shingle_sets / minhash_bands) and takes only strictly-earlier-batch
+   verified matches in its own candidate + verify SQL (no store, no
+   incremental code).
 2. Planted near-copy: a batch-2 doc that is a near-copy of a batch-1 doc
    is flagged with the right attribution; a fresh doc is not.
 3. Streaming (foreachBatch availableNow) ≡ the batch loop on the same
@@ -54,7 +56,7 @@ def _run_incremental(spark, docs, n_batches=3, threshold=0.8):
 
 
 def test_incremental_matches_from_scratch_reference(spark):
-    from extractor_spark.spark.curate import _BANDS_SQL, _SHINGLE_SETS_TMPL
+    from extractor_spark.spark.curate import minhash_bands, shingle_sets
 
     docs = _corpus(spark)
     got = _run_incremental(spark, docs)
@@ -63,12 +65,9 @@ def test_incremental_matches_from_scratch_reference(spark):
     # collisions where the matched side sits in a STRICTLY EARLIER batch,
     # exact-Jaccard verify, min earlier url as attribution
     docs.createOrReplaceTempView("ref_docs")
-    spark.sql(_SHINGLE_SETS_TMPL.format(view="ref_docs")).createOrReplaceTempView(
-        "ref_sh"
-    )
-    spark.sql(_BANDS_SQL.format(sh_view="ref_sh")).createOrReplaceTempView(
-        "ref_bands"
-    )
+    sh = shingle_sets(docs)
+    sh.createOrReplaceTempView("ref_sh")
+    minhash_bands(sh).createOrReplaceTempView("ref_bands")
     expected_matches = {
         r["url"]: r["dup_of"]
         for r in spark.sql(

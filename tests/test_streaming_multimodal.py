@@ -351,49 +351,6 @@ def test_jsonl_sink(spark, tmp_path):
     assert all(l["markdown"] for l in lines)
 
 
-def test_tws_sessionizer_gated_or_parity(spark, tmp_path):
-    """transformWithStateInPandas sessionizer: full batch-parity when the
-    env has protobuf (cluster images); a clear NotImplementedError here
-    (this container ships pyspark without protobuf — the state-server
-    protocol needs it)."""
-    import shutil
-
-    from extractor_spark.spark.streaming import stream_user_sessions_tws, tws_available
-
-    events_dir = tmp_path / "events"
-    events_dir.mkdir()
-    shutil.copy("/root/testdata/sf0.001/events.parquet", str(events_dir / "e.parquet"))
-
-    if not tws_available():
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            stream_user_sessions_tws(spark, str(events_dir))
-        return
-
-    from extractor_spark.spark.queries import QUERIES
-
-    q = (
-        stream_user_sessions_tws(spark, str(events_dir))
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("tws_out")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    streamed = {
-        (r["user_id"], r["session_start_us"], r["session_end_us"], r["n_events"])
-        for r in spark.sql("SELECT * FROM tws_out").collect()
-    }
-    batch_fn, _ = QUERIES["user_sessions"]
-    batch = {
-        (r["user_id"], r["session_start_us"], r["session_end_us"], r["n_events"])
-        for r in batch_fn(spark, "/root/testdata/sf0.001").collect()
-    }
-    assert streamed == batch
-
-
 def test_stream_dedup_within_watermark(spark, tmp_path):
     """dropDuplicatesWithinWatermark must emit each event_id once across
     micro-batches whose duplicates fall inside the watermark horizon, and

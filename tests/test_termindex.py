@@ -1,7 +1,8 @@
 """Gates for the term-index store both stored indexes share
-(spark/termindex.py), run once per index: an empty append leaves serving
-unchanged, a stream restarted over its checkpoint reuses the pinned batch
-offset, and a fresh-checkpoint stream lands past every existing batch."""
+(spark/termindex.py), run once per index: every bucket file is in sort-key
+order, an empty append leaves serving unchanged, a stream restarted over
+its checkpoint reuses the pinned batch offset, and a fresh-checkpoint
+stream lands past every existing batch."""
 
 from __future__ import annotations
 
@@ -76,6 +77,7 @@ INDEXES = [
     pytest.param(
         SimpleNamespace(
             build=phraseindex.build_phrase_index,
+            sort_cols=phraseindex._SORT,
             append=phraseindex.append_phrase_index,
             stream=phraseindex.streaming_phrase_index,
             serve=_serve_phrase,
@@ -87,6 +89,7 @@ INDEXES = [
     pytest.param(
         SimpleNamespace(
             build=bm25index.build_bm25_index,
+            sort_cols=bm25index._SORT,
             append=bm25index.append_bm25_index,
             stream=bm25index.streaming_index_docs,
             serve=_serve_bm25,
@@ -115,6 +118,24 @@ def _assert_serves_like_scratch_build(spark, docs, tmp_path, ix, idx):
     scratch = str(tmp_path / "scratch")
     ix.build(docs, scratch)
     ix.same(ix.serve(spark, idx, docs), ix.serve(spark, scratch, docs))
+
+
+@pytest.mark.parametrize("ix", INDEXES)
+def test_bucket_files_in_sort_key_order(docs, tmp_path, ix):
+    """Rows inside every written bucket file are in the index's sort-key
+    order — the order its row-group min/max pruning relies on — and not
+    just grouped by the (bucket, batch) partition columns."""
+    import pyarrow.parquet as pq
+
+    idx = str(tmp_path / "idx")
+    ix.build(docs, idx)
+    files = glob.glob(os.path.join(idx, "bucket=*", "batch=*", "*.parquet"))
+    assert files
+    cols = list(ix.sort_cols)
+    for f in files:
+        t = pq.ParquetFile(f).read(columns=cols)
+        keys = list(zip(*(t.column(c).to_pylist() for c in cols)))
+        assert keys == sorted(keys), f
 
 
 @pytest.mark.parametrize("ix", INDEXES)
