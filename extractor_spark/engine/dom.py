@@ -415,16 +415,13 @@ class _TreeBuilder(HTMLParser):
 
 # The one-shot tokenizer (engine/tokenizer.py) is behaviorally equivalent to
 # feeding HTMLParser the whole document (equivalence fuzz-tested), ~1.5×
-# faster, and crash-free on malformed marked sections.  The stdlib path is
-# kept for the equivalence tests themselves.
-USE_FAST_TOKENIZER = True
-
-
-def parse_document(html: str, fast: bool | None = None) -> _TreeBuilder:
+# faster, and crash-free on malformed marked sections.  The stdlib path
+# (fast=False) is kept for the equivalence tests themselves.
+def parse_document(html: str, fast: bool = True) -> _TreeBuilder:
     """Parse a full document (implied html/head/body). Returns the builder,
     exposing ``.html``, ``.head``, ``.body``."""
     builder = _TreeBuilder(fragment=False)
-    if USE_FAST_TOKENIZER if fast is None else fast:
+    if fast:
         from extractor_spark.engine.tokenizer import tokenize
 
         tokenize(html, builder)
@@ -434,10 +431,10 @@ def parse_document(html: str, fast: bool | None = None) -> _TreeBuilder:
     return builder
 
 
-def parse_fragment(html: str, fast: bool | None = None) -> Element:
+def parse_fragment(html: str, fast: bool = True) -> Element:
     """Parse markup in body context under a detached ``#root`` element."""
     builder = _TreeBuilder(fragment=True)
-    if USE_FAST_TOKENIZER if fast is None else fast:
+    if fast:
         from extractor_spark.engine.tokenizer import tokenize
 
         tokenize(html, builder)

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import caches
+from .graph import min_label_components
 
 # The array form of MinHash-LSH near-dup detection, shared by curate and
 # the incremental dedup (incdedup.py); the exploded form, which wins at
@@ -114,19 +115,6 @@ def _verified_pairs(sh: DataFrame, bands: DataFrame, threshold: float) -> DataFr
     )
 
 
-def _components(docs: DataFrame, pairs: DataFrame, algorithm: str) -> DataFrame:
-    """Connected components over (u1, u2) pairs; returns (url, cluster_id)
-    via the shared graph helpers (url strings — min() orders
-    lexicographically).  ``minlabel`` converges in rounds ∝ cluster
-    diameter (near-dup clusters are quasi-cliques: 2-4 rounds);
-    ``star`` (alternating large/small-star) is the O(log diameter)
-    variant for corpora with long near-dup chains."""
-    from extractor_spark.spark.graph import min_label_components, star_components
-
-    algo = {"minlabel": min_label_components, "star": star_components}[algorithm]
-    return algo(docs, pairs.selectExpr("u1 AS src", "u2 AS dst"), "url")
-
-
 def assign_packs(
     spark: SparkSession,
     docs: DataFrame,
@@ -189,7 +177,6 @@ def curate(
     min_tokens: int = 10,
     max_dup_permille: int = 300,
     jaccard_threshold: float = 0.8,
-    components: str = "minlabel",
     pack_budget: int | None = None,
     blocklist_domains: str | None = None,
     blocklist_urls: str | None = None,
@@ -307,7 +294,11 @@ def curate(
             pairs, h = caches.local_checkpoint(_verified_pairs(sh, bands, jaccard_threshold))
             ckpt_handles.append(h)
             _mark("verified_pairs")
-            labels = _components(docs, pairs, components)
+            # url strings — min() orders lexicographically; near-dup clusters
+            # are quasi-cliques, so min-label converges in 2-4 rounds
+            labels = min_label_components(
+                docs, pairs.selectExpr("u1 AS src", "u2 AS dst"), "url"
+            )
             # r6 canonical pick: decide on LIGHT rows, attach once (guide §8).
             # The old form joined the full (url, markdown, text) payload to the
             # labels and ran the cluster window over it — two payload shuffles for

@@ -33,6 +33,35 @@ from pyspark.sql import functions as F
 CENTROIDS_FILE = "_ivf_centroids.json"
 
 
+def nearest_cells(embeddings, centroids):
+    """Decode a batch's embedding column into the float64 matrix ``x`` and
+    return ``(x, cell)``: each row's nearest of the L2-normalized k×d
+    ``centroids`` by cosine, one numpy GEMM for the batch."""
+    import numpy as np
+
+    x = np.array([np.asarray(v, dtype=np.float64) for v in embeddings])
+    xn = x / np.linalg.norm(x, axis=1, keepdims=True)
+    return x, (xn @ centroids.T).argmax(axis=1)
+
+
+def assign_cells(emb: DataFrame, centroids) -> DataFrame:
+    """(vec_id, cell) for every row of ``emb`` (columns vec_id, embedding):
+    nearest-centroid assignment per Arrow batch (``nearest_cells``)."""
+
+    def assign(batches, c=centroids):
+        import pandas as pd
+
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            cell = nearest_cells(pdf["embedding"], c)[1].astype("int32")
+            yield pd.DataFrame({"vec_id": pdf["vec_id"], "cell": cell})
+
+    return emb.select("vec_id", "embedding").mapInPandas(
+        assign, schema="vec_id bigint, cell int"
+    )
+
+
 def train_centroids(
     emb: DataFrame,
     k: int = 16,
@@ -68,11 +97,7 @@ def train_centroids(
                 for pdf in batches:
                     if not len(pdf):
                         continue
-                    x = np.array(
-                        [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-                    )
-                    xn = x / np.linalg.norm(x, axis=1, keepdims=True)
-                    cell = (xn @ c.T).argmax(axis=1)
+                    x, cell = nearest_cells(pdf["embedding"], c)
                     rows = []
                     for g in np.unique(cell):
                         grp = x[cell == g]
@@ -104,22 +129,15 @@ def build_index(
 ) -> dict:
     """Train, assign, and write ``emb`` (columns vec_id, embedding) to
     ``out_path`` partitioned by cell; returns {'cells': n, 'rows': n}."""
-    import numpy as np
-
     centroids = train_centroids(emb, k, iters, seed, train_fraction)
     c = centroids
 
     def assign(batches, c=c):
-        import numpy as np
-        import pandas as pd
-
         for pdf in batches:
             if not len(pdf):
                 continue
-            x = np.array([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-            xn = x / np.linalg.norm(x, axis=1, keepdims=True)
             pdf = pdf.copy()
-            pdf["cell"] = (xn @ c.T).argmax(axis=1).astype("int32")
+            pdf["cell"] = nearest_cells(pdf["embedding"], c)[1].astype("int32")
             yield pdf
 
     from pyspark.sql import types as T

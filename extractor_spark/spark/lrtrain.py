@@ -1,13 +1,11 @@
-"""Distributed logistic-regression TRAINING for quality classifiers
-(hashed bag-of-ngrams features — the trainable half of the fastText-style
-filter whose inference shape is the ``fasttext_quality_score`` query).
+"""Logistic-regression TRAINING for quality classifiers (hashed
+bag-of-ngrams features — the trainable half of the fastText-style filter
+whose inference shape is the ``fasttext_quality_score`` query).
 
 Public algorithm: full-batch gradient descent on L2-regularized logistic
-loss (standard texts; the distributed shape is the classic Spark MLlib
-one — per-partition gradient partials tree-aggregated to a model-sized
-vector).  Weak labels for the demo come from the corpus itself
-(lang == 'en' — the CCNet/LLaMA-filter setup where a seed corpus plays
-"positive"); swapping in curated labels is a one-column change.
+loss (standard texts).  Weak labels for the demo come from the corpus
+itself (lang == 'en' — the CCNet/LLaMA-filter setup where a seed corpus
+plays "positive"); swapping in curated labels is a one-column change.
 
 Scale shape (what survives 100 TB):
 - Training input is BOUNDED (round 5): a deterministic seeded sample of
@@ -17,18 +15,12 @@ Scale shape (what survives 100 TB):
   and only SCORE the corpus; 20 full-corpus passes to fit a
   4,097-parameter model is the wrong plan at scale.  The full corpus is
   touched exactly once, by the scoring pass with the broadcast model.
-- Features for the training sample are extracted ONCE — explode
-  unigram+bigram grams, JVM Murmur3 bucket into D buckets, groupBy
-  (doc_id, bucket) with map-side combine, L2-normalized per doc
-  (provable-step conditioning, see doc_features) — and PERSISTED; every
-  epoch reuses the same materialized feature table.
-- Per epoch the corpus is touched exactly twice: (1) margins = features
-  ⋈ broadcast(weights) → per-doc sum (map-side combined); (2) gradient =
-  features ⋈ doc-residuals → per-BUCKET sum.  Only D+1 numbers (the
-  gradient) plus one loss scalar ever reach the driver per epoch — the
-  model is driver-resident, like the IVF centroids and PCA moments.
-- Nothing broadcast grows with the corpus: weights are D rows; residuals
-  stay distributed.
+- Spark extracts the sample's features ONCE — explode unigram+bigram
+  grams, JVM Murmur3 bucket into D buckets, groupBy (doc_id, bucket) with
+  map-side combine, L2-normalized per doc (provable-step conditioning,
+  see doc_features) — and the driver collects them; the GD epochs run in
+  numpy on the driver (train_quality_lr_local).
+- Nothing broadcast grows with the corpus: weights are D rows.
 
 Gates (tests/test_lr_train.py): numpy same-iterate twin (identical
 features, epochs, lr — weights within 1e-6, probabilities within ±1
@@ -38,16 +30,32 @@ broadcast + no-corpus-collect plan shape.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _D_DEFAULT = 4096
 
 
+def word_grams(w: Column) -> Column:
+    """The words of the array ``w`` followed by its space-joined bigrams:
+    the gram stream of the hashed bag-of-ngrams models (``doc_features``,
+    ``dsir_importance``, ``fasttext_quality_score``)."""
+    # both slices are exactly size-1 long: zip_with otherwise null-pads the
+    # shorter side and concat_ws would leak the doc's last word in again as
+    # a duplicate unigram
+    n = F.greatest(F.size(w) - 1, F.lit(0))
+    return F.concat(
+        w,
+        F.zip_with(
+            F.slice(w, 1, n), F.slice(w, 2, n), lambda a, b: F.concat_ws(" ", a, b)
+        ),
+    )
+
+
 def doc_features(docs: DataFrame, D: int = _D_DEFAULT) -> DataFrame:
     """(doc_id, label, bucket, x) hashed-ngram features, L2-normalized
     per doc.  Same gram/bucket construction as fasttext_quality_score
-    (unigram + space-joined bigram, JVM Murmur3 via F.hash)."""
+    (``word_grams``, JVM Murmur3 via F.hash)."""
     toks = docs.select(
         "doc_id",
         (F.col("lang") == "en").cast("double").alias("label"),
@@ -56,18 +64,7 @@ def doc_features(docs: DataFrame, D: int = _D_DEFAULT) -> DataFrame:
         ),
     ).filter(F.size("w") > 0)
     grams = toks.select(
-        "doc_id",
-        "label",
-        F.explode(
-            F.concat(
-                F.col("w"),
-                F.zip_with(
-                    F.slice(F.col("w"), 1, F.greatest(F.size("w") - 1, F.lit(0))),
-                    F.slice(F.col("w"), 2, F.greatest(F.size("w") - 1, F.lit(0))),
-                    lambda a, b: F.concat_ws(" ", a, b),
-                ),
-            )
-        ).alias("feat"),
+        "doc_id", "label", F.explode(word_grams(F.col("w"))).alias("feat")
     )
     counts = grams.groupBy(
         "doc_id", "label", F.pmod(F.hash("feat"), F.lit(D)).cast("int").alias("bucket")
@@ -108,79 +105,6 @@ def training_sample(docs: DataFrame, cap: int, seed: int = 42) -> DataFrame:
     return docs.join(F.broadcast(ids), "doc_id")
 
 
-def train_quality_lr(
-    docs: DataFrame,
-    D: int = _D_DEFAULT,
-    epochs: int = 20,
-    lr: float = 2.0,
-    l2: float = 1e-5,
-    train_cap: int | None = _TRAIN_CAP_DEFAULT,
-    seed: int = 42,
-):
-    """Returns (weights: list[float] of len D, bias: float,
-    losses: list[float] per epoch, features: persisted DataFrame —
-    the TRAINING SAMPLE's features, ≤ train_cap docs).
-
-    Caller must unpersist the returned features frame when done."""
-    import numpy as np
-
-    spark = docs.sparkSession
-    if train_cap is not None:
-        docs = training_sample(docs, train_cap, seed)
-    feats = doc_features(docs, D).persist()
-    n_docs = feats.select("doc_id").distinct().count()
-
-    w = np.zeros(D)
-    b = 0.0
-    losses: list[float] = []
-    for _ in range(epochs):
-        wdf = F.broadcast(
-            spark.createDataFrame(
-                [(i, float(w[i])) for i in range(D)], "bucket int, wt double"
-            )
-        )
-        margins = (
-            feats.join(wdf, "bucket")
-            .groupBy("doc_id", "label")
-            .agg((F.sum(F.col("x") * F.col("wt")) + F.lit(b)).alias("m"))
-        )
-        resid = margins.select(
-            "doc_id",
-            (F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("m"))) - F.col("label")).alias(
-                "r"
-            ),
-            # numerically-stable logloss: log(1+e^-|m|) + max(m,0) - y*m
-            (
-                F.log(F.lit(1.0) + F.exp(-F.abs(F.col("m"))))
-                + F.greatest(F.col("m"), F.lit(0.0))
-                - F.col("label") * F.col("m")
-            ).alias("ll"),
-        )
-        # resid feeds two actions (bucket gradients + loss/intercept):
-        # persist the doc-sized table for the epoch so the broadcast-join
-        # + per-doc agg behind it runs once, not twice
-        resid = resid.persist()
-        # one doc-sized shuffle: residuals meet the feature table on doc_id
-        gradients = (
-            feats.join(resid, "doc_id")
-            .groupBy("bucket")
-            .agg(F.sum(F.col("x") * F.col("r")).alias("g"))
-            .collect()
-        )
-        scal = resid.agg(
-            F.sum("r").alias("g0"), F.avg("ll").alias("loss")
-        ).first()
-        resid.unpersist()
-        g = np.zeros(D)
-        for row in gradients:
-            g[row["bucket"]] = row["g"]
-        loss = float(scal["loss"]) + 0.5 * l2 * float(np.dot(w, w))
-        losses.append(loss)
-        w = w * (1.0 - lr * l2) - lr * g / n_docs
-        b -= lr * float(scal["g0"]) / n_docs
-    return w, b, losses, feats
-
-
 def train_quality_lr_local(
     docs: DataFrame,
     D: int = _D_DEFAULT,
@@ -194,11 +118,8 @@ def train_quality_lr_local(
     bounded pass — ≤ train_cap docs, corpus-size-independent), the GD
     epochs run in numpy on the driver.  This is the production shape for
     a 4,097-parameter model (fastText/CCNet fit on a bounded sample on
-    one node); the distributed ``train_quality_lr`` is the scale path for
-    samples too big to collect, and
-    tests/test_lr_train.py::test_local_trainer_matches_distributed pins
-    the two trainers equal to 1e-6 — per-epoch Spark-job overhead (~40
-    AQE-decomposed actions for 20 epochs) is pure waste below that size.
+    one node); a Spark job per epoch (~40 AQE-decomposed actions for 20
+    epochs) would be pure overhead at this size.
 
     Returns (weights ndarray[D], bias, losses per epoch, n_train_docs).
     Driver traffic is the sample's sparse features (≤ cap × ~hundreds of
@@ -239,27 +160,17 @@ def lr_quality_scores_df(
     docs: DataFrame,
     D: int = _D_DEFAULT,
     epochs: int = 20,
-    train_cap: int | None = _TRAIN_CAP_DEFAULT,
-    distributed_training: bool = False,
+    train_cap: int = _TRAIN_CAP_DEFAULT,
 ) -> DataFrame:
-    """Train on a bounded seeded sample (driver-local numpy by default —
-    see train_quality_lr_local; pass distributed_training=True for the
-    Spark GD scale path), then score EVERY doc with the broadcast model:
-    (doc_id, label, prob_milli, keep).  Scoring is one streaming pass
-    over the full corpus (features re-derived inline — single consumer,
-    nothing corpus-sized persisted or collected)."""
-    from . import caches
-
+    """Train on a bounded seeded sample (``train_quality_lr_local``), then
+    score EVERY doc with the broadcast model: (doc_id, label, prob_milli,
+    keep).  Scoring is one streaming pass over the full corpus (features
+    re-derived inline — single consumer, nothing corpus-sized persisted
+    or collected)."""
     spark = docs.sparkSession
-    if distributed_training:
-        w, b, _losses, feats = train_quality_lr(
-            docs, D=D, epochs=epochs, train_cap=train_cap
-        )
-        caches.register(feats)
-    else:
-        w, b, _losses, _n = train_quality_lr_local(
-            docs, D=D, epochs=epochs, train_cap=train_cap or _TRAIN_CAP_DEFAULT
-        )
+    w, b, _losses, _n = train_quality_lr_local(
+        docs, D=D, epochs=epochs, train_cap=train_cap
+    )
     wdf = F.broadcast(
         spark.createDataFrame(
             [(i, float(w[i])) for i in range(D)], "bucket int, wt double"

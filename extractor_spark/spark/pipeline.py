@@ -317,9 +317,12 @@ def run_pipeline(spark: SparkSession, conf: PipelineConfig) -> dict:
     )
 
     waves = max(1, conf.waves)
+    done = {r["bucket"] for r in prior}
     wave_seconds: list[float] = []
     committed: list = []  # this run's manifest rows, one per bucket
     for wave in range(waves):
+        if done.issuperset(range(wave, conf.n_buckets, waves)):
+            continue  # every bucket of this wave is committed: nothing to scan
         pages = (
             pages_all
             if waves == 1

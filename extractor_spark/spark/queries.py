@@ -1920,31 +1920,10 @@ def _ivf_centroids(spark: SparkSession) -> "object":
     )
 
 
-def _ivf_assign_cells(spark: SparkSession, centroids) -> DataFrame:
-    """(vec_id, cell) for every embedding: nearest-centroid assignment as
-    one numpy GEMM per Arrow batch (shared by ivf_topk and semantic_dedup)."""
-    c = centroids
-
-    def assign(batches, c=c):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.array([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-            xn = x / np.linalg.norm(x, axis=1, keepdims=True)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "cell": (xn @ c.T).argmax(axis=1).astype("int32")}
-            )
-
-    return spark.table("embeddings").select("vec_id", "embedding").mapInPandas(
-        assign, schema="vec_id bigint, cell int"
-    )
-
-
 def _ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
+
+    from extractor_spark.spark.ivf import assign_cells
 
     _views(spark, sf_dir)
     centroids = _ivf_centroids(spark)
@@ -1954,7 +1933,7 @@ def _ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qn = q / np.linalg.norm(q)
     probe_cells = np.argsort(-(centroids @ qn))[:_IVF_NPROBE].tolist()
 
-    cells = _ivf_assign_cells(spark, centroids)
+    cells = assign_cells(spark.table("embeddings"), centroids)
     cells.createOrReplaceTempView("ivf_cells")
     q_lit = "array(" + ", ".join(f"{v}D" for v in q.tolist()) + ")"
     return spark.sql(f"""
@@ -2059,10 +2038,13 @@ def _semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from extractor_spark.spark.graph import min_label_components
+    from extractor_spark.spark.ivf import assign_cells
 
     _views(spark, sf_dir)
     centroids = _ivf_centroids(spark)
-    cells, h = caches.local_checkpoint(_ivf_assign_cells(spark, centroids))
+    cells, h = caches.local_checkpoint(
+        assign_cells(spark.table("embeddings"), centroids)
+    )
     cells.createOrReplaceTempView("ivf_cells")
     caches.register(h)
 
@@ -2901,6 +2883,8 @@ def _dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
+    from .lrtrain import word_grams
+
     _views(spark, sf_dir)
     B = 4096
     docs = spark.table("documents").filter(
@@ -2912,21 +2896,7 @@ def _dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("w"),
     )
     grams = words.select(
-        "doc_id",
-        "is_target",
-        F.explode(
-            F.concat(
-                F.col("w"),
-                # both slices are exactly size-1 long: zip_with otherwise
-                # null-pads the shorter side and concat_ws would leak the
-                # doc's last word in again as a duplicate unigram
-                F.zip_with(
-                    F.slice(F.col("w"), 1, F.greatest(F.size("w") - 1, F.lit(0))),
-                    F.slice(F.col("w"), 2, F.greatest(F.size("w") - 1, F.lit(0))),
-                    lambda a, b: F.concat_ws(" ", a, b),
-                ),
-            )
-        ).alias("gram"),
+        "doc_id", "is_target", F.explode(word_grams(F.col("w"))).alias("gram")
     ).filter(F.col("gram") != "")
     bucketed = grams.select(
         "doc_id",
@@ -2991,6 +2961,8 @@ def _fasttext_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
+    from .lrtrain import word_grams
+
     _views(spark, sf_dir)
     D = _FT_DIM
     weights = spark.range(D).select(
@@ -3011,19 +2983,7 @@ def _fasttext_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             "w"
         ),
     )
-    feats = toks.select(
-        "doc_id",
-        F.explode(
-            F.concat(
-                F.col("w"),
-                F.zip_with(
-                    F.slice(F.col("w"), 1, F.greatest(F.size("w") - 1, F.lit(0))),
-                    F.slice(F.col("w"), 2, F.greatest(F.size("w") - 1, F.lit(0))),
-                    lambda a, b: F.concat_ws(" ", a, b),
-                ),
-            )
-        ).alias("feat"),
-    )
+    feats = toks.select("doc_id", F.explode(word_grams(F.col("w"))).alias("feat"))
     bucketed = feats.select(
         "doc_id", F.pmod(F.hash("feat"), F.lit(D)).cast("int").alias("bucket")
     )
@@ -3382,15 +3342,15 @@ def _crawl_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lr_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed logistic-regression TRAINING over hashed n-gram
-    features (full-batch GD on a bounded seeded sample — ≤10k docs by
-    default, the fastText/CCNet "fit on a sample" shape — per-epoch
-    gradient tree-aggregated to a D-sized driver vector, spark/lrtrain.py),
-    then ONE broadcast-model scoring pass over the full corpus: the
-    trainable half of the fastText-style quality filter (weak labels:
-    lang == 'en').  Rows-only: iterative float training has no SQL twin;
-    gates in tests/test_lr_train.py (numpy same-iterate twin ±1 milli,
-    strictly-decreasing loss, class separation, sample cap/determinism)."""
+    """Logistic-regression TRAINING over hashed n-gram features
+    (full-batch GD in numpy on the driver over the features of a bounded
+    seeded sample — ≤10k docs, the fastText/CCNet "fit on a sample"
+    shape, spark/lrtrain.py), then ONE broadcast-model scoring pass over
+    the full corpus: the trainable half of the fastText-style quality
+    filter (weak labels: lang == 'en').  Rows-only: iterative float
+    training has no SQL twin; gates in tests/test_lr_train.py (numpy
+    same-iterate twin ±1 milli, strictly-decreasing loss, class
+    separation, sample cap/determinism)."""
     from .lrtrain import lr_quality_scores_df
 
     _views(spark, sf_dir)

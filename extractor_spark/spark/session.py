@@ -15,7 +15,7 @@ from pyspark.sql import SparkSession
 
 # HTML rows are fat (KBs–MBs); keep Arrow batches small so each Python worker
 # holds a bounded number of documents (SURVEY.md §4.2).
-DEFAULT_ARROW_BATCH_ROWS = 256
+ARROW_BATCH_ROWS = 256
 
 # the directory that holds the extractor_spark package
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -37,7 +37,6 @@ def get_spark(
     app_name: str = "extractor_spark",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
-    arrow_batch_rows: int = DEFAULT_ARROW_BATCH_ROWS,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if cpus is None:
@@ -50,17 +49,17 @@ def get_spark(
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(cpus))
-        # listing a table with many partition dirs (the pipeline output has
-        # one per bucket) runs as a Spark job with one task per dir by
-        # default; one task per core slot reads back 432 bucket dirs in
-        # 0.2 s instead of 1.7–2.0 s (local[4])
+        # listing a table with many partition dirs (a curate input in the
+        # bucket=N layout, a term index's bucket=/batch= dirs) runs as a
+        # Spark job with one task per dir by default; one task per core slot
+        # reads back 432 bucket dirs in 0.2 s instead of 1.7–2.0 s (local[4])
         .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         .config("spark.ui.enabled", "false")
         # Python workers import pyspark from outside Spark's zips when an
         # equal one is there, so a task's importlib.invalidate_caches() stops

@@ -154,7 +154,7 @@ def _host_of(url: str) -> str | None:
     return host or None
 
 
-def extract_outlinks(pages: DataFrame, partitions: int | None = None) -> DataFrame:
+def extract_outlinks(pages: DataFrame) -> DataFrame:
     """(url, html) pages → one row per (src_url, src_host, dst_url, dst_host).
 
     One Arrow pass; explicit repartition count defends Python-stage
@@ -162,8 +162,7 @@ def extract_outlinks(pages: DataFrame, partitions: int | None = None) -> DataFra
     """
     import pandas as pd
 
-    spark = pages.sparkSession
-    n_parts = partitions or spark.sparkContext.defaultParallelism
+    n_parts = pages.sparkSession.sparkContext.defaultParallelism
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -201,7 +200,7 @@ def extract_outlinks(pages: DataFrame, partitions: int | None = None) -> DataFra
     )
 
 
-def extract_anchor_texts(pages: DataFrame, partitions: int | None = None) -> DataFrame:
+def extract_anchor_texts(pages: DataFrame) -> DataFrame:
     """(url, html) pages → one row per anchor occurrence:
     (src_host, dst_host, anchor_text).  Anchor text is the query-independent
     relevance signal for the TARGET page (the classic web-search/corpus
@@ -209,8 +208,7 @@ def extract_anchor_texts(pages: DataFrame, partitions: int | None = None) -> Dat
     shape as ``extract_outlinks``; no dedup — multiplicity is the signal."""
     import pandas as pd
 
-    spark = pages.sparkSession
-    n_parts = partitions or spark.sparkContext.defaultParallelism
+    n_parts = pages.sparkSession.sparkContext.defaultParallelism
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -278,17 +276,16 @@ def anchor_term_index(anchors: DataFrame, top_k: int = 5) -> DataFrame:
     )
 
 
-def host_graph(outlinks: DataFrame, drop_self_loops: bool = True) -> DataFrame:
+def host_graph(outlinks: DataFrame) -> DataFrame:
     """Page-level outlinks → weighted host edges (src_host, dst_host, n_links).
 
-    Single map-side-combined aggregation; self-links dropped by default
-    (standard for PageRank so a host cannot vote for itself)."""
-    edges = outlinks.groupBy("src_host", "dst_host").agg(
-        F.count(F.lit(1)).alias("n_links")
+    Single map-side-combined aggregation; self-links dropped (standard for
+    PageRank so a host cannot vote for itself)."""
+    return (
+        outlinks.groupBy("src_host", "dst_host")
+        .agg(F.count(F.lit(1)).alias("n_links"))
+        .filter(F.col("src_host") != F.col("dst_host"))
     )
-    if drop_self_loops:
-        edges = edges.filter(F.col("src_host") != F.col("dst_host"))
-    return edges
 
 
 # ---------------------------------------------------------------------------

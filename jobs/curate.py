@@ -4,7 +4,7 @@ exact dedup -> MinHash near-dup clustering -> quality filter -> benchmark
 decontamination -> leakage-safe split -> JSONL export.
 
     python jobs/curate.py --input /data/extract_out --output /data/curated \
-        [--min-tokens 10] [--max-dup-permille 300] [--jaccard 0.8] [--components star] \
+        [--min-tokens 10] [--max-dup-permille 300] [--jaccard 0.8] \
         [--blocklist-domains ut1/ads/domains] [--blocklist-urls ut1/ads/urls] \
         [--decon-benchmarks benchmarks.txt] [--split] [--pack-budget 2048]
 """
@@ -26,8 +26,6 @@ def main(argv=None) -> int:
     p.add_argument("--min-tokens", type=int, default=10)
     p.add_argument("--max-dup-permille", type=int, default=300)
     p.add_argument("--jaccard", type=float, default=0.8)
-    p.add_argument("--components", choices=["minlabel", "star"], default="minlabel",
-                   help="connected-components algorithm: minlabel (rounds ~ diameter) or star (log-diameter, for long near-dup chains)")
     p.add_argument("--pack-budget", type=int, default=None,
                    help="optional: assign concat-then-chunk pack ids at this token budget (adds pack_id/n_tokens to the JSONL)")
     p.add_argument("--blocklist-domains", default=None,
@@ -62,7 +60,6 @@ def main(argv=None) -> int:
         min_tokens=args.min_tokens,
         max_dup_permille=args.max_dup_permille,
         jaccard_threshold=args.jaccard,
-        components=args.components,
         pack_budget=args.pack_budget,
         blocklist_domains=args.blocklist_domains,
         blocklist_urls=args.blocklist_urls,

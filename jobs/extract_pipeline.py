@@ -66,11 +66,15 @@ def parse_args(argv):
     p.add_argument("--waves", type=int, default=1,
                    help="intra-run checkpoint waves (crash loses at most one wave)")
     p.add_argument("--warmup", action="store_true",
-                   help="run an untimed small-slice pass first (JIT/worker spawn)")
+                   help="run an untimed small-slice pass first (JIT/worker spawn; parquet pages only)")
     p.add_argument("--cpus", type=int, default=None, help="local[N] when not using spark-submit")
     p.add_argument("--from-submit", action="store_true",
                    help="use the session provided by spark-submit instead of creating local[N]")
-    return p.parse_args(argv)
+    args = p.parse_args(argv)
+    if args.warmup and args.pages_format != "parquet":
+        # the warm-up slice is read with spark.read.parquet
+        p.error("--warmup needs --pages-format parquet")
+    return args
 
 
 def main(argv=None) -> int:
@@ -118,7 +122,7 @@ def main(argv=None) -> int:
     if args.warmup:
         from extractor_spark.spark.pipeline import warmup
 
-        warmup(spark, args.pages)
+        warmup(spark, args.pages, schema=schema)
 
     summary = run_pipeline(spark, conf)
     print(json.dumps(summary))

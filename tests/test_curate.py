@@ -124,30 +124,6 @@ def test_curate_template_families_collapse(spark, tmp_path):
     assert stats["after_quality_filter"] == 8
 
 
-def test_curate_star_components_parity(spark, tmp_path):
-    """components='star' must produce the identical funnel (counts AND kept
-    urls) as the default min-label propagation."""
-    from extractor_spark.spark.curate import curate
-
-    inp = str(tmp_path / "extract_out")
-    spark.createDataFrame(pd.DataFrame(_docs())).write.parquet(inp)
-
-    stats_ml = curate(spark, inp, str(tmp_path / "c_ml"), min_tokens=10)
-    stats_st = curate(
-        spark, inp, str(tmp_path / "c_st"), min_tokens=10, components="star"
-    )
-    keys = ("input_docs", "after_exact_dedup", "after_neardup_dedup", "after_quality_filter")
-    assert {k: stats_ml[k] for k in keys} == {k: stats_st[k] for k in keys}
-
-    def kept(d):
-        out = set()
-        for f in d.glob("*.json"):
-            out |= {json.loads(l)["url"] for l in f.read_text().splitlines()}
-        return out
-
-    assert kept(tmp_path / "c_ml") == kept(tmp_path / "c_st")
-
-
 def test_curate_shuffle_seed_pack_order(spark, tmp_path):
     """--shuffle-seed: pack composition follows the seeded xxhash64(url,
     seed) order exactly (ground truth recomputed via Spark's own hash of

@@ -1,4 +1,4 @@
-"""Distributed LR-training gates (spark/lrtrain.py).
+"""LR-training gates (spark/lrtrain.py).
 
 Twin protocol (same as ccnet/bpe): the FEATURE TABLE is collected from
 Spark's own extraction (isolating the training math from Java-vs-Python
@@ -65,15 +65,16 @@ def _numpy_twin(docs, epochs=EPOCHS):
 
 
 def test_training_matches_numpy_twin(spark):
-    from extractor_spark.spark.lrtrain import train_quality_lr
+    from extractor_spark.spark.lrtrain import train_quality_lr_local
     from extractor_spark.spark.queries import _views
 
     _views(spark, SF_DIR)
-    w, b, losses, feats = train_quality_lr(
+    w, b, losses, n = train_quality_lr_local(
         spark.table("documents"), D=D, epochs=EPOCHS, lr=LR, l2=L2
     )
-    feats.unpersist()
-    tw, tb, tlosses, _tprobs = _numpy_twin(_collect_features(spark))
+    docs = _collect_features(spark)
+    assert n == len(docs)  # the corpus is below the sample cap
+    tw, tb, tlosses, _tprobs = _numpy_twin(docs)
     assert np.max(np.abs(np.asarray(w) - tw)) < 1e-6
     assert abs(b - tb) < 1e-6
     assert np.allclose(losses, tlosses, atol=1e-9)
@@ -110,7 +111,7 @@ def test_training_sample_cap_determinism_and_twin(spark):
     from extractor_spark.spark import caches
     from extractor_spark.spark.lrtrain import (
         lr_quality_scores_df,
-        train_quality_lr,
+        train_quality_lr_local,
         training_sample,
     )
     from extractor_spark.spark.queries import _views
@@ -126,14 +127,13 @@ def test_training_sample_cap_determinism_and_twin(spark):
     )
     assert s3 != s1  # the hash seed actually selects a different subset
 
-    w, b, losses, feats = train_quality_lr(
+    w, b, losses, n = train_quality_lr_local(
         docs, D=D, epochs=5, lr=LR, l2=L2, train_cap=100
     )
-    train_ids = {r["doc_id"] for r in feats.select("doc_id").distinct().collect()}
-    feats.unpersist()
     # sampled ids minus empty-text docs (doc_features drops them)
-    assert train_ids <= set(s1) and len(train_ids) >= 95
-    tw, tb, tlosses, _ = _numpy_twin(_collect_features(spark, only_ids=train_ids), epochs=5)
+    sample = _collect_features(spark, only_ids=set(s1))
+    assert n == len(sample) >= 95
+    tw, tb, tlosses, _ = _numpy_twin(sample, epochs=5)
     assert np.max(np.abs(np.asarray(w) - tw)) < 1e-6
     assert abs(b - tb) < 1e-6
     assert np.allclose(losses, tlosses, atol=1e-9)
@@ -145,32 +145,8 @@ def test_training_sample_cap_determinism_and_twin(spark):
     assert n_scored == n_docs_nonempty  # full corpus scored, not just the sample
 
 
-def test_local_trainer_matches_distributed(spark):
-    """The default driver-local numpy trainer and the distributed Spark-GD
-    scale path are independent implementations of the same math (numpy
-    matmul vs Spark joins/aggs) — pin them equal on the same seeded
-    sample."""
-    from extractor_spark.spark.lrtrain import train_quality_lr, train_quality_lr_local
-    from extractor_spark.spark.queries import _views
-
-    _views(spark, SF_DIR)
-    docs = spark.table("documents")
-    wd, bd, lossd, feats = train_quality_lr(
-        docs, D=D, epochs=5, lr=LR, l2=L2, train_cap=100
-    )
-    n_train = feats.select("doc_id").distinct().count()
-    feats.unpersist()
-    wl, bl, lossl, nl = train_quality_lr_local(
-        docs, D=D, epochs=5, lr=LR, l2=L2, train_cap=100
-    )
-    assert nl == n_train
-    assert np.max(np.abs(np.asarray(wd) - wl)) < 1e-6
-    assert abs(bd - bl) < 1e-6
-    assert np.allclose(lossd, lossl, atol=1e-9)
-
-
 def test_no_corpus_collect_and_broadcast_model(spark):
-    """The per-epoch driver traffic is the D-row gradient — pin the scoring
+    """Driver traffic is the bounded sample's features — pin the scoring
     plan: weights broadcast, no corpus-sized exchange on the model side."""
     from extractor_spark.spark.queries import QUERIES, release_query_caches
 

@@ -396,17 +396,14 @@ def test_semantic_dedup_soundness(spark):
     }
     # pairs the blocking kept (same cell) must be co-clustered; recompute
     # the cells exactly like the query does (deterministic seeded k-means)
-    from extractor_spark.spark.queries import (
-        _ivf_assign_cells,
-        _ivf_centroids,
-        _views,
-    )
+    from extractor_spark.spark.ivf import assign_cells
+    from extractor_spark.spark.queries import _ivf_centroids, _views
 
     _views(spark, SF_DIR)
     cents = _ivf_centroids(spark)
     cell_of = {
         r["vec_id"]: r["cell"]
-        for r in _ivf_assign_cells(spark, cents).collect()
+        for r in assign_cells(spark.table("embeddings"), cents).collect()
     }
     in_cell = [(a, b) for a, b in exact_pairs if cell_of[a] == cell_of[b]]
     assert in_cell, "blocking kept no exact pair — gate would be vacuous"

@@ -226,10 +226,10 @@ def test_semdedup_pairs_arrow_matches_sql(spark):
     """The numpy in-cell verify (r6) must admit EXACTLY the spec SQL's
     pairs — same candidate joins, bit-identical cosine fold (see
     test_bitext_scored_arrow_matches_sql for the FP argument)."""
+    from extractor_spark.spark.ivf import assign_cells
     from extractor_spark.spark.queries import (
         _SEMDEDUP_PAIRS,
         _SEMDEDUP_THRESHOLD,
-        _ivf_assign_cells,
         _ivf_centroids,
         _semdedup_pairs_frame,
         _views,
@@ -238,7 +238,9 @@ def test_semdedup_pairs_arrow_matches_sql(spark):
     from extractor_spark.spark import caches
 
     _views(spark, "/root/testdata/sf0.01")
-    cells, h = caches.local_checkpoint(_ivf_assign_cells(spark, _ivf_centroids(spark)))
+    cells, h = caches.local_checkpoint(
+        assign_cells(spark.table("embeddings"), _ivf_centroids(spark))
+    )
     cells.createOrReplaceTempView("ivf_cells")
     caches.register(h)
     want = sorted(

@@ -106,6 +106,62 @@ def test_pipeline_run_and_resume(spark, pages_path, tmp_path):
     assert spark.read.parquet(out_dir).count() == summary["docs"]
 
 
+def test_resume_skips_committed_waves(spark, pages_path, tmp_path):
+    """A resume over a finished output runs no wave: its Spark jobs are
+    exactly those of reading the pages and the manifest, with no scan,
+    stage, staged write or metrics job for waves that commit nothing."""
+    from extractor_spark.spark import pipeline
+
+    conf = PipelineConfig(
+        pages_path=pages_path, output_path=str(tmp_path / "out"), n_buckets=4, waves=2
+    )
+    first = run_pipeline(spark, conf)
+    manifest_path = conf.resolved_manifest_path()
+    buckets = {r["bucket"] for r in spark.read.parquet(manifest_path).collect()}
+    assert buckets == {0, 1, 2, 3} and first["docs"] > 0
+
+    sc = spark.sparkContext
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    _, n_reads = jobs_of(
+        "resume-reads",
+        lambda: (
+            pipeline._read_pages(spark, conf),
+            pipeline._repair_output(spark, conf, manifest_path),
+        ),
+    )
+    resumed, n_resume = jobs_of("resume", lambda: run_pipeline(spark, conf))
+    assert resumed["docs"] == 0
+    assert resumed["skipped_buckets"] == 4
+    assert resumed["cumulative_docs"] == first["docs"]
+    assert n_resume == n_reads
+
+
+def test_cli_rejects_warmup_for_non_parquet_pages(monkeypatch):
+    """The warm-up reads its slice with spark.read.parquet, so --warmup with
+    another --pages-format is an argument error, raised before any Spark
+    session or read."""
+    import jobs.extract_pipeline as cli
+
+    from extractor_spark.spark import session
+
+    def no_spark(*args, **kwargs):
+        raise AssertionError("reached Spark before the argument check")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    argv = ["--pages", "crawl/", "--output", "out", "--pages-format", "warc", "--warmup"]
+    with pytest.raises(SystemExit) as exc:
+        cli.main(argv)
+    assert exc.value.code == 2
+
+
 def test_warmup_leaves_no_scratch_dir(spark, pages_path, tmp_path, monkeypatch):
     import tempfile
 
